@@ -778,6 +778,7 @@ class SqlGateway(val spark: SparkSession) {
   // bare `PIVOT t ON c`: DuckDB defaults to count(*), zero-filled
   private val PivotBareRe =
     """(?is)\s*PIVOT\s+([\w.]+)\s+ON\s+([\w.]+)\s*""".r
+  private val PivotSubRe = """(?is)\(\s*PIVOT\b""".r
   private val UnpivotRe =
     ("""(?is)\s*UNPIVOT\s+([\w.]+|\((?:[^()]|\([^()]*\))*\))\s+ON\s+(.*?)""" +
      """\s+INTO\s+NAME\s+(\w+)\s+VALUE\s+(\w+)(?:\s+ORDER\s+BY\s+(.+?))?\s*""").r
@@ -998,16 +999,10 @@ class SqlGateway(val spark: SparkSession) {
     // re-runs with the view name substituted — Spark's parser has no
     // PIVOT-statement grammar to nest
     case s if !s.trim.toUpperCase.startsWith("PIVOT") &&
-        """(?is)\(\s*PIVOT\b""".r.findFirstIn(maskStringLiterals(s)).isDefined =>
-      val masked = maskStringLiterals(s)
-      val open = """(?is)\(\s*PIVOT\b""".r.findFirstMatchIn(masked).get.start
-      var depth = 0; var j = open; var close = -1
-      while (j < masked.length && close < 0) {
-        val ch = masked.charAt(j)
-        if (ch == '(') depth += 1
-        else if (ch == ')') { depth -= 1; if (depth == 0) close = j }
-        j += 1
-      }
+        SqlLex(s).find(PivotSubRe).hasNext =>
+      val lx = SqlLex(s)
+      val open = lx.find(PivotSubRe).next().start
+      val close = lx.close(open)
       if (close < 0) runSql(s) // unbalanced → let the parser refuse
       else {
         val v = s"graft_pivot_${viewSeq.incrementAndGet()}"
@@ -1031,7 +1026,7 @@ class SqlGateway(val spark: SparkSession) {
       val up = df.unpivot(ids.toArray, values.toArray, nameCol, valueCol)
       Option(ord).map(o => up.orderBy(
         splitTopLevel(o).map(e => expr(e.trim)): _*)).getOrElse(up)
-    case _ => dialectQuery(stripComments(sql)).getOrElse(runSql(sql))
+    case _ => dialectQuery(SqlLex.normalize(sql)).getOrElse(runSql(sql))
   }
 
   // --- DuckDB SELECT-dialect statements -------------------------------
@@ -1044,20 +1039,12 @@ class SqlGateway(val spark: SparkSession) {
   // otherwise declines — the statement then refuses downstream, never
   // gets guessed at.
 
-  /** First top-level (outside string literals and parens) match of the
-    * case-insensitive `pattern`, as (start, end). */
+  /** First top-level (outside literals, identifiers and parens) match of
+    * the case-insensitive `pattern`, as (start, end). */
   private def topLevel(sql: String, pattern: String): Option[(Int, Int)] = {
-    val re = ("(?i)" + pattern).r
-    re.findAllMatchIn(sql).find { m =>
-      var depth = 0; var inStr = false
-      sql.substring(0, m.start).foreach { c =>
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (c == '\'') inStr = true
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-      }
-      !inStr && depth == 0
-    }.map(m => (m.start, m.end))
+    val lx = SqlLex(sql)
+    lx.find(("(?i)" + pattern).r).find(m => lx.depth(m.start) == 0)
+      .map(m => (m.start, m.end))
   }
 
   private val ExcludeRe =
@@ -1155,7 +1142,8 @@ class SqlGateway(val spark: SparkSession) {
       "in", "between", "like", "ilike", "escape", "exists", "case", "when",
       "then", "else", "end", "distinct", "interval", "date", "timestamp")
     def classify(conj: String): Option[(Boolean, String)] = {
-      val masked = conj.replaceAll("'(?:[^']|'')*'", "' '")
+      val masked = SqlLex.mask(conj)
+      if (masked.contains('"')) return None // quoted identifier: not attempted
       var side = 0 // 0 = none seen yet, 1 = left, 2 = right
       for (m <- """[A-Za-z_]\w*(?:\.\w+)?""".r.findAllMatchIn(masked)) {
         val tok = m.matched.toLowerCase
@@ -1318,14 +1306,10 @@ class SqlGateway(val spark: SparkSession) {
     var changed = false
     var c = cond
     for ((n, e) <- aliases) {
-      val cur = c
       // not a function call, not a qualified/member reference
       val re = (s"(?i)(?<![\\w.$$])${java.util.regex.Pattern.quote(n)}" +
         """\b(?!\s*\()""").r
-      c = re.replaceAllIn(cur, m =>
-        if (cur.substring(0, m.start).count(_ == '\'') % 2 != 0) m.matched
-        else { changed = true
-          java.util.regex.Matcher.quoteReplacement(s"($e)") })
+      c = SqlLex.replace(c, re) { _ => changed = true; s"($e)" }
     }
     if (changed) Some(c) else None
   }
@@ -1360,18 +1344,7 @@ class SqlGateway(val spark: SparkSession) {
     def unapply(sql: String): Option[(String, String, Option[String], String)] =
       PrefixRe.findFirstMatchIn(sql).flatMap { m =>
         val open = m.end - 1
-        var depth = 0; var i = open; var close = -1
-        var inStr = false; var inId = false // '...' strings, "..." idents
-        while (i < sql.length && close < 0) {
-          val c = sql.charAt(i)
-          if (inStr) { if (c == '\'') inStr = false }
-          else if (inId) { if (c == '"') inId = false }
-          else if (c == '\'') inStr = true
-          else if (c == '"') inId = true
-          else if (c == '(') depth += 1
-          else if (c == ')') { depth -= 1; if (depth == 0) close = i }
-          i += 1
-        }
+        val close = SqlLex(sql).close(open)
         if (close < 0) None
         else sql.substring(close + 1) match {
           case TailRe(alias, tailPart) =>
@@ -1396,16 +1369,9 @@ class SqlGateway(val spark: SparkSession) {
       ColsTok.findFirstMatchIn(item) match {
         case None => Seq(item)
         case Some(m) =>
-          var i = m.end; var depth = 1; var inStr = false
-          while (i < item.length && depth > 0) {
-            val ch = item.charAt(i)
-            if (inStr) { if (ch == '\'') inStr = false }
-            else if (ch == '\'') inStr = true
-            else if (ch == '(') depth += 1
-            else if (ch == ')') depth -= 1
-            i += 1
-          }
-          if (depth != 0) return None
+          val close = SqlLex(item).close(m.end - 1)
+          if (close < 0) return None
+          val i = close + 1
           if (ColsTok.findFirstMatchIn(item.substring(i)).isDefined)
             return None // two COLUMNS in one item: not attempted
           val arg = item.substring(m.end, i - 1).trim
@@ -1518,29 +1484,14 @@ class SqlGateway(val spark: SparkSession) {
     val RecUnionRe =
       """(?is)^\s*WITH\s+RECURSIVE\s+(\w+)\s*(?:\(\s*([^)]*?)\s*\))?\s+AS\s*\(""".r
     RecUnionRe.findFirstMatchIn(sql).foreach { m =>
-      var i = m.end; var depth = 1; var inS = false
-      while (i < sql.length && depth > 0) {
-        val ch = sql.charAt(i)
-        if (inS) { if (ch == '\'') inS = false }
-        else if (ch == '\'') inS = true
-        else if (ch == '(') depth += 1
-        else if (ch == ')') depth -= 1
-        i += 1
-      }
-      if (depth == 0) {
-        val body = sql.substring(m.end, i - 1)
-        val fin = sql.substring(i).trim
+      val close = SqlLex(sql).close(m.end - 1)
+      if (close >= 0) {
+        val body = sql.substring(m.end, close)
+        val fin = sql.substring(close + 1).trim
         val UnionRe = """(?i)\bUNION\b(?!\s+(?:ALL|BY)\b)""".r
-        val last = UnionRe.findAllMatchIn(body).toList.reverse.find { u =>
-          var d = 0; var s = false
-          body.substring(0, u.start).foreach { c =>
-            if (s) { if (c == '\'') s = false }
-            else if (c == '\'') s = true
-            else if (c == '(') d += 1
-            else if (c == ')') d -= 1
-          }
-          !s && d == 0
-        }
+        val lx = SqlLex(body)
+        val last = lx.find(UnionRe).filter(u => lx.depth(u.start) == 0)
+          .toList.lastOption
         // a second CTE after the recursive one is not attempted (→ the
         // untouched statement refuses in Spark's parser)
         if (last.isDefined && !fin.startsWith(","))
@@ -1670,8 +1621,7 @@ class SqlGateway(val spark: SparkSession) {
           if """(?i)\bCOLUMNS\s*\(""".r.findFirstIn(sel).isDefined &&
             // guard against STATEMENT text only — a 'nextval(x)' string
             // literal in the body must not turn expansion into a refusal
-            """(?i)\b(?:nextval|currval)\s*\("""
-              .r.findFirstIn(maskStringLiterals(sub)).isEmpty =>
+            !SqlLex(sub).find("""(?i)\b(?:nextval|currval)\s*\(""".r).hasNext =>
         // a column-alias list on the derived table (`t(a, b)`) renames the
         // source columns — expansion must see the ALIASED names
         val aliasCols = alias.filter(_.contains("(")).map(a =>
@@ -1777,33 +1727,23 @@ class SqlGateway(val spark: SparkSession) {
      """\s*\(\s*(?:'([^']*)'|([\w.]+))?\s*\)""").r
 
   /** Replace every `read_*('path'[, opts])` outside string literals with a
-    * temp view name registered over that file. Quote parity decides
-    * "outside": the path argument's own quotes sit INSIDE the match, so a
-    * match starting at even parity is real syntax, not text in a literal. */
+    * temp view name registered over that file. The pattern reads the path
+    * literal's contents, so it matches the raw text and keeps only matches
+    * that start outside every literal and identifier ([[SqlLex.findRaw]]). */
   private[engine] def rewriteReadFunctions(sql: String): String =
     rewriteReadFunctionsTracked(sql)._1
 
   private def rewriteReadFunctionsTracked(sql: String): (String, Seq[String]) = {
     val views = Seq.newBuilder[String]
-    def substitute(text: String, ms: List[scala.util.matching.Regex.Match])
-        (mk: scala.util.matching.Regex.Match => DataFrame): String = {
-      if (ms.isEmpty) return text
-      val sb = new StringBuilder
-      var last = 0
-      ms.foreach { m =>
-        val outside = text.substring(0, m.start).count(_ == '\'') % 2 == 0
-        if (outside && m.start >= last) {
-          val view = s"graft_read_${readViewCounter.incrementAndGet()}"
-          mk(m).createOrReplaceTempView(view)
-          views += view
-          sb.append(text.substring(last, m.start)).append(view)
-          last = m.end
-        }
+    def substitute(text: String, re: scala.util.matching.Regex)
+        (mk: scala.util.matching.Regex.Match => DataFrame): String =
+      SqlLex(text).replaceRaw(re) { m =>
+        val view = s"graft_read_${readViewCounter.incrementAndGet()}"
+        mk(m).createOrReplaceTempView(view)
+        views += view
+        view
       }
-      sb.append(text.substring(last))
-      sb.toString
-    }
-    val afterRead = substitute(sql, ReadFnRe.findAllMatchIn(sql).toList) { m =>
+    val afterRead = substitute(sql, ReadFnRe) { m =>
       val kind = Option(m.group(1)).getOrElse(m.group(2)).toLowerCase
       val paths = PathLitRe.findAllMatchIn(m.group(3)).map(_.group(1)).toSeq
       readFunction(kind, paths, Option(m.group(4)).getOrElse(""))
@@ -1812,12 +1752,10 @@ class SqlGateway(val spark: SparkSession) {
     // DuckDB (probed) — substituted like the read functions
     val DescSubRe =
       """(?i)\(\s*(?:DESCRIBE\s+([\w.]+)|(SHOW\s+ALL\s+TABLES))\s*\)""".r
-    val afterDesc = substitute(afterRead,
-        DescSubRe.findAllMatchIn(afterRead).toList) { m =>
+    val afterDesc = substitute(afterRead, DescSubRe) { m =>
       if (m.group(1) != null) describe(m.group(1)) else showAllTablesDf
     }
-    val afterCat = substitute(afterDesc,
-        CatFnRe.findAllMatchIn(afterDesc).toList) { m =>
+    val afterCat = substitute(afterDesc, CatFnRe) { m =>
       val arg = Option(m.group(2)).orElse(Option(m.group(3)))
       val name = m.group(1).toLowerCase
       // only pragma_table_info / pragma_storage_info take an argument —
@@ -1852,7 +1790,7 @@ class SqlGateway(val spark: SparkSession) {
     val (rewritten, views) = rewriteReadFunctionsTracked(text)
     try duckDialectSql(rewritten)
     finally views.foreach(v =>
-      try spark.catalog.dropTempView(v) catch { case _: Throwable => () })
+      spark.catalog.dropTempView(v))
   }
 
   private val DivWordRe = """(?i)(?<![\w.$])div(?![\w.$])""".r
@@ -1893,27 +1831,25 @@ class SqlGateway(val spark: SparkSession) {
     var guard = 0
     while (guard < 64) {
       guard += 1
-      val m = OrderByRe.findAllMatchIn(text).find(m => m.start >= from &&
-        text.substring(0, m.start).count(_ == '\'') % 2 == 0)
-      m match {
+      val lx = SqlLex(text)
+      val mk = lx.masked
+      lx.find(OrderByRe).find(_.start >= from) match {
         case None => return (text, bareAll)
         case Some(mm) =>
           val listStart = mm.end
-          var i = listStart; var depth = 0; var inStr = false
+          var i = listStart; var depth = 0
           var end = text.length
           var done = false
-          while (i < text.length && !done) {
-            val c = text.charAt(i)
-            if (inStr) { if (c == '\'') inStr = false; i += 1 }
-            else if (c == '\'') { inStr = true; i += 1 }
-            else if (c == '(') { depth += 1; i += 1 }
+          while (i < mk.length && !done) {
+            val c = mk.charAt(i)
+            if (c == '(') { depth += 1; i += 1 }
             else if (c == ')') {
               if (depth == 0) { end = i; done = true } else { depth -= 1; i += 1 }
             } else if (c == ';' && depth == 0) { end = i; done = true }
             else if (depth == 0 && (i == listStart ||
-                !(Character.isLetterOrDigit(text.charAt(i - 1)) ||
-                  text.charAt(i - 1) == '_')) &&
-                Stop.findPrefixMatchOf(text.substring(i)).isDefined) {
+                !(Character.isLetterOrDigit(mk.charAt(i - 1)) ||
+                  mk.charAt(i - 1) == '_')) &&
+                Stop.findPrefixMatchOf(mk.substring(i)).isDefined) {
               end = i; done = true
             } else i += 1
           }
@@ -1965,27 +1901,22 @@ class SqlGateway(val spark: SparkSession) {
     // parser's own ASC default, so a statement MIXING explicit and default
     // orderings is only reproducible by tagging the unspelled keys here
     val (sql, bareAllKey) =
-      if (OrderByRe.findAllMatchIn(sql0).exists(m =>
-            sql0.substring(0, m.start).count(_ == '\'') % 2 == 0))
-        explicitNulls(sql0)
+      if (SqlLex(sql0).find(OrderByRe).hasNext) explicitNulls(sql0)
       else (sql0, false)
-    def outside(pos: Int) = sql.substring(0, pos).count(_ == '\'') % 2 == 0
-    val needDiv = DivWordRe.findAllMatchIn(sql).exists(m => outside(m.start))
-    val needCast = IntCastTargetRe.findAllMatchIn(sql).exists(m => outside(m.start))
-    val needBool = BoolCastTargetRe.findAllMatchIn(sql).exists(m => outside(m.start))
+    val lx = SqlLex(sql)
+    def has(re: scala.util.matching.Regex) = lx.find(re).hasNext
+    val needDiv = has(DivWordRe)
+    val needCast = has(IntCastTargetRe)
+    val needBool = has(BoolCastTargetRe)
     // plan-level default-null-order fallback: only for keys the text pass
     // could not tag (ORDER BY ALL, or an early-stopped key list) — and
     // only when the statement spells no explicit NULLS anywhere, exactly
     // the old whole-statement condition
-    val needNulls = (bareAllKey ||
-        OrderByRe.findAllMatchIn(sql).exists(m => outside(m.start))) &&
-      !NullsRe.findAllMatchIn(sql).exists(m => outside(m.start))
+    val needNulls = (bareAllKey || has(OrderByRe)) && !has(NullsRe)
     // DuckDB: division/modulo by zero is NULL, never an error (probed for
     // INT/DOUBLE/DECIMAL `/` and `%`) — Spark's TRY eval mode is exactly
     // that semantics, applied to the user's spelled / and %
-    val needTry = (sql.contains("/") || sql.contains("%")) &&
-      (sql.indexOf('/') >= 0 && outside(sql.indexOf('/')) ||
-       sql.indexOf('%') >= 0 && outside(sql.indexOf('%')))
+    val needTry = lx.masked.exists(c => c == '/' || c == '%')
     val needSub = needsParsedSwap(sql)
     if (!needDiv && !needCast && !needBool && !needNulls && !needTry) {
       if (!needSub) return subtractDatesAsDays(spark.sql(sql))
@@ -2619,15 +2550,11 @@ class SqlGateway(val spark: SparkSession) {
     * row the same id. */
   private def rewriteSequenceFunctions(sql: String): String =
     if (!sql.toLowerCase.contains("val")) sql
-    else SeqFnRe.replaceAllIn(sql, m => {
-      val outside = sql.substring(0, m.start).count(_ == '\'') % 2 == 0
-      if (!outside) java.util.regex.Matcher.quoteReplacement(m.matched)
-      else {
-        val v = if (m.group(1).equalsIgnoreCase("nextval")) nextval(m.group(2))
+    else SqlLex(sql).replaceRaw(SeqFnRe) { m =>
+      val v = if (m.group(1).equalsIgnoreCase("nextval")) nextval(m.group(2))
         else currval(m.group(2))
-        s"CAST($v AS BIGINT)"
-      }
-    })
+      s"CAST($v AS BIGINT)"
+    }
 
   /** Expand scalar macro invocations textually (parameters substituted
     * parenthesized, arguments split on top-level commas), repeatedly so a
@@ -2646,11 +2573,13 @@ class SqlGateway(val spark: SparkSession) {
         val out = new StringBuilder
         var last = 0
         var matched = false
-        callRe.findAllMatchIn(cur).foreach { m =>
-          val outside = cur.substring(0, m.start).count(_ == '\'') % 2 == 0
-          if (outside && m.start >= last) {
+        val lx = SqlLex(cur)
+        lx.find(callRe).foreach { m =>
+          if (m.start >= last) {
             val open = m.end - 1
-            val close = open + matchingParen(cur.substring(open))
+            val close = lx.close(open)
+            if (close < 0) throw new IllegalArgumentException(
+              s"unbalanced parentheses in a call to macro $name")
             val argText = cur.substring(open + 1, close)
             val args = splitTopLevel(argText).map(_.trim).filter(_.nonEmpty)
             // DuckDB call contract (probed): default params bind by NAME
@@ -2681,9 +2610,8 @@ class SqlGateway(val spark: SparkSession) {
             var expanded = body
             params.foreach { p =>
               val a = bindings(p)
-              expanded = ("""(?i)(?<![\w.])""" + java.util.regex.Pattern.quote(p) +
-                """(?![\w])""").r.replaceAllIn(expanded,
-                java.util.regex.Matcher.quoteReplacement(s"($a)"))
+              expanded = SqlLex.replace(expanded, ("""(?i)(?<![\w.])""" +
+                java.util.regex.Pattern.quote(p) + """(?![\w])""").r)(_ => s"($a)")
             }
             out.append(cur.substring(last, m.start)).append(s"($expanded)")
             last = close + 1
@@ -2706,29 +2634,23 @@ class SqlGateway(val spark: SparkSession) {
   /** `current_setting('k')` → the recorded SET value as a string literal. */
   private def rewriteCurrentSetting(sql: String): String =
     if (!sql.toLowerCase.contains("current_setting")) sql
-    else CurrentSettingRe.replaceAllIn(sql, m => {
-      val outside = sql.substring(0, m.start).count(_ == '\'') % 2 == 0
-      if (!outside) java.util.regex.Matcher.quoteReplacement(m.matched)
+    else SqlLex(sql).replaceRaw(CurrentSettingRe) { m =>
+      // 'threads' reads the live engine parallelism (DuckDB's default
+      // reflects its own hardware; an INTEGER, unlike the recorded SETs)
+      if (m.group(1).equalsIgnoreCase("threads") &&
+          !settings.contains("threads"))
+        spark.sparkContext.defaultParallelism.toString
+      // 'timezone' reads the live session zone (DuckDB's default is its
+      // own session TimeZone; this engine's is Spark's)
+      else if (m.group(1).equalsIgnoreCase("timezone") &&
+          !settings.contains("timezone"))
+        s"'${spark.conf.get("spark.sql.session.timeZone")}'"
       else {
-        // 'threads' reads the live engine parallelism (DuckDB's default
-        // reflects its own hardware; an INTEGER, unlike the recorded SETs)
-        if (m.group(1).equalsIgnoreCase("threads") &&
-            !settings.contains("threads"))
-          java.util.regex.Matcher.quoteReplacement(
-            spark.sparkContext.defaultParallelism.toString)
-        // 'timezone' reads the live session zone (DuckDB's default is its
-        // own session TimeZone; this engine's is Spark's)
-        else if (m.group(1).equalsIgnoreCase("timezone") &&
-            !settings.contains("timezone"))
-          java.util.regex.Matcher.quoteReplacement(
-            s"'${spark.conf.get("spark.sql.session.timeZone")}'")
-        else {
-          val v = settings.getOrElse(m.group(1).toLowerCase,
-            throw new IllegalArgumentException(s"unknown setting ${m.group(1)}"))
-          java.util.regex.Matcher.quoteReplacement(s"'${v.replace("'", "''")}'")
-        }
+        val v = settings.getOrElse(m.group(1).toLowerCase,
+          throw new IllegalArgumentException(s"unknown setting ${m.group(1)}"))
+        s"'${v.replace("'", "''")}'"
       }
-    })
+    }
 
   // --- DuckDB-spelled function compatibility ---------------------------
   // A client porting real DuckDB SQL spells functions DuckDB-style
@@ -2842,24 +2764,18 @@ class SqlGateway(val spark: SparkSession) {
                                        // NULLs (probed: list_zip([1,2,3],[4]))
 
   private val DuckFnRe = (
-    // backtick in the lookbehind: a BACKQUOTED identifier containing a
-    // function-call shape (`unnest(l1)` — the multi-unnest column naming)
-    // is a name, not a call
-    """(?i)(?<![\w.$`])(""" +
+    """(?i)(?<![\w.$])(""" +
       DuckFnAliases.map(_._1).sortBy(-_.length).mkString("|") +
       """)\s*\(""").r
   private val DuckFnLookup = DuckFnAliases.toMap
 
   private def rewriteDuckAliases(sql: String): String =
-    DuckFnRe.replaceAllIn(sql, m => {
-      val outside = sql.substring(0, m.start).count(_ == '\'') % 2 == 0
-      if (!outside) java.util.regex.Matcher.quoteReplacement(m.matched)
-      else DuckFnLookup(m.group(1).toLowerCase) + "("
-    })
+    SqlLex.replace(sql, DuckFnRe)(m => DuckFnLookup(m.group(1).toLowerCase) + "(")
 
   /** Pin DuckDB defaults where Spark's same-named function defaults
-    * differently. Balanced-paren + quote-parity scan; only the exact
-    * arity is rewritten — other arities already agree and pass through. */
+    * differently. Calls are found, and their closing parens matched, on the
+    * [[SqlLex]] masked view; only the exact arity is rewritten — other
+    * arities already agree and pass through. */
   private def rewriteDuckDefaults(sql: String): String = {
     // arity < 0 = any arity; rebuild returning None leaves the call
     // untouched (it then refuses downstream rather than being guessed at);
@@ -2868,33 +2784,21 @@ class SqlGateway(val spark: SparkSession) {
         rebuild: Seq[String] => Option[String],
         allowAt: (String, Int) => Boolean = (_, _) => true): String = {
       val re = ("""(?i)(?<![\w.$])""" + name + """\s*\(""").r
-      val matches = re.findAllMatchIn(s).toList
-      if (matches.isEmpty) return s
+      val lx = SqlLex(s)
       val sb = new StringBuilder; var last = 0
-      matches.foreach { m =>
-        if (m.start >= last && allowAt(s, m.start) &&
-            s.substring(0, m.start).count(_ == '\'') % 2 == 0) {
-          var i = m.end; var depth = 1; var inStr = false
-          while (i < s.length && depth > 0) {
-            val c = s.charAt(i)
-            if (inStr) { if (c == '\'') inStr = false }
-            else if (c == '\'') inStr = true
-            else if (c == '(') depth += 1
-            else if (c == ')') depth -= 1
-            i += 1
-          }
-          if (depth == 0) {
-            val args = splitTopLevel(s.substring(m.end, i - 1)).map(_.trim)
-            if (args.length == arity || arity < 0) {
-              rebuild(args).foreach { built =>
-                sb.append(s.substring(last, m.start)).append(built)
-                last = i
-              }
+      lx.find(re).foreach { m =>
+        val close = lx.close(m.end - 1)
+        if (m.start >= last && close >= 0 && allowAt(s, m.start)) {
+          val args = splitTopLevel(s.substring(m.end, close)).map(_.trim)
+          if (args.length == arity || arity < 0) {
+            rebuild(args).foreach { built =>
+              sb.append(s.substring(last, m.start)).append(built)
+              last = close + 1
             }
           }
         }
       }
-      sb.append(s.substring(last)); sb.toString
+      if (last == 0) s else sb.append(s.substring(last)).toString
     }
     var out = sql
     if (out.toLowerCase.contains("log"))
@@ -3096,18 +3000,10 @@ class SqlGateway(val spark: SparkSession) {
     // NULL-propagating through the operand
     if (out.toLowerCase.contains("extract")) {
       val ExtrRe = """(?i)\bextract\s*\(\s*(\w+)\s+from\s+""".r
-      for (m <- ExtrRe.findAllMatchIn(out).toList.reverse
-           if out.substring(0, m.start).count(_ == '\'') % 2 == 0) {
-        var i = m.end; var depth = 1; var inS = false
-        while (i < out.length && depth > 0) {
-          val ch = out.charAt(i)
-          if (inS) { if (ch == '\'') inS = false }
-          else if (ch == '\'') inS = true
-          else if (ch == '(') depth += 1
-          else if (ch == ')') depth -= 1
-          i += 1
-        }
-        if (depth == 0) {
+      // right to left: a splice changes only text after the match start
+      for (m <- SqlLex(out).find(ExtrRe).toList.reverse) {
+        val i = SqlLex(out).close(m.start + m.matched.indexOf('(')) + 1
+        if (i > 0) {
           val operand = out.substring(m.end, i - 1).trim
           val p = m.group(1).toLowerCase
           val repl = duckPartFn.get(p).map(f => s"$f($operand)")
@@ -3322,51 +3218,51 @@ class SqlGateway(val spark: SparkSession) {
       while (rewrote && atRounds < 16) {
         rewrote = false
         atRounds += 1
-        val mOpt = AtRe.findAllMatchIn(out).find(m =>
-          out.substring(0, m.start).count(_ == '\'') % 2 == 0)
-        mOpt.foreach { m =>
+        val lx = SqlLex(out)
+        val mk = lx.masked // backward scans: literal contents are blank
+        lx.find(AtRe).nextOption().foreach { m =>
           // backward-scan one operand UNIT ending at jEnd: string literal
           // (with optional type keyword), balanced (...) with call name,
           // or an ident chain — returns the unit's start index, -1 if
           // nothing scannable
           def scanUnit(jEnd: Int): Int = {
             var unitAt = -1
-            if (jEnd >= 0 && out.charAt(jEnd) == '\'') {
+            if (jEnd >= 0 && mk.charAt(jEnd) == '\'') {
               var k = jEnd - 1
-              while (k >= 0 && out.charAt(k) != '\'') k -= 1
+              while (k >= 0 && mk.charAt(k) != '\'') k -= 1
               if (k >= 0) {
                 var w = k - 1
-                while (w >= 0 && out.charAt(w).isWhitespace) w -= 1
+                while (w >= 0 && mk.charAt(w).isWhitespace) w -= 1
                 val we = w
-                while (w >= 0 && out.charAt(w).isLetter) w -= 1
+                while (w >= 0 && mk.charAt(w).isLetter) w -= 1
                 unitAt = if (we > w && Set("timestamp", "date", "timestamptz")
                     .contains(out.substring(w + 1, we + 1).toLowerCase)) w + 1
                   else k
               }
-            } else if (jEnd >= 0 && out.charAt(jEnd) == ')') {
+            } else if (jEnd >= 0 && mk.charAt(jEnd) == ')') {
               var depth = 0; var k = jEnd
               while (k >= 0 && unitAt < 0) {
-                val ch = out.charAt(k)
+                val ch = mk.charAt(k)
                 if (ch == ')') depth += 1
                 else if (ch == '(') { depth -= 1; if (depth == 0) unitAt = k }
                 k -= 1
               }
               if (unitAt >= 0) {
                 var w = unitAt - 1
-                while (w >= 0 && (out.charAt(w).isLetterOrDigit ||
-                  out.charAt(w) == '_' || out.charAt(w) == '.')) w -= 1
+                while (w >= 0 && (mk.charAt(w).isLetterOrDigit ||
+                  mk.charAt(w) == '_' || mk.charAt(w) == '.')) w -= 1
                 unitAt = w + 1
               }
             } else if (jEnd >= 0) {
               var w = jEnd
-              while (w >= 0 && (out.charAt(w).isLetterOrDigit ||
-                out.charAt(w) == '_' || out.charAt(w) == '.')) w -= 1
+              while (w >= 0 && (mk.charAt(w).isLetterOrDigit ||
+                mk.charAt(w) == '_' || mk.charAt(w) == '.')) w -= 1
               if (w < jEnd) unitAt = w + 1
             }
             unitAt
           }
           var j = m.start - 1
-          while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
+          while (j >= 0 && mk.charAt(j).isWhitespace) j -= 1
           var at = scanUnit(j)
           // '::'-cast suffix (r14 advice): when the captured unit is a
           // bare type keyword directly preceded by '::'
@@ -3382,8 +3278,8 @@ class SqlGateway(val spark: SparkSession) {
             extGuard += 1
             val lead = {
               var e = at
-              while (e <= j && (out.charAt(e).isLetterOrDigit ||
-                out.charAt(e) == '_')) e += 1
+              while (e <= j && (mk.charAt(e).isLetterOrDigit ||
+                mk.charAt(e) == '_')) e += 1
               out.substring(at, e).toLowerCase
             }
             val pre = out.substring(0, at)
@@ -3400,7 +3296,7 @@ class SqlGateway(val spark: SparkSession) {
               else -2
             if (castEnd >= 0) {
               var k = castEnd
-              while (k >= 0 && out.charAt(k).isWhitespace) k -= 1
+              while (k >= 0 && mk.charAt(k).isWhitespace) k -= 1
               val newAt = scanUnit(k)
               if (newAt >= 0) { at = newAt; extended = true }
             }
@@ -3431,46 +3327,39 @@ class SqlGateway(val spark: SparkSession) {
     // duck-probed; any truth-table fix must land in BOTH passes).
     if ("""(?i)\b(?:all|any|some)\s*\(""".r.findFirstIn(out).isDefined) {
       val AllRe = """(?i)(==|<>|!=|<=|>=|=|<|>)\s*(ALL|ANY|SOME)\s*\(""".r
-      for (m <- AllRe.findAllMatchIn(out).toList.reverse
-           if out.substring(0, m.start).count(_ == '\'') % 2 == 0) {
+      // right to left: a splice changes only text after the operand start
+      for (m <- SqlLex(out).find(AllRe).toList.reverse) {
+        val mk = SqlLex(out).masked // backward scans: literal contents are blank
         // close of the subquery paren
-        var i = m.end; var depth = 1; var inS = false
-        while (i < out.length && depth > 0) {
-          val ch = out.charAt(i)
-          if (inS) { if (ch == '\'') inS = false }
-          else if (ch == '\'') inS = true
-          else if (ch == '(') depth += 1
-          else if (ch == ')') depth -= 1
-          i += 1
-        }
+        val i = SqlLex.close(mk, m.end - 1) + 1
         // backward operand span (literal / balanced-paren call / idents)
         var j = m.start - 1
-        while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
+        while (j >= 0 && mk.charAt(j).isWhitespace) j -= 1
         var at = -1
-        if (depth == 0 && j >= 0) {
-          if (out.charAt(j) == '\'') {
+        if (i > 0 && j >= 0) {
+          if (mk.charAt(j) == '\'') {
             var k = j - 1
-            while (k >= 0 && out.charAt(k) != '\'') k -= 1
+            while (k >= 0 && mk.charAt(k) != '\'') k -= 1
             if (k >= 0) at = k
-          } else if (out.charAt(j) == ')') {
+          } else if (mk.charAt(j) == ')') {
             var d = 0; var k = j
             while (k >= 0 && at < 0) {
-              val ch = out.charAt(k)
+              val ch = mk.charAt(k)
               if (ch == ')') d += 1
               else if (ch == '(') { d -= 1; if (d == 0) at = k }
               k -= 1
             }
             if (at >= 0) {
               var w = at - 1
-              while (w >= 0 && (out.charAt(w).isLetterOrDigit ||
-                out.charAt(w) == '_' || out.charAt(w) == '.')) w -= 1
+              while (w >= 0 && (mk.charAt(w).isLetterOrDigit ||
+                mk.charAt(w) == '_' || mk.charAt(w) == '.')) w -= 1
               at = w + 1
             }
           } else {
             var w = j
-            while (w >= 0 && (out.charAt(w).isLetterOrDigit ||
-              out.charAt(w) == '_' || out.charAt(w) == '.' ||
-              out.charAt(w) == '$')) w -= 1
+            while (w >= 0 && (mk.charAt(w).isLetterOrDigit ||
+              mk.charAt(w) == '_' || mk.charAt(w) == '.' ||
+              mk.charAt(w) == '$')) w -= 1
             if (w < j) at = w + 1
           }
         }
@@ -3513,44 +3402,24 @@ class SqlGateway(val spark: SparkSession) {
       // silently drop the suffix. (Raw tstz SELECTs keep the documented
       // naive-rendering residual; casts to text are value-exact.)
       def utcPlus(text: String) = s"'${tstzLiteralToUtc(text)}+00'"
-      // every rewrite in this block guards on prefix quote PARITY: a
-      // string literal whose CONTENT is tstz-cast-shaped text
-      // (`SELECT 'note: x::timestamptz'`) must pass through untouched
-      // (r14 advice — the six r14 additions lacked the guard the
-      // adjacent Lit/Cast rewrites always had)
-      def outsideQuotes(in: String, start: Int): Boolean =
-        in.substring(0, start).count(_ == '\'') % 2 == 0
+      // every rewrite in this block matches on the masked view: a string
+      // literal whose CONTENT is tstz-cast-shaped text
+      // (`SELECT 'note: x::timestamptz'`) passes through untouched
       val LitStr =
         """(?i)\bTIMESTAMPTZ\s+'([^']*)'\s*::\s*STRING\b""".r
-      val inLS = out
-      out = LitStr.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!outsideQuotes(inLS, m.start)) m.matched
-          else utcPlus(m.group(1))))
+      out = SqlLex.replace(out, LitStr)(m => utcPlus(m.group(1)))
       val CastStr =
         """(?i)'([^']*)'\s*::\s*TIMESTAMPTZ\s*::\s*STRING\b""".r
-      val inCS = out
-      out = CastStr.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!outsideQuotes(inCS, m.start)) m.matched
-          else utcPlus(m.group(1))))
+      out = SqlLex.replace(out, CastStr)(m => utcPlus(m.group(1)))
       // TRY_CAST included: a VALID literal renders identically, and an
       // invalid one already fails at the LITERAL (duck errors on the
       // literal itself before any TRY_CAST can absorb it — probed)
       val CastAs = ("""(?i)\b(?:TRY_)?CAST\s*\(\s*TIMESTAMPTZ\s+'([^']*)'""" +
         """\s+AS\s+STRING\s*\)""").r
-      val inCA = out
-      out = CastAs.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!outsideQuotes(inCA, m.start)) m.matched
-          else utcPlus(m.group(1))))
+      out = SqlLex.replace(out, CastAs)(m => utcPlus(m.group(1)))
       val CastAs2 = ("""(?i)\b(?:TRY_)?CAST\s*\(\s*'([^']*)'\s*::\s*TIMESTAMPTZ""" +
         """\s+AS\s+STRING\s*\)""").r
-      val inCA2 = out
-      out = CastAs2.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!outsideQuotes(inCA2, m.start)) m.matched
-          else utcPlus(m.group(1))))
+      out = SqlLex.replace(out, CastAs2)(m => utcPlus(m.group(1)))
       // literals still PARSE (and error) at rewrite time, but the
       // emission wraps the folded UTC literal in the identity tstz cast:
       // the analyzed plan then carries instant-typedness, so the result
@@ -3558,17 +3427,11 @@ class SqlGateway(val spark: SparkSession) {
       // '+00' text for a raw-selected literal (r15; the wrap constant-
       // folds away before execution — DuckTstzCast.foldable)
       val Lit = """(?i)\bTIMESTAMPTZ\s+'([^']*)'""".r
-      val in1 = out
-      out = Lit.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (in1.substring(0, m.start).count(_ == '\'') % 2 != 0) m.matched
-          else s"graft_tstz_cast(TIMESTAMP '${tstzLiteralToUtc(m.group(1))}')"))
+      out = SqlLex.replace(out, Lit)(m =>
+        s"graft_tstz_cast(TIMESTAMP '${tstzLiteralToUtc(m.group(1))}')")
       val Cast = """(?i)'([^']*)'\s*::\s*TIMESTAMPTZ\b""".r
-      val in2 = out
-      out = Cast.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (in2.substring(0, m.start).count(_ == '\'') % 2 != 0) m.matched
-          else s"graft_tstz_cast(TIMESTAMP '${tstzLiteralToUtc(m.group(1))}')"))
+      out = SqlLex.replace(out, Cast)(m =>
+        s"graft_tstz_cast(TIMESTAMP '${tstzLiteralToUtc(m.group(1))}')")
       // non-literal casts (r14, verdict item 1 tail): per-row DuckDB-
       // exact parse through the codegen'd [[graft.functions.DuckTstzCast]]
       // — a VARCHAR column of offset/zone-bearing text becomes the UTC
@@ -3578,19 +3441,13 @@ class SqlGateway(val spark: SparkSession) {
       val TzTy = """(?:TIMESTAMPTZ|TIMESTAMP\s+WITH\s+TIME\s+ZONE)"""
       val Op = """((?:[\w.]+)?\([^()]*\)|[\w.]+)"""
       val Colon = (s"(?i)$Op\\s*::\\s*$TzTy\\b").r
-      val inCo = out
-      out = Colon.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!outsideQuotes(inCo, m.start)) m.matched
-          else s"graft_tstz_cast(${m.group(1)})"))
+      out = SqlLex.replace(out, Colon)(m =>
+        s"graft_tstz_cast(${m.group(1)})")
       val CastForm =
         (s"(?i)\\b(TRY_)?CAST\\s*\\(([^()]+?)\\s+AS\\s+$TzTy\\s*\\)").r
-      val inCF = out
-      out = CastForm.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!outsideQuotes(inCF, m.start)) m.matched
-          else s"graft_tstz_cast(${m.group(2)}" +
-            (if (m.group(1) != null) ", true" else "") + ")"))
+      out = SqlLex.replace(out, CastForm)(m =>
+        s"graft_tstz_cast(${m.group(2)}" +
+          (if (m.group(1) != null) ", true" else "") + ")")
     }
     // (instant-typed CALL results cast to VARCHAR — per-row tstz casts,
     // naive→instant timezone conversions, declared-TIMESTAMPTZ columns —
@@ -3643,19 +3500,13 @@ class SqlGateway(val spark: SparkSession) {
         s"regexp_like(${a(0)}, concat('^(?:', ${a(1)}, ')$$'))"))
     // regexp_escape on a literal: escape RE2's metacharacters here
     if (out.toLowerCase.contains("regexp_escape"))
-      out = fix(out, "regexp_escape", 1, a => {
-        val s = a.head
-        if (s.length >= 2 && s.head == '\'' && s.last == '\'' &&
-            !s.drop(1).dropRight(1).contains('\'')) {
-          // double the backslash: this emission is parsed by SPARK's
-          // string literal rules (escapeLiteralBackslashes already ran)
-          val esc = s.drop(1).dropRight(1).flatMap {
-            case c if "\\^$.|?*+()[]{}".contains(c) => s"\\\\$c"
-            case c => c.toString
-          }
-          Some(s"'$esc'")
-        } else None
-      })
+      out = fix(out, "regexp_escape", 1, a =>
+        // double the backslash: this emission is parsed by SPARK's
+        // string literal rules (SqlLex.escapeBackslashes already ran)
+        SqlLex.plainLiteral(a.head).map(lit => "'" + lit.flatMap {
+          case c if "\\^$.|?*+()[]{}".contains(c) => s"\\\\$c"
+          case c => c.toString
+        } + "'"))
     // weekday is DuckDB's dayofweek twin (0 = Sunday — probed; Spark's
     // same-named builtin is 0 = Monday, a silent off-by-one): emitted as
     // dayofweek text so the fix below lands the shared -1 shift. Runs
@@ -3697,11 +3548,8 @@ class SqlGateway(val spark: SparkSession) {
     // outside the subset refuses rather than guessing.
     if (out.toLowerCase.contains("format("))
       out = fix(out, "format", -1, args =>
-        if (args.length >= 2 && args.head.length >= 2 &&
-            args.head.head == '\'' && args.head.last == '\'' &&
-            !args.head.drop(1).dropRight(1).contains('\''))
-          fmtTemplateToJava(args.head.drop(1).dropRight(1), args.tail)
-        else None)
+        if (args.length < 2) None
+        else SqlLex.plainLiteral(args.head).flatMap(fmtTemplateToJava(_, args.tail)))
     // printf: Spark's formatter rejects DECIMAL arguments for %f — a
     // fractional numeric LITERAL argument goes through DOUBLE, which is
     // how DuckDB's printf renders it anyway (probed: %5.2f of 3.14159)
@@ -3724,17 +3572,14 @@ class SqlGateway(val spark: SparkSession) {
     // non-literal separator has no safe spelling and refuses
     for (fn <- Seq("string_split", "str_split", "string_to_array")
          if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 2, a => {
-        val sep = a(1)
-        if (sep.length >= 2 && sep.head == '\'' && sep.last == '\'' &&
-            !sep.drop(1).dropRight(1).contains('\'')) {
-          val esc = sep.drop(1).dropRight(1).flatMap {
+      out = fix(out, fn, 2, a =>
+        SqlLex.plainLiteral(a(1)).map { sep =>
+          val esc = sep.flatMap {
             case c if "\\^$.|?*+()[]{}".contains(c) => s"\\\\$c"
             case c => c.toString
           }
-          Some(s"split(${a(0)}, '$esc')")
-        } else None
-      })
+          s"split(${a(0)}, '$esc')"
+        })
     // list_<agg> shorthands spell as list_aggregate(l, '<agg>') — this
     // runs BEFORE the list_aggregate fix below, which then expands them
     locally {
@@ -4099,13 +3944,12 @@ class SqlGateway(val spark: SparkSession) {
     if (out.toLowerCase.contains("string_agg")) {
       val SaFilter = ("""(?is)\bstring_agg\s*\(([^()]*\bORDER\s+BY\b[^()]*)\)""" +
         """\s*FILTER\s*\(\s*WHERE\s+([^()]+?)\s*\)""").r
-      out = SaFilter.replaceAllIn(out, m => {
+      out = SqlLex.replace(out, SaFilter) { m =>
         val parts = splitTopLevel(m.group(1))
-        java.util.regex.Matcher.quoteReplacement(
-          if (parts.isEmpty) m.matched
-          else s"string_agg(CASE WHEN ${m.group(2)} THEN ${parts.head.trim} END" +
-            s"${parts.tail.map(p => s", ${p.trim}").mkString})")
-      })
+        if (parts.isEmpty) m.matched
+        else s"string_agg(CASE WHEN ${m.group(2)} THEN ${parts.head.trim} END" +
+          s"${parts.tail.map(p => s", ${p.trim}").mkString})"
+      }
     }
     // 1-arg string_agg: DuckDB's default separator is ',' (probed:
     // 'foo,bar'); Spark's native default is the empty string
@@ -4326,9 +4170,9 @@ class SqlGateway(val spark: SparkSession) {
     // Spark's deterministic mode breaks ties by lowest value, matching
     // DuckDB's observed smallest-value pick on ties.
     if (out.toLowerCase.contains("mode()"))
-      out = out.replaceAll(
-        """(?is)\bmode\s*\(\s*\)\s*WITHIN\s+GROUP\s*\(\s*ORDER\s+BY\s+([^()]+?)(?:\s+(?:ASC|DESC))?\s*\)""",
-        "mode($1, true)")
+      out = SqlLex.replace(out, ("""(?is)\bmode\s*\(\s*\)\s*WITHIN\s+GROUP\s*""" +
+        """\(\s*ORDER\s+BY\s+([^()]+?)(?:\s+(?:ASC|DESC))?\s*\)""").r)(m =>
+        s"mode(${m.group(1)}, true)")
     // percentile_cont([q1,q2,...]) WITHIN GROUP — DuckDB's fraction-LIST
     // overload (probed: returns the list of interpolated percentiles);
     // Spark's percentile_cont takes no array, but exact interpolated
@@ -4336,15 +4180,14 @@ class SqlGateway(val spark: SparkSession) {
     if (out.toLowerCase.contains("percentile_cont")) {
       val ContList = ("""(?is)\bpercentile_cont\s*\(\s*\[([^\[\]]*)\]\s*\)\s*""" +
         """WITHIN\s+GROUP\s*\(\s*ORDER\s+BY\s+([^()]+?)(?:\s+(ASC|DESC))?\s*\)""").r
-      out = ContList.replaceAllIn(out, m => {
+      out = SqlLex.replace(out, ContList) { m =>
         // DESC at fraction q = ASC at 1−q (probed: [0.25,0.5] DESC over
         // {1,2,3,4,10} → [4.0,3.0], exactly [0.75,0.5] ASC)
         val desc = Option(m.group(3)).exists(_.equalsIgnoreCase("desc"))
         val fr = splitTopLevel(m.group(1)).map(_.trim)
           .map(f => if (desc) s"1 - ($f)" else f).mkString(", ")
-        java.util.regex.Matcher.quoteReplacement(
-          s"percentile(${m.group(2)}, array($fr))")
-      })
+        s"percentile(${m.group(2)}, array($fr))"
+      }
     }
     // json_extract / the -> operator return JSON text (strings keep
     // their quotes — probed: '$.a' of {"a":"x"} is '"x"'); Spark's
@@ -4369,34 +4212,27 @@ class SqlGateway(val spark: SparkSession) {
       val ChainOp = """('(?:[^']|'')*'|(?:[\w.]+)?\([^()]*\)|[\w.]+)"""
       val Chain = (ChainOp + """((?:\s*->>?\s*'(?:[^']|'')*'){2,})""").r
       val Step = """\s*(->>|->)\s*'((?:[^']|'')*)'""".r
-      val cIn = out
-      out = Chain.replaceAllIn(out, m => {
+      out = SqlLex.replace(out, Chain) { m =>
         val steps = Step.findAllMatchIn(m.group(2))
           .map(s => (s.group(1), s.group(2))).toList
-        val foldable =
-          cIn.substring(0, m.start).count(_ == '\'') % 2 == 0 &&
-          steps.exists(_._1 == "->>") &&
+        val foldable = steps.exists(_._1 == "->>") &&
           steps.forall(_._2.matches("""[A-Za-z_]\w*"""))
-        java.util.regex.Matcher.quoteReplacement(
-          if (!foldable) m.matched
-          else {
-            val path = "'$." + steps.map(_._2).mkString(".") + "'"
-            if (steps.last._1 == "->>")
-              s"get_json_object(${m.group(1)}, $path)"
-            else s"to_json(variant_get(parse_json(${m.group(1)}), $path))"
-          })
-      })
+        if (!foldable) m.matched
+        else {
+          val path = "'$." + steps.map(_._2).mkString(".") + "'"
+          if (steps.last._1 == "->>")
+            s"get_json_object(${m.group(1)}, $path)"
+          else s"to_json(variant_get(parse_json(${m.group(1)}), $path))"
+        }
+      }
     }
     if (out.contains("->>")) {
       // x ->> 'path' (the distinct ->> token never collides with lambda
-      // arrows); quote-parity guarded like the other infix rewrites
+      // arrows); matched on the masked view like the other infix rewrites
       val Arrow = ("""('(?:[^']|'')*'|(?:[\w.]+)?\([^()]*\)|[\w.]+)""" +
         """\s*->>\s*('(?:[^']|'')*')""").r
-      val aIn = out
-      out = Arrow.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (aIn.substring(0, m.start).count(_ == '\'') % 2 != 0) m.matched
-          else s"get_json_object(${m.group(1)}, ${jsonPath(m.group(2))})"))
+      out = SqlLex.replace(out, Arrow)(m =>
+        s"get_json_object(${m.group(1)}, ${jsonPath(m.group(2))})")
     }
     // json aggregates: to_json over ordered collections renders exactly
     // DuckDB's minified form (probed: [1,2] / {"a":1,"b":2})
@@ -4484,18 +4320,15 @@ class SqlGateway(val spark: SparkSession) {
       }
       for (fn <- Seq("from_json", "from_json_strict", "json_transform",
           "json_transform_strict") if out.toLowerCase.contains(fn))
-        out = fix(out, fn, 2, a => {
-          val lit = a(1).trim
-          if (lit.length >= 2 && lit.head == '\'' && lit.last == '\'' &&
-              !lit.drop(1).dropRight(1).contains('\'')) {
+        out = fix(out, fn, 2, a =>
+          SqlLex.plainLiteral(a(1).trim).flatMap { lit =>
             val parsed = scala.util.Try(new com.fasterxml.jackson.databind
-              .ObjectMapper().readTree(lit.drop(1).dropRight(1))).toOption
+              .ObjectMapper().readTree(lit)).toOption
             parsed.flatMap(structDdl).collect {
               case ddl if ddl.startsWith("STRUCT") || ddl.startsWith("ARRAY") =>
                 s"from_json(${a(0)}, '$ddl', map('mode', 'FAILFAST'))"
             }
-          } else None
-        })
+          })
     }
     // json_array / json_object constructors compose from per-element
     // json_quote renderings (the fix below runs AFTER these, so the
@@ -4523,8 +4356,7 @@ class SqlGateway(val spark: SparkSession) {
     // computed expressions refuse
     if (out.toLowerCase.contains("alias(")) {
       val Aliased = """(?i)\balias\s*\(\s*[\w.]+\s*\)\s+AS\s+(\w+)""".r
-      out = Aliased.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(s"'${m.group(1)}' AS ${m.group(1)}"))
+      out = SqlLex.replace(out, Aliased)(m => s"'${m.group(1)}' AS ${m.group(1)}")
       out = fix(out, "alias", 1, a => {
         val t = a(0).trim
         if (t.matches("""[A-Za-z_][\w.]*"""))
@@ -4540,12 +4372,10 @@ class SqlGateway(val spark: SparkSession) {
         val t = a(0).trim
         if (t.matches("""(?i)-?\d+(\.\d+)?([eE][+-]?\d+)?|true|false"""))
           Some(s"'${t.toLowerCase}'")
-        else if (t.length >= 2 && t.head == '\'' && t.last == '\'' &&
-            !t.drop(1).dropRight(1).contains('\'')) {
-          val inner = t.drop(1).dropRight(1)
-            .replace("\\", "\\\\").replace("\"", "\\\"")
-          Some("'\"" + inner + "\"'")
-        } else Some(s"to_json(${a(0)})")
+        else SqlLex.plainLiteral(t).map { lit =>
+          val inner = lit.replace("\\", "\\\\").replace("\"", "\\\"")
+          "'\"" + inner + "\"'"
+        }.orElse(Some(s"to_json(${a(0)})"))
       })
     // century/decade (probed: century(2000)=20, 2001→21; decade(2020)=202)
     if (out.toLowerCase.contains("century"))
@@ -4591,14 +4421,9 @@ class SqlGateway(val spark: SparkSession) {
         s"TIMESTAMP) IS NULL THEN CAST(NULL AS BIGINT) " +
         s"ELSE CAST(0 AS BIGINT) END)"))
     if (out.toLowerCase.contains("try_strptime"))
-      out = fix(out, "try_strptime", 2, a => {
-        val lit = a(1)
-        if (lit.length >= 2 && lit.head == '\'' && lit.last == '\'' &&
-            !lit.drop(1).dropRight(1).contains('\''))
-          strftimeToJavaPattern(lit.drop(1).dropRight(1)).map(p =>
-            s"try_to_timestamp(${a(0)}, '${p.replace("'", "''")}')")
-        else None
-      })
+      out = fix(out, "try_strptime", 2, a =>
+        SqlLex.plainLiteral(a(1)).flatMap(strftimeToJavaPattern).map(p =>
+          s"try_to_timestamp(${a(0)}, '${p.replace("'", "''")}')"))
     if (out.toLowerCase.contains("current_database"))
       out = fix(out, "current_database", -1, a =>
         if (a.isEmpty || a == Seq("")) Some("'memory'") else None)
@@ -4623,11 +4448,7 @@ class SqlGateway(val spark: SparkSession) {
         "current_catalog" -> "'memory'")
       for ((kw, v) <- idents if out.toLowerCase.contains(kw)) {
         val Re = ("(?i)(?<![\\w.$'])" + kw + "(?![\\w($])").r
-        val kIn = out
-        out = Re.replaceAllIn(out, m =>
-          java.util.regex.Matcher.quoteReplacement(
-            if (kIn.substring(0, m.start).count(_ == '\'') % 2 != 0) m.matched
-            else v))
+        out = SqlLex.replace(out, Re)(_ => v)
       }
     }
     // current_schemas(true) includes the implicit catalogs; (false) is
@@ -4815,14 +4636,10 @@ class SqlGateway(val spark: SparkSession) {
       })
     // DuckDB admits IGNORE/RESPECT NULLS INSIDE the window function's
     // parens (`lag(v, 1 IGNORE NULLS)`); standard SQL (and Spark) spell
-    // it after the call — move it out (quote-parity guarded)
+    // it after the call — move it out
     if (out.toLowerCase.contains("nulls")) {
       val Ig = """(?i)\s+(IGNORE|RESPECT)\s+NULLS\s*\)""".r
-      val gIn = out
-      out = Ig.replaceAllIn(out, m =>
-        if (gIn.substring(0, m.start).count(_ == '\'') % 2 != 0)
-          java.util.regex.Matcher.quoteReplacement(m.matched)
-        else ") " + m.group(1).toUpperCase + " NULLS ")
+      out = SqlLex.replace(out, Ig)(m => ") " + m.group(1).toUpperCase + " NULLS ")
     }
     // aggregate FILTER over a WINDOW (Spark's FILTER clause is
     // aggregation-only): fold the predicate into the argument — shared
@@ -4950,28 +4767,21 @@ class SqlGateway(val spark: SparkSession) {
     // ≡ IN, `<> ALL (…)` ≡ NOT IN (same NULL semantics); all other
     // quantifier/operator combinations pass through and refuse
     if (out.toLowerCase.contains("any") || out.toLowerCase.contains("all")) {
-      def rep(re: scala.util.matching.Regex, sub: String): Unit = {
-        val cur = out
-        out = re.replaceAllIn(cur, m =>
-          if (cur.substring(0, m.start).count(_ == '\'') % 2 == 0) sub
-          else java.util.regex.Matcher.quoteReplacement(m.matched))
-      }
+      def rep(re: scala.util.matching.Regex, sub: String): Unit =
+        out = SqlLex.replace(out, re)(_ => sub)
       rep("""(?is)=\s*ANY\s*\(""".r, " IN (")
       rep("""(?is)(?:<>|!=)\s*ALL\s*\(""".r, " NOT IN (")
     }
     // frame `EXCLUDE NO OTHERS` is the default — strip it
     if (out.toLowerCase.contains("exclude")) {
-      val eIn = out
-      out = """(?is)\s+EXCLUDE\s+NO\s+OTHERS""".r.replaceAllIn(out, m =>
-        if (eIn.substring(0, m.start).count(_ == '\'') % 2 == 0) " "
-        else java.util.regex.Matcher.quoteReplacement(m.matched))
+      out = SqlLex.replace(out, """(?is)\s+EXCLUDE\s+NO\s+OTHERS""".r)(_ => " ")
     }
     // two-parameter lambdas: DuckDB passes a 1-BASED element index as
     // the second parameter (probed: list_transform([1,2,3],(x,i)->x+i)
     // = [2,4,6]); Spark's transform/filter pass 0-based. Every
     // transform/filter in gateway SQL is the duck dialect (the names
     // arrive via the list_transform/list_filter aliases), so each use of
-    // the index variable in the body shifts by one. Quote-parity-guarded
+    // the index variable in the body shifts by one. Masked-view
     // word substitution; internal rewrites only emit 1-param lambdas.
     for (fn <- Seq("transform", "filter")
          if out.toLowerCase.contains(fn))
@@ -4981,10 +4791,7 @@ class SqlGateway(val spark: SparkSession) {
         a(1).trim match {
           case Lam2(x, i, body) =>
             val re = s"\\b${java.util.regex.Pattern.quote(i)}\\b".r
-            val shifted = re.replaceAllIn(body, m =>
-              if (body.substring(0, m.start).count(_ == '\'') % 2 != 0)
-                m.matched
-              else s"($i + 1)")
+            val shifted = SqlLex.replace(body, re)(_ => s"($i + 1)")
             Some(s"$fn(${a(0)}, ($x, $i) -> ${shifted})")
           case _ => None // 1-param lambda: agreed semantics, untouched
         }
@@ -5134,11 +4941,10 @@ class SqlGateway(val spark: SparkSession) {
       out = fix(out, fn, 3, a => {
         // a string-literal operand slices HERE (duckdb's array_slice works
         // on strings; Spark's slice() does not) — any int bounds, probed
-        val strLit = a(0).length >= 2 && a(0).head == '\'' &&
-          a(0).last == '\'' && !a(0).drop(1).dropRight(1).contains('\'')
+        val strLit = SqlLex.plainLiteral(a(0))
         (a(1).trim, a(2).trim) match {
-          case (i @ IntLit(), j @ IntLit()) if strLit =>
-            Some("'" + duckSliceLiteral(a(0).drop(1).dropRight(1),
+          case (i @ IntLit(), j @ IntLit()) if strLit.isDefined =>
+            Some("'" + duckSliceLiteral(strLit.get,
               Some(i.toLong), Some(j.toLong)) + "'")
           case (i @ IntLit(), j @ IntLit()) if i.toLong > 0 && j.toLong > 0 =>
             Some(s"slice(${a(0)}, $i, ${math.max(0L, j.toLong - i.toLong + 1)})")
@@ -5187,37 +4993,23 @@ class SqlGateway(val spark: SparkSession) {
     // strptime keeps the translate-or-refuse posture (parsing has no
     // native fallback).
     if (out.toLowerCase.contains("strftime"))
-      out = fix(out, "strftime", 2, a => {
-        val lit = a(1)
-        val translated =
-          if (lit.length >= 2 && lit.head == '\'' && lit.last == '\'' &&
-              !lit.drop(1).dropRight(1).contains('\''))
-            strftimeToJavaPattern(lit.drop(1).dropRight(1)).map(p =>
-              s"date_format(${a(0)}, '${p.replace("'", "''")}')")
-          else None
-        translated.orElse(Some(s"duck_strftime(${a(0)}, ${a(1)})"))
-      })
+      out = fix(out, "strftime", 2, a =>
+        SqlLex.plainLiteral(a(1)).flatMap(strftimeToJavaPattern).map(p =>
+          s"date_format(${a(0)}, '${p.replace("'", "''")}')")
+          .orElse(Some(s"duck_strftime(${a(0)}, ${a(1)})")))
     if (out.toLowerCase.contains("strptime"))
-      out = fix(out, "strptime", 2, a => {
-        val lit = a(1)
-        if (lit.length >= 2 && lit.head == '\'' && lit.last == '\'' &&
-            !lit.drop(1).dropRight(1).contains('\''))
-          strftimeToJavaPattern(lit.drop(1).dropRight(1)).map(p =>
-            s"to_timestamp(${a(0)}, '${p.replace("'", "''")}')")
-        else None
-      })
+      out = fix(out, "strptime", 2, a =>
+        SqlLex.plainLiteral(a(1)).flatMap(strftimeToJavaPattern).map(p =>
+          s"to_timestamp(${a(0)}, '${p.replace("'", "''")}')"))
     // '01…'::BIT literal casts erase to the model string (BIT stores as a
     // '0'/'1' text — cornerType). LAST in this pass: the bit_* fixes above
-    // key on the marker. Quote-parity guarded; non-literal ::BIT operands
+    // key on the marker. Literal contents are read from the raw text, at
+    // code positions only; non-literal ::BIT operands
     // stay and refuse downstream rather than skipping DuckDB's validation.
     if (out.toUpperCase.contains("::BIT") ||
         out.toUpperCase.matches("(?s).*::\\s*BIT.*")) {
       val BitLit = """'([01]+)'\s*::\s*BIT(?:STRING)?\b""".r
-      val src = out
-      out = BitLit.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (src.substring(0, m.start).count(_ == '\'') % 2 != 0) m.matched
-          else s"'${m.group(1)}'"))
+      out = SqlLex(out).replaceRaw(BitLit)(m => s"'${m.group(1)}'")
     }
     out
   }
@@ -5459,22 +5251,6 @@ class SqlGateway(val spark: SparkSession) {
     Some(sb.toString)
   }
 
-  /** Replace every match OUTSIDE string literals (preceding-quote-parity
-    * test, the same guard the other infix rewrites use); matches inside
-    * a literal are data and stay byte-exact. */
-  private def replaceOutsideLiterals(text: String, pattern: String,
-      replacement: String): String =
-    pattern.r.replaceAllIn(text, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        if (text.substring(0, m.start).count(_ == '\'') % 2 != 0) m.matched
-        else replacement))
-
-  /** DuckDB clause-level sugar with an exactly-equivalent Spark spelling:
-    * bare VARCHAR/BLOB cast targets, `USING SAMPLE` → TABLESAMPLE, and
-    * bare `SEMI/ANTI JOIN` → `LEFT SEMI/ANTI JOIN` (DuckDB's SEMI is left
-    * semi). Word-level patterns that cannot occur inside identifiers; the
-    * cast-target spellings are quote-parity-guarded so cast-shaped TEXT
-    * inside a string literal stays byte-exact. */
   /** `TIMESTAMPTZ '<text>'` / `'<text>'::TIMESTAMPTZ` literals → a
     * `TIMESTAMP '<utc>'` literal, converted at rewrite time: DuckDB
     * parses the offset/zone and stores the instant, rendered in the
@@ -5490,15 +5266,22 @@ class SqlGateway(val spark: SparkSession) {
   private def tstzLiteralToUtc(text: String): String =
     graft.functions.DuckTstzCast.toUtcText(text)
 
+  /** DuckDB clause-level sugar with an exactly-equivalent Spark spelling:
+    * bare VARCHAR/BLOB cast targets, `USING SAMPLE` → TABLESAMPLE, bare
+    * `SEMI/ANTI JOIN` → `LEFT SEMI/ANTI JOIN` (DuckDB's SEMI is left
+    * semi), and the operator spellings Spark lacks. The cast targets and
+    * operators are matched on the [[SqlLex]] masked view and spliced from
+    * the raw text, so cast- or operator-shaped TEXT inside a string literal
+    * or quoted identifier stays byte-exact. */
   private def rewriteDuckClauses(sql: String): String = {
     var out = sql
     if (out.toLowerCase.contains("varchar")) {
-      out = replaceOutsideLiterals(out, "(?i)::\\s*varchar(?![\\w(])", "::STRING")
-      out = replaceOutsideLiterals(out, "(?i)\\bas\\s+varchar\\s*\\)", "AS STRING)")
+      out = SqlLex.replace(out, """(?i)::\s*varchar(?![\w(])""".r)(_ => "::STRING")
+      out = SqlLex.replace(out, """(?i)\bas\s+varchar\s*\)""".r)(_ => "AS STRING)")
     }
     if (out.toLowerCase.contains("blob")) {
-      out = replaceOutsideLiterals(out, "(?i)::\\s*blob\\b", "::BINARY")
-      out = replaceOutsideLiterals(out, "(?i)\\bas\\s+blob\\s*\\)", "AS BINARY)")
+      out = SqlLex.replace(out, """(?i)::\s*blob\b""".r)(_ => "::BINARY")
+      out = SqlLex.replace(out, """(?i)\bas\s+blob\s*\)""".r)(_ => "AS BINARY)")
     }
     // unsigned integer casts: range-GUARDED onto the next wider signed
     // type — DuckDB raises on out-of-range (probed: 300::UTINYINT,
@@ -5521,53 +5304,47 @@ class SqlGateway(val spark: SparkSession) {
           s"range for ${n.toUpperCase}') AS $t) END)"
       for ((n, lo, hi, t) <- ranges if out.toLowerCase.contains(n)) {
         val Colon = (s"(?i)$Op\\s*::\\s*$n\\b").r
-        out = Colon.replaceAllIn(out, m =>
-          java.util.regex.Matcher.quoteReplacement(
-            guarded(m.group(1), lo, hi, t, n)))
+        out = SqlLex.replace(out, Colon)(m => guarded(m.group(1), lo, hi, t, n))
         val CastForm = (s"(?i)\\bCAST\\s*\\(([^()]+?)\\s+AS\\s+$n\\s*\\)").r
-        out = CastForm.replaceAllIn(out, m =>
-          java.util.regex.Matcher.quoteReplacement(
-            guarded(m.group(1), lo, hi, t, n)))
+        out = SqlLex.replace(out, CastForm)(m => guarded(m.group(1), lo, hi, t, n))
       }
     }
+    // every clause spelling below is matched on the masked view: the same
+    // words inside a string literal are data
+    def sub(re: String)(f: scala.util.matching.Regex.Match => String): Unit =
+      out = SqlLex.replace(out, ("(?i)" + re).r)(f)
+    def rows(m: scala.util.matching.Regex.Match) = s"TABLESAMPLE (${m.group(1)} ROWS)"
+    def percent(m: scala.util.matching.Regex.Match) =
+      s"TABLESAMPLE (${m.group(1)} PERCENT)"
     // `GROUP BY ()` is the empty grouping set (probed: one global row);
     // Spark's parser wants the GROUPING SETS spelling
     if (out.toLowerCase.contains("group by"))
-      out = out.replaceAll("(?i)\\bGROUP\\s+BY\\s*\\(\\s*\\)",
-        "GROUP BY GROUPING SETS (())")
-    if (out.toLowerCase.contains("using sample"))
-      out = out
-        .replaceAll("(?i)\\busing\\s+sample\\s+(\\d+(?:\\.\\d+)?)\\s*" +
-          "(?:%|percent\\b)\\s*\\(\\s*(?:bernoulli|system)\\s*\\)",
-          "TABLESAMPLE ($1 PERCENT)")
-        .replaceAll("(?i)\\busing\\s+sample\\s+(\\d+)\\s+rows\\b",
-          "TABLESAMPLE ($1 ROWS)")
-        .replaceAll("(?i)\\busing\\s+sample\\s+(\\d+(?:\\.\\d+)?)\\s*(?:%|percent\\b)",
-          "TABLESAMPLE ($1 PERCENT)")
-        .replaceAll("(?i)\\busing\\s+sample\\s+reservoir\\s*\\(\\s*(\\d+)" +
-          "(?:\\s+rows)?\\s*\\)", "TABLESAMPLE ($1 ROWS)")
-        // bare row count: `USING SAMPLE 2` samples 2 rows (probed)
-        .replaceAll("(?i)\\busing\\s+sample\\s+(\\d+)\\b(?!\\s*(?:%|percent|rows))",
-          "TABLESAMPLE ($1 ROWS)")
-    if (out.toLowerCase.contains("tablesample"))
-      out = out.replaceAll(
-        "(?i)\\btablesample\\s+reservoir\\s*\\(\\s*(\\d+)(?:\\s+rows)?\\s*\\)",
-        "TABLESAMPLE ($1 ROWS)")
-        // DuckDB admits parenless TABLESAMPLE (`t TABLESAMPLE 100%`,
-        // `TABLESAMPLE 3 ROWS` — probed); Spark's grammar wants parens
-        .replaceAll("(?i)\\btablesample\\s+(\\d+(?:\\.\\d+)?)\\s*(?:%|percent\\b)",
-          "TABLESAMPLE ($1 PERCENT)")
-        .replaceAll("(?i)\\btablesample\\s+(\\d+)\\s+rows\\b",
-          "TABLESAMPLE ($1 ROWS)")
+      sub("""\bGROUP\s+BY\s*\(\s*\)""")(_ => "GROUP BY GROUPING SETS (())")
+    if (out.toLowerCase.contains("using sample")) {
+      sub("""\busing\s+sample\s+(\d+(?:\.\d+)?)\s*(?:%|percent\b)\s*""" +
+        """\(\s*(?:bernoulli|system)\s*\)""")(percent)
+      sub("""\busing\s+sample\s+(\d+)\s+rows\b""")(rows)
+      sub("""\busing\s+sample\s+(\d+(?:\.\d+)?)\s*(?:%|percent\b)""")(percent)
+      sub("""\busing\s+sample\s+reservoir\s*\(\s*(\d+)(?:\s+rows)?\s*\)""")(rows)
+      // bare row count: `USING SAMPLE 2` samples 2 rows (probed)
+      sub("""\busing\s+sample\s+(\d+)\b(?!\s*(?:%|percent|rows))""")(rows)
+    }
+    if (out.toLowerCase.contains("tablesample")) {
+      sub("""\btablesample\s+reservoir\s*\(\s*(\d+)(?:\s+rows)?\s*\)""")(rows)
+      // DuckDB admits parenless TABLESAMPLE (`t TABLESAMPLE 100%`,
+      // `TABLESAMPLE 3 ROWS` — probed); Spark's grammar wants parens
+      sub("""\btablesample\s+(\d+(?:\.\d+)?)\s*(?:%|percent\b)""")(percent)
+      sub("""\btablesample\s+(\d+)\s+rows\b""")(rows)
+    }
     // standard FETCH FIRST/NEXT n ROWS ONLY ≡ LIMIT n (ROW alone = 1)
-    if (out.toLowerCase.contains("fetch"))
-      out = out
-        .replaceAll("(?i)\\bFETCH\\s+(?:FIRST|NEXT)\\s+(\\d+)\\s+ROWS?\\s+ONLY",
-          "LIMIT $1")
-        .replaceAll("(?i)\\bFETCH\\s+(?:FIRST|NEXT)\\s+ROW\\s+ONLY", "LIMIT 1")
+    if (out.toLowerCase.contains("fetch")) {
+      sub("""\bFETCH\s+(?:FIRST|NEXT)\s+(\d+)\s+ROWS?\s+ONLY""")(m =>
+        s"LIMIT ${m.group(1)}")
+      sub("""\bFETCH\s+(?:FIRST|NEXT)\s+ROW\s+ONLY""")(_ => "LIMIT 1")
+    }
     if (out.toLowerCase.contains("join"))
-      out = out.replaceAll("(?i)(?<!left\\s)(?<!right\\s)\\b(semi|anti)\\s+join\\b",
-        "LEFT $1 JOIN")
+      sub("""(?<!left\s)(?<!right\s)\b(semi|anti)\s+join\b""")(m =>
+        s"LEFT ${m.group(1)} JOIN")
     if (out.toLowerCase.contains("interval")) {
       // DuckDB's single interval type mixes year-month and day-time
       // units in one literal; Spark's two interval types cannot — a mixed
@@ -5576,7 +5353,7 @@ class SqlGateway(val spark: SparkSession) {
       // Single-kind strings are left for Spark's own literal parser.
       val Term = """(?i)(-?\d+(?:\.\d+)?)\s*(years?|yrs?|months?|mons?|weeks?|days?|hours?|hrs?|minutes?|mins?|seconds?|secs?)""".r
       val Lit = """(?i)\binterval\s*'([^']+)'(?!\s*(?:year|month|week|day|hour|minute|second|yr|mon|min|sec|hr))""".r
-      out = Lit.replaceAllIn(out, m => {
+      out = SqlLex(out).replaceRaw(Lit) { m =>
         val terms = Term.findAllMatchIn(m.group(1)).map(t =>
           (t.group(1), t.group(2).toLowerCase)).toSeq
         val joined = terms.map(t => t._1 + t._2).mkString
@@ -5584,87 +5361,65 @@ class SqlGateway(val spark: SparkSession) {
         val kinds = terms.map(t => kind(t._2)).distinct
         // rewrite only a well-formed, fully-consumed, MIXED literal
         if (terms.isEmpty || kinds.size < 2 ||
-            m.group(1).replaceAll("""[\s,]""", "") != joined)
-          java.util.regex.Matcher.quoteReplacement(m.matched)
+            m.group(1).replaceAll("""[\s,]""", "") != joined) m.matched
         else {
           def slot(p: String*) =
             terms.filter(t => p.exists(t._2.startsWith)).map(_._1)
               .reduceOption((a, b) => s"$a + $b").getOrElse("0")
-          java.util.regex.Matcher.quoteReplacement(
-            s"make_interval(${slot("y")}, ${slot("mon")}, ${slot("w")}, " +
-            s"${slot("d")}, ${slot("ho", "hr")}, ${slot("min")}, ${slot("s")})")
+          s"make_interval(${slot("y")}, ${slot("mon")}, ${slot("w")}, " +
+            s"${slot("d")}, ${slot("ho", "hr")}, ${slot("min")}, ${slot("s")})"
         }
-      })
+      }
       // `INTERVAL (expr) UNIT` (parenthesized count) — Spark only accepts
       // literal counts there; route through make_interval's typed slots
       val Paren = """(?i)\binterval\s*\(([^()']*)\)\s*(year|month|week|day|hour|minute|second)s?\b""".r
-      out = Paren.replaceAllIn(out, m => {
+      out = SqlLex.replace(out, Paren) { m =>
         val e = m.group(1)
         val slots = Seq("year", "month", "week", "day", "hour", "minute", "second")
           .map(u => if (u == m.group(2).toLowerCase) s"($e)" else "0")
-        java.util.regex.Matcher.quoteReplacement(
-          s"make_interval(${slots.mkString(", ")})")
-      })
+        s"make_interval(${slots.mkString(", ")})"
+      }
     }
     // --- DuckDB operator spellings with no Spark twin (r8) -------------
     // CTE materialization hints are advisory — strip them
     if (out.toLowerCase.contains("materialized"))
-      out = out.replaceAll("(?i)\\bAS\\s+(?:NOT\\s+)?MATERIALIZED\\s*\\(", "AS (")
+      sub("""\bAS\s+(?:NOT\s+)?MATERIALIZED\s*\(""")(_ => "AS (")
     // operand shape shared by the infix rewrites below: a quoted literal,
     // a dotted identifier/number, or a simple (possibly named) call
     val Operand = """('(?:[^']|'')*'|(?:[\w.]+)?\([^()]*\)|[\w.]+)"""
     // x [NOT] SIMILAR TO p and the ~ / !~ aliases: FULL-match regex
     // (probed: 'abc' ~ 'b' is FALSE) → anchored regexp_like
-    def balancedBefore(s: String, pos: Int): Boolean =
-      s.substring(0, pos).count(_ == '\'') % 2 == 0
     if (out.toLowerCase.contains("similar to") || out.contains("~")) {
       val Sim = (s"(?i)$Operand\\s+(NOT\\s+)?SIMILAR\\s+TO\\s+$Operand").r
-      out = Sim.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!balancedBefore(out, m.start)) m.matched
-          else s"${if (m.group(2) != null) "NOT " else ""}" +
-            s"regexp_like(${m.group(1)}, concat('^(?:', ${m.group(3)}, ')$$'))"))
+      out = SqlLex.replace(out, Sim)(m =>
+        s"${if (m.group(2) != null) "NOT " else ""}" +
+          s"regexp_like(${m.group(1)}, concat('^(?:', ${m.group(3)}, ')$$'))")
       // `~~~` is the GLOB operator (probed; no !~~~ exists in DuckDB 1.0)
       // — spelled out to GLOB so the glob→regex rewrite below handles it.
       // Runs before the LIKE aliases so `~~` never eats its prefix.
       val GlobOp = (s"$Operand\\s*~~~\\s*$Operand").r
-      val gOpIn = out
-      out = GlobOp.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!balancedBefore(gOpIn, m.start)) m.matched
-          else s"${m.group(1)} GLOB ${m.group(2)}"))
+      out = SqlLex.replace(out, GlobOp)(m => s"${m.group(1)} GLOB ${m.group(2)}")
       // LIKE-operator aliases first — `~~` must not be eaten as `~`
       // (probed: ~~ LIKE, !~~ NOT LIKE, ~~* ILIKE, !~~* NOT ILIKE)
       val LikeOp = (s"$Operand\\s*(!~~\\*|!~~|~~\\*|~~)\\s*$Operand").r
-      val lIn = out
-      out = LikeOp.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!balancedBefore(lIn, m.start)) m.matched
-          else {
-            val ci = m.group(2).endsWith("*")
-            val neg = if (m.group(2).startsWith("!")) "NOT " else ""
-            if (ci) s"(lower(${m.group(1)}) ${neg}LIKE lower(${m.group(3)}))"
-            else s"(${m.group(1)} ${neg}LIKE ${m.group(3)})"
-          }))
+      out = SqlLex.replace(out, LikeOp) { m =>
+        val ci = m.group(2).endsWith("*")
+        val neg = if (m.group(2).startsWith("!")) "NOT " else ""
+        if (ci) s"(lower(${m.group(1)}) ${neg}LIKE lower(${m.group(3)}))"
+        else s"(${m.group(1)} ${neg}LIKE ${m.group(3)})"
+      }
       val Tilde = (s"$Operand\\s*(!?)~\\s*$Operand").r
-      val tIn = out
-      out = Tilde.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!balancedBefore(tIn, m.start)) m.matched
-          else s"${if (m.group(2) == "!") "NOT " else ""}" +
-            s"regexp_like(${m.group(1)}, concat('^(?:', ${m.group(3)}, ')$$'))"))
+      out = SqlLex.replace(out, Tilde)(m =>
+        s"${if (m.group(2) == "!") "NOT " else ""}" +
+          s"regexp_like(${m.group(1)}, concat('^(?:', ${m.group(3)}, ')$$'))")
     }
     // list containment operators: a @> b is contains-all, a <@ b the
     // reverse (probed) — routed through list_has_all's NULL-exact fix
     if (out.contains("@>") || out.contains("<@")) {
       val Cont = (s"$Operand\\s*(@>|<@)\\s*$Operand").r
-      val cIn = out
-      out = Cont.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!balancedBefore(cIn, m.start)) m.matched
-          else if (m.group(2) == "@>")
-            s"list_has_all(${m.group(1)}, ${m.group(3)})"
-          else s"list_has_all(${m.group(3)}, ${m.group(1)})"))
+      out = SqlLex.replace(out, Cont)(m =>
+        if (m.group(2) == "@>") s"list_has_all(${m.group(1)}, ${m.group(3)})"
+        else s"list_has_all(${m.group(3)}, ${m.group(1)})")
     }
     // quantified LIST comparisons: `x op ANY(list)` / `x op ALL(list)`
     // (SOME = ANY) → exists/forall, whose three-valued NULL handling is
@@ -5688,8 +5443,8 @@ class SqlGateway(val spark: SparkSession) {
       var from = 0
       while (more) {
         val qIn = out
-        Quant.findAllMatchIn(qIn).find(m =>
-            m.start >= from && balancedBefore(qIn, m.start)) match {
+        val lx = SqlLex(qIn)
+        lx.find(Quant).find(_.start >= from) match {
           case None => more = false
           case Some(m) =>
             // compound-lhs guard: Operand captures only the TRAILING
@@ -5706,16 +5461,8 @@ class SqlGateway(val spark: SparkSession) {
                 "quantified comparison with a compound left operand is " +
                 "not supported: parenthesize it, e.g. (a || b) " +
                 s"${m.group(2)} ${m.group(3)}(...)")
-            var i = m.end; var depth = 1; var inStr = false
-            while (i < qIn.length && depth > 0) {
-              val c = qIn.charAt(i)
-              if (inStr) { if (c == '\'') inStr = false }
-              else if (c == '\'') inStr = true
-              else if (c == '(') depth += 1
-              else if (c == ')') depth -= 1
-              i += 1
-            }
-            if (depth != 0) more = false
+            val i = lx.close(m.end - 1) + 1
+            if (i == 0) more = false
             else if ("""(?is)^\s*(select|values|with|table)\b""".r
                 .findFirstIn(qIn.substring(m.end)).isDefined) {
               // SUBQUERY form. `x = ANY(q)` IS `x IN (q)` and
@@ -5799,11 +5546,7 @@ class SqlGateway(val spark: SparkSession) {
     // numeric literals may carry underscore separators (1_000_000)
     if (out.contains("_")) {
       val Und = """(?<![\w'.])(\d[\d_]*\d)(?![\w])""".r
-      val uIn = out
-      out = Und.replaceAllIn(out, m =>
-        if (!balancedBefore(uIn, m.start) || !m.matched.contains("_"))
-          java.util.regex.Matcher.quoteReplacement(m.matched)
-        else m.matched.replace("_", ""))
+      out = SqlLex.replace(out, Und)(_.matched.replace("_", ""))
     }
     // comparisons under DuckDB collations fold BOTH sides (probed:
     // 'ABC' = 'abc' COLLATE NOCASE true, 'a' < 'B' COLLATE NOCASE true)
@@ -5829,32 +5572,23 @@ class SqlGateway(val spark: SparkSession) {
       // — left unmatched, they refuse loudly
       val ColBoth = (s"(?i)$Operand\\s+COLLATE\\s+$Spec" +
         s"\\s*(=|<>|!=|<=|>=|<|>)\\s*$Operand\\s+COLLATE\\s+$Spec").r
-      val bIn = out
-      out = ColBoth.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!balancedBefore(bIn, m.start) ||
-              !m.group(2).equalsIgnoreCase(m.group(5))) m.matched
-          else s"(${fold(m.group(1), m.group(2))} ${m.group(3)} " +
-            s"${fold(m.group(4), m.group(2))})"))
+      out = SqlLex.replace(out, ColBoth)(m =>
+        if (!m.group(2).equalsIgnoreCase(m.group(5))) m.matched
+        else s"(${fold(m.group(1), m.group(2))} ${m.group(3)} " +
+          s"${fold(m.group(4), m.group(2))})")
       val Col = (s"(?i)$Operand\\s*(=|<>|!=|<=|>=|<|>)\\s*$Operand" +
         s"\\s+COLLATE\\s+$Spec").r
-      val kIn = out
-      out = Col.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!balancedBefore(kIn, m.start)) m.matched
-          else s"(${fold(m.group(1), m.group(4))} ${m.group(2)} " +
-            s"${fold(m.group(3), m.group(4))})"))
+      out = SqlLex.replace(out, Col)(m =>
+        s"(${fold(m.group(1), m.group(4))} ${m.group(2)} " +
+          s"${fold(m.group(3), m.group(4))})")
       // LEFT-side spelling folds the whole comparison too (probed:
       // 'ABC' COLLATE NOCASE = 'abc' → true)
       if (out.toLowerCase.contains("collate")) {
         val ColLeft = (s"(?i)$Operand\\s+COLLATE\\s+$Spec" +
           s"\\s*(=|<>|!=|<=|>=|<|>)\\s*$Operand").r
-        val lIn = out
-        out = ColLeft.replaceAllIn(out, m =>
-          java.util.regex.Matcher.quoteReplacement(
-            if (!balancedBefore(lIn, m.start)) m.matched
-            else s"(${fold(m.group(1), m.group(2))} ${m.group(3)} " +
-              s"${fold(m.group(4), m.group(2))})"))
+        out = SqlLex.replace(out, ColLeft)(m =>
+          s"(${fold(m.group(1), m.group(2))} ${m.group(3)} " +
+            s"${fold(m.group(4), m.group(2))})")
       }
       // collated IN folds the probe and EVERY list element (probed:
       // 'Apple' COLLATE NOCASE IN ('APPLE','x') → true); BETWEEN folds
@@ -5862,32 +5596,25 @@ class SqlGateway(val spark: SparkSession) {
       if (out.toLowerCase.contains("collate")) {
         val ColIn = (s"(?i)$Operand\\s+COLLATE\\s+$Spec" +
           s"\\s+(NOT\\s+)?IN\\s*\\(([^()]*)\\)").r
-        val iIn = out
-        out = ColIn.replaceAllIn(out, m =>
-          java.util.regex.Matcher.quoteReplacement(
-            if (!balancedBefore(iIn, m.start)) m.matched
-            else {
-              val items = splitTopLevel(m.group(4)).map(e =>
-                fold(e.trim, m.group(2))).mkString(", ")
-              s"(${fold(m.group(1), m.group(2))} " +
-                s"${Option(m.group(3)).getOrElse("")}IN ($items))"
-            }))
+        out = SqlLex.replace(out, ColIn) { m =>
+          val items = splitTopLevel(m.group(4)).map(e =>
+            fold(e.trim, m.group(2))).mkString(", ")
+          s"(${fold(m.group(1), m.group(2))} " +
+            s"${Option(m.group(3)).getOrElse("")}IN ($items))"
+        }
       }
       if (out.toLowerCase.contains("collate")) {
         val ColBtw = (s"(?i)$Operand\\s+COLLATE\\s+$Spec" +
           s"\\s+(NOT\\s+)?BETWEEN\\s+$Operand\\s+AND\\s+$Operand").r
-        val wIn = out
-        out = ColBtw.replaceAllIn(out, m =>
-          java.util.regex.Matcher.quoteReplacement(
-            if (!balancedBefore(wIn, m.start)) m.matched
-            else s"(${fold(m.group(1), m.group(2))} " +
-              s"${Option(m.group(3)).getOrElse("")}BETWEEN " +
-              s"${fold(m.group(4), m.group(2))} AND ${fold(m.group(5), m.group(2))})"))
+        out = SqlLex.replace(out, ColBtw)(m =>
+          s"(${fold(m.group(1), m.group(2))} " +
+            s"${Option(m.group(3)).getOrElse("")}BETWEEN " +
+            s"${fold(m.group(4), m.group(2))} AND ${fold(m.group(5), m.group(2))})")
       }
       if (out.toLowerCase.contains("collate")) {
         val Single = (s"(?i)$Operand\\s+COLLATE\\s+$Spec").r
         val sIn = out
-        out = Single.replaceAllIn(out, m => {
+        out = SqlLex.replace(out, Single) { m =>
           val prev = sIn.substring(0, m.start).reverse.dropWhile(_.isWhitespace)
           // a comparison/membership form that reached here was NOT matched
           // by the both-sides/left/IN/BETWEEN rules above (e.g. a list
@@ -5896,29 +5623,21 @@ class SqlGateway(val spark: SparkSession) {
           val next = sIn.substring(m.end).dropWhile(_.isWhitespace)
           val nextIsCmp = next.headOption.exists(c => "=<>!".contains(c)) ||
             """(?is)^(?:NOT\s+)?(?:IN|BETWEEN)\b""".r.findFirstIn(next).isDefined
-          java.util.regex.Matcher.quoteReplacement(
-            if (!balancedBefore(sIn, m.start) || nextIsCmp ||
-                prev.headOption.exists(c => "=<>!".contains(c))) m.matched
-            else fold(m.group(1), m.group(2)))
-        })
+          if (nextIsCmp || prev.headOption.exists(c => "=<>!".contains(c))) m.matched
+          else fold(m.group(1), m.group(2))
+        }
       }
     }
     // x ^@ y — starts_with operator (probed)
     if (out.contains("^@")) {
       val Sw = (s"$Operand\\s*\\^@\\s*$Operand").r
-      val sIn = out
-      out = Sw.replaceAllIn(out, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          if (!balancedBefore(sIn, m.start)) m.matched
-          else s"startswith(${m.group(1)}, ${m.group(2)})"))
+      out = SqlLex.replace(out, Sw)(m => s"startswith(${m.group(1)}, ${m.group(2)})")
     }
     // x GLOB 'pattern' (literal patterns): glob → anchored regex (LIKE
     // can't express [..] classes); non-literal patterns stay verbatim
     if (out.toLowerCase.contains("glob")) {
       val Glob = (s"(?i)$Operand\\s+GLOB\\s+('(?:[^']|'')*')").r
-      val gIn = out
-      out = Glob.replaceAllIn(out, m => if (!balancedBefore(gIn, m.start))
-          java.util.regex.Matcher.quoteReplacement(m.matched) else {
+      out = SqlLex.replace(out, Glob) { m =>
         val pat = m.group(2).drop(1).dropRight(1)
         val rx = new StringBuilder
         pat.foreach {
@@ -5928,9 +5647,8 @@ class SqlGateway(val spark: SparkSession) {
           case c if "\\$.|+(){}".contains(c) => rx ++= s"\\\\$c"
           case c => rx += c
         }
-        java.util.regex.Matcher.quoteReplacement(
-          s"regexp_like(${m.group(1)}, '^(?:${rx.toString})$$')")
-      })
+        s"regexp_like(${m.group(1)}, '^(?:${rx.toString})$$')"
+      }
     }
     // x ** y → power(x, y): LEFT-associative, binds a leading unary minus
     // into its left operand ((-2) ** 2 = 4, probed) — a unary-minus left
@@ -5949,7 +5667,7 @@ class SqlGateway(val spark: SparkSession) {
       while (guard < 8 && changed) { // leftmost-first = duck's left assoc
         guard += 1
         changed = false
-        Pow.findAllMatchIn(out).find(m => balancedBefore(out, m.start)).foreach { m =>
+        SqlLex(out).find(Pow).nextOption().foreach { m =>
           out = out.substring(0, m.start) +
             s"power(${m.group(1)}, ${m.group(2)})" + out.substring(m.end)
           changed = true
@@ -5959,18 +5677,12 @@ class SqlGateway(val spark: SparkSession) {
     // postfix factorial on an integer literal: 5! → factorial(5)
     if (out.contains("!")) {
       val Fact = """\b(\d+)\s*!(?!=)""".r
-      val fIn = out
-      out = Fact.replaceAllIn(out, m =>
-        if (!balancedBefore(fIn, m.start))
-          java.util.regex.Matcher.quoteReplacement(m.matched)
-        else s"factorial(${m.group(1)})")
+      out = SqlLex.replace(out, Fact)(m => s"factorial(${m.group(1)})")
     }
     // prefix @ is abs: @(expr) → abs(expr)
     if (out.contains("@(")) {
       val At = """(?<=^|[\s,(+*/%=<>-])@\s*\(""".r
-      val aIn = out
-      out = At.replaceAllIn(out, m =>
-        if (!balancedBefore(aIn, m.start)) m.matched else "abs(")
+      out = SqlLex.replace(out, At)(_ => "abs(")
     }
     // SQL-spelled frame `EXCLUDE CURRENT ROW` (Spark has no frame EXCLUDE
     // grammar): sum/count over the same frame minus the current row's own
@@ -5980,65 +5692,38 @@ class SqlGateway(val spark: SparkSession) {
     if (out.toLowerCase.contains("exclude")) {
       val Excl = ("""(?is)\b(sum|count)\s*\(\s*(\*|[^()']+?)\s*\)\s*over\s*""" +
         """\(([^()]*?)\s+exclude\s+current\s+row\s*\)""").r
-      out = Excl.replaceAllIn(out, m => {
+      out = SqlLex.replace(out, Excl) { m =>
         val arg = m.group(2).trim; val win = m.group(3)
-        val repl = m.group(1).toLowerCase match {
+        m.group(1).toLowerCase match {
           case "sum" => s"(sum($arg) OVER ($win) - coalesce($arg, 0))"
           case _ if arg == "*" => s"(count(*) OVER ($win) - 1)"
           case _ => s"(count($arg) OVER ($win) - " +
             s"CASE WHEN ($arg) IS NULL THEN 0 ELSE 1 END)"
         }
-        java.util.regex.Matcher.quoteReplacement(repl)
-      })
+      }
     }
     // DuckDB's bare aggregate-FILTER shorthand `agg(...) FILTER (cond)` →
     // the standard `FILTER (WHERE cond)` both engines accept. Anchored on
     // the aggregate call's closing paren, so the higher-order function
     // `filter(arr, …)` (which never directly follows `)`) is untouched.
-    // Quote-parity scan (same discipline as the `//` rewrite below):
-    // `) filter(` inside a string literal is data, not syntax.
-    if (out.toLowerCase.contains("filter")) {
-      val FiltRe = """(?is)^\s*filter\s*\(\s*(?!where\b)""".r
-      val sb = new StringBuilder(out.length + 16)
-      var i = 0; var inStr = false
-      while (i < out.length) {
-        val c = out.charAt(i)
-        if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-        else if (c == '\'') { inStr = true; sb += c; i += 1 }
-        else if (c == ')') {
-          sb += c
-          FiltRe.findPrefixMatchOf(out.substring(i + 1)) match {
-            case Some(m) => sb ++= " FILTER (WHERE "; i += 1 + m.end
-            case None => i += 1
-          }
-        } else { sb += c; i += 1 }
-      }
-      out = sb.toString
-    }
+    // Matched on the masked view: `) filter(` inside a string literal is
+    // data, not syntax.
+    if (out.toLowerCase.contains("filter"))
+      out = SqlLex.replace(out, """(?is)\)\s*filter\s*\(\s*(?!where\b)""".r)(_ =>
+        ") FILTER (WHERE ")
     // DuckDB's `//` division operator → Spark's `div` keyword (SAME
     // multiplicative precedence in both grammars, so operand grouping is
     // preserved exactly); the parsed IntegralDivide is then swapped for
     // DuckFloorDiv, which carries DuckDB 1.0's exact typed semantics
-    // (see duckDivSql). Quote-parity scan: `'//'` inside a string literal
-    // stays text. Comments are stripped before any rewrite sees the text.
-    if (out.contains("//")) {
-      val sb = new StringBuilder(out.length + 8)
-      var i = 0; var inStr = false
-      while (i < out.length) {
-        val c = out.charAt(i)
-        if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-        else if (c == '\'') { inStr = true; sb += c; i += 1 }
-        else if (c == '/' && i + 1 < out.length && out.charAt(i + 1) == '/') {
-          sb ++= " div "; i += 2
-        } else { sb += c; i += 1 }
-      }
-      out = sb.toString
-    }
+    // (see duckDivSql). Matched on the masked view: `'//'` inside a string
+    // literal stays text.
+    if (out.contains("//"))
+      out = SqlLex.replace(out, "//".r)(_ => " div ")
     out
   }
 
-  /** DuckDB container literals → Spark constructors, one quote-aware
-    * left-to-right pass:
+  /** DuckDB container literals → Spark constructors, one left-to-right
+    * pass that copies literals and quoted identifiers verbatim ([[SqlLex]]):
     *
     *   - `[a, b, c]` at EXPRESSION position (start of an expression:
     *     after an operator, comma, open paren, or SQL keyword) →
@@ -6071,11 +5756,12 @@ class SqlGateway(val spark: SparkSession) {
       "offset", "union", "all", "intersect", "except", "distinct",
       "values", "set", "returning", "between", "like", "ilike", "is",
       "case", "order", "group", "join", "using", "exists", "array")
+    val lx = SqlLex(sql)
     val readSpans: Map[Int, Int] =
-      ReadFnRe.findAllMatchIn(sql).map(m => m.start -> m.end).toMap
+      lx.findRaw(ReadFnRe).map(m => m.start -> m.end).toMap
     val sb = new StringBuilder
     val stack = scala.collection.mutable.Stack[Char]()
-    var i = 0; var inStr = false
+    var i = 0
     def lastWord: String = {
       var j = sb.length - 1
       while (j >= 0 && sb.charAt(j).isWhitespace) j -= 1
@@ -6091,42 +5777,26 @@ class SqlGateway(val spark: SparkSession) {
     }
     // copy sql[i ..] verbatim through the ']' matching the '[' at i
     def copyBracketVerbatim(): Unit = {
-      var depth = 0; var s = false
-      var done = false
-      while (i < sql.length && !done) {
-        val c = sql.charAt(i); sb += c
-        if (s) { if (c == '\'') s = false }
-        else if (c == '\'') s = true
-        else if (c == '[') depth += 1
-        else if (c == ']') { depth -= 1; if (depth == 0) done = true }
-        i += 1
-      }
+      val e = lx.close(i)
+      val end = if (e < 0) sql.length else e + 1
+      sb.append(sql.substring(i, end)); i = end
     }
     // the span of sql[from..) up to the ']' matching the '[' at `from`
     def indexSpan(from: Int): Option[(String, Int)] = {
-      var j = from + 1; var depth = 1; var s = false
-      while (j < sql.length && depth > 0) {
-        val c = sql.charAt(j)
-        if (s) { if (c == '\'') s = false }
-        else if (c == '\'') s = true
-        else if (c == '[') depth += 1
-        else if (c == ']') depth -= 1
-        j += 1
-      }
-      if (depth == 0) Some(sql.substring(from + 1, j - 1) -> j) else None
+      val e = lx.close(from)
+      if (e >= 0) Some(sql.substring(from + 1, e) -> (e + 1)) else None
     }
     // `[expr for x in list [if cond]]` (DuckDB list comprehension) at the
     // '[' at `from` → Some((spark spelling, index after the span)); the
     // pieces are recursively rewritten so nested list literals work
     def comprehension(from: Int): Option[(String, Int)] = {
       // first top-level (outside quotes/brackets) word occurrence in s
-      def topWord(s: String, word: String, start: Int): Int = {
-        var d = 0; var q = false; var j = 0; var found = -1
+      def topWord(s0: String, word: String, start: Int): Int = {
+        val s = SqlLex.mask(s0)
+        var d = 0; var j = 0; var found = -1
         while (j <= s.length - word.length && found < 0) {
           val c = s.charAt(j)
-          if (q) { if (c == '\'') q = false }
-          else if (c == '\'') q = true
-          else if (c == '(' || c == '[' || c == '{') d += 1
+          if (c == '(' || c == '[' || c == '{') d += 1
           else if (c == ')' || c == ']' || c == '}') d -= 1
           else if (j >= start && d == 0 &&
               s.regionMatches(true, j, word, 0, word.length) &&
@@ -6166,14 +5836,13 @@ class SqlGateway(val spark: SparkSession) {
     // top-level ':' separator positions in an index expression — the ONE
     // scanner behind isSlice and sliceParts ('::' is a duck CAST token,
     // not two separators)
-    def sepColons(ix: String): Seq[Int] = {
-      var d = 0; var s = false; var k = 0
+    def sepColons(ix0: String): Seq[Int] = {
+      val ix = SqlLex.mask(ix0)
+      var d = 0; var k = 0
       val out = scala.collection.mutable.ArrayBuffer[Int]()
       while (k < ix.length) {
         val c = ix.charAt(k)
-        if (s) { if (c == '\'') s = false }
-        else if (c == '\'') s = true
-        else if (c == '(' || c == '[') d += 1
+        if (c == '(' || c == '[') d += 1
         else if (c == ')' || c == ']') d -= 1
         else if (c == ':' && d == 0) {
           if (k + 1 < ix.length && ix.charAt(k + 1) == ':') k += 1
@@ -6230,11 +5899,10 @@ class SqlGateway(val spark: SparkSession) {
     }
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
+      if (lx.inside(i)) { sb += c; i += 1 }
       else if (readSpans.contains(i)) {
         val end = readSpans(i); sb.append(sql.substring(i, end)); i = end
       } else c match {
-        case '\'' => inStr = true; sb += c; i += 1
         case '[' =>
           val p = lastSig
           val afterKeyword = (p.isLetter || p == '_') && kw(lastWord.toLowerCase)
@@ -6377,7 +6045,7 @@ class SqlGateway(val spark: SparkSession) {
   private[engine] def duckCompat(sql: String): String =
     rewriteDuckDefaults(rewriteDuckAliases(rewriteDuckClauses(
       rewriteWindowExclude(foldWindowFilter(inlineNamedWindowFrames(rewriteDuckTypeSpellings(
-        rewriteDuckLiterals(escapeLiteralBackslashes(
+        rewriteDuckLiterals(SqlLex.escapeBackslashes(
           rewriteCurrentQuery(rewriteBareDatetimeKeywords(
             rewriteIntervalHms(rewriteBlobLiterals(rewriteJsonColonCasts(
               rewriteMultiUnnest(sql)))))))))))))))
@@ -6405,9 +6073,8 @@ class SqlGateway(val spark: SparkSession) {
       more = false
       // first match (left to right) whose operand the scan can own; an
       // unownable match is skipped rather than blocking later ones
-      re.findAllMatchIn(out)
-        .filter(m => out.substring(0, m.start).count(_ == '\'') % 2 == 0)
-        .map(m => (m, jsonCastOperandStart(out, m.start)))
+      val lx = SqlLex(out)
+      lx.find(re).map(m => (m, jsonCastOperandStart(lx.masked, m.start)))
         .find(_._2 >= 0) match {
         case Some((m, start)) =>
           out = out.substring(0, start) + "graft_json_cast(" +
@@ -6420,7 +6087,8 @@ class SqlGateway(val spark: SparkSession) {
   }
 
   /** Start index of the postfix-primary expression ending just before
-    * `pos`, or -1 when the shape is not recognized. */
+    * `pos` in the masked view `text`, or -1 when the shape is not
+    * recognized. */
   private def jsonCastOperandStart(text: String, pos: Int): Int = {
     var j = pos - 1
     while (j >= 0 && text.charAt(j).isWhitespace) j -= 1
@@ -6431,13 +6099,8 @@ class SqlGateway(val spark: SparkSession) {
     while (continue && j >= 0) {
       val c = text.charAt(j)
       if (c == '\'') {
-        // string literal backward, '' doubling included
-        var k = j - 1; var open = -1
-        while (k >= 0 && open < 0) {
-          if (text.charAt(k) == '\'') {
-            if (k > 0 && text.charAt(k - 1) == '\'') k -= 2 else open = k
-          } else k -= 1
-        }
+        // string literal backward: its contents are blank in the mask
+        val open = text.lastIndexOf('\'', j - 1)
         if (open < 0) return -1
         start = open; j = open - 1
         // typed-literal keyword head (DATE '...'::JSON casts the DATE)
@@ -6453,12 +6116,10 @@ class SqlGateway(val spark: SparkSession) {
         continue = false
       } else if (c == ')' || c == ']' || c == '}') {
         val openCh = c match { case ')' => '('; case ']' => '['; case _ => '{' }
-        var depth = 0; var k = j; var inStr = false; var open = -1
+        var depth = 0; var k = j; var open = -1
         while (k >= 0 && open < 0) {
           val ch = text.charAt(k)
-          if (inStr) { if (ch == '\'') inStr = false }
-          else if (ch == '\'') inStr = true
-          else if (ch == c) depth += 1
+          if (ch == c) depth += 1
           else if (ch == openCh) { depth -= 1; if (depth == 0) open = k }
           k -= 1
         }
@@ -6497,18 +6158,13 @@ class SqlGateway(val spark: SparkSession) {
      """(?!\s*(?:HOUR|MINUTE|SECOND|DAY|MONTH|YEAR|TO)\b)""").r
   private def rewriteIntervalHms(sql: String): String = {
     if (!sql.toLowerCase.contains("interval")) return sql
-    IntervalHmsRe.replaceAllIn(sql, m => {
-      val outside = sql.substring(0, m.start).count(_ == '\'') % 2 == 0
-      if (!outside) java.util.regex.Matcher.quoteReplacement(m.matched)
-      else {
-        // both engines FIELD-CHECK the clock parts (probed: DuckDB
-        // refuses '0:90' and '0:10:90' exactly like Spark's qualified
-        // literal will) — same loud failure mode, no normalization
-        val qual = if (m.group(3) != null) "HOUR TO SECOND" else "HOUR TO MINUTE"
-        java.util.regex.Matcher.quoteReplacement(
-          s"INTERVAL '${m.group(1)}:${m.group(2)}${Option(m.group(3)).getOrElse("")}' $qual")
-      }
-    })
+    SqlLex(sql).replaceRaw(IntervalHmsRe) { m =>
+      // both engines FIELD-CHECK the clock parts (probed: DuckDB
+      // refuses '0:90' and '0:10:90' exactly like Spark's qualified
+      // literal will) — same loud failure mode, no normalization
+      val qual = if (m.group(3) != null) "HOUR TO SECOND" else "HOUR TO MINUTE"
+      s"INTERVAL '${m.group(1)}:${m.group(2)}${Option(m.group(3)).getOrElse("")}' $qual"
+    }
   }
 
   /** DuckDB zips MULTIPLE unnests in one SELECT list to the longest
@@ -6528,8 +6184,7 @@ class SqlGateway(val spark: SparkSession) {
     * (WHERE, joins, unnest nested in expressions) keep the old loud
     * refusal (Spark's one-generator analysis error). */
   private def rewriteMultiUnnest(sql: String): String = {
-    val lower = maskStringLiterals(sql).toLowerCase
-    if ("""(?i)\bunnest\s*\(""".r.findAllMatchIn(lower).size < 2) return sql
+    if (SqlLex(sql).find("""(?i)\bunnest\s*\(""".r).size < 2) return sql
     val SelRe = """(?is)^\s*SELECT\s+(.*)$""".r
     val body = SelRe.findFirstMatchIn(sql).map(_.group(1)).getOrElse(return sql)
     val (selectList, tail) = topLevel(body, """\bFROM\b""") match {
@@ -6555,15 +6210,7 @@ class SqlGateway(val spark: SparkSession) {
     // whole statement bails to the loud path
     def unnestOf(item: String): Option[(String, Option[String])] = {
       val mm = """(?is)^unnest\s*\(""".r.findPrefixMatchOf(item).getOrElse(return None)
-      var i = mm.end - 1; var depth = 0; var close = -1; var inStr = false
-      while (i < item.length && close < 0) {
-        val c = item.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (c == '\'') inStr = true
-        else if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) close = i }
-        i += 1
-      }
+      val close = SqlLex(item).close(mm.end - 1)
       if (close < 0) return None
       val rest = item.substring(close + 1).trim
       val alias =
@@ -6627,14 +6274,10 @@ class SqlGateway(val spark: SparkSession) {
     val Lit = """'((?:[^']|'')*)'"""
     val CastRe =
       (s"""(?i)(?:$Lit\\s*::\\s*blob\\b|cast\\s*\\(\\s*$Lit\\s+as\\s+blob\\s*\\))""").r
-    CastRe.replaceAllIn(sql, m => {
-      // quote-parity guard (same as rewriteIntervalHms): a '::BLOB'-shaped
-      // span INSIDE a larger string literal is data, not a cast — rewriting
-      // it (or raising its decode errors) would corrupt a valid query
-      if (sql.substring(0, m.start).count(_ == '\'') % 2 != 0)
-        java.util.regex.Matcher.quoteReplacement(m.matched)
-      else rewriteOneBlobCast(m)
-    })
+    // matched on the masked view: a '::BLOB'-shaped span INSIDE a larger
+    // string literal is data, not a cast — rewriting it (or raising its
+    // decode errors) would corrupt a valid query
+    SqlLex.replace(sql, CastRe)(rewriteOneBlobCast)
   }
 
   private def rewriteOneBlobCast(m: scala.util.matching.Regex.Match): String = {
@@ -6646,8 +6289,7 @@ class SqlGateway(val spark: SparkSession) {
         throw new IllegalArgumentException(
           "Invalid byte encountered in STRING -> BLOB conversion. All " +
             "non-ascii characters must be escaped with hex codes (e.g. \\xAA)")
-      if (!raw.contains("\\"))
-        java.util.regex.Matcher.quoteReplacement(m.matched)
+      if (!raw.contains("\\")) m.matched
       else {
         val bytes = new java.io.ByteArrayOutputStream()
         var i = 0
@@ -6669,53 +6311,24 @@ class SqlGateway(val spark: SparkSession) {
           }
         }
         val hex = bytes.toByteArray.map(b => f"${b & 0xff}%02X").mkString
-        java.util.regex.Matcher.quoteReplacement(s"X'$hex'")
+        s"X'$hex'"
       }
   }
 
   /** DuckDB's parenless datetime keywords Spark lacks: bare
     * `localtimestamp` (duck: TIMESTAMP, probed) → `localtimestamp()`
     * (Spark's NTZ twin) and bare `localtime` (duck: TIME) →
-    * `current_time()`. Quoted spellings and call forms stay untouched.
-    * Full quote scanner (not the '-parity heuristic): an apostrophe
-    * inside a double-quoted identifier must not flip the string state. */
-  private def rewriteBareDatetimeKeywords(sql: String): String = {
-    // ASCII-only fold: String.toLowerCase is default-locale and not
-    // length-preserving ('İ' lowers to 2 chars; Turkish 'I' → 'ı'), which
-    // would shift indices or miss uppercase spellings
-    val lower = sql.map(c => if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
-    if (!lower.contains("localtime")) return sql
-    val sb = new StringBuilder(sql.length + 16)
-    var i = 0; var inStr = false; var inId = false
-    def wordish(c: Char) = c.isLetterOrDigit || c == '_' || c == '$' || c == '.'
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inId) { sb += c; if (c == '"') inId = false; i += 1 }
-      else if (c == '\'') { sb += c; inStr = true; i += 1 }
-      else if (c == '"') { sb += c; inId = true; i += 1 }
-      else if ((c == 'l' || c == 'L') &&
-          (i == 0 || !wordish(sql.charAt(i - 1)))) {
-        val kw =
-          if (lower.startsWith("localtimestamp", i)) "localtimestamp"
-          else if (lower.startsWith("localtime", i)) "localtime"
-          else null
-        val afterOk = kw != null && {
-          val a = lower.lift(i + kw.length).getOrElse(' ')
-          !wordish(a) && a != '"'
-        }
-        // already a call form? leave it for Spark's own resolution
-        var j = if (kw == null) i else i + kw.length
-        while (afterOk && j < sql.length && sql.charAt(j).isWhitespace) j += 1
-        if (afterOk && (j >= sql.length || sql.charAt(j) != '(')) {
-          sb.append(if (kw == "localtime") "current_time()"
-            else "localtimestamp()")
-          i += kw.length
-        } else { sb += c; i += 1 }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
+    * `current_time()`. Quoted spellings and call forms stay untouched;
+    * matched on the [[SqlLex]] masked view, so an apostrophe inside a
+    * double-quoted identifier cannot open a string. */
+  private def rewriteBareDatetimeKeywords(sql: String): String =
+    if (!sql.toLowerCase.contains("localtime")) sql
+    else SqlLex.replace(sql, BareDatetimeRe)(m =>
+      if (m.group(1).length == "localtime".length) "current_time()"
+      else "localtimestamp()")
+
+  private val BareDatetimeRe =
+    """(?i)(?<![\p{L}\p{N}_$.])(localtimestamp|localtime)(?![\p{L}\p{N}_$."])(?!\s*\()""".r
 
   /** `OVER (w ROWS BETWEEN ...)` — a named-WINDOW reference extended with
     * a frame (DuckDB grammar; Spark's parser takes `OVER w` but not the
@@ -6729,7 +6342,7 @@ class SqlGateway(val spark: SparkSession) {
     // balanced-paren scan (a definition may itself contain parentheses —
     // `ORDER BY f(x)` — which a [^()]* regex can't match); masking keeps
     // positions aligned so bodies slice from the ORIGINAL text
-    val masked = maskStringLiterals(sql)
+    val masked = SqlLex.mask(sql)
     val defs = scala.collection.mutable.LinkedHashMap[String, String]()
     val NameAs = """(?is)^\s*(\w+)\s+AS\s*\(""".r
     for (m <- """(?i)\bWINDOW\s""".r.findAllMatchIn(masked)) {
@@ -6739,13 +6352,7 @@ class SqlGateway(val spark: SparkSession) {
         more = false
         NameAs.findFirstMatchIn(masked.substring(i)).foreach { nm =>
           val open = i + nm.end - 1
-          var depth = 0; var j = open; var close = -1
-          while (j < masked.length && close < 0) {
-            val ch = masked.charAt(j)
-            if (ch == '(') depth += 1
-            else if (ch == ')') { depth -= 1; if (depth == 0) close = j }
-            j += 1
-          }
+          val close = SqlLex.close(masked, open)
           if (close > 0) {
             defs(nm.group(1)) = sql.substring(open + 1, close).trim
             var k = close + 1
@@ -6757,9 +6364,9 @@ class SqlGateway(val spark: SparkSession) {
     }
     if (defs.isEmpty) return sql
     val extended = defs.foldLeft(sql) { case (s, (name, body)) =>
-      s.replaceAll(
-        s"""(?is)\\bOVER\\s*\\(\\s*$name\\s+(?=(?:ROWS|RANGE|GROUPS)\\b)""",
-        java.util.regex.Matcher.quoteReplacement(s"OVER ($body ") )
+      SqlLex.replace(s,
+        s"""(?is)\\bOVER\\s*\\(\\s*$name\\s+(?=(?:ROWS|RANGE|GROUPS)\\b)""".r)(_ =>
+        s"OVER ($body ")
     }
     // r14: a named-window DEFINITION carrying a frame EXCLUDE — plain
     // `OVER w` references must inline the body (rewriteWindowExclude only
@@ -6771,8 +6378,7 @@ class SqlGateway(val spark: SparkSession) {
     defs.filter { case (_, b) =>
       """(?i)\bexclude\b""".r.findFirstIn(b).isDefined
     }.foldLeft(extended) { case (s, (name, body)) =>
-      val t = s.replaceAll(s"""(?is)\\bOVER\\s+$name\\b""",
-        java.util.regex.Matcher.quoteReplacement(s"OVER ($body)"))
+      val t = SqlLex.replace(s, s"""(?is)\\bOVER\\s+$name\\b""".r)(_ => s"OVER ($body)")
       val defBody = s"$name\\s+AS\\s*\\(${q(body)}\\)"
       val before = (s"(?is),\\s*$defBody").r
       val after = (s"(?is)\\b$defBody\\s*,").r
@@ -6796,15 +6402,12 @@ class SqlGateway(val spark: SparkSession) {
       return sql
     val Fow = ("""(?i)\b(\w+)\s*\(\s*(\*|[^()]*?)\s*\)\s+FILTER\s*""" +
       """\(\s*WHERE\s+([^()]+?)\s*\)\s*(?=OVER\b)""").r
-    Fow.replaceAllIn(sql, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        if (sql.substring(0, m.start).count(_ == '\'') % 2 != 0) m.matched
-        else {
-          val fn = m.group(1); val arg = m.group(2); val cond = m.group(3)
-          if (fn.equalsIgnoreCase("count") && (arg == "*" || arg.isEmpty))
-            s"count(CASE WHEN $cond THEN 1 END) "
-          else s"$fn(CASE WHEN $cond THEN $arg END) "
-        }))
+    SqlLex.replace(sql, Fow) { m =>
+      val fn = m.group(1); val arg = m.group(2); val cond = m.group(3)
+      if (fn.equalsIgnoreCase("count") && (arg == "*" || arg.isEmpty))
+        s"count(CASE WHEN $cond THEN 1 END) "
+      else s"$fn(CASE WHEN $cond THEN $arg END) "
+    }
   }
 
   /** SQL-spelled window frame `EXCLUDE` (DuckDB 1.0 grammar: EXCLUDE may
@@ -6830,13 +6433,10 @@ class SqlGateway(val spark: SparkSession) {
     * subtraction reassociates the float sum). */
   private[engine] def rewriteWindowExclude(sql: String): String = {
     if ("""(?i)\bexclude\b""".r.findFirstIn(sql).isEmpty) return sql
-    // forward pass: which positions sit inside a string literal
-    val inStr: Array[Boolean] = {
-      val a = new Array[Boolean](sql.length)
-      var s = false
-      for (i <- 0 until sql.length) { if (sql.charAt(i) == '\'') s = !s; a(i) = s }
-      a
-    }
+    // right to left: a splice changes only text after the match start, so
+    // the masked view of the input stays valid for every backward scan
+    val lx = SqlLex(sql)
+    val mk = lx.masked
     val ExclRe = """(?i)\bEXCLUDE\s+(CURRENT\s+ROW|GROUP|TIES|NO\s+OTHERS)\s*""".r
     val Bound = """(?is)^\s*(UNBOUNDED\s+PRECEDING|UNBOUNDED\s+FOLLOWING|CURRENT\s+ROW|.+?\s+PRECEDING|.+?\s+FOLLOWING)\s*$""".r
     def kind(b: String): Char = {
@@ -6844,7 +6444,7 @@ class SqlGateway(val spark: SparkSession) {
       if (u == "CURRENT ROW") 'c' else if (u.endsWith("PRECEDING")) 'p' else 'f'
     }
     var out = sql
-    for (m <- ExclRe.findAllMatchIn(sql).toList.reverse if !inStr(m.start)) {
+    for (m <- lx.find(ExclRe).toList.reverse) {
       val mode = m.group(1).toUpperCase.replaceAll("\\s+", " ")
       val rewritten: Option[String] = {
         // EXCLUDE must be the LAST window-spec item: next sig char is ')'
@@ -6855,11 +6455,9 @@ class SqlGateway(val spark: SparkSession) {
           // backward: the OVER-spec '(' enclosing the EXCLUDE
           var j = m.start - 1; var depth = 0; var open = -1
           while (j >= 0 && open < 0) {
-            val ch = out.charAt(j)
-            if (!inStr(j)) {
-              if (ch == ')') depth += 1
-              else if (ch == '(') { if (depth == 0) open = j else depth -= 1 }
-            }
+            val ch = mk.charAt(j)
+            if (ch == ')') depth += 1
+            else if (ch == '(') { if (depth == 0) open = j else depth -= 1 }
             j -= 1
           }
           // the word before '(' must be OVER, then the aggregate call
@@ -6874,11 +6472,9 @@ class SqlGateway(val spark: SparkSession) {
             else {
               var d2 = 0; var callOpen = -1; var p = c2
               while (p >= 0 && callOpen < 0) {
-                val ch = out.charAt(p)
-                if (!inStr(p)) {
-                  if (ch == ')') d2 += 1
-                  else if (ch == '(') { d2 -= 1; if (d2 == 0) callOpen = p }
-                }
+                val ch = mk.charAt(p)
+                if (ch == ')') d2 += 1
+                else if (ch == '(') { d2 -= 1; if (d2 == 0) callOpen = p }
                 p -= 1
               }
               var ns = callOpen - 1
@@ -6996,7 +6592,8 @@ class SqlGateway(val spark: SparkSession) {
 
   /** Parse one type expression at `at` (identifier, optional balanced
     * parens, repeated `[n]` suffixes) → (span text, index after). */
-  private def typeSpan(sql: String, at: Int): Option[(String, Int)] = {
+  private def typeSpan(lx: SqlLex, at: Int): Option[(String, Int)] = {
+    val sql = lx.sql
     var i = at
     while (i < sql.length && sql.charAt(i).isWhitespace) i += 1
     val start = i
@@ -7006,18 +6603,10 @@ class SqlGateway(val spark: SparkSession) {
       sql.charAt(i) == '_')) i += 1
     var j = i
     while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-    if (j < sql.length && sql.charAt(j) == '(') { // balanced, quote-aware
-      var depth = 0; var inStr = false
-      while (j < sql.length && (depth > 0 || sql.charAt(j) == '(' || inStr)) {
-        val ch = sql.charAt(j)
-        if (inStr) { if (ch == '\'') inStr = false }
-        else if (ch == '\'') inStr = true
-        else if (ch == '(') depth += 1
-        else if (ch == ')') depth -= 1
-        j += 1
-        if (depth == 0 && !inStr) i = j
-      }
-      if (depth != 0) return None
+    if (j < sql.length && sql.charAt(j) == '(') {
+      val close = lx.close(j)
+      if (close < 0) return None
+      i = close + 1
     }
     var more = true
     while (more) { // [n] suffixes
@@ -7039,7 +6628,7 @@ class SqlGateway(val spark: SparkSession) {
     * spellings outright, so before this pass every such cast refused).
     * The `AS` arm only fires when the translated span is directly
     * followed by `)` — a CAST/TRY_CAST close — so SELECT/FROM aliases
-    * can never be touched. Quote-parity throughout. */
+    * can never be touched. Literals are skipped by the [[SqlLex]] lex. */
   private[engine] def rewriteDuckTypeSpellings(sql: String): String = {
     def composite(span: String): Boolean = {
       val t = span.trim; val up = t.toUpperCase
@@ -7050,14 +6639,14 @@ class SqlGateway(val spark: SparkSession) {
         !"""(?i)\b(?:map|struct)\s*\(""".r.findFirstIn(sql).isDefined)
       return sql
     val sb = new StringBuilder(sql.length + 16)
-    var i = 0; var inStr = false
+    val lx = SqlLex(sql)
+    var i = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { inStr = true; sb += c; i += 1 }
+      if (lx.inside(i)) { sb += c; i += 1 }
       else if (c == ':' && i + 1 < sql.length && sql.charAt(i + 1) == ':') {
         sb.append("::"); i += 2
-        typeSpan(sql, i) match {
+        typeSpan(lx, i) match {
           case Some((span, after)) if composite(span) =>
             sb.append(duckTypeToSpark(span)); i = after
           case _ => ()
@@ -7067,7 +6656,7 @@ class SqlGateway(val spark: SparkSession) {
           sql.charAt(i + 2).isWhitespace &&
           (i == 0 || (!sql.charAt(i - 1).isLetterOrDigit &&
             sql.charAt(i - 1) != '_' && sql.charAt(i - 1) != '$'))) {
-        typeSpan(sql, i + 2) match {
+        typeSpan(lx, i + 2) match {
           case Some((span, after)) if composite(span) &&
               after < sql.length && {
                 var k = after
@@ -7085,195 +6674,12 @@ class SqlGateway(val spark: SparkSession) {
 
   /** `current_query()` returns the statement text VERBATIM (probed), so it
     * resolves first, against the pristine input, before any rewrite
-    * changes the text. Quote-parity guarded; the substituted literal then
-    * shields its own content from every later pass. */
+    * changes the text. The substituted literal then shields its own
+    * content from every later pass. */
   private def rewriteCurrentQuery(sql: String): String = {
     if (!sql.toLowerCase.contains("current_query")) return sql
-    val Re = """(?i)(?<![\w.$])current_query\s*\(\s*\)""".r
     val lit = "'" + sql.replace("'", "''") + "'"
-    Re.replaceAllIn(sql, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        if (sql.substring(0, m.start).count(_ == '\'') % 2 != 0) m.matched
-        else lit))
-  }
-
-  /** DuckDB's standard single-quoted strings carry NO escape processing
-    * (`'[\1]'` is four characters; escapes need the e'…' prefix, which
-    * Spark's parser rejects → refuses); Spark's parser treats `\` as an
-    * escape character by default. Doubling every backslash inside string
-    * literals makes Spark parse exactly the characters DuckDB would —
-    * a DIALECT-level fix applied once, before any other rewrite, so every
-    * path (regex replacements, LIKE patterns, Windows-style paths) gets
-    * verbatim-literal semantics. Quote-parity scan; '' escapes flip
-    * parity twice like every other scan here. Rewrites that synthesize
-    * literals AFTER this pass intentionally spell Spark-escaped text. */
-  private def escapeLiteralBackslashes(sql: String): String = {
-    if (!sql.contains('\\')) return sql
-    val sb = new StringBuilder(sql.length + 8)
-    var i = 0; var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') { inStr = !inStr; sb += c }
-      else if (c == '\\' && inStr) sb ++= "\\\\"
-      else sb += c
-      i += 1
-    }
-    sb.toString
-  }
-
-  /** The full SQL-text rewrite pipeline every passthrough statement goes
-    * through: macros first (their bodies may use sequences or read_*),
-    * then sequence functions, then file-reading table functions. */
-  /** Remove SQL comments (`-- … EOL`, `/* … */`) OUTSIDE string literals.
-    * Every textual rewrite pass (macros, sequences, read_* functions)
-    * scans by quote parity and top-level parens; an apostrophe or paren
-    * inside a comment (`-- don't`) would desynchronize those scans and
-    * mis-rewrite real syntax later in the statement. Comments are
-    * semantically void, so stripping them BEFORE any rewrite looks at the
-    * text makes the grammar subset honest: what the scanners see is what
-    * the engine executes. Doubled quotes ('' escapes) flip parity twice —
-    * consistent with every other scan here. */
-  /** DuckDB's two alternative string-literal spellings, decoded to the
-    * standard single-quoted form (embedded quotes doubled) in ONE pass so
-    * neither syntax can desynchronize the other's scan:
-    *
-    *   - dollar-quoted `$[tag]$ … $[tag]$` (raw text, may span quotes,
-    *     comments, newlines; tag = identifier or empty — `$1` parameters
-    *     never match because a tag cannot start with a digit);
-    *   - escape strings `e'…'`/`E'…'` with the probed v1.0 escape set:
-    *     `\n \t \r \b \f`, `\\`, `\'` (and `''`), `\xH[H]` (1-2 hex) and
-    *     `\o[oo]` (1-3 octal) for 0 < value ≤ 0x7F, any other `\c` → `c`
-    *     (probed: `e'\q'`→`q`, `e'\v'`→`v`). `\u`/`\U` (DuckDB parser
-    *     errors even on 4-hex), NUL, and non-ASCII byte escapes ABORT the
-    *     whole decode — the untouched `e'…'` then refuses in Spark's
-    *     parser (UNSUPPORTED_TYPED_LITERAL), never a silently-wrong
-    *     string.
-    *
-    * Runs before comment stripping: `$$ -- $$` is data, not a comment. */
-  private[engine] def decodeAltLiterals(sql: String): String = {
-    if (!sql.contains('$') && !sql.toLowerCase.contains("e'")) return sql
-    val Tag = """^\$([A-Za-z_]\w*)?\$""".r
-    def quoted(body: String) = "'" + body.replace("'", "''") + "'"
-    val sb = new StringBuilder(sql.length + 16)
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') { // standard literal: copy verbatim ('' stays inside)
-        sb += c; i += 1
-        var done = false
-        while (i < sql.length && !done) {
-          sb += sql.charAt(i)
-          if (sql.charAt(i) == '\'') {
-            if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') {
-              sb += '\''; i += 1
-            } else done = true
-          }
-          i += 1
-        }
-      } else if (c == '"') { // quoted identifier: copy verbatim
-        sb += c; i += 1
-        while (i < sql.length && sql.charAt(i) != '"') { sb += sql.charAt(i); i += 1 }
-        if (i < sql.length) { sb += '"'; i += 1 }
-      } else if ((c == 'e' || c == 'E') && i + 1 < sql.length &&
-          sql.charAt(i + 1) == '\'' &&
-          (i == 0 || (!sql.charAt(i - 1).isLetterOrDigit &&
-            sql.charAt(i - 1) != '_' && sql.charAt(i - 1) != '$'))) {
-        decodeEscapeString(sql, i) match {
-          case Some((body, after)) => sb ++= quoted(body); i = after
-          case None => sb += c; i += 1 // undecodable → verbatim → refuses
-        }
-      } else if (c == '$') {
-        Tag.findFirstMatchIn(sql.substring(i)) match {
-          case Some(m) =>
-            val delim = m.matched
-            val bodyStart = i + delim.length
-            val close = sql.indexOf(delim, bodyStart)
-            if (close < 0) { sb += c; i += 1 } // unterminated → refuses
-            else {
-              sb ++= quoted(sql.substring(bodyStart, close))
-              i = close + delim.length
-            }
-          case None => sb += c; i += 1
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Decode one `e'…'` at `at` (pointing at the e). Some((raw body, index
-    * after the closing quote)) or None when an escape has no exact
-    * standard-literal spelling (see decodeAltLiterals). */
-  private def decodeEscapeString(sql: String, at: Int): Option[(String, Int)] = {
-    val b = new StringBuilder
-    var i = at + 2
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') { b += '\''; i += 2 }
-        else return Some((b.toString, i + 1))
-      } else if (c == '\\' && i + 1 < sql.length) {
-        val e = sql.charAt(i + 1)
-        e match {
-          case 'n' => b += '\n'; i += 2
-          case 't' => b += '\t'; i += 2
-          case 'r' => b += '\r'; i += 2
-          case 'b' => b += '\b'; i += 2
-          case 'f' => b += '\f'; i += 2
-          case '\\' => b += '\\'; i += 2
-          case '\'' => b += '\''; i += 2
-          case 'u' | 'U' => return None // DuckDB 1.0 parser-errors on these
-          case 'x' =>
-            var j = i + 2; var v = 0; var n = 0
-            while (j < sql.length && n < 2 &&
-                Character.digit(sql.charAt(j), 16) >= 0) {
-              v = v * 16 + Character.digit(sql.charAt(j), 16); j += 1; n += 1
-            }
-            if (n == 0) { b += 'x'; i += 2 } // e'\xzz' → "xzz" (probed)
-            else if (v > 0 && v <= 0x7f) { b += v.toChar; i = j }
-            else return None // NUL / non-ASCII byte: DuckDB parser-errors
-          case d if d >= '0' && d <= '7' =>
-            var j = i + 1; var v = 0; var n = 0
-            while (j < sql.length && n < 3 &&
-                sql.charAt(j) >= '0' && sql.charAt(j) <= '7') {
-              v = v * 8 + (sql.charAt(j) - '0'); j += 1; n += 1
-            }
-            if (v > 0 && v <= 0x7f) { b += v.toChar; i = j }
-            else return None
-          case other => b += other; i += 2 // unknown escape → the char
-        }
-      } else { b += c; i += 1 }
-    }
-    None // unterminated
-  }
-
-  private[engine] def stripComments(sql0: String): String = {
-    val sql = decodeAltLiterals(sql0)
-    if (!sql.contains("--") && !sql.contains("/*")) return sql
-    val sb = new StringBuilder
-    var i = 0; var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { inStr = true; sb += c; i += 1 }
-      else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-        while (i < sql.length && sql.charAt(i) != '\n') i += 1 // keep the \n
-      } else if (c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') {
-        // DuckDB block comments NEST (probed: /* a /* b */ c */ is one
-        // comment) — track depth instead of stopping at the first */
-        i += 2
-        var depth = 1
-        while (i + 1 < sql.length && depth > 0) {
-          if (sql.charAt(i) == '*' && sql.charAt(i + 1) == '/') {
-            depth -= 1; i += 2
-          } else if (sql.charAt(i) == '/' && sql.charAt(i + 1) == '*') {
-            depth += 1; i += 2
-          } else i += 1
-        }
-        if (depth > 0) i = sql.length // unterminated: drop the tail
-        sb += ' ' // a comment is a token separator: SELECT/**/1 stays SELECT 1
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
+    SqlLex.replace(sql, """(?i)(?<![\w.$])current_query\s*\(\s*\)""".r)(_ => lit)
   }
 
   /** nextval over a table source would bind ONE literal for every result
@@ -7281,12 +6687,10 @@ class SqlGateway(val spark: SparkSession) {
     * than return silently-wrong repeats. currval is exempt: it does not
     * advance, so a repeated literal IS its per-row value. */
   private def guardMultiRowNextval(expanded: String): Unit = {
-    val hasNextval = SeqFnRe.findAllMatchIn(expanded).exists(m =>
-      m.group(1).equalsIgnoreCase("nextval") &&
-        expanded.substring(0, m.start).count(_ == '\'') % 2 == 0)
+    val lx = SqlLex(expanded)
+    val hasNextval = lx.findRaw(SeqFnRe).exists(_.group(1).equalsIgnoreCase("nextval"))
     if (hasNextval) {
-      val hasFrom = """(?i)(?<![\w.])FROM(?![\w])""".r.findAllMatchIn(expanded)
-        .exists(m => expanded.substring(0, m.start).count(_ == '\'') % 2 == 0)
+      val hasFrom = lx.find("""(?i)(?<![\w.])FROM(?![\w])""".r).hasNext
       if (hasFrom)
         throw new IllegalArgumentException(
           "nextval in a query with a FROM clause is not supported " +
@@ -7304,28 +6708,6 @@ class SqlGateway(val spark: SparkSession) {
     "drop", "alter", "truncate", "copy", "import", "begin", "commit",
     "rollback", "set", "reset")
 
-  /** `text` with the contents of every single-quoted literal (including
-    * `''` escapes) blanked to spaces — identifier scans over the result
-    * can't false-match inside strings, and (unlike quote-parity counting)
-    * escaped quotes don't flip the state. */
-  private def maskStringLiterals(text: String): String = {
-    val a = text.toCharArray
-    var i = 0
-    while (i < a.length) {
-      if (a(i) == '\'') {
-        i += 1 // opening quote kept
-        var closed = false
-        while (i < a.length && !closed) {
-          if (a(i) == '\'') {
-            if (i + 1 < a.length && a(i + 1) == '\'') { a(i) = ' '; a(i + 1) = ' '; i += 2 }
-            else { i += 1; closed = true } // closing quote kept
-          } else { a(i) = ' '; i += 1 }
-        }
-      } else i += 1
-    }
-    new String(a)
-  }
-
   /** Whole-word, case-insensitive occurrence of registered name `key` in
     * `text`, outside string literals. A double-quoted spelling
     * (`FROM "myview"`) counts too — it references the same catalog
@@ -7335,7 +6717,7 @@ class SqlGateway(val spark: SparkSession) {
       val q = java.util.regex.Pattern.quote(key)
       ("""(?i)(?:(?<![\w.$"])""" + q + """(?![\w$])|"""" + q + """")""").r
     })
-    re.findFirstIn(maskStringLiterals(text)).isDefined
+    SqlLex(text).findRaw(re).hasNext
   }
 
   /** Bring every view the statement references (plus transitive view
@@ -7352,7 +6734,7 @@ class SqlGateway(val spark: SparkSession) {
     val closure = scala.collection.mutable.LinkedHashSet[String]()
     def visit(k: String): Unit = if (closure.add(k))
       keys.filter(d => d != k &&
-        referencesName(stripComments(uv(k)._3), d)).foreach(visit)
+        referencesName(SqlLex.normalize(uv(k)._3), d)).foreach(visit)
     roots.foreach(visit)
     // materialization is SERIALIZED (leaf lock — view bodies are SELECTs,
     // never DML, so no path back to writeLock): two readers racing to
@@ -7381,7 +6763,7 @@ class SqlGateway(val spark: SparkSession) {
       closure: Seq[String], stale: Set[String], gen: Long): Unit = {
     val keys = uv.keys.toSeq
     val refMap = closure.map(k => k ->
-      keys.filter(d => referencesName(stripComments(uv(k)._3), d)).toSet).toMap
+      keys.filter(d => referencesName(SqlLex.normalize(uv(k)._3), d)).toSet).toMap
     def reachesSelf(k: String): Boolean = {
       val seen = scala.collection.mutable.HashSet[String]()
       def go(c: String): Boolean = refMap.get(c).exists(r =>
@@ -7397,7 +6779,7 @@ class SqlGateway(val spark: SparkSession) {
       if (reachesSelf(k)) {
         // stale temp view must not satisfy a self-referencing body with
         // the OLD contents (DuckDB: infinite recursion error — probed)
-        try spark.catalog.dropTempView(k) catch { case _: Throwable => () }
+        spark.catalog.dropTempView(k)
         brokenViews(k) = "infinite recursion detected: attempting to " +
           s"""recursively bind view "${uv(k)._1}""""
       } else {
@@ -7416,12 +6798,12 @@ class SqlGateway(val spark: SparkSession) {
             // creation-time bind (probed messages; types checked first —
             // an added column reports types, a renamed one reports names)
             case Some((_, t0)) if t0 != types =>
-              try spark.catalog.dropTempView(k) catch { case _: Throwable => () }
+              spark.catalog.dropTempView(k)
               brokenViews(k) = "Binder Error: Contents of view were " +
                 s"altered: types don't match! Expected [${t0.mkString(", ")}], " +
                 s"but found [${types.mkString(", ")}] instead"
             case Some((n0, _)) if n0 != names =>
-              try spark.catalog.dropTempView(k) catch { case _: Throwable => () }
+              spark.catalog.dropTempView(k)
               brokenViews(k) = "Binder Error: Contents of view were " +
                 s"altered: names don't match! Expected [${n0.mkString(", ")}], " +
                 s"but found [${names.mkString(", ")}] instead"
@@ -7430,7 +6812,7 @@ class SqlGateway(val spark: SparkSession) {
               df.createOrReplaceTempView(k)
           }
         } catch { case scala.util.control.NonFatal(e) =>
-          try spark.catalog.dropTempView(k) catch { case _: Throwable => () }
+          spark.catalog.dropTempView(k)
           brokenViews(k) = Option(e.getMessage).getOrElse(e.toString) }
       }
       viewGen(k) = gen
@@ -7505,7 +6887,7 @@ class SqlGateway(val spark: SparkSession) {
     viewShapes.remove(key)
     viewGen.remove(key)
     comments.remove(s"view:$key")
-    try spark.catalog.dropTempView(key) catch { case _: Throwable => () }
+    spark.catalog.dropTempView(key)
     ExecuteResult(0L)
   }
 
@@ -7544,14 +6926,14 @@ class SqlGateway(val spark: SparkSession) {
     viewGen.remove(kf) // stale → re-materialize under the new name at use
     viewRefRe.remove(kf)
     comments.remove(s"view:$kf").foreach(comments(s"view:$kt") = _)
-    try spark.catalog.dropTempView(kf) catch { case _: Throwable => () }
+    spark.catalog.dropTempView(kf)
     ExecuteResult(0L)
   }
 
   /** Drop every registered view (IMPORT DATABASE replaces whole-db state). */
   private[engine] def clearViews(): Unit = {
     userViews.keys.toSeq.foreach(k =>
-      try spark.catalog.dropTempView(k) catch { case _: Throwable => () })
+      spark.catalog.dropTempView(k))
     userViews = scala.collection.immutable.VectorMap.empty
     brokenViews.clear(); viewGen.clear(); viewShapes.clear()
   }
@@ -7561,19 +6943,24 @@ class SqlGateway(val spark: SparkSession) {
   private[engine] def viewEntries: Seq[(String, Option[Seq[String]], String)] =
     userViews.values.toSeq
 
-  private[engine] def rewriteSql(sql: String): String = {
-    val expanded = rewriteMacros(stripComments(sql))
+  /** The text pipeline every passthrough statement goes through: comments
+    * and alternative literals normalized ([[SqlLex.normalize]]), macros
+    * expanded (their bodies may use sequences or read_*), a multi-row
+    * nextval refused, then the dialect rewrites, sequence functions and
+    * current_setting. */
+  private def rewritePassthrough(sql: String): String = {
+    val expanded = rewriteMacros(SqlLex.normalize(sql))
     guardMultiRowNextval(expanded)
-    rewriteReadFunctions(rewriteCurrentSetting(rewriteSequenceFunctions(duckCompat(expanded))))
+    rewriteCurrentSetting(rewriteSequenceFunctions(duckCompat(expanded)))
   }
 
-  /** The statement-execution form of [[rewriteSql]]: same pipeline, but
-    * read_* temp views are dropped after eager analysis resolves them. */
-  private def runSql(sql: String): DataFrame = {
-    val expanded = rewriteMacros(stripComments(sql))
-    guardMultiRowNextval(expanded)
-    sqlWithReadViews(rewriteCurrentSetting(rewriteSequenceFunctions(duckCompat(expanded))))
-  }
+  private[engine] def rewriteSql(sql: String): String =
+    rewriteReadFunctions(rewritePassthrough(sql))
+
+  /** The statement-execution form of [[rewriteSql]]: read_* temp views
+    * are dropped after eager analysis resolves them. */
+  private def runSql(sql: String): DataFrame =
+    sqlWithReadViews(rewritePassthrough(sql))
 
   /** `COMMENT ON TABLE/VIEW/COLUMN/INDEX name IS 'text'|NULL` — catalog
     * metadata, surfaced through CatalogInfo's comment columns. Probed
@@ -7676,53 +7063,21 @@ class SqlGateway(val spark: SparkSession) {
       case Named(k, v) => Some(k.toLowerCase -> v.trim)
       case _ => None
     }.toMap
-    if (named.nonEmpty && named.size == args.length) {
-      val sb = new StringBuilder; var inStr = false; var i = 0
-      while (i < body.length) {
-        val c = body.charAt(i)
-        if (c == '\'') { inStr = !inStr; sb += c; i += 1 }
-        else if (c == '$' && !inStr && i + 1 < body.length &&
-            (body.charAt(i + 1).isLetter || body.charAt(i + 1) == '_')) {
-          var j = i + 1
-          while (j < body.length && (body.charAt(j).isLetterOrDigit ||
-            body.charAt(j) == '_')) j += 1
-          named.get(body.substring(i + 1, j).toLowerCase) match {
-            case Some(v) => sb.append(s"($v)"); i = j
-            case None => sb += c; i += 1
-          }
-        } else { sb += c; i += 1 }
-      }
-      return sb.toString
+    // placeholders inside a string literal stay untouched (masked view)
+    if (named.nonEmpty && named.size == args.length)
+      return SqlLex.replace(body, """\$([A-Za-z_]\w*)""".r)(m =>
+        named.get(m.group(1).toLowerCase).map(v => s"($v)").getOrElse(m.matched))
+    val out = SqlLex.replace(body, """\$(\d+)""".r) { m =>
+      val n = m.group(1).toInt
+      if (n >= 1 && n <= args.length) args(n - 1) else m.matched
     }
-    // $n placeholders, quote-aware (same scan discipline as the `?` pass
-    // below — a literal `$1` inside a string constant must stay untouched)
-    var out = {
-      val sb = new StringBuilder; var inStr = false; var i = 0
-      while (i < body.length) {
-        val c = body.charAt(i)
-        if (c == '\'') { inStr = !inStr; sb += c; i += 1 }
-        else if (c == '$' && !inStr && i + 1 < body.length &&
-            body.charAt(i + 1).isDigit) {
-          var j = i + 1
-          while (j < body.length && body.charAt(j).isDigit) j += 1
-          val n = body.substring(i + 1, j).toInt
-          if (n >= 1 && n <= args.length) { sb.append(args(n - 1)); i = j }
-          else { sb += c; i += 1 }
-        } else { sb += c; i += 1 }
-      }
-      sb.toString
+    // positional ?-placeholders, bound left to right
+    if (!out.contains("?") || args.isEmpty) out
+    else {
+      var n = 0
+      SqlLex.replace(out, """\?""".r)(m =>
+        if (n < args.length) { n += 1; args(n - 1) } else m.matched)
     }
-    // positional ?-placeholders, bound left to right (quote-aware)
-    if (out.contains("?") && args.nonEmpty) {
-      val sb = new StringBuilder; var inStr = false; var n = 0
-      out.foreach {
-        case '\'' => inStr = !inStr; sb += '\''
-        case '?' if !inStr && n < args.length => sb.append(args(n)); n += 1
-        case c => sb += c
-      }
-      out = sb.toString
-    }
-    out
   }
 
   /** `PRAGMA table_info('t')` — DuckDB's SQLite-compatible column pragma:
@@ -8098,14 +7453,12 @@ class SqlGateway(val spark: SparkSession) {
         "pivot", "unpivot").contains(lead))
       throw new IllegalArgumentException(
         s"""syntax error at or near "${query.trim.split("\\s+", 2)(0)}"""")
-    // `... WITH NO DATA` creates the schema only (probed; quote-parity
-    // guarded so literal text never triggers it)
+    // `... WITH NO DATA` creates the schema only (probed; matched on the
+    // masked view so literal text never triggers it)
     val NoData = """(?is)^(.*?)\s+WITH\s+NO\s+DATA\s*$""".r
-    val (body, noData) = maskStringLiterals(query) match {
-      case NoData(_) =>
-        (query.substring(0, NoData.findFirstMatchIn(
-          maskStringLiterals(query)).get.group(1).length), true)
-      case _ => (query, false)
+    val (body, noData) = SqlLex(query).find(NoData).nextOption() match {
+      case Some(m) => (m.group(1), true)
+      case None => (query, false)
     }
     val df = queryDf0(body)
     createFromData(table, if (noData) df.limit(0) else df)
@@ -8244,72 +7597,38 @@ class SqlGateway(val spark: SparkSession) {
     * silently skipping PK/NOT NULL enforcement. */
   private def parseInsertBody(rest: String): (Option[String], String) =
     if (rest.startsWith("(")) {
-      val close = matchingParen(rest)
+      val close = SqlLex(rest).close(0)
+      if (close < 0)
+        throw new IllegalArgumentException(s"unbalanced parentheses in INSERT: $rest")
       val inside = rest.substring(1, close).trim
       val after = rest.substring(close + 1).trim
       if (after.isEmpty) (None, inside) else (Some(inside), after)
     } else (None, rest)
 
-  /** Index of the `)` closing the paren at position 0 (quote-aware). */
-  private def matchingParen(s: String): Int = {
-    var depth = 0; var inStr = false; var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\'' => inStr = !inStr
-        case '(' if !inStr => depth += 1
-        case ')' if !inStr =>
-          depth -= 1
-          if (depth == 0) return i
-        case _ => ()
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"unbalanced parentheses in INSERT: $s")
-  }
-
   /** Find the first `kw` keyword outside quotes/parens and split there. */
-  private def splitAtTopLevelKw(s: String, kw: String): (String, Option[String]) = {
-    var depth = 0; var inStr = false
-    var i = 0
-    val k = kw.length
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\'' => inStr = !inStr
-        case '(' if !inStr => depth += 1
-        case ')' if !inStr => depth -= 1
-        case c if !inStr && depth == 0 &&
-            Character.toLowerCase(c) == kw.charAt(0) &&
-            i + k <= s.length && s.substring(i, i + k).equalsIgnoreCase(kw) &&
-            (i == 0 || s.charAt(i - 1).isWhitespace) &&
-            (i + k == s.length || s.charAt(i + k).isWhitespace) =>
-          return (s.substring(0, i).trim, Some(s.substring(i + k).trim))
-        case _ => ()
-      }
-      i += 1
+  private def splitAtTopLevelKw(s: String, kw: String): (String, Option[String]) =
+    topLevel(s, s"""(?<!\\S)${java.util.regex.Pattern.quote(kw)}(?!\\S)""") match {
+      case Some((a, b)) => (s.substring(0, a).trim, Some(s.substring(b).trim))
+      case None => (s.trim, None)
     }
-    (s.trim, None)
-  }
 
   private def splitAtTopLevelWhere(s: String): (String, Option[String]) =
     splitAtTopLevelKw(s, "where")
 
-  /** Split a column-spec / SET list on top-level commas — aware of paren
-    * depth AND single-quoted string literals (a comma inside 'x, y' must
-    * not split). */
+  /** Split a column-spec / SET list on top-level commas, on the
+    * [[SqlLex]] masked view: a comma inside 'x, y' or "a,b" does not
+    * split, and a paren inside a literal or identifier is not nesting. */
   private def splitTopLevel(s: String): Seq[String] = {
+    val mk = SqlLex.mask(s)
     val out = Vector.newBuilder[String]
-    // double-quoted identifiers are atomic too: "a,b" is ONE list item and
-    // a paren inside "p(q" is not nesting (doubled quotes self-cancel)
-    var depth = 0; var inStr = false; var inId = false; val cur = new StringBuilder
-    s.foreach {
-      case '\'' if !inId => inStr = !inStr; cur += '\''
-      case '"' if !inStr => inId = !inId; cur += '"'
-      case ',' if depth == 0 && !inStr && !inId => out += cur.toString; cur.clear()
-      case c =>
-        if (!inStr && !inId) { if (c == '(') depth += 1 else if (c == ')') depth -= 1 }
-        cur += c
+    var depth = 0; var from = 0
+    for (i <- 0 until mk.length) mk.charAt(i) match {
+      case '(' => depth += 1
+      case ')' => depth -= 1
+      case ',' if depth == 0 => out += s.substring(from, i); from = i + 1
+      case _ => ()
     }
-    if (cur.nonEmpty) out += cur.toString
+    if (from < s.length) out += s.substring(from)
     out.result()
   }
 
@@ -8344,7 +7663,7 @@ class SqlGateway(val spark: SparkSession) {
     // untouched (it carries its own projection)
     val source =
       if ("""(?is)^\s*FROM\b""".r.findFirstIn(source0).isDefined &&
-          !"""(?i)\bSELECT\b""".r.findFirstIn(maskStringLiterals(source0)).isDefined)
+          !SqlLex(source0).find("""(?i)\bSELECT\b""".r).hasNext)
         s"SELECT * ${source0.trim}"
       else source0
     val tableDefaults = columnDefaults.getOrElse(tableKey(table), Map.empty)
@@ -8381,7 +7700,7 @@ class SqlGateway(val spark: SparkSession) {
     // a nextval in a multi-row SELECT source would hand every row the SAME
     // id (the rewrite binds one literal per call site) — refuse it rather
     // than corrupt; VALUES lists carry one call site per tuple and are exact
-    val macroExpanded = rewriteMacros(stripComments(batchSql))
+    val macroExpanded = rewriteMacros(SqlLex.normalize(batchSql))
     if (SeqFnRe.findFirstIn(macroExpanded).isDefined &&
         !source.trim.toUpperCase.startsWith("VALUES"))
       throw new IllegalArgumentException(
@@ -8525,30 +7844,10 @@ class SqlGateway(val spark: SparkSession) {
     * single-quoted string literals, and only at identifier boundaries: a
     * plain replaceAll would also rewrite `'see excluded.x'` inside a SET
     * string value, silently corrupting the stored text. */
-  private[engine] def rewriteExcluded(e: String): String = {
-    val kw = "excluded"
-    val out = new StringBuilder
-    var i = 0; var inStr = false
-    while (i < e.length) {
-      val c = e.charAt(i)
-      if (c == '\'') { inStr = !inStr; out += c; i += 1 }
-      else if (!inStr && (c == 'e' || c == 'E') &&
-          i + kw.length <= e.length &&
-          e.substring(i, i + kw.length).equalsIgnoreCase(kw) &&
-          (i == 0 || { val p = e.charAt(i - 1); !(p.isLetterOrDigit || p == '_') })) {
-        // require the dot (with optional whitespace) to follow — bare
-        // `excluded` that is not a qualifier is left untouched
-        var j = i + kw.length
-        while (j < e.length && e.charAt(j).isWhitespace) j += 1
-        if (j < e.length && e.charAt(j) == '.') {
-          j += 1
-          while (j < e.length && e.charAt(j).isWhitespace) j += 1
-          out ++= "__ex_"; i = j
-        } else { out += c; i += 1 }
-      } else { out += c; i += 1 }
-    }
-    out.toString
-  }
+  private[engine] def rewriteExcluded(e: String): String =
+    // the dot must follow (optional whitespace around it) — a bare
+    // `excluded` that is not a qualifier is left untouched
+    SqlLex.replace(e, """(?i)(?<![\w])excluded\s*\.\s*""".r)(_ => "__ex_")
 
   /** `VALUES (...),(...)` → runnable SELECT; pass SELECT/TABLE through. */
   private def valuesToSelect(source: String, cols: String): String = {
@@ -9037,7 +8336,7 @@ class SqlGateway(val spark: SparkSession) {
     // repoint each rewritten table to its pending version — metadata ops
     // only; the data files were already written by the statements
     t.pending.foreach { case (key, ver) =>
-      try spark.catalog.dropTempView(key) catch { case _: Throwable => () }
+      spark.catalog.dropTempView(key)
       val loc = s"${tableRoot(key)}/v$ver"
       spark.sql(s"ALTER TABLE $key SET LOCATION '$loc'")
       spark.catalog.refreshTable(key)
@@ -9048,7 +8347,7 @@ class SqlGateway(val spark: SparkSession) {
     // the non-txn append path, which also adds files to a live dir)
     t.deltas.foreach { case (key, dirs) =>
       if (!t.pending.contains(key)) {
-        try spark.catalog.dropTempView(key) catch { case _: Throwable => () }
+        spark.catalog.dropTempView(key)
         val live = new org.apache.hadoop.fs.Path(
           s"${tableRoot(key)}/v${versions(key)}")
         val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -9077,7 +8376,7 @@ class SqlGateway(val spark: SparkSession) {
     val t = txn.getOrElse(throw new IllegalStateException("no transaction is active"))
     txn = None // clear first: dropTable below must run its non-txn path
     (t.pending.keySet ++ t.deltas.keySet).foreach { key =>
-      try spark.catalog.dropTempView(key) catch { case _: Throwable => () }
+      spark.catalog.dropTempView(key)
     }
     // discard uncommitted append deltas — the live dir never saw them
     t.deltas.values.foreach(_.foreach(deleteDir))
