@@ -1,221 +1,88 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Benchmark main (driver contract): runs every registered query on
-  * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
-  * A short warmup on sf0.001 first — codegen + parquet-reader JIT — so
-  * timings measure steady-state throughput, not first-job JVM warmup.
-  *
-  * Output discipline: the stdout JSON line uses the SHORT query ids
-  * ("q01", "x37") and 3-decimal seconds so the whole line stays under the
-  * driver's 2 KB tail-capture window (rounds 1–3 printed full names and
-  * the line was truncated mid-JSON → `parsed: null` every round). The
-  * full-name, full-precision map is written to bench_detail.json next to
-  * the cwd for humans. Box-load telemetry (1-min loadavg before/after)
-  * rides along so a contended run is visible in the artifact itself.
-  *
-  * `SPARK_GRAFT_DETAIL_OUT` redirects the detail artifact: the repo-root
-  * bench_detail.json is a COMMITTED, chain-paired artifact, and an A/B or
-  * scale-out probe that runs Bench at another scale factor must never
-  * clobber it (r12 verdict: a one-query x32 probe overwrote the chain
-  * leg before commit). Probe harnesses (chain.sh per leg, tax_chain.sh
-  * per arm, scaleout_probe.sh, AbProbe-driven runs) set it to a scratch
-  * path; the driver's per-round run keeps the default.
+import scala.jdk.CollectionConverters._
+
+/** Benchmark main. Runs every registered query on
+  * `SPARK_GRAFT_SF_DIR` (`SPARK_GRAFT_ONLY`: comma-separated short-id
+  * prefixes for a subset) under [[SessionProfile]] after its resident
+  * setup, and prints ONE JSON line on stdout:
+  * `{"metric":"total","value":…,"unit":"sec","queries":{…},"sf":…,
+  * "load":[…],"passes":3[,"movers":{…}]}`. Per-query seconds are the min
+  * over 3 interleaved passes, with SHORT ids and 3 decimals so the line
+  * stays inside a 2 KB log-tail capture window; a failed query records -1.
+  * Full names, full precision, per-pass GC/Janino ms and >2× movers go to
+  * `SPARK_GRAFT_DETAIL_OUT` (default bench_detail.json, a committed
+  * artifact that probes must redirect).
   */
 object Bench {
+  private val nPasses = 3
+
   private def loadavg(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+    SessionProfile.attempt("bench loadavg") {
+      scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
+    }.getOrElse(-1.0)
+
+  /** Queries whose time moved by more than 2× against the newest prior
+    * artifact run at the same scale factor on the same core count.
+    * `priors` are artifact texts, newest first; one without a matching
+    * `"cpus"` is skipped — at another core count every floor-bound query
+    * moves. A mover means "re-measure before calling it a regression":
+    * min-of-3 does not immunize against a single slow-box run. */
+  def movers(sfDir: String, cpus: Int, results: Seq[(String, Double)],
+      priors: Seq[String]): Seq[(String, Double, Double)] = {
+    val sfTag = sfDir.split("/").last // e.g. sf0.1
+    val Cpus = """(?<!\\)"cpus":\s*(\d+)""".r
+    val QRe = """\\"((?:q|x)\w+)\\":(-?\d+(?:\.\d+)?)""".r
+    priors
+      .find(txt => Cpus.findFirstMatchIn(txt).exists(_.group(1).toInt == cpus) &&
+        (txt.contains(s"""sf\\":\\"/root/testdata/$sfTag""") ||
+          txt.contains(s""""sf": ${sfTag.stripPrefix("sf")}""")))
+      .toSeq.flatMap { txt =>
+        val prior = QRe.findAllMatchIn(txt)
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+        results.flatMap { case (k, cur) =>
+          prior.get(k.takeWhile(_ != '_')).collect {
+            case pv if pv >= 0.05 && cur >= 0.05 &&
+                (cur / pv > 2.0 || cur / pv < 0.5) => (k, pv, cur)
+          }
+        }
+      }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val detailOut = sys.env.getOrElse("SPARK_GRAFT_DETAIL_OUT", "bench_detail.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val builder0 = SparkSession.builder()
-    // spark-submit's --master wins (cluster scale-out runs, like Verify's
-    // cluster smoke gate); standalone invocation stays local[cpus]
-    if (!sys.props.contains("spark.master")) builder0.master(s"local[$cpus]")
-    val spark = builder0
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE stays ON (the 100 TB posture); the knob exists to measure its
-      // per-query stage-materialization overhead at bench scale
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // with AQE coalescing, prefer FEWER post-shuffle partitions over
-      // defaultParallelism fan-out — at bench SF every extra partition is
-      // pure task-scheduling floor; at cluster scale the advisory target
-      // (64 MB) governs either way
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // tiny-stage scheduling: don't wait for locality on a local[, and
-      // launch result stages immediately. On a CLUSTER this is wrong for
-      // single-copy cached/checkpointed blocks (tasks land off-node and
-      // fetch remotely) — the scale-out probe sets it to Spark's default
-      .config("spark.locality.wait",
-        sys.env.getOrElse("SPARK_GRAFT_LOCALITY_WAIT", "0ms"))
-      // a 128 GiB box broadcasts a 64 MB build side without blinking; the
-      // 10 MB default left the mid-size dimension joins (customer, part at
-      // 10× data) on sort-merge exchanges
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // shuffled-hash over sort-merge for equi-joins whose build side fits
-      // per-partition: measured A/B at the 10× corpus (r5) — SHJ took the
-      // join family −20% (q05 2.45→1.66 s, q04 1.12→0.78 s) by skipping
-      // the big-side sort. The resident single-node posture makes the
-      // build sides comfortably in-memory; at cluster scale AQE still
-      // re-plans per-stage and its skew handling applies to SHJ too.
-      // SPARK_GRAFT_PREFER_SMJ=true restores the default for A/Bs.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      // single-JVM shuffles land in the page cache — the lz4 codec is
-      // pure per-stream overhead at bench scale (measured A/B on the
-      // shuffle-heavy subset: 7.46 → 6.99 s with the second run under
-      // HIGHER box load). On a real cluster (network + disk between
-      // executors) compression stays on: SPARK_GRAFT_SHUFFLE_COMPRESS=true
-      // restores the stock default, and this knob exists only in the
-      // resident single-node bench profile, like the SHJ preference above
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      // the pinned-cache columnar batches skip per-column compression in
-      // the resident bench profile: the corpus fits the (now properly
-      // sized) heap many times over, and decompression was measured as
-      // 25-50% of scan-bound query time (q01 0.39->0.28, q06 0.29->0.14).
-      // A capacity-constrained cluster keeps the storage-efficiency
-      // default: SPARK_GRAFT_CACHE_COMPRESS=true restores it
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESS", "false"))
-      // generated-class cache (STATIC conf, default 100 entries): the 107
-      // queries produce far more codegen units than 100, so an interleaved
-      // pass evicts every entry before the same query returns — each pass
-      // re-runs Janino on ~everything, which adjacent-order runs (and any
-      // resident engine serving a repeated workload) skip. Sized to hold
-      // the whole suite; SPARK_GRAFT_CODEGEN_CACHE=100 restores stock for
-      // A/Bs. (r10: this was the dominant share of the interleave tax.)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // x33's |sources|-row global window is WHITELISTED (PlanLintSpec:
-    // bounded metadata — one row per source class — not a scale risk);
-    // its per-run "No Partition Defined" WARN reads like a defect in
-    // every round's logs, so that one logger is pinned to ERROR here
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-
-    // Warm EVERY query once on the tiny sf0.001 corpus: whole-stage
-    // codegen compilation is cached by generated source (identical across
-    // data dirs), so steady-state timings measure execution, not 64
-    // first-run Janino compiles. ~0.2s/query on 500-row inputs.
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-
-    // register the corpus once per session (VERDICT r1 item 3): pin the ten
-    // tables into the in-memory columnar cache before timing starts, so the
-    // measured 60+ queries share one scan instead of re-reading parquet
-    // footers + pages each. This is the deployment posture a resident
-    // engine (like the reference's long-lived embedded DuckDB) runs with.
-    try Tables.pin(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"[bench] pin failed: ${e.getMessage}") }
-    // the IVF index is built offline by contract (IvfIndex scaladoc) —
-    // train + persist it before timing so x11/x19 measure query work
-    try ext.IvfIndex.centroids(spark, sfDir).count()
-    catch { case e: Throwable => System.err.println(s"[bench] ivf train failed: ${e.getMessage}") }
-    // secondary resident layout (orders under its custkey join key) is a
-    // declare-once deployment decision like the pin itself — materialize
-    // it before timing so q05/q07/q08 measure query work, not layout build
-    try Tables.keyed(spark, sfDir, "orders", "o_custkey", "customer").count()
-    catch { case e: Throwable => System.err.println(s"[bench] keyed layout failed: ${e.getMessage}") }
+    val spark = SessionProfile.session()
+    SessionProfile.resident(spark, sfDir)
 
     // noop sink fully materializes every column (count() would let
-    // Catalyst prune the computed work away — benchmarking a row count);
-    // a failed query records -1 instead of a deceptively fast time.
+    // Catalyst prune the computed work away — benchmarking a row count).
     // Per-query time = min over N FULL interleaved passes of the query
     // list: JIT/GC and shared-box CPU-contention bursts put multi-second
     // spikes on single runs; passes minutes apart decorrelate the bursts.
     // DuckDB, with no JIT, has no such variance — the steadier run is the
     // honest comparison point.
     val loadStart = loadavg()
-    // dev knob: comma-separated short-id prefixes to time a subset
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    // diagnostic arms for the interleave-tax decomposition (r10):
-    //   SPARK_GRAFT_PHASE=plan — time ONLY DataFrame build + physical
-    //     planning (forces analysis/optimization/strategy, no execution,
-    //     no codegen): the pure plan-compile share of a pass.
-    //   SPARK_GRAFT_REUSE=true — build each query's DataFrame once and
-    //     re-execute the SAME object every pass: execution-only passes
-    //     after the first, isolating re-plan + codegen-lookup cost.
-    val phasePlan = sys.env.get("SPARK_GRAFT_PHASE").contains("plan")
-    val reuse = sys.env.get("SPARK_GRAFT_REUSE").contains("true")
-    val reusedDf = scala.collection.mutable.HashMap[String, org.apache.spark.sql.DataFrame]()
     def pass(): Map[String, Double] = ordered.map { case (name, fn) =>
       val t0 = System.nanoTime()
       // statically-shaped queries run their pinned plan (ops.PlanProfile);
       // the rest keep AQE — the per-query decision the probe measured
-      val ok = try {
+      val ok = SessionProfile.attempt(s"bench $name") {
         ops.PlanProfile.withProfile(spark, name) {
-          if (phasePlan) {
-            fn(spark, sfDir).queryExecution.executedPlan
-            ()
-          } else {
-            val df = if (reuse) reusedDf.getOrElseUpdate(name, fn(spark, sfDir))
-                     else fn(spark, sfDir)
-            df.write.format("noop").mode("overwrite").save()
-          }
-        }; true
-      } catch { case _: Throwable => false }
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        }
+      }.isDefined
       name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }.toMap
-    val nPasses = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-    // SPARK_GRAFT_ORDER=adjacent: repeat each query nPasses× back-to-back
-    // instead of interleaving full passes — the diagnostic arm that
-    // separates per-query hot cost from the interleave's cache-cold tax
-    // (r9: suite-hot exec sums ~17 s while the interleaved bench sums
-    // ~46 s on the same box state). The REPORTED protocol stays
-    // interleaved — DuckDB's leg runs the suite the same one-after-another
-    // way, so interleaved-min is the honest cross-engine shape.
-    val adjacent = sys.env.get("SPARK_GRAFT_ORDER").contains("adjacent")
-    if (adjacent) {
-      import scala.jdk.CollectionConverters._
-      def gcMsA(): Long = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-      val loadS = loadavg()
-      val g0 = gcMsA(); val t0 = System.nanoTime()
-      val res = ordered.map { case (name, fn) =>
-        val ts = (1 to nPasses).map { _ =>
-          val t = System.nanoTime()
-          val ok = try {
-            ops.PlanProfile.withProfile(spark, name) {
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            }; true
-          } catch { case _: Throwable => false }
-          if (ok) (System.nanoTime() - t) / 1e9 else -1.0
-        }
-        name -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      val total = res.map(_._2).filter(_ >= 0).sum
-      val detail = res.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailOut),
-        f"""{"total":$total%.3f,"sf":"$sfDir","passes":$nPasses,"order":"adjacent","load_start":$loadS,"load_end":${loadavg()},"pass_meta":[{"wall_s":$wall%.2f,"gc_ms":${gcMsA() - g0}}],"queries":$detail}""")
-      catch { case _: Throwable => () }
-      println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","order":"adjacent","sf":"$sfDir","passes":$nPasses}""")
-      spark.stop()
-      return
-    }
     // per-pass GC budget (r9): cumulative collector time sampled around
     // each pass, so the artifact shows how much of the in-suite tax is
     // collector time vs execution — the solo-vs-in-suite gap on the weak
     // entries was adjudicated as GC/allocator interference (VERDICT r8)
-    import scala.jdk.CollectionConverters._
     def gcMs(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     // cumulative Janino wall (CodeGenerator.compileTime, ns) sampled per
@@ -242,44 +109,28 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    // self-annotate >2x movers vs the newest prior round's artifact at the
-    // same sf (VERDICT r9: BENCH_r09's x42 reading was a pass-interference
-    // transient that shipped unflagged and cost a judge round of attention).
-    // A flagged mover means "re-measure before calling it a regression" —
-    // min-of-3 does NOT immunize against a single slow-box run.
-    val movers: Seq[(String, Double, Double)] = try {
-      import scala.jdk.CollectionConverters._
-      val sfTag = sfDir.split("/").last // e.g. sf0.1
-      java.nio.file.Files.list(java.nio.file.Paths.get(".")).iterator.asScala
-        .filter(_.getFileName.toString.matches("BENCH_r\\d+\\.json")).toSeq
+    // self-annotate >2x movers (VERDICT r9: BENCH_r09's x42 reading was a
+    // pass-interference transient that shipped unflagged and cost a judge
+    // round of attention)
+    val moved = SessionProfile.attempt("bench movers") {
+      val priors = Files.list(Paths.get(".")).iterator.asScala
+        .filter(_.getFileName.toString.matches("BENCH_r\\d+(_\\w+)?\\.json")).toSeq
         .sortBy(_.getFileName.toString).reverse
-        .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-        .find(txt => txt.contains(s"""sf\\":\\"/root/testdata/$sfTag""") ||
-                     txt.contains(s""""sf": ${sfTag.stripPrefix("sf")}"""))
-        .toSeq.flatMap { txt =>
-          val QRe = """\\"((?:q|x)\w+)\\":(-?\d+(?:\.\d+)?)""".r
-          val prior = QRe.findAllMatchIn(txt)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          results.flatMap { case (k, cur) =>
-            prior.get(k.takeWhile(_ != '_')).collect {
-              case pv if pv >= 0.05 && cur >= 0.05 &&
-                  (cur / pv > 2.0 || cur / pv < 0.5) => (k, pv, cur)
-            }
-          }
-        }
-    } catch { case _: Throwable => Nil }
+        .map(p => new String(Files.readAllBytes(p), "UTF-8"))
+      movers(sfDir, SessionProfile.cpus, results, priors)
+    }.getOrElse(Nil)
     val detail = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val moverDetail = movers.map { case (k, pv, cur) =>
+    val moverDetail = moved.map { case (k, pv, cur) =>
       f""""$k":{"prior":$pv%.3f,"cur":$cur%.3f}""" }.mkString("{", ",", "}")
     val passJson = passMeta.result().map { case (w, g, j) =>
       f"""{"wall_s":$w%.2f,"gc_ms":$g,"janino_ms":$j}""" }.mkString("[", ",", "]")
-    val mode = (if (phasePlan) "plan" else "exec") + (if (reuse) "+reuse" else "")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailOut),
-      s"""{"total":$total,"sf":"$sfDir","passes":$nPasses,"mode":"$mode","codegen_cache":"${sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000")}","load_start":$loadStart,"load_end":$loadEnd,"pass_meta":$passJson,"movers":$moverDetail,"queries":$detail}""")
-    catch { case _: Throwable => () }
+    SessionProfile.attempt(s"bench detail write $detailOut") {
+      Files.writeString(Paths.get(detailOut),
+        s"""{"total":$total,"sf":"$sfDir","passes":$nPasses,"load_start":$loadStart,"load_end":$loadEnd,"pass_meta":$passJson,"movers":$moverDetail,"queries":$detail}""")
+    }
     // stdout stays inside the driver's 2 KB tail window: ratios only, cap 8
-    val moverOut = if (movers.isEmpty) "" else movers.take(8)
+    val moverOut = if (moved.isEmpty) "" else moved.take(8)
       .map { case (k, pv, cur) =>
         f""""${k.takeWhile(_ != '_')}":${cur / pv}%.1f""" }
       .mkString(""","movers":{""", ",", "}")

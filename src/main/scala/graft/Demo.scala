@@ -1,7 +1,6 @@
 package graft
 
 import graft.engine.{Snapshot, SqlGateway}
-import org.apache.spark.sql.SparkSession
 
 /** Demo client — the reference ships one as its only executable
   * verification artifact (`cmd/cli/client.go:94-129`: create/insert/select
@@ -11,14 +10,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-demo-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionProfile.session("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-demo-wh").toString)
     val gw = new SqlGateway(spark)
 
     // reference demo flow (cmd/cli/client.go:100-110)

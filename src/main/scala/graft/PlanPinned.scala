@@ -1,41 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: explain("formatted") under the BENCH session profile (pinned
-  * cache, SHJ preference, AQE on) — PlanAudit shows the cold-session plan,
-  * which diverges from what Bench actually runs. */
+/** Dev tool: for each query named on the command line, execute it under
+  * [[SessionProfile]] after its resident setup and the query's plan
+  * profile (ops.PlanProfile), then print the final adaptive plan
+  * (`isFinalPlan=true`, real codegen ids) in `formatted` mode — the plan
+  * Bench actually runs, not an initial plan that cannot show runtime
+  * properties. Corpus: `SPARK_GRAFT_SF_DIR`.
+  *
+  * Usage: runMain graft.PlanPinned <queryName>...
+  */
 object PlanPinned {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.locality.wait", "0ms")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try Tables.pin(spark, sfDir) catch { case _: Throwable => () }
-    // SPARK_GRAFT_EXEC_PLAN=true: EXECUTE each query first and dump the
-    // final adaptive plan (isFinalPlan=true, real codegen ids) — the r15
-    // verdict flagged initial-plan dumps cited as evidence for runtime
-    // properties they cannot show
-    val execFirst = sys.env.get("SPARK_GRAFT_EXEC_PLAN").contains("true")
+    val spark = SessionProfile.session()
+    SessionProfile.resident(spark, sfDir)
     for (name <- args) {
       println(s"===== $name =====")
-      // apply the same per-query plan profile Bench executes under
-      // (adaptive conf is read at physical-planning time, which explain
-      // triggers) — a pinned query's dump shows its static plan
-      ops.PlanProfile.withProfile(spark, name) {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        if (execFirst) {
+      SessionProfile.attempt(s"plan $name") {
+        ops.PlanProfile.withProfile(spark, name) {
+          val df = SparkEntry.queries(name)(spark, sfDir)
           df.queryExecution.executedPlan.executeCollect()
           println(df.queryExecution.explainString(
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-        } else df.explain("formatted")
+        }
       }
     }
     spark.stop()

@@ -111,9 +111,7 @@ object Tables {
     // forces an Exchange under every keyed groupBy/window/join over that
     // table — the whole point of key-aware pinning. Four small tasks cost
     // ~10 ms of scheduling; the avoided exchange per query costs more.
-    val cap = sys.env.getOrElse("SPARK_GRAFT_PIN_CAP", "32").toLong
-    val rowsPerPart = sys.env.getOrElse("SPARK_GRAFT_PIN_ROWS", "75000").toLong
-    def partsFor(rs: Long) = math.min(cap, math.max(4L, rs / rowsPerPart)).toInt
+    def partsFor(rs: Long) = math.min(32L, math.max(4L, rs / 75000L)).toInt
     // co-partition JOIN-RELATED tables with the SAME partition count:
     // hashpartitioning(l_orderkey, N) and hashpartitioning(o_orderkey, M)
     // are compatible for a zero-Exchange join ONLY when N == M — sized

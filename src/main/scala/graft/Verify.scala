@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,38 +7,20 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional third arg: comma-separated name filter for fast local iteration
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // honor an externally-provided master (spark-submit --master spark://…
-    // — the cluster-mode smoke gate) instead of forcing local[]: the same
-    // plans must run unchanged on a real cluster, and this is where that
-    // claim gets demonstrated
-    val builder = SparkSession.builder()
-    if (!sys.props.contains("spark.master")) builder.master(s"local[$cpus]")
-    val spark = builder
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // x33's |sources|-row global window is WHITELISTED (PlanLintSpec:
-    // bounded metadata — one row per source class — not a scale risk);
-    // its per-run "No Partition Defined" WARN reads like a defect in
-    // every round's logs, so that one logger is pinned to ERROR here
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    // spark-submit's --master (the cluster-mode smoke gate) is honored:
+    // the same plans must run unchanged on a real cluster
+    val spark = SessionProfile.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       // same per-query plan profile as Bench (ops.PlanProfile): correctness
       // is certified under the exact conf the benchmark runs with
-      try ops.PlanProfile.withProfile(spark, name) {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      SessionProfile.attempt(s"verify $name") {
+        ops.PlanProfile.withProfile(spark, name) {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+        }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -1,8 +1,7 @@
 package graft.http
 
-import graft.Tables
+import graft.{SessionProfile, Tables}
 import graft.engine.SqlGateway
-import org.apache.spark.sql.SparkSession
 
 /** Service entry point — the `main.go:24-82` equivalent: build the engine,
   * optionally pre-register the testdata corpus as views, serve HTTP.
@@ -12,18 +11,9 @@ import org.apache.spark.sql.SparkSession
 object ServeMain {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8080)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-service")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("GRAFT_WAREHOUSE",
-          java.nio.file.Files.createTempDirectory("graft-wh").toString))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionProfile.session("spark.sql.warehouse.dir" ->
+      sys.env.getOrElse("GRAFT_WAREHOUSE",
+        java.nio.file.Files.createTempDirectory("graft-wh").toString))
     args.lift(1).foreach(dir => Tables.registerAll(spark, dir))
     // durability + cluster knobs, mirroring the reference's flags
     // (`main.go:24-27`): GRAFT_LOG_DIR enables the JSONL statement log +

@@ -29,8 +29,7 @@ import org.apache.spark.sql.SparkSession
   * hints, shuffles keyed by the pinned table layout, no data-dependent
   * strategy left for AQE to choose. Those properties hold at any SF — the
   * pin is the same statement DuckDB's static planner makes implicitly for
-  * every query it runs. `SPARK_GRAFT_STATIC_PLANS=false` restores AQE
-  * everywhere for A/Bs.
+  * every query it runs.
   */
 object PlanProfile {
   /** Short ids (prefix before first '_') of queries measured faster — and
@@ -129,11 +128,8 @@ object PlanProfile {
     "q34", "q51", "x03", "x30", "x32", "x34"
   )
 
-  private def enabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_STATIC_PLANS", "true") == "true"
-
   def isStatic(name: String): Boolean =
-    enabled && staticPlan.contains(name.takeWhile(_ != '_'))
+    staticPlan.contains(name.takeWhile(_ != '_'))
 
   /** Run `action` (which must materialize the query — noop/parquet write)
     * under the query's plan profile. Conf is flipped around the ACTION,

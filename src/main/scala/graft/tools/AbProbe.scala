@@ -25,28 +25,8 @@ import org.apache.spark.sql.functions._
 object AbProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.locality.wait", "0ms")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESS", "false"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try graft.Tables.pin(spark, sfDir) catch { case e: Throwable =>
-      System.err.println(e.getMessage) }
+    val spark = graft.SessionProfile.session()
+    graft.SessionProfile.resident(spark, sfDir)
 
     def q05Alt(s: SparkSession, dir: String): DataFrame = {
       val r = graft.Tables(s, dir, "region").filter(col("r_name") === "ASIA")
@@ -281,9 +261,10 @@ object AbProbe {
         .map(fn => graft.ops.PlanProfile.withProfile(spark, fn)(action))
         .getOrElse(action)
     // warmup every variant (codegen + AQE stats), then min-of-3
-    variants.foreach { case (name, _, fn) =>
-      try timed(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-      catch { case e: Throwable => System.err.println(e.getMessage) }
+    variants.foreach { case (name, variant, fn) =>
+      graft.SessionProfile.attempt(s"ab warm $name $variant") {
+        timed(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+      }
     }
     variants.foreach { case (name, variant, fn) =>
       val t = (1 to 3).map { _ =>

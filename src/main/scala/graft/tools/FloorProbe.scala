@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -22,25 +21,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 object FloorProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.locality.wait", "0ms")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      // match Bench's resident profile (r10): probes must measure plan
-      // shape, not Janino recompiles off an undersized generated-class cache
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionProfile.session()
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
@@ -55,13 +36,7 @@ object FloorProbe {
       }
     })
 
-    // identical setup to Bench: warm codegen on sf0.001, pin tables, train IVF
-    graft.SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    try graft.Tables.pin(spark, sfDir) catch { case e: Throwable => System.err.println(e.getMessage) }
-    try graft.ext.IvfIndex.centroids(spark, sfDir).count() catch { case _: Throwable => () }
+    graft.SessionProfile.resident(spark, sfDir)
 
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val ordered = graft.SparkEntry.queries.toSeq.sortBy(_._1)
@@ -69,9 +44,10 @@ object FloorProbe {
 
     def runPass(tag: String): Unit = {
       // one throwaway pass so both A/B arms are warm under the current conf
-      ordered.foreach { case (_, fn) =>
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+      ordered.foreach { case (name, fn) =>
+        graft.SessionProfile.attempt(s"probe warm $name") {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        }
       }
       val nPasses = 2
       val rows = ordered.map { case (name, fn) =>
@@ -86,7 +62,9 @@ object FloorProbe {
           // stragglers land in this query's counters (ADVICE r6)
           org.apache.spark.graft.ListenerShim.waitUntilEmpty(spark.sparkContext)
           jobs.set(0); stages.set(0); tasks.set(0); taskTimeMs.set(0)
-          try df.write.format("noop").mode("overwrite").save() catch { case _: Throwable => () }
+          graft.SessionProfile.attempt(s"probe $tag $name") {
+            df.write.format("noop").mode("overwrite").save()
+          }
           val t2 = System.nanoTime()
           org.apache.spark.graft.ListenerShim.waitUntilEmpty(spark.sparkContext)
           val build = (t1 - t0) / 1e9; val exec = (t2 - t1) / 1e9

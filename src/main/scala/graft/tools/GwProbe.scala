@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Interactive-iteration harness for dialect work: runs each statement of a
   * file (one per line; lines starting with `--` skipped; a leading `!`
   * marks a write statement routed through execute) against a fresh
@@ -12,13 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GwProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SessionProfile.session()
     val gw = new graft.engine.SqlGateway(spark)
     scala.io.Source.fromFile(args(0), "UTF-8").getLines().map(_.trim)
       .filter(l => l.nonEmpty && !l.startsWith("--")).foreach { line =>

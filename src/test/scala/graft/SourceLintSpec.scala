@@ -2,22 +2,30 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source lint for the gateway's text layer: SQL quoting is known in ONE
-  * place, `engine/SqlLex.scala`. A pass that re-derives "inside a string
-  * literal?" by quote parity, or with its own quote-tracking scan, drifts
-  * from the lexer the moment a statement holds a quoted identifier
-  * (`SELECT 1 AS "it's", 'strpos(x)'`) — so both shapes fail the build.
-  * The two CSV sniffers in SqlGateway track `"` in CSV text, not SQL, and
-  * are exempt by name. */
+/** Source lint for decisions that live in ONE place.
+  *
+  * SQL quoting is known only to `engine/SqlLex.scala`. A pass that
+  * re-derives "inside a string literal?" by quote parity, or with its own
+  * quote-tracking scan, drifts from the lexer the moment a statement holds
+  * a quoted identifier (`SELECT 1 AS "it's", 'strpos(x)'`) — so both
+  * shapes fail the build. The two CSV sniffers in SqlGateway track `"` in
+  * CSV text, not SQL, and are exempt by name.
+  *
+  * The session conf is known only to `SessionProfile.scala`: hand-copied
+  * `SparkSession.builder` chains drifted from the benchmarked conf, and
+  * the environment knobs that once overrode it are constants now. */
 class SourceLintSpec extends AnyFunSuite {
   private val mainDir = new java.io.File("src/main/scala")
   private val engineDir = new java.io.File(mainDir, "graft/engine")
+  private val toolsDir = new java.io.File("tools")
+
+  private def allFiles(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) allFiles(f) else Seq(f)
+    }
 
   private def scalaFiles(dir: java.io.File): Seq[java.io.File] =
-    Option(dir.listFiles).toSeq.flatten.flatMap { f =>
-      if (f.isDirectory) scalaFiles(f)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    }
+    allFiles(dir).filter(_.getName.endsWith(".scala"))
 
   private def lines(f: java.io.File): Vector[String] = {
     val src = scala.io.Source.fromFile(f, "UTF-8")
@@ -61,5 +69,31 @@ class SourceLintSpec extends AnyFunSuite {
         }
       }
     assert(hits.isEmpty, hits.mkString("quote-tracking scans:\n", "\n", ""))
+  }
+
+  test("SparkSession.builder appears in src/main only in SessionProfile") {
+    assert(mainDir.isDirectory, s"run from the repository root: $mainDir")
+    val hits = scalaFiles(mainDir).filterNot(_.getName == "SessionProfile.scala")
+      .flatMap(f => lines(f).zipWithIndex.collect {
+        case (l, i) if l.contains("SparkSession.builder") =>
+          s"${f.getPath}:${i + 1}: ${l.trim}"
+      })
+    assert(hits.isEmpty, hits.mkString("session builders:\n", "\n", ""))
+  }
+
+  test("no retired SPARK_GRAFT_* knob in src/main or tools/") {
+    assert(toolsDir.isDirectory, s"run from the repository root: $toolsDir")
+    val retired = Seq("AQE", "PREFER_SMJ", "LOCALITY_WAIT", "SHUFFLE_COMPRESS",
+      "CACHE_COMPRESS", "CODEGEN_CACHE", "SHUFFLE", "PASSES", "PIN_CAP",
+      "PIN_ROWS", "STATIC_PLANS", "EXEC_PLAN", "PHASE", "REUSE", "ORDER")
+    val Knob = retired.mkString("""\bSPARK_GRAFT_(?:""", "|", """)\b""").r
+    val sources = (allFiles(mainDir) ++ allFiles(toolsDir))
+      .filterNot(_.getName.endsWith(".pyc"))
+    val hits = sources.flatMap { f =>
+      lines(f).zipWithIndex.collect {
+        case (l, i) if Knob.findFirstIn(l).isDefined => s"${f.getPath}:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("retired knobs:\n", "\n", ""))
   }
 }

@@ -53,7 +53,7 @@ SPARK_GRAFT_CPUS=16 "$SPARK_HOME/bin/spark-submit" \
   --conf spark.sql.shuffle.partitions=16 \
   "$JAR" "$SF_DIR" "$WORK/out_cluster" \
   > "$WORK/logs/submit.log" 2>&1 || { tail -30 "$WORK/logs/submit.log"; exit 1; }
-grep "\[verify\]" "$WORK/logs/submit.log" || true
+grep "\[graft\] verify" "$WORK/logs/submit.log" || true
 
 echo "== Verify locally (the driver-gate shape) =="
 sbt -batch "runMain graft.Verify $SF_DIR $WORK/out_local" > "$WORK/logs/local.log" 2>&1

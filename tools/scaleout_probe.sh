@@ -4,7 +4,9 @@
 # JVMs, 8 cores / 20g each), same box, same jar, same 10x corpus - and
 # record the marginal speedup of the second worker per family. This is the
 # honest small-scale test of "the plans you'd want at 100x": a plan whose
-# exchanges serialize won't speed up when executors double.
+# exchanges serialize won't speed up when executors double. On a spark://
+# master graft.SessionProfile keeps Spark's shuffle and cache compression;
+# SPARK_GRAFT_CPUS sets the shuffle partition count.
 #
 # Usage: tools/scaleout_probe.sh [sfDir] [querySubset]
 set -eo pipefail
@@ -43,10 +45,7 @@ run_bench() { # tag cores
   echo "== bench: $1 ($2 cores) =="
   SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_ONLY="$SUBSET" \
   SPARK_GRAFT_DETAIL_OUT="$WORK/bench_detail_$1.json" \
-  SPARK_GRAFT_SHUFFLE_COMPRESS=true SPARK_GRAFT_CACHE_COMPRESS=true \
-  SPARK_GRAFT_SHUFFLE=32 \
-  SPARK_GRAFT_PIN_ROWS="${SPARK_GRAFT_PIN_ROWS:-75000}" \
-  SPARK_GRAFT_LOCALITY_WAIT="${SPARK_GRAFT_LOCALITY_WAIT:-0ms}" \
+  SPARK_GRAFT_CPUS=32 \
   "$SPARK_HOME/bin/spark-submit" \
     --master spark://127.0.0.1:7077 \
     --class graft.Bench \
