@@ -2772,58 +2772,38 @@ class SqlGateway(val spark: SparkSession) {
   private def rewriteDuckAliases(sql: String): String =
     SqlLex.replace(sql, DuckFnRe)(m => DuckFnLookup(m.group(1).toLowerCase) + "(")
 
-  /** Pin DuckDB defaults where Spark's same-named function defaults
-    * differently. Calls are found, and their closing parens matched, on the
-    * [[SqlLex]] masked view; only the exact arity is rewritten — other
-    * arities already agree and pass through. */
-  private def rewriteDuckDefaults(sql: String): String = {
-    // arity < 0 = any arity; rebuild returning None leaves the call
-    // untouched (it then refuses downstream rather than being guessed at);
-    // allowAt can veto a call site by its position (e.g. table vs scalar)
-    def fix(s: String, name: String, arity: Int,
-        rebuild: Seq[String] => Option[String],
-        allowAt: (String, Int) => Boolean = (_, _) => true): String = {
-      val re = ("""(?i)(?<![\w.$])""" + name + """\s*\(""").r
-      val lx = SqlLex(s)
-      val sb = new StringBuilder; var last = 0
-      lx.find(re).foreach { m =>
-        val close = lx.close(m.end - 1)
-        if (m.start >= last && close >= 0 && allowAt(s, m.start)) {
-          val args = splitTopLevel(s.substring(m.end, close)).map(_.trim)
-          if (args.length == arity || arity < 0) {
-            rebuild(args).foreach { built =>
-              sb.append(s.substring(last, m.start)).append(built)
-              last = close + 1
-            }
-          }
-        }
-      }
-      if (last == 0) s else sb.append(s.substring(last)).toString
-    }
-    var out = sql
-    if (out.toLowerCase.contains("log"))
-      out = fix(out, "log", 1, a => Some(s"log10(${a.head})"))
+  import SqlGateway.{DuckCall, DuckRaw, DuckStep}
+
+  /** The DuckDB-default steps, in order: where Spark's same-named function
+    * defaults differently, where DuckDB has a function Spark spells
+    * otherwise, and the clause spellings around them. A step sees the text
+    * every earlier step left, so a rule can emit a name a later rule
+    * implements (weekday → dayofweek), and ordering comments below say
+    * which rule must run first. No step sees its own output again. */
+  private[graft] lazy val duckDefaultSteps: Vector[DuckStep] = {
+    val steps = Vector.newBuilder[DuckStep]
+    def call(name: String, arity: Int, rebuild: Seq[String] => Option[String],
+        allowAt: (String, Int) => Boolean = (_, _) => true): Unit =
+      steps += DuckCall(name, arity, rebuild, allowAt)
+    def raw(when: String*)(pass: SqlLex => String): Unit =
+      steps += DuckRaw(when, pass)
+
+    call("log", 1, a => Some(s"log10(${a.head})"))
     // DuckDB raises Out of Range on log-of-nonpositive, sqrt-of-negative
     // and asin/acos outside [-1,1] (probed); Spark returns NULL/NaN —
     // silent divergences without these guards. Each guard wraps the call
     // AFTER the renames above so the emitted inner call is final; NULL
     // operands fall through the CASE to the (NULL-returning) native.
     def domainGuard(fn: String, negMsg: String, zeroToo: Boolean): Unit =
-      if (out.toLowerCase.contains(fn)) {
-        out = fix(out, fn, 1, a => {
-          val x = a.head.trim
-          if (x.startsWith("__dg_")) None // already guarded (inner emission)
-          else {
-            val zero = if (zeroToo)
-              s"WHEN (__dg_$x) = 0 THEN CAST(raise_error(" +
-                s"'Out of Range Error: cannot take logarithm of zero') " +
-                s"AS DOUBLE) " else ""
-            Some(s"(CASE WHEN (__dg_$x) < 0 THEN CAST(raise_error('$negMsg') " +
-              s"AS DOUBLE) ${zero}ELSE $fn(__dg_$x) END)")
-          }
-        })
-        out = out.replace("__dg_", "")
-      }
+      call(fn, 1, a => {
+        val x = a.head.trim
+        val zero = if (zeroToo)
+          s"WHEN ($x) = 0 THEN CAST(raise_error(" +
+            s"'Out of Range Error: cannot take logarithm of zero') " +
+            s"AS DOUBLE) " else ""
+        Some(s"(CASE WHEN ($x) < 0 THEN CAST(raise_error('$negMsg') " +
+          s"AS DOUBLE) ${zero}ELSE $fn($x) END)")
+      })
     val logNeg = "Out of Range Error: cannot take logarithm of a negative number"
     domainGuard("ln", logNeg, zeroToo = true)
     domainGuard("log10", logNeg, zeroToo = true)
@@ -2831,33 +2811,25 @@ class SqlGateway(val spark: SparkSession) {
     domainGuard("sqrt",
       "Out of Range Error: cannot take square root of a negative number",
       zeroToo = false)
-    for (fn <- Seq("asin", "acos") if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 1, a => {
+    for (fn <- Seq("asin", "acos"))
+      call(fn, 1, a => {
         val x = a.head.trim
-        if (x.startsWith("__ag_")) None
-        else Some(s"(CASE WHEN abs(__ag_$x) > 1 THEN CAST(raise_error(" +
+        Some(s"(CASE WHEN abs($x) > 1 THEN CAST(raise_error(" +
           s"'Invalid Input Error: ${fn.toUpperCase} is undefined outside " +
-          s"[-1,1]') AS DOUBLE) ELSE $fn(__ag_$x) END)")
+          s"[-1,1]') AS DOUBLE) ELSE $fn($x) END)")
       })
-    out = out.replace("__ag_", "")
     // 2-arg log(b, x): either operand non-positive raises (probed)
-    if (out.toLowerCase.contains("log"))
-      out = fix(out, "log", 2, a =>
-        if (a.head.trim.startsWith("__lg_")) None
-        else Some(s"(CASE WHEN (__lg_${a(0)}) <= 0 OR (${a(1)}) <= 0 THEN " +
-          s"CAST(raise_error('$logNeg') AS DOUBLE) " +
-          s"ELSE log(__lg_${a(0)}, ${a(1)}) END)"))
-    out = out.replace("__lg_", "")
+    call("log", 2, a =>
+      Some(s"(CASE WHEN (${a(0)}) <= 0 OR (${a(1)}) <= 0 THEN " +
+        s"CAST(raise_error('$logNeg') AS DOUBLE) " +
+        s"ELSE log(${a(0)}, ${a(1)}) END)"))
     // dayname/monthname return the FULL name in DuckDB ('Monday',
     // 'November'); Spark 4's same-named builtins abbreviate ('Mon',
     // 'Nov') — date_format's EEEE/MMMM patterns are the exact twins
-    if (out.toLowerCase.contains("dayname"))
-      out = fix(out, "dayname", 1, a => Some(s"date_format(${a.head}, 'EEEE')"))
-    if (out.toLowerCase.contains("monthname"))
-      out = fix(out, "monthname", 1, a => Some(s"date_format(${a.head}, 'MMMM')"))
-    if (out.toLowerCase.contains("regexp_extract"))
-      out = fix(out, "regexp_extract", 2,
-        a => Some(s"regexp_extract(${a(0)}, ${a(1)}, 0)"))
+    call("dayname", 1, a => Some(s"date_format(${a.head}, 'EEEE')"))
+    call("monthname", 1, a => Some(s"date_format(${a.head}, 'MMMM')"))
+    call("regexp_extract", 2,
+      a => Some(s"regexp_extract(${a(0)}, ${a(1)}, 0)"))
     // DuckDB regexp_replace differs from Spark's builtin in default scope
     // (FIRST match unless the 'g' option), replacement syntax (RE2 `\1`
     // backrefs vs Java `$1`), and a 4th OPTIONS arg (Spark's 4th arg is a
@@ -2865,26 +2837,22 @@ class SqlGateway(val spark: SparkSession) {
     // expression, which carries the exact DuckDB semantics for all three
     // (graft.functions.DuckRegexpReplace) — unknown option letters still
     // refuse loudly inside the expression, like DuckDB.
-    if (out.toLowerCase.contains("regexp_replace")) {
-      out = fix(out, "regexp_replace", 4, a =>
-        Some(s"duck_regexp_replace(${a(0)}, ${a(1)}, ${a(2)}, ${a(3)})"))
-      out = fix(out, "regexp_replace", 3, a =>
-        Some(s"duck_regexp_replace(${a(0)}, ${a(1)}, ${a(2)}, '')"))
-    }
+    call("regexp_replace", 4, a =>
+      Some(s"duck_regexp_replace(${a(0)}, ${a(1)}, ${a(2)}, ${a(3)})"))
+    call("regexp_replace", 3, a =>
+      Some(s"duck_regexp_replace(${a(0)}, ${a(1)}, ${a(2)}, '')"))
     // struct_pack(a := 1, b := x) → named_struct('a', 1, 'b', x); an arg
     // not of `ident := expr` shape leaves the whole call to refuse
-    if (out.toLowerCase.contains("struct_pack")) {
-      val Kv = """(?s)([A-Za-z_]\w*)\s*:=\s*(.+)""".r
-      out = fix(out, "struct_pack", -1, args => {
-        val kvs = args.map {
-          case Kv(k, v) => Some(s"'$k', $v")
-          case _ => None
-        }
-        if (kvs.nonEmpty && kvs.forall(_.isDefined))
-          Some(kvs.flatten.mkString("named_struct(", ", ", ")"))
-        else None
-      })
-    }
+    val Kv = """(?s)([A-Za-z_]\w*)\s*:=\s*(.+)""".r
+    call("struct_pack", -1, args => {
+      val kvs = args.map {
+        case Kv(k, v) => Some(s"'$k', $v")
+        case _ => None
+      }
+      if (kvs.nonEmpty && kvs.forall(_.isDefined))
+        Some(kvs.flatten.mkString("named_struct(", ", ", ")"))
+      else None
+    })
     // date_diff('unit', a, b) (and DuckDB's datediff alias) counts UNIT
     // BOUNDARY CROSSINGS (duckdb 1.0 verified: month 01-31→02-01 = 1,
     // hour 01:59→03:01 = 2), not elapsed full units — so Spark's
@@ -2892,10 +2860,8 @@ class SqlGateway(val spark: SparkSession) {
     // (date-boundary count), year/month → calendar-field arithmetic,
     // hour/minute/second → truncate-then-divide on epoch micros (exact
     // integers: truncated stamps are whole multiples of the unit).
-    for (fn <- Seq("date_diff", "datediff")
-         if out.toLowerCase.contains(fn.replace("_", "")) ||
-           out.toLowerCase.contains(fn))
-      out = fix(out, fn, 3, a => {
+    for (fn <- Seq("date_diff", "datediff"))
+      call(fn, 3, a => {
         def trunc(unit: String, micros: Long) = Some(
           s"((unix_micros(date_trunc('$unit', ${a(2)})) - " +
           s"unix_micros(date_trunc('$unit', ${a(1)}))) div ${micros}L)")
@@ -2923,10 +2889,8 @@ class SqlGateway(val spark: SparkSession) {
     // span with `div`; month-family counts calendar months then backs
     // off one when a + m months overshoots b (timestamp-aware, so times
     // matter exactly as probed: Jan15 10:00 → Mar15 09:59 is 1 month).
-    for (fn <- Seq("date_sub", "datesub")
-         if out.toLowerCase.contains(fn.replace("_", "")) ||
-           out.toLowerCase.contains(fn))
-      out = fix(out, fn, 3, a => {
+    for (fn <- Seq("date_sub", "datesub"))
+      call(fn, 3, a => {
         val (x, y) =
           (s"CAST(${a(1)} AS TIMESTAMP)", s"CAST(${a(2)} AS TIMESTAMP)")
         def span(unitMicros: Long) = Some(
@@ -2955,10 +2919,8 @@ class SqlGateway(val spark: SparkSession) {
       })
     // date_part/datepart with a part-name LIST → a struct of the parts
     // (probed: field order follows the list)
-    for (fn <- Seq("date_part", "datepart")
-         if out.toLowerCase.contains(fn.replace("_", "")) ||
-           out.toLowerCase.contains(fn))
-      out = fix(out, fn, 2, a => {
+    for (fn <- Seq("date_part", "datepart"))
+      call(fn, 2, a => {
         val lst = a(0).trim
         val inner =
           if (lst.toLowerCase.startsWith("array(") && lst.endsWith(")"))
@@ -2990,19 +2952,21 @@ class SqlGateway(val spark: SparkSession) {
     // the exact semantics. Unknown part names stay for Spark → loud
     // INVALID_EXTRACT_FIELD, as DuckDB errors on unknown parts too.
     val PartLit = """^'(\w+)'$""".r
-    for (fn <- Seq("date_part", "datepart") if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 2, a => a(0).trim.toLowerCase match {
+    for (fn <- Seq("date_part", "datepart"))
+      call(fn, 2, a => a(0).trim.toLowerCase match {
         case PartLit(p) => duckPartFn.get(p).map(f => s"$f(${a(1)})")
         case _ => None // non-literal / list form (handled above)
       })
     // EXTRACT(part FROM x) — same mapping, own scan (no comma args).
     // naive timestamps carry no zone: the timezone* parts are 0 (probed),
     // NULL-propagating through the operand
-    if (out.toLowerCase.contains("extract")) {
-      val ExtrRe = """(?i)\bextract\s*\(\s*(\w+)\s+from\s+""".r
+    val ExtrRe = """(?i)\bextract\s*\(\s*(\w+)\s+from\s+""".r
+    raw("extract") { lx =>
+      var cur = lx
       // right to left: a splice changes only text after the match start
-      for (m <- SqlLex(out).find(ExtrRe).toList.reverse) {
-        val i = SqlLex(out).close(m.start + m.matched.indexOf('(')) + 1
+      for (m <- lx.find(ExtrRe).toList.reverse) {
+        val out = cur.sql
+        val i = cur.close(m.start + m.matched.indexOf('(')) + 1
         if (i > 0) {
           val operand = out.substring(m.end, i - 1).trim
           val p = m.group(1).toLowerCase
@@ -3013,37 +2977,34 @@ class SqlGateway(val spark: SparkSession) {
                 s"ELSE 0 END AS BIGINT)")
             else None)
           repl.foreach(r =>
-            out = out.substring(0, m.start) + r + out.substring(i))
+            cur = SqlLex(out.substring(0, m.start) + r + out.substring(i)))
         }
       }
+      cur.sql
     }
     // epoch(ts) → seconds since epoch as DOUBLE with fraction (duckdb 1.0
     // verified: 00:01:30.5 → 90.5); unix_micros keeps the fraction that
     // unix_timestamp truncates, and BIGINT/INT division is double in Spark
-    if (out.toLowerCase.contains("epoch("))
-      out = fix(out, "epoch", 1, a =>
-        // INTERVAL operand: total seconds (probed: epoch(INTERVAL 2
-        // MINUTE) = 120.0) — normalize to second granularity, then the
-        // integral cast reads seconds. Non-literal intervals refuse.
-        if ("""(?i)^INTERVAL\b""".r.findFirstIn(a.head.trim).isDefined)
-          Some(s"CAST(CAST(${a.head} AS INTERVAL SECOND) AS BIGINT)")
-        else Some(s"(unix_micros(${a.head}) / 1000000)"))
-    if (out.toLowerCase.contains("epoch_ms")) // overloaded by arg type:
-      // ts → BIGINT ms, integral ms → TIMESTAMP (DuckEpochMs dispatches)
-      out = fix(out, "epoch_ms", 1, a => Some(s"duck_epoch_ms(${a.head})"))
+    call("epoch", 1, a =>
+      // INTERVAL operand: total seconds (probed: epoch(INTERVAL 2
+      // MINUTE) = 120.0) — normalize to second granularity, then the
+      // integral cast reads seconds. Non-literal intervals refuse.
+      if ("""(?i)^INTERVAL\b""".r.findFirstIn(a.head.trim).isDefined)
+        Some(s"CAST(CAST(${a.head} AS INTERVAL SECOND) AS BIGINT)")
+      else Some(s"(unix_micros(${a.head}) / 1000000)"))
+    // epoch_ms is overloaded by arg type: ts → BIGINT ms, integral ms →
+    // TIMESTAMP (DuckEpochMs dispatches)
+    call("epoch_ms", 1, a => Some(s"duck_epoch_ms(${a.head})"))
     // epoch_us/epoch_ns: BIGINT micro/nanoseconds since epoch (probed:
     // 00:00:01.5 → 1500000 / 1500000000)
-    if (out.toLowerCase.contains("epoch_us"))
-      out = fix(out, "epoch_us", 1, a => Some(s"unix_micros(${a.head})"))
-    if (out.toLowerCase.contains("epoch_ns"))
-      out = fix(out, "epoch_ns", 1, a =>
-        Some(s"(unix_micros(${a.head}) * 1000)"))
+    call("epoch_us", 1, a => Some(s"unix_micros(${a.head})"))
+    call("epoch_ns", 1, a =>
+      Some(s"(unix_micros(${a.head}) * 1000)"))
     // [TRY_]CAST(x AS JSON) → the DuckJsonCast expression (the ::JSON
     // spelling rewrites in rewriteJsonColonCasts before the parse)
-    for ((fn, suffix) <- Seq("cast" -> "", "try_cast" -> "_try")
-         if out.toLowerCase.contains(fn)) {
+    for ((fn, suffix) <- Seq("cast" -> "", "try_cast" -> "_try")) {
       val AsJson = """(?is)^(.*\S)\s+AS\s+JSON\s*$""".r
-      out = fix(out, fn, 1, a => a.head.trim match {
+      call(fn, 1, a => a.head.trim match {
         case AsJson(inner) => Some(s"graft_json_cast$suffix($inner)")
         case _ => None
       })
@@ -3051,106 +3012,83 @@ class SqlGateway(val spark: SparkSession) {
     // DuckDB's array_prepend is (element, list) — Spark's is (list,
     // element). Runs BEFORE the array_push_front fix, whose output is
     // already in Spark argument order.
-    if (out.toLowerCase.contains("array_prepend"))
-      out = fix(out, "array_prepend", 2, a =>
-        Some(s"array_prepend(${a(1)}, ${a(0)})"))
+    call("array_prepend", 2, a =>
+      Some(s"array_prepend(${a(1)}, ${a(0)})"))
     // BIT functions over the gateway's bitstring emulation (BIT values
     // are '0'/'1' strings here — GatewaySpec type corners): positions are
     // 0-based from the left like DuckDB's get_bit/set_bit (probed:
     // get_bit('0110'::BIT, 1) = 1, set_bit('0110'::BIT, 0, 1) = '1110').
-    if (out.toLowerCase.contains("bitstring"))
-      out = fix(out, "bitstring", 2, a =>
-        Some(s"lpad(${a(0)}, ${a(1)}, '0')"))
-    if (out.toLowerCase.contains("get_bit"))
-      out = fix(out, "get_bit", 2, a =>
-        Some(s"CAST(substr(${a(0)}, (${a(1)}) + 1, 1) AS INT)"))
-    if (out.toLowerCase.contains("set_bit"))
-      out = fix(out, "set_bit", 3, a =>
-        Some(s"concat(substr(${a(0)}, 1, ${a(1)}), " +
-          s"CAST(${a(2)} AS STRING), substr(${a(0)}, (${a(1)}) + 2))"))
+    call("bitstring", 2, a =>
+      Some(s"lpad(${a(0)}, ${a(1)}, '0')"))
+    call("get_bit", 2, a =>
+      Some(s"CAST(substr(${a(0)}, (${a(1)}) + 1, 1) AS INT)"))
+    call("set_bit", 3, a =>
+      Some(s"concat(substr(${a(0)}, 1, ${a(1)}), " +
+        s"CAST(${a(2)} AS STRING), substr(${a(0)}, (${a(1)}) + 2))"))
     // bit_count over a BIT operand (spelled with a ::BIT cast) counts set
     // bits in the string form; integral operands keep Spark's native
     // bit_count untouched
-    if (out.toLowerCase.contains("bit_count"))
-      out = fix(out, "bit_count", 1, a =>
-        if ("""(?is).*::\s*bit\s*$""".r.matches(a.head.trim))
-          Some(s"length(replace(${a.head}, '0', ''))")
-        else None)
+    call("bit_count", 1, a =>
+      if ("""(?is).*::\s*bit\s*$""".r.matches(a.head.trim))
+        Some(s"length(replace(${a.head}, '0', ''))")
+      else None)
     // 1-arg encode/decode: VARCHAR↔BLOB via utf-8 (Spark's own 2-arg
     // charset forms pass through untouched)
-    if (out.toLowerCase.contains("encode"))
-      out = fix(out, "encode", 1, a => Some(s"CAST(${a.head} AS BINARY)"))
-    if (out.toLowerCase.contains("decode"))
-      out = fix(out, "decode", 1, a => Some(s"CAST(${a.head} AS STRING)"))
+    call("encode", 1, a => Some(s"CAST(${a.head} AS BINARY)"))
+    call("decode", 1, a => Some(s"CAST(${a.head} AS STRING)"))
     // array_length(l, dim): only dimension 1 exists for LISTs (DuckDB
     // errors on others — the untouched spelling refuses here too). The
     // alias pass has already renamed array_length → array_size.
-    if (out.toLowerCase.contains("array_size"))
-      out = fix(out, "array_size", 2, a =>
-        if (a(1).trim == "1") Some(s"size(${a(0)})") else None)
+    call("array_size", 2, a =>
+      if (a(1).trim == "1") Some(s"size(${a(0)})") else None)
     // list_contains/array_has/array_contains: DuckDB is NULL only for a
     // NULL needle or NULL list — a null ELEMENT does not smear the result
     // (probed: contains([1,NULL], 3) = false where Spark's 3VL says NULL)
-    if (out.toLowerCase.contains("array_contains"))
-      out = fix(out, "array_contains", 2, a => {
-        val (l, x) = (a(0).trim, a(1).trim)
-        if (l.startsWith("__ac_")) None
-        else if (x.equalsIgnoreCase("NULL") || l.equalsIgnoreCase("NULL"))
-          Some("CAST(NULL AS BOOLEAN)")
-        else Some(s"(CASE WHEN ($x) IS NULL OR (__ac_$l) IS NULL " +
-          s"THEN CAST(NULL AS BOOLEAN) " +
-          s"ELSE coalesce(array_contains(__ac_$l, $x), false) END)")
-      })
-    out = out.replace("__ac_", "")
-    if (out.toLowerCase.contains("epoch_ns"))
-      out = fix(out, "epoch_ns", 1, a =>
-        Some(s"(unix_micros(${a.head}) * 1000)"))
+    call("array_contains", 2, a => {
+      val (l, x) = (a(0).trim, a(1).trim)
+      if (x.equalsIgnoreCase("NULL") || l.equalsIgnoreCase("NULL"))
+        Some("CAST(NULL AS BOOLEAN)")
+      else Some(s"(CASE WHEN ($x) IS NULL OR ($l) IS NULL " +
+        s"THEN CAST(NULL AS BOOLEAN) " +
+        s"ELSE coalesce(array_contains($l, $x), false) END)")
+    })
     // to_timestamp over an epoch-seconds NUMBER (duck's overload; the
     // string overload is Spark-native and untouched). Duck types the
     // result TIMESTAMP WITH TIME ZONE (probed: its ::VARCHAR carries
     // '+00') — the identity tstz cast marks the instant-typedness.
-    if (out.toLowerCase.contains("to_timestamp"))
-      out = fix(out, "to_timestamp", 1, a =>
-        if (a.head.trim.matches("""-?\d+(\.\d+)?"""))
-          Some(s"graft_tstz_cast(timestamp_seconds(${a.head}))") else None)
-    if (out.toLowerCase.contains("txid_current"))
-      out = fix(out, "txid_current", -1, a =>
-        if (a.isEmpty || a == Seq("")) Some("CAST(1 AS BIGINT)") else None)
+    call("to_timestamp", 1, a =>
+      if (a.head.trim.matches("""-?\d+(\.\d+)?"""))
+        Some(s"graft_tstz_cast(timestamp_seconds(${a.head}))") else None)
+    call("txid_current", -1, a =>
+      if (a.isEmpty || a == Seq("")) Some("CAST(1 AS BIGINT)") else None)
     // ISO-year family (probed: isoyear('2021-01-01') = 2020 — the year
     // of that ISO week's Thursday; yearweek = isoyear*100 + isoweek)
-    if (out.toLowerCase.contains("isoyear"))
-      out = fix(out, "isoyear", 1, a => Some(
-        s"year(date_add(CAST(${a(0)} AS DATE), 4 - (weekday(${a(0)}) + 1)))"))
-    if (out.toLowerCase.contains("yearweek"))
-      out = fix(out, "yearweek", 1, a => Some(
-        s"(year(date_add(CAST(${a(0)} AS DATE), " +
-          s"4 - (weekday(${a(0)}) + 1))) * 100 + weekofyear(${a(0)}))"))
+    call("isoyear", 1, a => Some(
+      s"year(date_add(CAST(${a(0)} AS DATE), 4 - (weekday(${a(0)}) + 1)))"))
+    call("yearweek", 1, a => Some(
+      s"(year(date_add(CAST(${a(0)} AS DATE), " +
+        s"4 - (weekday(${a(0)}) + 1))) * 100 + weekofyear(${a(0)}))"))
     // microsecond/millisecond extract the SUB-MINUTE part (probed:
     // '…:01.123456' → 1123456 / 1123 — seconds fold in)
-    if (out.toLowerCase.contains("microsecond"))
-      out = fix(out, "microsecond", 1, a => Some(
-        s"(unix_micros(CAST(${a(0)} AS TIMESTAMP)) % 60000000)"))
-    if (out.toLowerCase.contains("millisecond"))
-      out = fix(out, "millisecond", 1, a => Some(
-        s"((unix_micros(CAST(${a(0)} AS TIMESTAMP)) % 60000000) div 1000)"))
-    if (out.toLowerCase.contains("millennium"))
-      out = fix(out, "millennium", 1, a => Some(
-        s"CAST(CASE WHEN year(${a(0)}) >= 0 THEN " +
-          s"ceil(year(${a(0)}) / 1000.0) " +
-          s"ELSE 0 - ceil((0 - year(${a(0)})) / 1000.0) END AS BIGINT)"))
+    call("microsecond", 1, a => Some(
+      s"(unix_micros(CAST(${a(0)} AS TIMESTAMP)) % 60000000)"))
+    call("millisecond", 1, a => Some(
+      s"((unix_micros(CAST(${a(0)} AS TIMESTAMP)) % 60000000) div 1000)"))
+    call("millennium", 1, a => Some(
+      s"CAST(CASE WHEN year(${a(0)}) >= 0 THEN " +
+        s"ceil(year(${a(0)}) / 1000.0) " +
+        s"ELSE 0 - ceil((0 - year(${a(0)})) / 1000.0) END AS BIGINT)"))
     // 1-arg make_timestamp takes epoch MICROS (probed)
-    if (out.toLowerCase.contains("make_timestamp"))
-      out = fix(out, "make_timestamp", 1, a =>
-        Some(s"timestamp_micros(${a(0)})"))
+    call("make_timestamp", 1, a =>
+      Some(s"timestamp_micros(${a(0)})"))
     // make_timestamptz: session TZ is pinned UTC, so the 6-arg form is
     // make_timestamp's instant and the 7th arg means the same zone
     // interpretation — wrapped in the identity tstz cast so the result
     // carries instant-typedness (the '+00' VARCHAR suffix, probed)
-    if (out.toLowerCase.contains("make_timestamptz"))
-      out = fix(out, "make_timestamptz", -1, a =>
-        if (a.length == 6 || a.length == 7)
-          Some(s"graft_tstz_cast(make_timestamp(${a.mkString(", ")}))")
-        else None)
+    call("make_timestamptz", -1, a =>
+      if (a.length == 6 || a.length == 7)
+        Some(s"graft_tstz_cast(make_timestamp(${a.mkString(", ")}))")
+      else None)
     // timezone(tz, ts) and `ts AT TIME ZONE tz` dispatch on the OPERAND's
     // direction (probed): a naive TIMESTAMP is interpreted in tz and
     // becomes the instant (12:00 NY → 16:00+00 → to_utc_timestamp); a
@@ -3163,7 +3101,7 @@ class SqlGateway(val spark: SparkSession) {
     // naive↔instant (probed: TIMESTAMP AT NY AT Tokyo = 12:00 naive →
     // 16:00+00 → Tokyo-local 01:00 next day), so an operand that is
     // already a to_utc_timestamp(...) emission dispatches from_utc and
-    // vice versa, and nested timezone() calls rewrite innermost-first.
+    // vice versa; nested timezone() calls rewrite innermost-first.
     def tzInstantTyped(x: String): Boolean = {
       // type the OUTERMOST expression: a rewritten from_utc emission is
       // naive even when its arguments still spell TIMESTAMPTZ (chains:
@@ -3187,28 +3125,21 @@ class SqlGateway(val spark: SparkSession) {
         low.startsWith("graft_tstz_cast(")) true
       else low.contains("timestamptz") || low.contains("with time zone")
     }
-    if (out.toLowerCase.contains("timezone")) {
-      var tzRounds = 0
-      var tzPrev = ""
-      while (tzPrev != out && tzRounds < 8) {
-        tzPrev = out
-        out = fix(out, "timezone", 2, a =>
-          // innermost-first: defer while the operand still holds an
-          // unrewritten timezone()/AT TIME ZONE whose direction this
-          // call's dispatch depends on — a word-boundary CALL match,
-          // not a substring test (a column named order_timezone must
-          // not defer every round and die unrewritten; r14 advice)
-          if ("""(?i)\btimezone\s*\(""".r.findFirstIn(a(1)).isDefined ||
-              """(?i)\bat\s+time\s+zone\b""".r.findFirstIn(a(1)).isDefined)
-            None
-          else if (tzInstantTyped(a(1)))
-            Some(s"from_utc_timestamp(${a(1)}, ${a(0)})")
-          else Some(s"to_utc_timestamp(${a(1)}, ${a(0)})"))
-        tzRounds += 1
-      }
-    }
-    if ("""(?i)\bat\s+time\s+zone\b""".r.findFirstIn(out).isDefined) {
-      val AtRe = """(?i)\s+AT\s+TIME\s+ZONE\s+('(?:[^']|'')*')""".r
+    call("timezone", 2, a =>
+      // an operand that still holds a timezone()/AT TIME ZONE left
+      // unrewritten (its own direction unknown) leaves this call too —
+      // a word-boundary CALL match, not a substring test (a column named
+      // order_timezone must not veto the call; r14 advice)
+      if ("""(?i)\btimezone\s*\(""".r.findFirstIn(a(1)).isDefined ||
+          """(?i)\bat\s+time\s+zone\b""".r.findFirstIn(a(1)).isDefined)
+        None
+      else if (tzInstantTyped(a(1)))
+        Some(s"from_utc_timestamp(${a(1)}, ${a(0)})")
+      else Some(s"to_utc_timestamp(${a(1)}, ${a(0)})"))
+    val AtRe = """(?i)\s+AT\s+TIME\s+ZONE\s+('(?:[^']|'')*')""".r
+    raw("zone") { lx0 =>
+      var out = lx0.sql
+      var lx = lx0
       // LEFTMOST-first, re-scanning after each rewrite: a chain's second
       // AT then sees the first's emitted call as its operand and flips
       // the direction (reverse-order index surgery would garble chains —
@@ -3218,7 +3149,6 @@ class SqlGateway(val spark: SparkSession) {
       while (rewrote && atRounds < 16) {
         rewrote = false
         atRounds += 1
-        val lx = SqlLex(out)
         val mk = lx.masked // backward scans: literal contents are blank
         lx.find(AtRe).nextOption().foreach { m =>
           // backward-scan one operand UNIT ending at jEnd: string literal
@@ -3311,7 +3241,9 @@ class SqlGateway(val spark: SparkSession) {
             rewrote = true
           }
         }
+        if (rewrote) lx = SqlLex(out)
       }
+      out
     }
     // quantified comparisons, FALLBACK pass: simple-operand lhs shapes
     // are rewritten UPSTREAM by rewriteDuckClauses' min/max matrix
@@ -3325,11 +3257,13 @@ class SqlGateway(val spark: SparkSession) {
     // definite pass), a NULL comparison otherwise yields NULL, empty
     // subqueries give ALL→TRUE / ANY→FALSE (standard semantics,
     // duck-probed; any truth-table fix must land in BOTH passes).
-    if ("""(?i)\b(?:all|any|some)\s*\(""".r.findFirstIn(out).isDefined) {
-      val AllRe = """(?i)(==|<>|!=|<=|>=|=|<|>)\s*(ALL|ANY|SOME)\s*\(""".r
+    val AllRe = """(?i)(==|<>|!=|<=|>=|=|<|>)\s*(ALL|ANY|SOME)\s*\(""".r
+    raw("all", "any", "some") { lx =>
+      var cur = lx
       // right to left: a splice changes only text after the operand start
-      for (m <- SqlLex(out).find(AllRe).toList.reverse) {
-        val mk = SqlLex(out).masked // backward scans: literal contents are blank
+      for (m <- lx.find(AllRe).toList.reverse) {
+        val out = cur.sql
+        val mk = cur.masked // backward scans: literal contents are blank
         // close of the subquery paren
         val i = SqlLex.close(mk, m.end - 1) + 1
         // backward operand span (literal / balanced-paren call / idents)
@@ -3383,9 +3317,10 @@ class SqlGateway(val spark: SparkSession) {
                   s"WHEN ${cnt(s"$pass IS NULL")} THEN " +
                   s"CAST(NULL AS BOOLEAN) ELSE FALSE END)"
             }
-          out = out.substring(0, at) + repl + out.substring(i)
+          cur = SqlLex(out.substring(0, at) + repl + out.substring(i))
         }
       }
+      cur.sql
     }
     // TIMESTAMPTZ literals/casts → a UTC-converted TIMESTAMP literal.
     // MUST run here, AFTER the timezone()/AT-TIME-ZONE smellsTz guards
@@ -3394,8 +3329,7 @@ class SqlGateway(val spark: SparkSession) {
     // silently backwards (review finding; probed: duck's
     // timezone('America/New_York', TIMESTAMPTZ '...+00') converts
     // instant→local, the naive overload converts local→instant).
-    if (out.toLowerCase.contains("timestamptz") ||
-        out.toLowerCase.contains("with time zone")) {
+    raw("timestamptz", "with time zone") { lx =>
       // TIMESTAMPTZ → VARCHAR renders with duck's '+00' suffix (probed:
       // '2020-06-01 10:00:00+00') — handled BEFORE the generic literal
       // rewrite erases the tstz spelling, so the text cast cannot
@@ -3407,7 +3341,7 @@ class SqlGateway(val spark: SparkSession) {
       // (`SELECT 'note: x::timestamptz'`) passes through untouched
       val LitStr =
         """(?i)\bTIMESTAMPTZ\s+'([^']*)'\s*::\s*STRING\b""".r
-      out = SqlLex.replace(out, LitStr)(m => utcPlus(m.group(1)))
+      var out = lx.replace(LitStr)(m => utcPlus(m.group(1)))
       val CastStr =
         """(?i)'([^']*)'\s*::\s*TIMESTAMPTZ\s*::\s*STRING\b""".r
       out = SqlLex.replace(out, CastStr)(m => utcPlus(m.group(1)))
@@ -3445,7 +3379,7 @@ class SqlGateway(val spark: SparkSession) {
         s"graft_tstz_cast(${m.group(1)})")
       val CastForm =
         (s"(?i)\\b(TRY_)?CAST\\s*\\(([^()]+?)\\s+AS\\s+$TzTy\\s*\\)").r
-      out = SqlLex.replace(out, CastForm)(m =>
+      SqlLex.replace(out, CastForm)(m =>
         s"graft_tstz_cast(${m.group(2)}" +
           (if (m.group(1) != null) ", true" else "") + ")")
     }
@@ -3457,122 +3391,104 @@ class SqlGateway(val spark: SparkSession) {
     // declared-tstz column whose to_utc emission the plan pass flips.)
     // xor is the function spelling of ^; cot(x) is 1/tan(x) bit-exactly
     // (probed: cos/sin differs in the last ulp)
-    if (out.toLowerCase.contains("xor("))
-      out = fix(out, "xor", 2, a => Some(s"((${a(0)}) ^ (${a(1)}))"))
-    if (out.toLowerCase.contains("cot("))
-      out = fix(out, "cot", 1, a => Some(s"(1 / tan(${a.head}))"))
+    call("xor", 2, a => Some(s"((${a(0)}) ^ (${a(1)}))"))
+    call("cot", 1, a => Some(s"(1 / tan(${a.head}))"))
     // fdiv/fmod are FLOORED division/modulo returning DOUBLE (probed:
     // fmod(-5.5, 2) = 0.5, sign of the divisor — not C fmod)
-    if (out.toLowerCase.contains("fdiv"))
-      out = fix(out, "fdiv", 2, a => Some(
-        s"CAST(floor((${a(0)}) / (${a(1)})) AS DOUBLE)"))
-    if (out.toLowerCase.contains("fmod"))
-      out = fix(out, "fmod", 2, a => Some(
-        s"CAST((${a(0)}) - floor((${a(0)}) / (${a(1)})) * (${a(1)}) AS DOUBLE)"))
+    call("fdiv", 2, a => Some(
+      s"CAST(floor((${a(0)}) / (${a(1)})) AS DOUBLE)"))
+    call("fmod", 2, a => Some(
+      s"CAST((${a(0)}) - floor((${a(0)}) / (${a(1)})) * (${a(1)}) AS DOUBLE)"))
     // (cbrt is left as Spark's correctly-rounded Math.cbrt: DuckDB calls
     // the SYSTEM libm cbrt, which is off by an ulp for some inputs
     // (probed: 27 → 3.0000000000000004 but 1000 → 10.0) — platform noise
     // under the repo's round-6 libm contract, not a semantic to copy.)
     // isinf/isfinite have no Spark twin; NULL-in NULL-out via the CASE
-    if (out.toLowerCase.contains("isinf"))
-      out = fix(out, "isinf", 1, a => Some(
-        s"(CASE WHEN ${a.head} IS NULL THEN NULL " +
-          s"ELSE abs(${a.head}) = CAST('Infinity' AS DOUBLE) END)"))
-    if (out.toLowerCase.contains("isfinite"))
-      out = fix(out, "isfinite", 1, a => Some(
-        s"(CASE WHEN ${a.head} IS NULL THEN NULL " +
-          s"ELSE NOT isnan(${a.head}) AND " +
-          s"abs(${a.head}) <> CAST('Infinity' AS DOUBLE) END)"))
+    call("isinf", 1, a => Some(
+      s"(CASE WHEN ${a.head} IS NULL THEN NULL " +
+        s"ELSE abs(${a.head}) = CAST('Infinity' AS DOUBLE) END)"))
+    call("isfinite", 1, a => Some(
+      s"(CASE WHEN ${a.head} IS NULL THEN NULL " +
+        s"ELSE NOT isnan(${a.head}) AND " +
+        s"abs(${a.head}) <> CAST('Infinity' AS DOUBLE) END)"))
     // 2-arg regexp_extract_all: DuckDB's default group is 0 (the whole
     // match); Spark's is 1 — spell group 0 out
-    if (out.toLowerCase.contains("regexp_extract_all"))
-      out = fix(out, "regexp_extract_all", 2,
-        a => Some(s"regexp_extract_all(${a(0)}, ${a(1)}, 0)"))
+    call("regexp_extract_all", 2,
+      a => Some(s"regexp_extract_all(${a(0)}, ${a(1)}, 0)"))
     // even(x): round away from zero to the next even number, DOUBLE
-    if (out.toLowerCase.contains("even("))
-      out = fix(out, "even", 1, a => Some(
-        s"CAST((CASE WHEN ${a.head} < 0 THEN -1 ELSE 1 END) * " +
-          s"ceil(abs(${a.head}) / 2) * 2 AS DOUBLE)"))
+    // (probed: even(0.1)=2, even(-0.1)=-2, even(2.0)=2, even(3)=4, even(0)=0)
+    call("even", 1, a => Some(
+      s"CAST((CASE WHEN ${a.head} < 0 THEN -1 ELSE 1 END) * " +
+        s"ceil(abs(${a.head}) / 2) * 2 AS DOUBLE)"))
     // regexp_full_match = anchored regexp_like; the pattern is wrapped in
     // a non-capturing group so alternation anchors correctly
-    if (out.toLowerCase.contains("regexp_full_match"))
-      out = fix(out, "regexp_full_match", 2, a => Some(
-        s"regexp_like(${a(0)}, concat('^(?:', ${a(1)}, ')$$'))"))
+    call("regexp_full_match", 2, a => Some(
+      s"regexp_like(${a(0)}, concat('^(?:', ${a(1)}, ')$$'))"))
     // regexp_escape on a literal: escape RE2's metacharacters here
-    if (out.toLowerCase.contains("regexp_escape"))
-      out = fix(out, "regexp_escape", 1, a =>
-        // double the backslash: this emission is parsed by SPARK's
-        // string literal rules (SqlLex.escapeBackslashes already ran)
-        SqlLex.plainLiteral(a.head).map(lit => "'" + lit.flatMap {
-          case c if "\\^$.|?*+()[]{}".contains(c) => s"\\\\$c"
-          case c => c.toString
-        } + "'"))
+    call("regexp_escape", 1, a =>
+      // double the backslash: this emission is parsed by SPARK's
+      // string literal rules (SqlLex.escapeBackslashes already ran)
+      SqlLex.plainLiteral(a.head).map(lit => "'" + lit.flatMap {
+        case c if "\\^$.|?*+()[]{}".contains(c) => s"\\\\$c"
+        case c => c.toString
+      } + "'"))
     // weekday is DuckDB's dayofweek twin (0 = Sunday — probed; Spark's
     // same-named builtin is 0 = Monday, a silent off-by-one): emitted as
     // dayofweek text so the fix below lands the shared -1 shift. Runs
     // BEFORE isodow, whose emitted Spark weekday must stay untouched.
-    if (out.toLowerCase.contains("weekday"))
-      out = fix(out, "weekday", 1, a => Some(s"dayofweek(${a.head})"))
+    call("weekday", 1, a => Some(s"dayofweek(${a.head})"))
     // DuckDB dayofweek: 0 = Sunday .. 6 = Saturday; Spark's same-named
     // function is 1 = Sunday — same name, off-by-one (probed)
-    if (out.toLowerCase.contains("dayofweek"))
-      out = fix(out, "dayofweek", 1, a => Some(s"(dayofweek(${a.head}) - 1)"))
+    call("dayofweek", 1, a => Some(s"(dayofweek(${a.head}) - 1)"))
     // era: 1 = AD, 0 = BC (probed)
-    if (out.toLowerCase.contains("era"))
-      out = fix(out, "era", 1, a => Some(
-        s"(CASE WHEN year(${a.head}) > 0 THEN 1 ELSE 0 END)"))
+    call("era", 1, a => Some(
+      s"(CASE WHEN year(${a.head}) > 0 THEN 1 ELSE 0 END)"))
     // make_date's struct form takes {'year':…,'month':…,'day':…} (probed)
-    if (out.toLowerCase.contains("make_date"))
-      out = fix(out, "make_date", 1, a => Some(
-        s"make_date((${a.head}).year, (${a.head}).month, (${a.head}).day)"))
+    call("make_date", 1, a => Some(
+      s"make_date((${a.head}).year, (${a.head}).month, (${a.head}).day)"))
     // timezone(ts): the session offset — pinned UTC, 0 for every input
     // (probed); timezone('UTC', ts) is the identity in a UTC session for
     // BOTH the naive and the tz-carrying argument (probed both) — other
     // zones cannot be told apart textually (naive args convert one way,
     // TIMESTAMPTZ the other) and refuse rather than guess
-    if (out.toLowerCase.contains("timezone"))
-      out = fix(out, "timezone", -1, a => a.length match {
-        case 1 => Some(s"(CASE WHEN CAST(${a(0)} AS TIMESTAMP) IS NULL " +
-          s"THEN CAST(NULL AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)")
-        case 2 if a(0).trim.equalsIgnoreCase("'UTC'") ||
-            a(0).trim.equalsIgnoreCase("'Etc/UTC'") =>
-          Some(s"CAST(${a(1)} AS TIMESTAMP)")
-        case _ => None
-      })
+    call("timezone", -1, a => a.length match {
+      case 1 => Some(s"(CASE WHEN CAST(${a(0)} AS TIMESTAMP) IS NULL " +
+        s"THEN CAST(NULL AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)")
+      case 2 if a(0).trim.equalsIgnoreCase("'UTC'") ||
+          a(0).trim.equalsIgnoreCase("'Etc/UTC'") =>
+        Some(s"CAST(${a(1)} AS TIMESTAMP)")
+      case _ => None
+    })
     // isodow: 1 = Monday .. 7 = Sunday; Spark weekday is 0 = Monday
-    if (out.toLowerCase.contains("isodow"))
-      out = fix(out, "isodow", 1, a => Some(s"(weekday(${a.head}) + 1)"))
+    call("isodow", 1, a => Some(s"(weekday(${a.head}) + 1)"))
     // format('…{spec}…', args...) — fmt-style template → format_string
     // with printf specs, for the spec subset whose Java rendering is
     // verified identical to DuckDB's fmt (see fmtTemplateToJava). Anything
     // outside the subset refuses rather than guessing.
-    if (out.toLowerCase.contains("format("))
-      out = fix(out, "format", -1, args =>
-        if (args.length < 2) None
-        else SqlLex.plainLiteral(args.head).flatMap(fmtTemplateToJava(_, args.tail)))
+    call("format", -1, args =>
+      if (args.length < 2) None
+      else SqlLex.plainLiteral(args.head).flatMap(fmtTemplateToJava(_, args.tail)))
     // printf: Spark's formatter rejects DECIMAL arguments for %f — a
     // fractional numeric LITERAL argument goes through DOUBLE, which is
     // how DuckDB's printf renders it anyway (probed: %5.2f of 3.14159)
-    if (out.toLowerCase.contains("printf"))
-      out = fix(out, "printf", -1, a =>
-        if (a.length < 2) None
-        else {
-          val DecLit = """^-?\d+\.\d+$""".r
-          val mapped = a.head +: a.tail.map(x =>
-            if (DecLit.findFirstIn(x.trim).isDefined)
-              s"CAST($x AS DOUBLE)" else x)
-          if (mapped == a) None
-          else Some(s"printf(${mapped.mkString(", ")})")
-        })
+    call("printf", -1, a =>
+      if (a.length < 2) None
+      else {
+        val DecLit = """^-?\d+\.\d+$""".r
+        val mapped = a.head +: a.tail.map(x =>
+          if (DecLit.findFirstIn(x.trim).isDefined)
+            s"CAST($x AS DOUBLE)" else x)
+        if (mapped == a) None
+        else Some(s"printf(${mapped.mkString(", ")})")
+      })
     // ---- list-function spellings whose exact twin needs an argument
     //      reshape (all corner semantics verified against DuckDB 1.0) ----
     val IntLit = """^-?\d+$""".r
     // string_split family: DuckDB's separator is PLAIN TEXT, Spark's is a
     // regex — a literal separator is regex-escaped char by char; a
     // non-literal separator has no safe spelling and refuses
-    for (fn <- Seq("string_split", "str_split", "string_to_array")
-         if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 2, a =>
+    for (fn <- Seq("string_split", "str_split", "string_to_array"))
+      call(fn, 2, a =>
         SqlLex.plainLiteral(a(1)).map { sep =>
           val esc = sep.flatMap {
             case c if "\\^$.|?*+()[]{}".contains(c) => s"\\\\$c"
@@ -3598,140 +3514,139 @@ class SqlGateway(val spark: SparkSession) {
         "list_skewness" -> "skewness", "list_kurtosis_pop" -> "kurtosis_pop",
         "list_kurtosis" -> "kurtosis", "list_entropy" -> "entropy",
         "list_approx_count_distinct" -> "approx_count_distinct")
-      for ((fn, agg) <- shorthands if out.toLowerCase.contains(fn))
-        out = fix(out, fn, 1, a =>
+      for ((fn, agg) <- shorthands)
+        call(fn, 1, a =>
           Some(s"list_aggregate(${a(0)}, '$agg')"))
     }
     // list_aggregate(l, 'name') — the common aggregate names with exact
     // spellings (sum over a BIGINT accumulator: integer lists are exact,
     // a non-integer list fails lambda type-check loudly); unknown names
     // refuse
-    if (out.toLowerCase.contains("list_aggr"))
-      for (fn <- Seq("list_aggregate", "list_aggr"))
-        out = fix(out, fn, 2, a => {
-          // DuckDB ignores NULL elements in sum/avg/product/median and
-          // returns NULL for an empty/all-NULL list (probed, v1.0) —
-          // fold over the non-null sublist, guarded by its emptiness
-          def nn = s"filter(${a(0)}, x -> x IS NOT NULL)"
-          def guarded(body: String) =
-            Some(s"(CASE WHEN size($nn) = 0 THEN NULL ELSE $body END)")
+    for (fn <- Seq("list_aggregate", "list_aggr"))
+      call(fn, 2, a => {
+        // DuckDB ignores NULL elements in sum/avg/product/median and
+        // returns NULL for an empty/all-NULL list (probed, v1.0) —
+        // fold over the non-null sublist, guarded by its emptiness
+        def nn = s"filter(${a(0)}, x -> x IS NOT NULL)"
+        def guarded(body: String) =
+          Some(s"(CASE WHEN size($nn) = 0 THEN NULL ELSE $body END)")
+        a(1).trim.toLowerCase match {
+        case "'sum'" =>
+          guarded(s"aggregate($nn, CAST(0 AS BIGINT), (acc, x) -> acc + x)")
+        case "'min'" => Some(s"array_min(${a(0)})")
+        case "'max'" => Some(s"array_max(${a(0)})")
+        case "'avg'" | "'mean'" => guarded(
+          s"(aggregate($nn, CAST(0 AS BIGINT), (acc, x) -> acc + x)" +
+            s" / size($nn))")
+        case "'count'" => Some(s"size(filter(${a(0)}, x -> x IS NOT NULL))")
+        case "'first'" => Some(s"try_element_at(${a(0)}, 1)")
+        case "'last'" => Some(s"try_element_at(${a(0)}, -1)")
+        case "'product'" => guarded( // duckdb: DOUBLE product
+          s"aggregate($nn, CAST(1 AS DOUBLE), (acc, x) -> acc * x)")
+        case "'mode'" => Some( // max count, ties broken by FIRST occurrence
+          s"try_element_at(array_sort(transform(array_distinct(" +
+            s"filter(${a(0)}, x -> x IS NOT NULL)), " +
+            s"v -> struct(-size(filter(${a(0)}, x -> x = v)) AS c, " +
+            s"array_position(${a(0)}, v) AS p, v AS v))), 1).v")
+        case "'histogram'" => Some( // sorted-key value→count map, nulls dropped
+          s"map_from_entries(transform(array_distinct(sort_array(" +
+            s"filter(${a(0)}, x -> x IS NOT NULL))), " +
+            s"v -> struct(v, size(filter(${a(0)}, x -> x = v)))))")
+        case "'median'" => guarded( // sorted middle pair of the non-null
+          // sublist, interpolated (duckdb: DOUBLE; NULLs ignored — probed)
+          s"((try_element_at(sort_array($nn), CAST((size($nn) + 1) div 2 AS INT)) + " +
+            s"try_element_at(sort_array($nn), CAST((size($nn) + 2) div 2 AS INT))) / 2)")
+        // list twins of the aggregate surface (every value probed):
+        // folds run over the non-null sublist, empty/all-NULL → NULL
+        case "'bool_and'" => guarded(
+          s"aggregate($nn, true, (acc, x) -> acc AND x)")
+        case "'bool_or'" => guarded(
+          s"aggregate($nn, false, (acc, x) -> acc OR x)")
+        case "'bit_and'" => guarded(
+          s"aggregate($nn, CAST(-1 AS BIGINT), (acc, x) -> acc & x)")
+        case "'bit_or'" => guarded(
+          s"aggregate($nn, CAST(0 AS BIGINT), (acc, x) -> acc | x)")
+        case "'bit_xor'" => guarded(
+          s"aggregate($nn, CAST(0 AS BIGINT), (acc, x) -> acc ^ x)")
+        case "'string_agg'" => guarded( // ',' separator, NULLs skipped
+          s"array_join(transform($nn, x -> CAST(x AS STRING)), ',')")
+        case "'approx_count_distinct'" => // exact count stands in for
+          // the HLL estimate (identical on the probed small lists)
+          Some(s"size(array_distinct($nn))")
+        case "'var_samp'" | "'var_pop'" | "'stddev_samp'" |
+             "'stddev_pop'" | "'sem'" => {
+          // raw-sum spellings over DOUBLE (exact on the probed inputs)
+          def nF = s"CAST(size($nn) AS DOUBLE)"
+          def s1 = s"aggregate($nn, CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
+          def s2 = s"aggregate($nn, CAST(0 AS DOUBLE), " +
+            s"(acc, x) -> acc + CAST(x AS DOUBLE) * x)"
+          def ss = s"($s2 - $s1 * $s1 / $nF)"
+          val e = a(1).trim.toLowerCase match {
+            case "'var_samp'" => s"($ss / ($nF - 1))"
+            case "'var_pop'" => s"($ss / $nF)"
+            case "'stddev_samp'" => s"sqrt($ss / ($nF - 1))"
+            case "'stddev_pop'" => s"sqrt($ss / $nF)"
+            case _ => // sem = stddev_POP / sqrt(n) in DuckDB (probed)
+              s"(sqrt($ss / $nF) / sqrt($nF))"
+          }
+          guarded(e)
+        }
+        case "'skewness'" | "'kurtosis'" | "'kurtosis_pop'" => {
+          // DuckDB's raw-power-sum formulas, the same shapes the
+          // aggregate fixes spell (bit-exact on the probed lists)
+          def nF = s"CAST(size($nn) AS DOUBLE)"
+          def t = s"(1.0 / $nF)"
+          def s1 = s"aggregate($nn, CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
+          def s2 = s"aggregate($nn, CAST(0 AS DOUBLE), " +
+            s"(acc, x) -> acc + CAST(x AS DOUBLE) * x)"
+          def s3 = s"aggregate($nn, CAST(0 AS DOUBLE), " +
+            s"(acc, x) -> acc + CAST(x AS DOUBLE) * x * x)"
+          def s4 = s"aggregate($nn, CAST(0 AS DOUBLE), " +
+            s"(acc, x) -> acc + CAST(x AS DOUBLE) * x * x * x)"
+          def m2 = s"($t * ($s2 - $s1 * $s1 * $t))"
           a(1).trim.toLowerCase match {
-          case "'sum'" =>
-            guarded(s"aggregate($nn, CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-          case "'min'" => Some(s"array_min(${a(0)})")
-          case "'max'" => Some(s"array_max(${a(0)})")
-          case "'avg'" | "'mean'" => guarded(
-            s"(aggregate($nn, CAST(0 AS BIGINT), (acc, x) -> acc + x)" +
-              s" / size($nn))")
-          case "'count'" => Some(s"size(filter(${a(0)}, x -> x IS NOT NULL))")
-          case "'first'" => Some(s"try_element_at(${a(0)}, 1)")
-          case "'last'" => Some(s"try_element_at(${a(0)}, -1)")
-          case "'product'" => guarded( // duckdb: DOUBLE product
-            s"aggregate($nn, CAST(1 AS DOUBLE), (acc, x) -> acc * x)")
-          case "'mode'" => Some( // max count, ties broken by FIRST occurrence
-            s"try_element_at(array_sort(transform(array_distinct(" +
-              s"filter(${a(0)}, x -> x IS NOT NULL)), " +
-              s"v -> struct(-size(filter(${a(0)}, x -> x = v)) AS c, " +
-              s"array_position(${a(0)}, v) AS p, v AS v))), 1).v")
-          case "'histogram'" => Some( // sorted-key value→count map, nulls dropped
-            s"map_from_entries(transform(array_distinct(sort_array(" +
-              s"filter(${a(0)}, x -> x IS NOT NULL))), " +
-              s"v -> struct(v, size(filter(${a(0)}, x -> x = v)))))")
-          case "'median'" => guarded( // sorted middle pair of the non-null
-            // sublist, interpolated (duckdb: DOUBLE; NULLs ignored — probed)
-            s"((try_element_at(sort_array($nn), CAST((size($nn) + 1) div 2 AS INT)) + " +
-              s"try_element_at(sort_array($nn), CAST((size($nn) + 2) div 2 AS INT))) / 2)")
-          // list twins of the aggregate surface (every value probed):
-          // folds run over the non-null sublist, empty/all-NULL → NULL
-          case "'bool_and'" => guarded(
-            s"aggregate($nn, true, (acc, x) -> acc AND x)")
-          case "'bool_or'" => guarded(
-            s"aggregate($nn, false, (acc, x) -> acc OR x)")
-          case "'bit_and'" => guarded(
-            s"aggregate($nn, CAST(-1 AS BIGINT), (acc, x) -> acc & x)")
-          case "'bit_or'" => guarded(
-            s"aggregate($nn, CAST(0 AS BIGINT), (acc, x) -> acc | x)")
-          case "'bit_xor'" => guarded(
-            s"aggregate($nn, CAST(0 AS BIGINT), (acc, x) -> acc ^ x)")
-          case "'string_agg'" => guarded( // ',' separator, NULLs skipped
-            s"array_join(transform($nn, x -> CAST(x AS STRING)), ',')")
-          case "'approx_count_distinct'" => // exact count stands in for
-            // the HLL estimate (identical on the probed small lists)
-            Some(s"size(array_distinct($nn))")
-          case "'var_samp'" | "'var_pop'" | "'stddev_samp'" |
-               "'stddev_pop'" | "'sem'" => {
-            // raw-sum spellings over DOUBLE (exact on the probed inputs)
-            def nF = s"CAST(size($nn) AS DOUBLE)"
-            def s1 = s"aggregate($nn, CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-            def s2 = s"aggregate($nn, CAST(0 AS DOUBLE), " +
-              s"(acc, x) -> acc + CAST(x AS DOUBLE) * x)"
-            def ss = s"($s2 - $s1 * $s1 / $nF)"
-            val e = a(1).trim.toLowerCase match {
-              case "'var_samp'" => s"($ss / ($nF - 1))"
-              case "'var_pop'" => s"($ss / $nF)"
-              case "'stddev_samp'" => s"sqrt($ss / ($nF - 1))"
-              case "'stddev_pop'" => s"sqrt($ss / $nF)"
-              case _ => // sem = stddev_POP / sqrt(n) in DuckDB (probed)
-                s"(sqrt($ss / $nF) / sqrt($nF))"
-            }
-            guarded(e)
-          }
-          case "'skewness'" | "'kurtosis'" | "'kurtosis_pop'" => {
-            // DuckDB's raw-power-sum formulas, the same shapes the
-            // aggregate fixes spell (bit-exact on the probed lists)
-            def nF = s"CAST(size($nn) AS DOUBLE)"
-            def t = s"(1.0 / $nF)"
-            def s1 = s"aggregate($nn, CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-            def s2 = s"aggregate($nn, CAST(0 AS DOUBLE), " +
-              s"(acc, x) -> acc + CAST(x AS DOUBLE) * x)"
-            def s3 = s"aggregate($nn, CAST(0 AS DOUBLE), " +
-              s"(acc, x) -> acc + CAST(x AS DOUBLE) * x * x)"
-            def s4 = s"aggregate($nn, CAST(0 AS DOUBLE), " +
-              s"(acc, x) -> acc + CAST(x AS DOUBLE) * x * x * x)"
-            def m2 = s"($t * ($s2 - $s1 * $s1 * $t))"
-            a(1).trim.toLowerCase match {
-              case "'skewness'" => Some(
-                s"(CASE WHEN size($nn) > 2 AND ($s2 - $s1 * $s1 * $t) <> 0 " +
-                  s"THEN sqrt($nF * ($nF - 1.0)) / ($nF - 2.0) * " +
-                  s"($t * ($s3 - 3 * $s2 * $s1 * $t + " +
-                  s"2 * power($s1, 3) * power($t, 2))) / power($m2, 1.5) " +
+            case "'skewness'" => Some(
+              s"(CASE WHEN size($nn) > 2 AND ($s2 - $s1 * $s1 * $t) <> 0 " +
+                s"THEN sqrt($nF * ($nF - 1.0)) / ($nF - 2.0) * " +
+                s"($t * ($s3 - 3 * $s2 * $s1 * $t + " +
+                s"2 * power($s1, 3) * power($t, 2))) / power($m2, 1.5) " +
+                s"ELSE NULL END)")
+            case kk =>
+              def m4 = s"($t * ($s4 - 4 * $s3 * $s1 * $t + " +
+                s"6 * $s2 * $s1 * $s1 * $t * $t - 3 * power($s1, 4) * " +
+                s"power($t, 3)))"
+              if (kk == "'kurtosis'") Some(
+                s"(CASE WHEN size($nn) > 3 AND ($s2 - $s1 * $s1 * $t) <> 0 " +
+                  s"THEN ($nF - 1.0) * (($nF + 1.0) * $m4 / ($m2 * $m2) - " +
+                  s"3 * ($nF - 1.0)) / (($nF - 2.0) * ($nF - 3.0)) " +
                   s"ELSE NULL END)")
-              case kk =>
-                def m4 = s"($t * ($s4 - 4 * $s3 * $s1 * $t + " +
-                  s"6 * $s2 * $s1 * $s1 * $t * $t - 3 * power($s1, 4) * " +
-                  s"power($t, 3)))"
-                if (kk == "'kurtosis'") Some(
-                  s"(CASE WHEN size($nn) > 3 AND ($s2 - $s1 * $s1 * $t) <> 0 " +
-                    s"THEN ($nF - 1.0) * (($nF + 1.0) * $m4 / ($m2 * $m2) - " +
-                    s"3 * ($nF - 1.0)) / (($nF - 2.0) * ($nF - 3.0)) " +
-                    s"ELSE NULL END)")
-                else Some(
-                  s"(CASE WHEN size($nn) > 1 AND ($s2 - $s1 * $s1 * $t) <> 0 " +
-                    s"THEN $m4 / ($m2 * $m2) - 3 ELSE NULL END)")
-            }
+              else Some(
+                s"(CASE WHEN size($nn) > 1 AND ($s2 - $s1 * $s1 * $t) <> 0 " +
+                  s"THEN $m4 / ($m2 * $m2) - 3 ELSE NULL END)")
           }
-          case "'mad'" => { // median absolute deviation from the median
-            def med(l: String) =
-              s"((try_element_at(sort_array($l), CAST((size($l) + 1) div 2 AS INT)) + " +
-                s"try_element_at(sort_array($l), CAST((size($l) + 2) div 2 AS INT))) / 2)"
-            guarded(med(s"transform($nn, x -> abs(CAST(x AS DOUBLE) - ${med(nn)}))"))
-          }
-          case "'entropy'" => guarded( // Shannon log2 over the value
-            // distribution (ln-ratio, the EntropyAggregator caveat)
-            s"aggregate(transform(array_distinct($nn), v -> " +
-              s"CAST(size(filter($nn, x -> x = v)) AS DOUBLE) / size($nn) * " +
-              s"(ln(CAST(size($nn) AS DOUBLE) / " +
-              s"size(filter($nn, x -> x = v))) / ln(2.0))), " +
-              s"CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-          case _ => None
-        }})
+        }
+        case "'mad'" => { // median absolute deviation from the median
+          def med(l: String) =
+            s"((try_element_at(sort_array($l), CAST((size($l) + 1) div 2 AS INT)) + " +
+              s"try_element_at(sort_array($l), CAST((size($l) + 2) div 2 AS INT))) / 2)"
+          guarded(med(s"transform($nn, x -> abs(CAST(x AS DOUBLE) - ${med(nn)}))"))
+        }
+        case "'entropy'" => guarded( // Shannon log2 over the value
+          // distribution (ln-ratio, the EntropyAggregator caveat)
+          s"aggregate(transform(array_distinct($nn), v -> " +
+            s"CAST(size(filter($nn, x -> x = v)) AS DOUBLE) / size($nn) * " +
+            s"(ln(CAST(size($nn) AS DOUBLE) / " +
+            s"size(filter($nn, x -> x = v))) / ln(2.0))), " +
+            s"CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
+        case _ => None
+      }})
     // list_reduce(l, (a,b) -> …): first element is the seed, the lambda
     // folds left over the rest — exactly Spark's aggregate over slice(2…)
     // bare `reduce(l, lambda)` is DuckDB's 2-arg list_reduce alias —
     // Spark's own reduce() is the 3/4-arg aggregate form and keeps those
     // arities (fix only matches arity 2)
-    for (fn <- Seq("list_reduce", "reduce") if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 2, a => {
+    for (fn <- Seq("list_reduce", "reduce"))
+      call(fn, 2, a => {
         val Lam = """(?is)^\(\s*([A-Za-z_]\w*)\s*,\s*([A-Za-z_]\w*)\s*\)\s*->\s*(.+)$""".r
         a(1).trim match {
           case Lam(x, y, body) => Some(
@@ -3740,17 +3655,14 @@ class SqlGateway(val spark: SparkSession) {
           case _ => None
         }
       })
-    if (out.toLowerCase.contains("to_base"))
-      out = fix(out, "to_base", 2, a => Some(s"conv(${a(0)}, 10, ${a(1)})"))
+    call("to_base", 2, a => Some(s"conv(${a(0)}, 10, ${a(1)})"))
     // date_add(d, INTERVAL ...) — DuckDB's interval overload; Spark's own
     // date_add(d, int-days) keeps non-INTERVAL second args
-    if (out.toLowerCase.contains("date_add"))
-      out = fix(out, "date_add", 2, a =>
-        if ("""(?i)^\s*INTERVAL\b""".r.findFirstIn(a(1).trim).isDefined)
-          Some(s"((${a(0)}) + (${a(1)}))")
-        else None)
-    if (out.toLowerCase.contains("unicode"))
-      out = fix(out, "unicode", 1, a => Some(s"ascii(${a.head})"))
+    call("date_add", 2, a =>
+      if ("""(?i)^\s*INTERVAL\b""".r.findFirstIn(a(1).trim).isDefined)
+        Some(s"((${a(0)}) + (${a(1)}))")
+      else None)
+    call("unicode", 1, a => Some(s"ascii(${a.head})"))
     // ORDER-BY-inside-aggregate, for the self-ordered forms whose Spark
     // spelling is exact: array_agg(x ORDER BY x [DESC]) → sorted collect,
     // string_agg(x, sep ORDER BY x) → join of sorted collect, and
@@ -3758,119 +3670,110 @@ class SqlGateway(val spark: SparkSession) {
     // expression has no exact spelling and refuses.
     val AggOrd = """(?is)^(.+?)\s+ORDER\s+BY\s+(.+?)(?:\s+(ASC|DESC))?\s*$""".r
     def same(a: String, b: String) = a.trim.equalsIgnoreCase(b.trim)
-    if (out.toLowerCase.contains("array_agg"))
-      out = fix(out, "array_agg", 1, a => a.head.trim match {
-        case AggOrd(e0, o, dir) =>
-          // DISTINCT dedups before sorting (collect_set — array_agg
-          // skips NULLs in both engines, so set-collection loses nothing)
-          val Dist = """(?is)^DISTINCT\s+(.+)$""".r
-          val (e, coll) = e0.trim match {
-            case Dist(inner) => (inner, s"collect_set($inner)")
-            case plain => (plain, s"array_agg($plain)")
-          }
-          if (!same(e, o)) None
-          else {
-            val asc = dir == null || dir.equalsIgnoreCase("ASC")
-            Some(s"sort_array($coll${if (asc) "" else ", false"})")
-          }
-        case _ => None
-      })
+    call("array_agg", 1, a => a.head.trim match {
+      case AggOrd(e0, o, dir) =>
+        // DISTINCT dedups before sorting (collect_set — array_agg
+        // skips NULLs in both engines, so set-collection loses nothing)
+        val Dist = """(?is)^DISTINCT\s+(.+)$""".r
+        val (e, coll) = e0.trim match {
+          case Dist(inner) => (inner, s"collect_set($inner)")
+          case plain => (plain, s"array_agg($plain)")
+        }
+        if (!same(e, o)) None
+        else {
+          val asc = dir == null || dir.equalsIgnoreCase("ASC")
+          Some(s"sort_array($coll${if (asc) "" else ", false"})")
+        }
+      case _ => None
+    })
     // ORDER BY inside an ORDER-INSENSITIVE aggregate is a no-op — strip
     // it (DuckDB accepts `sum(x ORDER BY x)`)
     for (fn <- Seq("sum", "avg", "count", "min", "max", "bool_and",
         "bool_or", "bit_and", "bit_or", "bit_xor", "median", "mode",
-        "entropy", "product", "skewness", "kurtosis")
-         if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 1, a => a.head.trim match {
+        "entropy", "product", "skewness", "kurtosis"))
+      call(fn, 1, a => a.head.trim match {
         case AggOrd(e, _, _) => Some(s"$fn($e)")
         case _ => None
       })
     // regr_* compute over DOUBLE in DuckDB regardless of input type
     // (probed: DECIMAL inputs still yield DOUBLE averages); Spark keeps
     // DECIMAL averages — cast both operands through
-    if (out.toLowerCase.contains("regr_"))
-      for (fn <- Seq("regr_slope", "regr_intercept", "regr_r2",
-          "regr_count", "regr_avgx", "regr_avgy", "regr_sxx", "regr_syy",
-          "regr_sxy") if out.toLowerCase.contains(fn))
-        out = fix(out, fn, 2, a =>
-          if (a.forall(_.trim.toUpperCase.startsWith("CAST("))) None
-          else Some(s"$fn(CAST(${a(0)} AS DOUBLE), " +
-            s"CAST(${a(1)} AS DOUBLE))"))
+    for (fn <- Seq("regr_slope", "regr_intercept", "regr_r2",
+        "regr_count", "regr_avgx", "regr_avgy", "regr_sxx", "regr_syy",
+        "regr_sxy"))
+      call(fn, 2, a =>
+        if (a.forall(_.trim.toUpperCase.startsWith("CAST("))) None
+        else Some(s"$fn(CAST(${a(0)} AS DOUBLE), " +
+          s"CAST(${a(1)} AS DOUBLE))"))
     // enum introspection over CREATE TYPE … AS ENUM definitions: the
     // argument's ::typename resolves against the registered type table
     // (probed: range/first/last/code; code is 0-based)
-    if (out.toLowerCase.contains("enum_")) {
-      def enumValues(arg: String): Option[Seq[String]] = {
-        val T = """(?is).*::\s*(\w+)\s*$""".r
-        arg.trim match {
-          case T(name) => namedTypes.get(name.toLowerCase).flatMap { spec =>
-            val Inner = """(?is)^ENUM\s*\((.*)\)$""".r
-            spec.trim match {
-              case Inner(items) => Some(splitTopLevel(items).map(_.trim))
-              case _ => None
-            }
+    def enumValues(arg: String): Option[Seq[String]] = {
+      val T = """(?is).*::\s*(\w+)\s*$""".r
+      arg.trim match {
+        case T(name) => namedTypes.get(name.toLowerCase).flatMap { spec =>
+          val Inner = """(?is)^ENUM\s*\((.*)\)$""".r
+          spec.trim match {
+            case Inner(items) => Some(splitTopLevel(items).map(_.trim))
+            case _ => None
           }
-          case _ => None
         }
+        case _ => None
       }
-      out = fix(out, "enum_range", 1, a => enumValues(a(0)).map(vs =>
-        s"array(${vs.mkString(", ")})"))
-      out = fix(out, "enum_first", 1, a => enumValues(a(0)).map(_.head))
-      out = fix(out, "enum_last", 1, a => enumValues(a(0)).map(_.last))
-      out = fix(out, "enum_code", 1, a => enumValues(a(0)).map { vs =>
-        val v = a(0).trim.replaceAll("(?is)::\\s*\\w+\\s*$", "")
-        s"(array_position(array(${vs.mkString(", ")}), $v) - 1)"
-      })
-      // enum_range_boundary(lo, hi): the inclusive slice between the two
-      // members; a NULL bound extends to that end (probed). Both-NULL
-      // segfaults DuckDB 1.0 and needs at least one ::type to resolve.
-      out = fix(out, "enum_range_boundary", 2, a => {
-        val vs = enumValues(a(0)).orElse(enumValues(a(1)))
-        vs.map { values =>
-          def bound(arg: String, dflt: String): String = {
-            val v = arg.trim.replaceAll("(?is)::\\s*\\w+\\s*$", "")
-            if (v.equalsIgnoreCase("NULL")) dflt
-            else s"array_position(array(${values.mkString(", ")}), $v)"
-          }
-          val lo = bound(a(0), "1")
-          val hi = bound(a(1), values.length.toString)
-          s"slice(array(${values.mkString(", ")}), $lo, ($hi) - ($lo) + 1)"
-        }
-      })
     }
+    call("enum_range", 1, a => enumValues(a(0)).map(vs =>
+      s"array(${vs.mkString(", ")})"))
+    call("enum_first", 1, a => enumValues(a(0)).map(_.head))
+    call("enum_last", 1, a => enumValues(a(0)).map(_.last))
+    call("enum_code", 1, a => enumValues(a(0)).map { vs =>
+      val v = a(0).trim.replaceAll("(?is)::\\s*\\w+\\s*$", "")
+      s"(array_position(array(${vs.mkString(", ")}), $v) - 1)"
+    })
+    // enum_range_boundary(lo, hi): the inclusive slice between the two
+    // members; a NULL bound extends to that end (probed). Both-NULL
+    // segfaults DuckDB 1.0 and needs at least one ::type to resolve.
+    call("enum_range_boundary", 2, a => {
+      val vs = enumValues(a(0)).orElse(enumValues(a(1)))
+      vs.map { values =>
+        def bound(arg: String, dflt: String): String = {
+          val v = arg.trim.replaceAll("(?is)::\\s*\\w+\\s*$", "")
+          if (v.equalsIgnoreCase("NULL")) dflt
+          else s"array_position(array(${values.mkString(", ")}), $v)"
+        }
+        val lo = bound(a(0), "1")
+        val hi = bound(a(1), values.length.toString)
+        s"slice(array(${values.mkString(", ")}), $lo, ($hi) - ($lo) + 1)"
+      }
+    })
     // UNION-typed values model as a (tag, value) struct: union_value
     // constructs it, union_extract guards on the tag, union_tag reads it
     // (probed: extract of the live tag returns the value, the tag name
     // round-trips). Single-tag unions only — a column mixing tags of
     // different value types fails analysis loudly rather than guessing.
-    if (out.toLowerCase.contains("union_value"))
-      out = fix(out, "union_value", 1, a => {
-        val Named = """(?is)^([A-Za-z_]\w*)\s*:=\s*(.+)$""".r
-        a.head.trim match {
-          case Named(t, v) =>
-            Some(s"named_struct('graft_tag', '$t', 'graft_val', $v)")
-          case _ => None
-        }
-      })
-    if (out.toLowerCase.contains("union_extract"))
-      out = fix(out, "union_extract", 2, a => {
-        val f = a(1).trim
-        if (f.length >= 2 && f.startsWith("'") && f.endsWith("'"))
-          Some(s"(CASE WHEN (${a(0)}).graft_tag = $f " +
-            s"THEN (${a(0)}).graft_val END)")
-        else None
-      })
-    if (out.toLowerCase.contains("union_tag"))
-      out = fix(out, "union_tag", 1, a => Some(s"(${a(0)}).graft_tag"))
+    call("union_value", 1, a => {
+      val Named = """(?is)^([A-Za-z_]\w*)\s*:=\s*(.+)$""".r
+      a.head.trim match {
+        case Named(t, v) =>
+          Some(s"named_struct('graft_tag', '$t', 'graft_val', $v)")
+        case _ => None
+      }
+    })
+    call("union_extract", 2, a => {
+      val f = a(1).trim
+      if (f.length >= 2 && f.startsWith("'") && f.endsWith("'"))
+        Some(s"(CASE WHEN (${a(0)}).graft_tag = $f " +
+          s"THEN (${a(0)}).graft_val END)")
+      else None
+    })
+    call("union_tag", 1, a => Some(s"(${a(0)}).graft_tag"))
     // list(x ORDER BY x) arrives as collect_list via the alias — same
     // sorted-collect spelling as array_agg (r8)
-    if (out.toLowerCase.contains("collect_list"))
-      out = fix(out, "collect_list", 1, a => a.head.trim match {
-        case AggOrd(e, o, dir) if same(e, o) =>
-          val asc = dir == null || dir.equalsIgnoreCase("ASC")
-          Some(s"sort_array(collect_list($e)${if (asc) "" else ", false"})")
-        case _ => None
-      })
+    call("collect_list", 1, a => a.head.trim match {
+      case AggOrd(e, o, dir) if same(e, o) =>
+        val asc = dir == null || dir.equalsIgnoreCase("ASC")
+        Some(s"sort_array(collect_list($e)${if (asc) "" else ", false"})")
+      case _ => None
+    })
     // DuckDB's arg_max/arg_min/max_by/min_by SKIP rows whose VALUE arg is
     // NULL (probed: arg_max over (1,9),(NULL,30),(2,3) is 1); Spark's
     // same-named max_by/min_by KEEP them (returns NULL here). NULLing the
@@ -3882,28 +3785,25 @@ class SqlGateway(val spark: SparkSession) {
       val nullSkip = Seq("max_by" -> "max_by", "min_by" -> "min_by",
         "arg_max" -> "max_by", "argmax" -> "max_by",
         "arg_min" -> "min_by", "argmin" -> "min_by")
-      for ((dn, sn) <- nullSkip if out.toLowerCase.contains(dn))
-        out = fix(out, dn, 2, a => Some(s"$sn(${a(0)}, " +
+      for ((dn, sn) <- nullSkip)
+        call(dn, 2, a => Some(s"$sn(${a(0)}, " +
           s"CASE WHEN (${a(0)}) IS NULL THEN NULL ELSE (${a(1)}) END)"))
       // arg_max_null/arg_min_null keep NULL values at the extreme key —
       // exactly Spark's native behavior (probed: NULL at max y → NULL)
-      if (out.toLowerCase.contains("arg_max_null"))
-        out = fix(out, "arg_max_null", 2,
-          a => Some(s"max_by(${a(0)}, ${a(1)})"))
-      if (out.toLowerCase.contains("arg_min_null"))
-        out = fix(out, "arg_min_null", 2,
-          a => Some(s"min_by(${a(0)}, ${a(1)})"))
+      call("arg_max_null", 2,
+        a => Some(s"max_by(${a(0)}, ${a(1)})"))
+      call("arg_min_null", 2,
+        a => Some(s"min_by(${a(0)}, ${a(1)})"))
     }
     // count_star() is COUNT(*) (probed, incl. under FILTER)
-    if (out.toLowerCase.contains("count_star"))
-      out = fix(out, "count_star", -1,
-        a => if (a.isEmpty || a == Seq("")) Some("count(*)") else None)
+    call("count_star", -1,
+      a => if (a.isEmpty || a == Seq("")) Some("count(*)") else None)
     // group_concat / listagg → string_agg with DuckDB's ',' default
     // separator (probed; Spark's native listagg default is '' — a blind
     // passthrough would be silently wrong). Funnels through the proven
     // string_agg path below, which handles DISTINCT and ORDER BY.
-    for (fn <- Seq("group_concat", "listagg") if out.toLowerCase.contains(fn))
-      out = fix(out, fn, -1, a => a.length match {
+    for (fn <- Seq("group_concat", "listagg"))
+      call(fn, -1, a => a.length match {
         case 1 | 2 =>
           val sep = if (a.length == 2) a(1) else "','"
           // DuckDB renders non-string inputs as VARCHAR ('1,2'); keep the
@@ -3916,81 +3816,74 @@ class SqlGateway(val spark: SparkSession) {
     // kahan/fsum compensated sums and favg: DOUBLE-accumulator aggregates;
     // Spark's sum/avg over DOUBLE match on every probed input (compensation
     // changes rounding only in pathological cancellation cases)
-    for (fn <- Seq("kahan_sum", "sumkahan", "fsum")
-         if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 1, a => Some(s"sum(CAST(${a(0)} AS DOUBLE))"))
-    if (out.toLowerCase.contains("favg"))
-      out = fix(out, "favg", 1, a => Some(s"avg(CAST(${a(0)} AS DOUBLE))"))
+    for (fn <- Seq("kahan_sum", "sumkahan", "fsum"))
+      call(fn, 1, a => Some(s"sum(CAST(${a(0)} AS DOUBLE))"))
+    call("favg", 1, a => Some(s"avg(CAST(${a(0)} AS DOUBLE))"))
     // bitstring_agg(x, lo, hi) → BIT string with a '1' at each distinct x
     // (positions count from lo at the LEFT; NULL x ignored — probed).
     // Exact via a 64-bit mask: literal bounds only, width <= 63; an x
     // outside [lo, hi] errors like DuckDB (out-of-range shift → guard).
-    if (out.toLowerCase.contains("bitstring_agg"))
-      out = fix(out, "bitstring_agg", 3, a => intArgs(a.tail) match {
-        case Some(Seq(lo, hi)) if hi >= lo && hi - lo < 63 =>
-          val w = hi - lo + 1
-          Some(s"lpad(bin(sum(DISTINCT CASE WHEN (${a(0)}) < $lo OR " +
-            s"(${a(0)}) > $hi THEN CAST(raise_error('bitstring_agg: value " +
-            s"outside [$lo, $hi]') AS BIGINT) ELSE " +
-            s"shiftleft(CAST(1 AS BIGINT), CAST($hi - (${a(0)}) AS INT)) " +
-            s"END)), $w, '0')")
-        case _ => None
-      })
+    call("bitstring_agg", 3, a => intArgs(a.tail) match {
+      case Some(Seq(lo, hi)) if hi >= lo && hi - lo < 63 =>
+        val w = hi - lo + 1
+        Some(s"lpad(bin(sum(DISTINCT CASE WHEN (${a(0)}) < $lo OR " +
+          s"(${a(0)}) > $hi THEN CAST(raise_error('bitstring_agg: value " +
+          s"outside [$lo, $hi]') AS BIGINT) ELSE " +
+          s"shiftleft(CAST(1 AS BIGINT), CAST($hi - (${a(0)}) AS INT)) " +
+          s"END)), $w, '0')")
+      case _ => None
+    })
     // string_agg(e, sep ORDER BY o) FILTER (WHERE c): the ORDER BY form
     // rewrites to array_join(sort_array(collect...)) below, where a
     // trailing FILTER can no longer attach — push it into the collected
     // expression as a CASE first (string_agg skips NULLs in both engines,
     // probed, so NULL-ing filtered rows is exact)
-    if (out.toLowerCase.contains("string_agg")) {
-      val SaFilter = ("""(?is)\bstring_agg\s*\(([^()]*\bORDER\s+BY\b[^()]*)\)""" +
-        """\s*FILTER\s*\(\s*WHERE\s+([^()]+?)\s*\)""").r
-      out = SqlLex.replace(out, SaFilter) { m =>
-        val parts = splitTopLevel(m.group(1))
-        if (parts.isEmpty) m.matched
-        else s"string_agg(CASE WHEN ${m.group(2)} THEN ${parts.head.trim} END" +
-          s"${parts.tail.map(p => s", ${p.trim}").mkString})"
-      }
-    }
+    val SaFilter = ("""(?is)\bstring_agg\s*\(([^()]*\bORDER\s+BY\b[^()]*)\)""" +
+      """\s*FILTER\s*\(\s*WHERE\s+([^()]+?)\s*\)""").r
+    raw("string_agg")(_.replace(SaFilter) { m =>
+      val parts = splitTopLevel(m.group(1))
+      if (parts.isEmpty) m.matched
+      else s"string_agg(CASE WHEN ${m.group(2)} THEN ${parts.head.trim} END" +
+        s"${parts.tail.map(p => s", ${p.trim}").mkString})"
+    })
     // 1-arg string_agg: DuckDB's default separator is ',' (probed:
     // 'foo,bar'); Spark's native default is the empty string
-    if (out.toLowerCase.contains("string_agg"))
-      out = fix(out, "string_agg", 1, a =>
-        Some(s"string_agg(${a.head}, ',')"))
-    if (out.toLowerCase.contains("string_agg"))
-      out = fix(out, "string_agg", 2, a => {
-        // DISTINCT dedups before joining (collect_set; string_agg skips
-        // NULLs in both engines, so set-collection loses nothing)
-        val Dist = """(?is)^DISTINCT\s+(.+)$""".r
-        val (arg0, coll) = a(0).trim match {
-          case Dist(e) => (e, s"collect_set($e)")
-          case e => (e, s"collect_list($e)")
-        }
-        a(1).trim match {
-          case AggOrd(sep, o, dir) if same(o, arg0) =>
-            val asc = dir == null || dir.equalsIgnoreCase("ASC")
-            Some(s"array_join(sort_array($coll" +
-              s"${if (asc) "" else ", false"}), $sep)")
-          case AggOrd(sep, o, dir) if !a(0).trim.toUpperCase.startsWith("DISTINCT") =>
-            // ORDER BY a key OTHER than the aggregated expression: collect
-            // (key, value) structs, sort by key, project values. NULL
-            // values are dropped before collection (string_agg skips
-            // NULLs — probed); key ties follow value order, which DuckDB
-            // leaves scan-order-undefined anyway
-            val asc = dir == null || dir.equalsIgnoreCase("ASC")
-            val base = s"array_sort(collect_list(CASE WHEN ($arg0) IS NOT " +
-              s"NULL THEN named_struct('gk', $o, 'gv', $arg0) END))"
-            Some(s"array_join(transform(" +
-              s"${if (asc) base else s"reverse($base)"}, " +
-              s"graft_s -> graft_s.gv), $sep)")
-          case _ => None
-        }
-      })
+    call("string_agg", 1, a =>
+      Some(s"string_agg(${a.head}, ',')"))
+    call("string_agg", 2, a => {
+      // DISTINCT dedups before joining (collect_set; string_agg skips
+      // NULLs in both engines, so set-collection loses nothing)
+      val Dist = """(?is)^DISTINCT\s+(.+)$""".r
+      val (arg0, coll) = a(0).trim match {
+        case Dist(e) => (e, s"collect_set($e)")
+        case e => (e, s"collect_list($e)")
+      }
+      a(1).trim match {
+        case AggOrd(sep, o, dir) if same(o, arg0) =>
+          val asc = dir == null || dir.equalsIgnoreCase("ASC")
+          Some(s"array_join(sort_array($coll" +
+            s"${if (asc) "" else ", false"}), $sep)")
+        case AggOrd(sep, o, dir) if !a(0).trim.toUpperCase.startsWith("DISTINCT") =>
+          // ORDER BY a key OTHER than the aggregated expression: collect
+          // (key, value) structs, sort by key, project values. NULL
+          // values are dropped before collection (string_agg skips
+          // NULLs — probed); key ties follow value order, which DuckDB
+          // leaves scan-order-undefined anyway
+          val asc = dir == null || dir.equalsIgnoreCase("ASC")
+          val base = s"array_sort(collect_list(CASE WHEN ($arg0) IS NOT " +
+            s"NULL THEN named_struct('gk', $o, 'gv', $arg0) END))"
+          Some(s"array_join(transform(" +
+            s"${if (asc) base else s"reverse($base)"}, " +
+            s"graft_s -> graft_s.gv), $sep)")
+        case _ => None
+      }
+    })
     // DuckDB default null order is NULLS LAST both directions (probed):
     // first ASC / first DESC never see the trailing NULLs → min/max are
     // exact; last ASC / last DESC land ON a NULL whenever one exists →
     // NULL if any element is NULL, else max/min
-    for (fn <- Seq("first", "last") if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 1, a => a.head.trim match {
+    for (fn <- Seq("first", "last"))
+      call(fn, 1, a => a.head.trim match {
         case AggOrd(e, o, dir) if same(e, o) =>
           val asc = dir == null || dir.equalsIgnoreCase("ASC")
           if (fn == "first")
@@ -4002,59 +3895,53 @@ class SqlGateway(val spark: SparkSession) {
       })
     // list_sort/list_reverse_sort: DuckDB default is NULLS LAST both ways;
     // array_sort is asc-nulls-last, sort_array(_, false) desc-nulls-last
-    if (out.toLowerCase.contains("list_sort"))
-      out = fix(out, "list_sort", -1, a => a.length match {
-        case 1 => Some(s"array_sort(${a.head})")
-        case 2 if a(1).equalsIgnoreCase("'ASC'") => Some(s"array_sort(${a.head})")
-        case 2 if a(1).equalsIgnoreCase("'DESC'") => Some(s"sort_array(${a.head}, false)")
-        // 3-arg spells the null placement too (probed): sort_array asc
-        // is nulls-first, array_sort asc is nulls-last, desc-nulls-first
-        // is the reverse of asc-nulls-last
-        case 3 =>
-          (a(1).toUpperCase.replaceAll("'", ""),
-            a(2).toUpperCase.replaceAll("'", "").replaceAll("\\s+", " ")) match {
-            case ("ASC", "NULLS FIRST") => Some(s"sort_array(${a.head}, true)")
-            case ("ASC", "NULLS LAST") => Some(s"array_sort(${a.head})")
-            case ("DESC", "NULLS LAST") => Some(s"sort_array(${a.head}, false)")
-            case ("DESC", "NULLS FIRST") =>
-              Some(s"reverse(array_sort(${a.head}))")
-            case _ => None
-          }
-        case _ => None
-      })
-    if (out.toLowerCase.contains("list_reverse_sort"))
-      out = fix(out, "list_reverse_sort", 1,
-        a => Some(s"sort_array(${a.head}, false)"))
+    call("list_sort", -1, a => a.length match {
+      case 1 => Some(s"array_sort(${a.head})")
+      case 2 if a(1).equalsIgnoreCase("'ASC'") => Some(s"array_sort(${a.head})")
+      case 2 if a(1).equalsIgnoreCase("'DESC'") => Some(s"sort_array(${a.head}, false)")
+      // 3-arg spells the null placement too (probed): sort_array asc
+      // is nulls-first, array_sort asc is nulls-last, desc-nulls-first
+      // is the reverse of asc-nulls-last
+      case 3 =>
+        (a(1).toUpperCase.replaceAll("'", ""),
+          a(2).toUpperCase.replaceAll("'", "").replaceAll("\\s+", " ")) match {
+          case ("ASC", "NULLS FIRST") => Some(s"sort_array(${a.head}, true)")
+          case ("ASC", "NULLS LAST") => Some(s"array_sort(${a.head})")
+          case ("DESC", "NULLS LAST") => Some(s"sort_array(${a.head}, false)")
+          case ("DESC", "NULLS FIRST") =>
+            Some(s"reverse(array_sort(${a.head}))")
+          case _ => None
+        }
+      case _ => None
+    })
+    call("list_reverse_sort", 1,
+      a => Some(s"sort_array(${a.head}, false)"))
     // DuckDB list_prepend(elem, list) vs Spark array_prepend(list, elem)
-    if (out.toLowerCase.contains("list_prepend"))
-      out = fix(out, "list_prepend", 2,
-        a => Some(s"array_prepend(${a(1)}, ${a(0)})"))
+    call("list_prepend", 2,
+      a => Some(s"array_prepend(${a(1)}, ${a(0)})"))
     // list_concat treats a NULL side as [] (probed) — Spark concat is
     // NULL-in NULL-out, so spell the NULL handling out
-    if (out.toLowerCase.contains("list_concat"))
-      out = fix(out, "list_concat", 2, a => Some(
-        // flatten(array(..)) is array concat — NOT `concat`, which the
-        // concat→concat_ws(NULL-skip) rewrite below would re-capture
-        s"(CASE WHEN ${a(0)} IS NULL THEN ${a(1)} " +
-          s"WHEN ${a(1)} IS NULL THEN ${a(0)} " +
-          s"ELSE flatten(array(${a(0)}, ${a(1)})) END)"))
+    call("list_concat", 2, a => Some(
+      // flatten(array(..)) is array concat — NOT `concat`, which the
+      // concat→concat_ws(NULL-skip) rewrite below would re-capture
+      s"(CASE WHEN ${a(0)} IS NULL THEN ${a(1)} " +
+        s"WHEN ${a(1)} IS NULL THEN ${a(0)} " +
+        s"ELSE flatten(array(${a(0)}, ${a(1)})) END)"))
     // DuckDB's concat() stringifies every argument and SKIPS NULLs
     // (probed: concat('a',NULL,'b')='ab', all-NULL=''); Spark's concat is
     // NULL-strict. concat_ws('') has exactly DuckDB's skip semantics.
     // (`||` stays NULL-strict in both engines — untouched.) Known corner:
     // a LIST argument is stringified by DuckDB but flattened by
     // concat_ws — lists in string concat are outside this subset.
-    if (out.toLowerCase.contains("concat"))
-      out = fix(out, "concat", -1, a =>
-        if (a.isEmpty) None else Some(s"concat_ws('', ${a.mkString(", ")})"))
+    call("concat", -1, a =>
+      if (a.isEmpty) None else Some(s"concat_ws('', ${a.mkString(", ")})"))
     // 2-arg ltrim/rtrim: DuckDB is (string, characters), Spark is
     // (trimStr, srcStr) — REVERSED argument order (probed: Spark's
     // ltrim('xxyx','x') silently yields ''); 2-arg trim has no Spark
     // function form → TRIM(BOTH .. FROM ..) syntax
-    for (fn <- Seq("ltrim", "rtrim") if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 2, a => Some(s"$fn(${a(1)}, ${a(0)})"))
-    if (out.toLowerCase.contains("trim"))
-      out = fix(out, "trim", 2, a => Some(s"trim(BOTH ${a(1)} FROM ${a(0)})"))
+    for (fn <- Seq("ltrim", "rtrim"))
+      call(fn, 2, a => Some(s"$fn(${a(1)}, ${a(0)})"))
+    call("trim", 2, a => Some(s"trim(BOTH ${a(1)} FROM ${a(0)})"))
     // --- r8 function breadth (each corner probed against DuckDB 1.0) ---
     // map_extract/element_at return a LIST in DuckDB: [value] when the
     // key exists (even [NULL] for a NULL-valued key), [] when the key is
@@ -4062,94 +3949,68 @@ class SqlGateway(val spark: SparkSession) {
     // try_element_at alone (it conflates missing with NULL-valued).
     // Runs BEFORE the rewrites below that themselves emit element_at
     // text (fix never rescans its own output).
-    for (fn <- Seq("map_extract", "element_at")
-         if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 2, a => Some(
+    for (fn <- Seq("map_extract", "element_at"))
+      call(fn, 2, a => Some(
         s"(CASE WHEN array_contains(map_keys(${a(0)}), ${a(1)}) " +
           s"THEN array(try_element_at(${a(0)}, ${a(1)})) " +
           s"ELSE array() END)"))
-    if (out.toLowerCase.contains("sha256"))
-      out = fix(out, "sha256", 1, a => Some(s"sha2(${a(0)}, 256)"))
-
-    // even: round away from zero to the next even DOUBLE (probed:
-    // even(0.1)=2, even(-0.1)=-2, even(2.0)=2, even(3)=4, even(0)=0)
-    if (out.toLowerCase.contains("even"))
-      out = fix(out, "even", 1, a => Some(
-        s"CAST(CASE WHEN (${a(0)}) >= 0 THEN ceil((${a(0)}) / 2.0) * 2 " +
-          s"ELSE 0 - ceil((0 - (${a(0)})) / 2.0) * 2 END AS DOUBLE)"))
-    if (out.toLowerCase.contains("isfinite"))
-      out = fix(out, "isfinite", 1, a => Some(
-        s"(NOT isnan(CAST(${a(0)} AS DOUBLE)) AND " +
-          s"abs(CAST(${a(0)} AS DOUBLE)) <> CAST('Infinity' AS DOUBLE))"))
-    if (out.toLowerCase.contains("isinf"))
-      out = fix(out, "isinf", 1, a => Some(
-        s"(abs(CAST(${a(0)} AS DOUBLE)) = CAST('Infinity' AS DOUBLE))"))
-    if (out.toLowerCase.contains("xor"))
-      out = fix(out, "xor", 2, a => Some(s"((${a(0)}) ^ (${a(1)}))"))
+    call("sha256", 1, a => Some(s"sha2(${a(0)}, 256)"))
     // struct_extract with a literal field name → dot access
-    if (out.toLowerCase.contains("struct_extract"))
-      out = fix(out, "struct_extract", 2, a => {
-        val f = a(1).trim
-        if (f.length >= 2 && f.startsWith("'") && f.endsWith("'"))
-          Some(s"(${a(0)}).`${f.substring(1, f.length - 1)}`")
-        else None
-      })
-    if (out.toLowerCase.contains("regexp_split_to_table"))
-      out = fix(out, "regexp_split_to_table", 2, a =>
-        Some(s"explode(split(${a(0)}, ${a(1)}))"))
+    call("struct_extract", 2, a => {
+      val f = a(1).trim
+      if (f.length >= 2 && f.startsWith("'") && f.endsWith("'"))
+        Some(s"(${a(0)}).`${f.substring(1, f.length - 1)}`")
+      else None
+    })
+    call("regexp_split_to_table", 2, a =>
+      Some(s"explode(split(${a(0)}, ${a(1)}))"))
     // unnest(x, recursive := true) arrives as explode(...) via the alias
     // table; a list-of-struct flattens columns — exactly Spark's inline
-    if (out.toLowerCase.contains("explode")) {
-      out = fix(out, "explode", 2, a =>
-        if (a(1).matches("(?is)recursive\\s*:=\\s*true"))
-          Some(s"inline(${a(0)})")
-        else if (a(1).matches("(?is)recursive\\s*:=\\s*false"))
-          Some(s"explode(${a(0)})")
-        else None)
-      // unnest of a STRUCT expands its fields into one column each
-      // (probed: unnest({'x':1,'y':2}) is columns x, y) — Spark's inline
-      // over a one-element array is that exactly. Struct-typed column
-      // refs still refuse loudly (explode rejects them in analysis).
-      out = fix(out, "explode", 1, a => {
-        val t = a(0).trim.toLowerCase
-        if (t.startsWith("named_struct(") || t.startsWith("struct("))
-          Some(s"inline(array(${a(0)}))")
-        else None
-      })
-    }
+    call("explode", 2, a =>
+      if (a(1).matches("(?is)recursive\\s*:=\\s*true"))
+        Some(s"inline(${a(0)})")
+      else if (a(1).matches("(?is)recursive\\s*:=\\s*false"))
+        Some(s"explode(${a(0)})")
+      else None)
+    // unnest of a STRUCT expands its fields into one column each
+    // (probed: unnest({'x':1,'y':2}) is columns x, y) — Spark's inline
+    // over a one-element array is that exactly. Struct-typed column
+    // refs still refuse loudly (explode rejects them in analysis).
+    call("explode", 1, a => {
+      val t = a(0).trim.toLowerCase
+      if (t.startsWith("named_struct(") || t.startsWith("struct("))
+        Some(s"inline(array(${a(0)}))")
+      else None
+    })
     // list_where keeps NULL data elements (probed: [1,NULL,3] masked →
     // [1,NULL]); the struct detour survives them where IF(m,x,NULL)+
     // filter would not. A short mask drops the tail (zip_with pads the
     // mask with NULL and the filter drops it — probed equivalence).
-    if (out.toLowerCase.contains("list_where"))
-      out = fix(out, "list_where", 2, a => Some(
-        s"transform(filter(zip_with(${a(0)}, ${a(1)}, " +
-          s"(graft_v, graft_m) -> named_struct('m', graft_m, 'v', graft_v)), " +
-          s"graft_s -> graft_s.m), graft_s -> graft_s.v)"))
+    call("list_where", 2, a => Some(
+      s"transform(filter(zip_with(${a(0)}, ${a(1)}, " +
+        s"(graft_v, graft_m) -> named_struct('m', graft_m, 'v', graft_v)), " +
+        s"graft_s -> graft_s.m), graft_s -> graft_s.v)"))
     // list_select is 1-based; 0/negative/out-of-range indexes yield NULL
     // elements (probed), so the guard never lets ANSI element_at throw
-    if (out.toLowerCase.contains("list_select"))
-      out = fix(out, "list_select", 2, a => Some(
-        s"transform(${a(1)}, graft_i -> CASE WHEN graft_i >= 1 AND " +
-          s"graft_i <= size(${a(0)}) THEN element_at(${a(0)}, graft_i) " +
-          s"ELSE NULL END)"))
+    call("list_select", 2, a => Some(
+      s"transform(${a(1)}, graft_i -> CASE WHEN graft_i >= 1 AND " +
+        s"graft_i <= size(${a(0)}) THEN element_at(${a(0)}, graft_i) " +
+        s"ELSE NULL END)"))
     // list_grade_up: 1-based indexes in ascending value order, NULLS
     // LAST, ties stable by position (probed: [NULL,2,1]→[3,2,1],
     // [2,2,1]→[3,1,2]) — the (is-null, value, index) sort key pins all 3
-    if (out.toLowerCase.contains("list_grade_up"))
-      out = fix(out, "list_grade_up", 1, a => Some(
-        s"(CASE WHEN (${a(0)}) IS NULL THEN NULL " +
-          s"WHEN size(${a(0)}) = 0 THEN array() " +
-          s"ELSE transform(array_sort(zip_with(${a(0)}, " +
-          s"sequence(1, size(${a(0)})), (graft_v, graft_i) -> " +
-          s"named_struct('n', graft_v IS NULL, 'v', graft_v, " +
-          s"'i', graft_i))), graft_s -> graft_s.i) END)"))
+    call("list_grade_up", 1, a => Some(
+      s"(CASE WHEN (${a(0)}) IS NULL THEN NULL " +
+        s"WHEN size(${a(0)}) = 0 THEN array() " +
+        s"ELSE transform(array_sort(zip_with(${a(0)}, " +
+        s"sequence(1, size(${a(0)})), (graft_v, graft_i) -> " +
+        s"named_struct('n', graft_v IS NULL, 'v', graft_v, " +
+        s"'i', graft_i))), graft_s -> graft_s.i) END)"))
     // quantile_disc/quantile: percentile_disc has the same lower-value
     // discrete pick (probed: 0.5 of [1..4] → 2); a LIST of fractions
     // expands to an array of WITHIN GROUP aggregates
-    for (fn <- Seq("quantile_disc", "quantile")
-         if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 2, a => {
+    for (fn <- Seq("quantile_disc", "quantile"))
+      call(fn, 2, a => {
         val q = a(1).trim
         val inner =
           if (q.toLowerCase.startsWith("array(") && q.endsWith(")"))
@@ -4169,26 +4030,23 @@ class SqlGateway(val spark: SparkSession) {
     // mode(x) (probed: most-frequent value; the ORDER BY names the input).
     // Spark's deterministic mode breaks ties by lowest value, matching
     // DuckDB's observed smallest-value pick on ties.
-    if (out.toLowerCase.contains("mode()"))
-      out = SqlLex.replace(out, ("""(?is)\bmode\s*\(\s*\)\s*WITHIN\s+GROUP\s*""" +
-        """\(\s*ORDER\s+BY\s+([^()]+?)(?:\s+(?:ASC|DESC))?\s*\)""").r)(m =>
-        s"mode(${m.group(1)}, true)")
+    val ModeWithin = ("""(?is)\bmode\s*\(\s*\)\s*WITHIN\s+GROUP\s*""" +
+      """\(\s*ORDER\s+BY\s+([^()]+?)(?:\s+(?:ASC|DESC))?\s*\)""").r
+    raw("mode")(_.replace(ModeWithin)(m => s"mode(${m.group(1)}, true)"))
     // percentile_cont([q1,q2,...]) WITHIN GROUP — DuckDB's fraction-LIST
     // overload (probed: returns the list of interpolated percentiles);
     // Spark's percentile_cont takes no array, but exact interpolated
     // percentile() does
-    if (out.toLowerCase.contains("percentile_cont")) {
-      val ContList = ("""(?is)\bpercentile_cont\s*\(\s*\[([^\[\]]*)\]\s*\)\s*""" +
-        """WITHIN\s+GROUP\s*\(\s*ORDER\s+BY\s+([^()]+?)(?:\s+(ASC|DESC))?\s*\)""").r
-      out = SqlLex.replace(out, ContList) { m =>
-        // DESC at fraction q = ASC at 1−q (probed: [0.25,0.5] DESC over
-        // {1,2,3,4,10} → [4.0,3.0], exactly [0.75,0.5] ASC)
-        val desc = Option(m.group(3)).exists(_.equalsIgnoreCase("desc"))
-        val fr = splitTopLevel(m.group(1)).map(_.trim)
-          .map(f => if (desc) s"1 - ($f)" else f).mkString(", ")
-        s"percentile(${m.group(2)}, array($fr))"
-      }
-    }
+    val ContList = ("""(?is)\bpercentile_cont\s*\(\s*\[([^\[\]]*)\]\s*\)\s*""" +
+      """WITHIN\s+GROUP\s*\(\s*ORDER\s+BY\s+([^()]+?)(?:\s+(ASC|DESC))?\s*\)""").r
+    raw("percentile_cont")(_.replace(ContList) { m =>
+      // DESC at fraction q = ASC at 1−q (probed: [0.25,0.5] DESC over
+      // {1,2,3,4,10} → [4.0,3.0], exactly [0.75,0.5] ASC)
+      val desc = Option(m.group(3)).exists(_.equalsIgnoreCase("desc"))
+      val fr = splitTopLevel(m.group(1)).map(_.trim)
+        .map(f => if (desc) s"1 - ($f)" else f).mkString(", ")
+      s"percentile(${m.group(2)}, array($fr))"
+    })
     // json_extract / the -> operator return JSON text (strings keep
     // their quotes — probed: '$.a' of {"a":"x"} is '"x"'); Spark's
     // variant path round-trips that exactly. json_extract_string/->>
@@ -4196,53 +4054,45 @@ class SqlGateway(val spark: SparkSession) {
     def jsonPath(p: String): String =
       if (p.startsWith("'") && !p.startsWith("'$"))
         "'$." + p.stripPrefix("'") else p
-    if (out.toLowerCase.contains("json_extract_string"))
-      out = fix(out, "json_extract_string", 2, a =>
-        Some(s"get_json_object(${a(0)}, ${jsonPath(a(1))})"))
-    if (out.toLowerCase.contains("json_extract")) // _string can't match: no (
-      out = fix(out, "json_extract", 2, a =>
-        Some(s"to_json(variant_get(parse_json(${a(0)}), ${jsonPath(a(1))}))"))
-    if (out.contains("->>")) {
-      // arrow CHAINS of ≥2 literal simple keys (x -> 'k' ->> 'n') fold
-      // into one json path; the LAST arrow picks rendering — ->> raw text
-      // (probed: '5'), -> JSON text. Chains must contain ->> so a lambda
-      // body can never match; a single bare -> stays unsupported (it IS
-      // Spark's lambda arrow — rewriting it would be the silent-wrong
-      // class). Runs before the single-step ->> rule below.
-      val ChainOp = """('(?:[^']|'')*'|(?:[\w.]+)?\([^()]*\)|[\w.]+)"""
-      val Chain = (ChainOp + """((?:\s*->>?\s*'(?:[^']|'')*'){2,})""").r
-      val Step = """\s*(->>|->)\s*'((?:[^']|'')*)'""".r
-      out = SqlLex.replace(out, Chain) { m =>
-        val steps = Step.findAllMatchIn(m.group(2))
-          .map(s => (s.group(1), s.group(2))).toList
-        val foldable = steps.exists(_._1 == "->>") &&
-          steps.forall(_._2.matches("""[A-Za-z_]\w*"""))
-        if (!foldable) m.matched
-        else {
-          val path = "'$." + steps.map(_._2).mkString(".") + "'"
-          if (steps.last._1 == "->>")
-            s"get_json_object(${m.group(1)}, $path)"
-          else s"to_json(variant_get(parse_json(${m.group(1)}), $path))"
-        }
+    call("json_extract_string", 2, a =>
+      Some(s"get_json_object(${a(0)}, ${jsonPath(a(1))})"))
+    call("json_extract", 2, a =>
+      Some(s"to_json(variant_get(parse_json(${a(0)}), ${jsonPath(a(1))}))"))
+    // arrow CHAINS of ≥2 literal simple keys (x -> 'k' ->> 'n') fold
+    // into one json path; the LAST arrow picks rendering — ->> raw text
+    // (probed: '5'), -> JSON text. Chains must contain ->> so a lambda
+    // body can never match; a single bare -> stays unsupported (it IS
+    // Spark's lambda arrow — rewriting it would be the silent-wrong
+    // class). Runs before the single-step ->> rule below.
+    val ChainOp = """('(?:[^']|'')*'|(?:[\w.]+)?\([^()]*\)|[\w.]+)"""
+    val Chain = (ChainOp + """((?:\s*->>?\s*'(?:[^']|'')*'){2,})""").r
+    val Step = """\s*(->>|->)\s*'((?:[^']|'')*)'""".r
+    raw("->>")(_.replace(Chain) { m =>
+      val steps = Step.findAllMatchIn(m.group(2))
+        .map(s => (s.group(1), s.group(2))).toList
+      val foldable = steps.exists(_._1 == "->>") &&
+        steps.forall(_._2.matches("""[A-Za-z_]\w*"""))
+      if (!foldable) m.matched
+      else {
+        val path = "'$." + steps.map(_._2).mkString(".") + "'"
+        if (steps.last._1 == "->>")
+          s"get_json_object(${m.group(1)}, $path)"
+        else s"to_json(variant_get(parse_json(${m.group(1)}), $path))"
       }
-    }
-    if (out.contains("->>")) {
-      // x ->> 'path' (the distinct ->> token never collides with lambda
-      // arrows); matched on the masked view like the other infix rewrites
-      val Arrow = ("""('(?:[^']|'')*'|(?:[\w.]+)?\([^()]*\)|[\w.]+)""" +
-        """\s*->>\s*('(?:[^']|'')*')""").r
-      out = SqlLex.replace(out, Arrow)(m =>
-        s"get_json_object(${m.group(1)}, ${jsonPath(m.group(2))})")
-    }
+    })
+    // x ->> 'path' (the distinct ->> token never collides with lambda
+    // arrows); matched on the masked view like the other infix rewrites
+    val Arrow = ("""('(?:[^']|'')*'|(?:[\w.]+)?\([^()]*\)|[\w.]+)""" +
+      """\s*->>\s*('(?:[^']|'')*')""").r
+    raw("->>")(_.replace(Arrow)(m =>
+      s"get_json_object(${m.group(1)}, ${jsonPath(m.group(2))})"))
     // json aggregates: to_json over ordered collections renders exactly
     // DuckDB's minified form (probed: [1,2] / {"a":1,"b":2})
-    if (out.toLowerCase.contains("json_group_array"))
-      out = fix(out, "json_group_array", 1, a =>
-        Some(s"to_json(collect_list(${a(0)}))"))
-    if (out.toLowerCase.contains("json_group_object"))
-      out = fix(out, "json_group_object", 2, a =>
-        Some(s"to_json(map_from_arrays(collect_list(${a(0)}), " +
-          s"collect_list(${a(1)})))"))
+    call("json_group_array", 1, a =>
+      Some(s"to_json(collect_list(${a(0)}))"))
+    call("json_group_object", 2, a =>
+      Some(s"to_json(map_from_arrays(collect_list(${a(0)}), " +
+        s"collect_list(${a(1)})))"))
     // json_type of the top-level value, from its first character — the
     // container/string/boolean arms are exact; numeric arms are outside
     // this subset and refuse (DuckDB distinguishes UBIGINT/BIGINT/DOUBLE)
@@ -4250,86 +4100,79 @@ class SqlGateway(val spark: SparkSession) {
     // (probed: '{"a":[1]}','$.a' → ARRAY) — route through json_extract,
     // whose missing-path NULL matches; the 1-arg fix below then rewrites
     // the produced inner call
-    if (out.toLowerCase.contains("json_type"))
-      out = fix(out, "json_type", 2, a =>
-        // the extract spelled in Spark form directly: the json_extract
-        // rewrite pass has already run by this point
-        Some(s"json_type(to_json(variant_get(parse_json(${a(0)}), " +
-          s"${jsonPath(a(1))})))"))
-    if (out.toLowerCase.contains("json_type"))
-      out = fix(out, "json_type", 1, a => Some(
-        s"(CASE WHEN ${a(0)} IS NULL THEN NULL " + // missing path → NULL (probed)
-          s"WHEN left(trim(${a(0)}), 1) = '[' THEN 'ARRAY' " +
-          s"WHEN left(trim(${a(0)}), 1) = '{' THEN 'OBJECT' " +
-          s"WHEN left(trim(${a(0)}), 1) = '\"' THEN 'VARCHAR' " +
-          s"WHEN trim(${a(0)}) IN ('true', 'false') THEN 'BOOLEAN' " +
-          s"WHEN trim(${a(0)}) = 'null' THEN 'NULL' " +
-          s"ELSE CAST(raise_error('json_type: numeric arms are outside " +
-          s"the exact subset') AS STRING) END)"))
-    if (out.toLowerCase.contains("json_keys"))
-      out = fix(out, "json_keys", 1, a =>
-        Some(s"json_object_keys(${a(0)})"))
-    if (out.toLowerCase.contains("json_valid"))
-      out = fix(out, "json_valid", 1, a =>
-        Some(s"(try_parse_json(${a(0)}) IS NOT NULL)"))
+    call("json_type", 2, a =>
+      // the extract spelled in Spark form directly: the json_extract
+      // rewrite pass has already run by this point
+      Some(s"json_type(to_json(variant_get(parse_json(${a(0)}), " +
+        s"${jsonPath(a(1))})))"))
+    call("json_type", 1, a => Some(
+      s"(CASE WHEN ${a(0)} IS NULL THEN NULL " + // missing path → NULL (probed)
+        s"WHEN left(trim(${a(0)}), 1) = '[' THEN 'ARRAY' " +
+        s"WHEN left(trim(${a(0)}), 1) = '{' THEN 'OBJECT' " +
+        s"WHEN left(trim(${a(0)}), 1) = '\"' THEN 'VARCHAR' " +
+        s"WHEN trim(${a(0)}) IN ('true', 'false') THEN 'BOOLEAN' " +
+        s"WHEN trim(${a(0)}) = 'null' THEN 'NULL' " +
+        s"ELSE CAST(raise_error('json_type: numeric arms are outside " +
+        s"the exact subset') AS STRING) END)"))
+    call("json_keys", 1, a =>
+      Some(s"json_object_keys(${a(0)})"))
+    call("json_valid", 1, a =>
+      Some(s"(try_parse_json(${a(0)}) IS NOT NULL)"))
     // from_json / json_transform (and their _strict twins — DuckDB 1.0
     // errors on malformed input in BOTH, probed) with a LITERAL structure
     // argument: the structure JSON translates to a Spark DDL schema and
     // FAILFAST reproduces the loud-error contract. Type names map only
     // where the value rendering is identical (wrong-typed/missing fields
     // are NULL in both engines — probed). Non-literal structures refuse.
-    if (out.toLowerCase.contains("from_json") ||
-        out.toLowerCase.contains("json_transform")) {
-      def typeDdl(name: String): Option[String] = {
-        val DecRe = """(?i)DECIMAL\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\)""".r
-        name.trim.toUpperCase match {
-          case "VARCHAR" | "TEXT" | "STRING" | "JSON" | "UUID" | "TIME" =>
-            Some("STRING")
-          case "TINYINT" | "INT1" => Some("TINYINT")
-          case "SMALLINT" | "INT2" | "UTINYINT" => Some("SMALLINT")
-          case "INTEGER" | "INT" | "INT4" | "USMALLINT" => Some("INT")
-          case "BIGINT" | "INT8" | "UINTEGER" => Some("BIGINT")
-          case "UBIGINT" => Some("DECIMAL(20,0)")
-          case "HUGEINT" => Some("DECIMAL(38,0)")
-          case "DOUBLE" => Some("DOUBLE")
-          case "FLOAT" | "REAL" => Some("FLOAT")
-          case "BOOLEAN" | "BOOL" => Some("BOOLEAN")
-          case "DATE" => Some("DATE")
-          case "TIMESTAMP" | "DATETIME" => Some("TIMESTAMP")
-          case d if DecRe.pattern.matcher(d).matches() => Some(d)
-          case _ => None
-        }
+    def typeDdl(name: String): Option[String] = {
+      val DecRe = """(?i)DECIMAL\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\)""".r
+      name.trim.toUpperCase match {
+        case "VARCHAR" | "TEXT" | "STRING" | "JSON" | "UUID" | "TIME" =>
+          Some("STRING")
+        case "TINYINT" | "INT1" => Some("TINYINT")
+        case "SMALLINT" | "INT2" | "UTINYINT" => Some("SMALLINT")
+        case "INTEGER" | "INT" | "INT4" | "USMALLINT" => Some("INT")
+        case "BIGINT" | "INT8" | "UINTEGER" => Some("BIGINT")
+        case "UBIGINT" => Some("DECIMAL(20,0)")
+        case "HUGEINT" => Some("DECIMAL(38,0)")
+        case "DOUBLE" => Some("DOUBLE")
+        case "FLOAT" | "REAL" => Some("FLOAT")
+        case "BOOLEAN" | "BOOL" => Some("BOOLEAN")
+        case "DATE" => Some("DATE")
+        case "TIMESTAMP" | "DATETIME" => Some("TIMESTAMP")
+        case d if DecRe.pattern.matcher(d).matches() => Some(d)
+        case _ => None
       }
-      def structDdl(n: com.fasterxml.jackson.databind.JsonNode)
-          : Option[String] = {
-        if (n.isTextual) typeDdl(n.asText)
-        else if (n.isArray && n.size == 1)
-          structDdl(n.get(0)).map(e => s"ARRAY<$e>")
-        else if (n.isObject) {
-          val fields = scala.collection.mutable.ListBuffer.empty[String]
-          val it = n.fields()
-          while (it.hasNext) {
-            val e = it.next()
-            structDdl(e.getValue) match {
-              case Some(d) => fields += s"`${e.getKey}`: $d"
-              case None => return None
-            }
-          }
-          Some(s"STRUCT<${fields.mkString(", ")}>")
-        } else None
-      }
-      for (fn <- Seq("from_json", "from_json_strict", "json_transform",
-          "json_transform_strict") if out.toLowerCase.contains(fn))
-        out = fix(out, fn, 2, a =>
-          SqlLex.plainLiteral(a(1).trim).flatMap { lit =>
-            val parsed = scala.util.Try(new com.fasterxml.jackson.databind
-              .ObjectMapper().readTree(lit)).toOption
-            parsed.flatMap(structDdl).collect {
-              case ddl if ddl.startsWith("STRUCT") || ddl.startsWith("ARRAY") =>
-                s"from_json(${a(0)}, '$ddl', map('mode', 'FAILFAST'))"
-            }
-          })
     }
+    def structDdl(n: com.fasterxml.jackson.databind.JsonNode)
+        : Option[String] = {
+      if (n.isTextual) typeDdl(n.asText)
+      else if (n.isArray && n.size == 1)
+        structDdl(n.get(0)).map(e => s"ARRAY<$e>")
+      else if (n.isObject) {
+        val fields = scala.collection.mutable.ListBuffer.empty[String]
+        val it = n.fields()
+        while (it.hasNext) {
+          val e = it.next()
+          structDdl(e.getValue) match {
+            case Some(d) => fields += s"`${e.getKey}`: $d"
+            case None => return None
+          }
+        }
+        Some(s"STRUCT<${fields.mkString(", ")}>")
+      } else None
+    }
+    for (fn <- Seq("from_json", "from_json_strict", "json_transform",
+        "json_transform_strict"))
+      call(fn, 2, a =>
+        SqlLex.plainLiteral(a(1).trim).flatMap { lit =>
+          val parsed = scala.util.Try(new com.fasterxml.jackson.databind
+            .ObjectMapper().readTree(lit)).toOption
+          parsed.flatMap(structDdl).collect {
+            case ddl if ddl.startsWith("STRUCT") || ddl.startsWith("ARRAY") =>
+              s"from_json(${a(0)}, '$ddl', map('mode', 'FAILFAST'))"
+          }
+        })
     // json_array / json_object constructors compose from per-element
     // json_quote renderings (the fix below runs AFTER these, so the
     // emitted json_quote calls get their own exact handling); NULL
@@ -4337,55 +4180,48 @@ class SqlGateway(val spark: SparkSession) {
     def jsonElem(x: String): String =
       if (x.trim.equalsIgnoreCase("null")) "'null'"
       else s"coalesce(json_quote($x), 'null')"
-    if (out.toLowerCase.contains("json_array"))
-      out = fix(out, "json_array", -1, a =>
-        if (a.forall(_.trim.isEmpty)) Some("'[]'")
-        else Some("concat('[', concat_ws(',', " +
-          a.map(jsonElem).mkString(", ") + "), ']')"))
-    if (out.toLowerCase.contains("json_object"))
-      out = fix(out, "json_object", -1, a =>
-        if (a.forall(_.trim.isEmpty)) Some("'{}'")
-        else if (a.length % 2 != 0) None // duck: even key/value count
-        else Some("concat('{', concat_ws(',', " +
-          a.grouped(2).map { case Seq(k, v) =>
-            s"concat(json_quote($k), ':', ${jsonElem(v)})" }.mkString(", ") +
-          "), '}')"))
+    call("json_array", -1, a =>
+      if (a.forall(_.trim.isEmpty)) Some("'[]'")
+      else Some("concat('[', concat_ws(',', " +
+        a.map(jsonElem).mkString(", ") + "), ']')"))
+    call("json_object", -1, a =>
+      if (a.forall(_.trim.isEmpty)) Some("'{}'")
+      else if (a.length % 2 != 0) None // duck: even key/value count
+      else Some("concat('{', concat_ws(',', " +
+        a.grouped(2).map { case Seq(k, v) =>
+          s"concat(json_quote($k), ':', ${jsonElem(v)})" }.mkString(", ") +
+        "), '}')"))
     // alias(expr) returns the enclosing select item's alias when one is
     // spelled (probed: `alias(v) AS a` → 'a'), else the column's own name
     // (`alias(v)` → 'v'); the identifier subset folds to a literal,
     // computed expressions refuse
-    if (out.toLowerCase.contains("alias(")) {
-      val Aliased = """(?i)\balias\s*\(\s*[\w.]+\s*\)\s+AS\s+(\w+)""".r
-      out = SqlLex.replace(out, Aliased)(m => s"'${m.group(1)}' AS ${m.group(1)}")
-      out = fix(out, "alias", 1, a => {
-        val t = a(0).trim
-        if (t.matches("""[A-Za-z_][\w.]*"""))
-          Some(s"'${t.split('.').last}'")
-        else None
-      })
-    }
+    val Aliased = """(?i)\balias\s*\(\s*[\w.]+\s*\)\s+AS\s+(\w+)""".r
+    raw("alias")(_.replace(Aliased)(m => s"'${m.group(1)}' AS ${m.group(1)}"))
+    call("alias", 1, a => {
+      val t = a(0).trim
+      if (t.matches("""[A-Za-z_][\w.]*"""))
+        Some(s"'${t.split('.').last}'")
+      else None
+    })
     // json_quote is DuckDB's generic to_json: numeric/boolean literals
     // render verbatim, string literals quote (JSON-escaped) — the literal
     // subset; container args alias through to to_json, others refuse
-    if (out.toLowerCase.contains("json_quote"))
-      out = fix(out, "json_quote", 1, a => {
-        val t = a(0).trim
-        if (t.matches("""(?i)-?\d+(\.\d+)?([eE][+-]?\d+)?|true|false"""))
-          Some(s"'${t.toLowerCase}'")
-        else SqlLex.plainLiteral(t).map { lit =>
-          val inner = lit.replace("\\", "\\\\").replace("\"", "\\\"")
-          "'\"" + inner + "\"'"
-        }.orElse(Some(s"to_json(${a(0)})"))
-      })
+    call("json_quote", 1, a => {
+      val t = a(0).trim
+      if (t.matches("""(?i)-?\d+(\.\d+)?([eE][+-]?\d+)?|true|false"""))
+        Some(s"'${t.toLowerCase}'")
+      else SqlLex.plainLiteral(t).map { lit =>
+        val inner = lit.replace("\\", "\\\\").replace("\"", "\\\"")
+        "'\"" + inner + "\"'"
+      }.orElse(Some(s"to_json(${a(0)})"))
+    })
     // century/decade (probed: century(2000)=20, 2001→21; decade(2020)=202)
-    if (out.toLowerCase.contains("century"))
-      out = fix(out, "century", 1, a => Some(
-        s"CAST(CASE WHEN year(${a(0)}) >= 0 THEN " +
-          s"ceil(year(${a(0)}) / 100.0) " +
-          s"ELSE 0 - ceil((0 - year(${a(0)})) / 100.0) END AS BIGINT)"))
-    if (out.toLowerCase.contains("decade"))
-      out = fix(out, "decade", 1, a =>
-        Some(s"CAST(floor(year(${a(0)}) / 10.0) AS BIGINT)"))
+    call("century", 1, a => Some(
+      s"CAST(CASE WHEN year(${a(0)}) >= 0 THEN " +
+        s"ceil(year(${a(0)}) / 100.0) " +
+        s"ELSE 0 - ceil((0 - year(${a(0)})) / 100.0) END AS BIGINT)"))
+    call("decade", 1, a =>
+      Some(s"CAST(floor(year(${a(0)}) / 10.0) AS BIGINT)"))
     // to_days/to_hours/… interval constructors → make_interval slots;
     // the scaled family (quarters = 3 months, decade/century/millennium =
     // 10/100/1000 years, milli/microseconds = fractional seconds via an
@@ -4394,143 +4230,113 @@ class SqlGateway(val spark: SparkSession) {
       val slots = Seq("to_years" -> 0, "to_months" -> 1, "to_weeks" -> 2,
         "to_days" -> 3, "to_hours" -> 4, "to_minutes" -> 5,
         "to_seconds" -> 6)
-      for ((fn, slot) <- slots if out.toLowerCase.contains(fn))
-        out = fix(out, fn, 1, a => Some("make_interval(" +
+      for ((fn, slot) <- slots)
+        call(fn, 1, a => Some("make_interval(" +
           (Seq.fill(slot)("0") :+ a(0)).mkString(", ") + ")"))
       val scaled = Seq("to_quarters" -> (1, "(%s) * 3"),
         "to_decades" -> (0, "(%s) * 10"), "to_centuries" -> (0, "(%s) * 100"),
         "to_millennia" -> (0, "(%s) * 1000"),
         "to_milliseconds" -> (6, "CAST(%s AS DECIMAL(24,6)) / 1000"),
         "to_microseconds" -> (6, "CAST(%s AS DECIMAL(24,6)) / 1000000"))
-      for ((fn, (slot, tpl)) <- scaled if out.toLowerCase.contains(fn))
-        out = fix(out, fn, 1, a => Some("make_interval(" +
+      for ((fn, (slot, tpl)) <- scaled)
+        call(fn, 1, a => Some("make_interval(" +
           (Seq.fill(slot)("0") :+ tpl.format(a(0))).mkString(", ") + ")"))
     }
     // julian day number: DuckDB's julian(x) is epoch-days + 2440588 plus
     // the fraction of day for timestamps (probed: DATE '2000-01-01' →
     // 2451545.0, 18:00 → .75 — DuckDB counts from midnight, not noon)
-    if (out.toLowerCase.contains("julian"))
-      out = fix(out, "julian", 1, a => Some(
-        s"(CAST(unix_micros(CAST(${a(0)} AS TIMESTAMP)) AS DOUBLE) " +
-          s"/ 86400000000.0 + 2440588.0)"))
+    call("julian", 1, a => Some(
+      s"(CAST(unix_micros(CAST(${a(0)} AS TIMESTAMP)) AS DOUBLE) " +
+        s"/ 86400000000.0 + 2440588.0)"))
     // session timezone is pinned UTC on both engines, where these are 0
     // for every TIMESTAMP/TIMESTAMPTZ input (probed)
-    for (fn <- Seq("timezone_hour", "timezone_minute")
-         if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 1, a => Some(s"(CASE WHEN CAST(${a(0)} AS " +
+    for (fn <- Seq("timezone_hour", "timezone_minute"))
+      call(fn, 1, a => Some(s"(CASE WHEN CAST(${a(0)} AS " +
         s"TIMESTAMP) IS NULL THEN CAST(NULL AS BIGINT) " +
         s"ELSE CAST(0 AS BIGINT) END)"))
-    if (out.toLowerCase.contains("try_strptime"))
-      out = fix(out, "try_strptime", 2, a =>
-        SqlLex.plainLiteral(a(1)).flatMap(strftimeToJavaPattern).map(p =>
-          s"try_to_timestamp(${a(0)}, '${p.replace("'", "''")}')"))
-    if (out.toLowerCase.contains("current_database"))
-      out = fix(out, "current_database", -1, a =>
-        if (a.isEmpty || a == Seq("")) Some("'memory'") else None)
+    call("try_strptime", 2, a =>
+      SqlLex.plainLiteral(a(1)).flatMap(strftimeToJavaPattern).map(p =>
+        s"try_to_timestamp(${a(0)}, '${p.replace("'", "''")}')"))
+    call("current_database", -1, a =>
+      if (a.isEmpty || a == Seq("")) Some("'memory'") else None)
     // array_push_front takes (list, elem) — list_prepend's reverse order
-    if (out.toLowerCase.contains("array_push_front"))
-      out = fix(out, "array_push_front", 2, a =>
-        Some(s"array_prepend(${a(0)}, ${a(1)})"))
+    call("array_push_front", 2, a =>
+      Some(s"array_prepend(${a(0)}, ${a(1)})"))
     // pg_typeof renders the DuckDB type name lowercased (probed)
-    if (out.toLowerCase.contains("pg_typeof"))
-      out = fix(out, "pg_typeof", 1, a => Some(s"lower(typeof(${a(0)}))"))
+    call("pg_typeof", 1, a => Some(s"lower(typeof(${a(0)}))"))
     // geometric mean: exp of the mean log (probed exact on the corpus
     // pins; DOUBLE like DuckDB)
-    for (fn <- Seq("geomean", "geometric_mean")
-         if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 1, a =>
+    for (fn <- Seq("geomean", "geometric_mean"))
+      call(fn, 1, a =>
         Some(s"exp(avg(ln(CAST(${a(0)} AS DOUBLE))))"))
     // bare session-identity keywords (no parens): DuckDB pins these
     // (probed) — Spark's CURRENT_USER would leak the OS user instead
-    locally {
-      val idents = Seq("current_user" -> "'duckdb'",
+    for ((kw, v) <- Seq("current_user" -> "'duckdb'",
         "session_user" -> "'duckdb'", "current_role" -> "'duckdb'",
-        "current_catalog" -> "'memory'")
-      for ((kw, v) <- idents if out.toLowerCase.contains(kw)) {
-        val Re = ("(?i)(?<![\\w.$'])" + kw + "(?![\\w($])").r
-        out = SqlLex.replace(out, Re)(_ => v)
-      }
+        "current_catalog" -> "'memory'")) {
+      val Re = ("(?i)(?<![\\w.$'])" + kw + "(?![\\w($])").r
+      raw(kw)(_.replace(Re)(_ => v))
     }
     // current_schemas(true) includes the implicit catalogs; (false) is
     // empty; in_search_path is TRUE only for ('memory', 'main') — all
     // probed against the reference's single-database layout
-    if (out.toLowerCase.contains("current_schemas"))
-      out = fix(out, "current_schemas", 1, a => a.head.trim.toLowerCase match {
-        case "true" => Some("array('main', 'main', 'main', 'pg_catalog')")
-        case "false" => Some("CAST(array() AS ARRAY<STRING>)")
-        case _ => None
-      })
-    if (out.toLowerCase.contains("in_search_path"))
-      out = fix(out, "in_search_path", 2, a => Some(
-        s"((${a(0)}) = 'memory' AND (${a(1)}) = 'main')"))
+    call("current_schemas", 1, a => a.head.trim.toLowerCase match {
+      case "true" => Some("array('main', 'main', 'main', 'pg_catalog')")
+      case "false" => Some("CAST(array() AS ARRAY<STRING>)")
+      case _ => None
+    })
+    call("in_search_path", 2, a => Some(
+      s"((${a(0)}) = 'memory' AND (${a(1)}) = 'main')"))
     // setseed returns NULL; the RNG side effect has no deterministic
     // cross-engine observable (random() sequences differ by engine anyway)
-    if (out.toLowerCase.contains("setseed"))
-      out = fix(out, "setseed", 1, a => Some(
-        s"(CASE WHEN (${a(0)}) IS NULL THEN CAST(NULL AS INT) " +
-          s"ELSE CAST(NULL AS INT) END)"))
+    call("setseed", 1, a => Some(
+      s"(CASE WHEN (${a(0)}) IS NULL THEN CAST(NULL AS INT) " +
+        s"ELSE CAST(NULL AS INT) END)"))
     // constant_or_null(v, cond…): NULL when ANY condition arg is NULL
-    if (out.toLowerCase.contains("constant_or_null"))
-      out = fix(out, "constant_or_null", -1, a =>
-        if (a.length < 2) None else Some(
-          s"(CASE WHEN ${a.tail.map(c => s"($c) IS NULL").mkString(" OR ")} " +
-            s"THEN NULL ELSE ${a(0)} END)"))
-    if (out.toLowerCase.contains("strlen"))
-      out = fix(out, "strlen", 1, a => Some(s"octet_length(${a(0)})"))
+    call("constant_or_null", -1, a =>
+      if (a.length < 2) None else Some(
+        s"(CASE WHEN ${a.tail.map(c => s"($c) IS NULL").mkString(" OR ")} " +
+          s"THEN NULL ELSE ${a(0)} END)"))
+    call("strlen", 1, a => Some(s"octet_length(${a(0)})"))
     // operator-spelling function names (probed): divide is `//` (rides
     // the DuckFloorDiv plan swap via the div keyword), the rest are the
     // plain operators
-    if (out.toLowerCase.contains("divide"))
-      out = fix(out, "divide", 2, a => Some(s"((${a(0)}) div (${a(1)}))"))
-    if (out.toLowerCase.contains("multiply"))
-      out = fix(out, "multiply", 2, a => Some(s"((${a(0)}) * (${a(1)}))"))
-    if (out.toLowerCase.contains("subtract"))
-      out = fix(out, "subtract", 2, a => Some(s"((${a(0)}) - (${a(1)}))"))
-    if (out.toLowerCase.contains("add"))
-      out = fix(out, "add", 2, a => Some(s"((${a(0)}) + (${a(1)}))"))
+    call("divide", 2, a => Some(s"((${a(0)}) div (${a(1)}))"))
+    call("multiply", 2, a => Some(s"((${a(0)}) * (${a(1)}))"))
+    call("subtract", 2, a => Some(s"((${a(0)}) - (${a(1)}))"))
+    call("add", 2, a => Some(s"((${a(0)}) + (${a(1)}))"))
     // signbit: the IEEE sign bit. Two probed corners pull apart: DuckDB's
     // PARSER folds the sign off a literal -0.0 (signbit(-0.0) is false)
     // while a runtime negative zero keeps it (signbit('-0.0'::DOUBLE) is
     // true). Literal args evaluate the folded sign directly; everything
     // else reads the bit off the value's string rendering, which keeps
     // '-' for -0.0 and -Infinity.
-    if (out.toLowerCase.contains("signbit"))
-      out = fix(out, "signbit", 1, a => {
-        val t = a(0).trim
-        if (t.matches("""-?\d+(\.\d+)?([eE][+-]?\d+)?"""))
-          Some(if (BigDecimal(t).signum < 0) "true" else "false")
-        else Some(s"startswith(CAST(CAST(${a(0)} AS DOUBLE) AS STRING), '-')")
-      })
+    call("signbit", 1, a => {
+      val t = a(0).trim
+      if (t.matches("""-?\d+(\.\d+)?([eE][+-]?\d+)?"""))
+        Some(if (BigDecimal(t).signum < 0) "true" else "false")
+      else Some(s"startswith(CAST(CAST(${a(0)} AS DOUBLE) AS STRING), '-')")
+    })
     // BIT values model as '0'/'1' strings (see cornerType). bit_length of
     // a BIT is its bit COUNT (model-string length); of a VARCHAR it is
     // 8 x octets, which Spark's same-named builtin already is. The ::BIT
     // marker survives until the erasure at the end of this pass, so the
     // cast-tagged form is distinguishable here.
-    if (out.toLowerCase.contains("bit_length"))
-      out = fix(out, "bit_length", 1, a => {
-        val BitCast = """(?is)^(.+?)::\s*BIT(?:STRING)?\s*$""".r
-        a(0).trim match {
-          case BitCast(inner) => Some(s"length($inner)")
-          case _ => None
-        }
-      })
-    // bit_position is a 1-based substring search (0 when absent —
-    // probed); get_bit/set_bit index from 0 at the LEFT
-    if (out.toLowerCase.contains("bit_position"))
-      out = fix(out, "bit_position", 2,
-        a => Some(s"instr(${a(1)}, ${a(0)})"))
-    if (out.toLowerCase.contains("get_bit"))
-      out = fix(out, "get_bit", 2, a => Some(
-        s"CAST(substring(${a(0)}, (${a(1)}) + 1, 1) AS INT)"))
-    if (out.toLowerCase.contains("set_bit"))
-      out = fix(out, "set_bit", 3, a => Some(
-        s"concat(left(${a(0)}, ${a(1)}), CAST(${a(2)} AS STRING), " +
-          s"substring(${a(0)}, (${a(1)}) + 2))"))
+    call("bit_length", 1, a => {
+      val BitCast = """(?is)^(.+?)::\s*BIT(?:STRING)?\s*$""".r
+      a(0).trim match {
+        case BitCast(inner) => Some(s"length($inner)")
+        case _ => None
+      }
+    })
+    // bit_position is a 1-based substring search (0 when absent — probed)
+    call("bit_position", 2,
+      a => Some(s"instr(${a(1)}, ${a(0)})"))
     // unbin/from_binary: '01' text → BLOB, byte count = ceil(len/8) with
     // left zero-padding (probed: unbin('110') = \x06, 16-char = 2 bytes).
     // conv is 64-bit — longer inputs refuse loudly rather than truncate
-    for (fn <- Seq("unbin", "from_binary") if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 1, a => Some(
+    for (fn <- Seq("unbin", "from_binary"))
+      call(fn, 1, a => Some(
         s"(CASE WHEN length(${a(0)}) > 64 THEN CAST(raise_error(" +
           s"'$fn: inputs beyond 64 bits are outside the exact subset') " +
           s"AS BINARY) ELSE unhex(lpad(conv(${a(0)}, 2, 16), " +
@@ -4544,35 +4350,23 @@ class SqlGateway(val spark: SparkSession) {
           s"ELSE CAST(conv(array_join(reverse(transform(sequence(0, 7), " +
           s"i -> substring(md5($arg), $off + i * 2, 2))), ''), 16, 10) " +
           s"AS DECIMAL(20,0)) END)"
-      if (out.toLowerCase.contains("md5_number_lower"))
-        out = fix(out, "md5_number_lower", 1, a => Some(md5Num(a(0), 17)))
-      if (out.toLowerCase.contains("md5_number_upper"))
-        out = fix(out, "md5_number_upper", 1, a => Some(md5Num(a(0), 1)))
+      call("md5_number_lower", 1, a => Some(md5Num(a(0), 17)))
+      call("md5_number_upper", 1, a => Some(md5Num(a(0), 1)))
     }
-    if (out.toLowerCase.contains("current_schema"))
-      out = fix(out, "current_schema", -1, a =>
-        if (a.isEmpty || a == Seq("")) Some("'main'") else None)
+    call("current_schema", -1, a =>
+      if (a.isEmpty || a == Seq("")) Some("'main'") else None)
     // product: DOUBLE product aggregate (graft_product registration)
-    if (out.toLowerCase.contains("product"))
-      out = fix(out, "product", 1, a =>
-        Some(s"graft_product(CAST(${a(0)} AS DOUBLE))"),
-        allowAt = (s, i) => !s.substring(0, i).toLowerCase
-          .endsWith("graft_")) // never rewrap the registered name
+    call("product", 1, a =>
+      Some(s"graft_product(CAST(${a(0)} AS DOUBLE))"))
     // entropy: Shannon-log2 aggregate (graft_entropy registration); the
     // STRING cast is a 1:1 rendering, so the value distribution — and
     // therefore the entropy — is unchanged
-    if (out.toLowerCase.contains("entropy"))
-      out = fix(out, "entropy", 1, a =>
-        Some(s"graft_entropy(CAST(${a(0)} AS STRING))"),
-        allowAt = (s, i) => !s.substring(0, i).toLowerCase
-          .endsWith("graft_"))
+    call("entropy", 1, a =>
+      Some(s"graft_entropy(CAST(${a(0)} AS STRING))"))
     // mad: median-absolute-deviation aggregate (MadAggregator
     // registration); DOUBLE operand cast like product
-    if (out.toLowerCase.contains("mad"))
-      out = fix(out, "mad", 1, a =>
-        Some(s"graft_mad(CAST(${a(0)} AS DOUBLE))"),
-        allowAt = (s, i) => !s.substring(0, i).toLowerCase
-          .endsWith("graft_"))
+    call("mad", 1, a =>
+      Some(s"graft_mad(CAST(${a(0)} AS DOUBLE))"))
     // DuckDB skewness/kurtosis are SAMPLE statistics (bias-corrected G1 /
     // excess G2) computed from raw power sums; Spark's same-named
     // aggregates are population g1 / g2 AND use a different running-
@@ -4580,120 +4374,109 @@ class SqlGateway(val spark: SparkSession) {
     // These spell out DuckDB's exact raw-sum formulas with DuckDB's exact
     // left-associative op order — verified BIT-exact against the oracle
     // on 5 datasets. NULL under n<3 / n<4 and zero variance (probed).
-    if (out.toLowerCase.contains("skewness"))
-      out = fix(out, "skewness", 1, a => {
-        val x = s"CAST(${a(0)} AS DOUBLE)" // duck sums doubles, not bigints
-        val n = s"count($x)"; val t = s"(1.0 / count($x))"
-        val s1 = s"sum($x)"; val s2 = s"sum(($x)*($x))"
-        val s3 = s"sum(($x)*($x)*($x))"
-        val m2 = s"($t * ($s2 - $s1 * $s1 * $t))"
-        Some(s"(CASE WHEN $n > 2 AND ($s2 - $s1 * $s1 * $t) <> 0 THEN " +
-          s"sqrt($n * ($n - 1.0)) / ($n - 2) * $t * " +
-          s"($s3 - 3 * $s1 * $s2 * $t + 2 * power($s1, 3) * $t * $t) / " +
-          s"sqrt(power($m2, 3)) ELSE NULL END)")
-      })
+    call("skewness", 1, a => {
+      val x = s"CAST(${a(0)} AS DOUBLE)" // duck sums doubles, not bigints
+      val n = s"count($x)"; val t = s"(1.0 / count($x))"
+      val s1 = s"sum($x)"; val s2 = s"sum(($x)*($x))"
+      val s3 = s"sum(($x)*($x)*($x))"
+      val m2 = s"($t * ($s2 - $s1 * $s1 * $t))"
+      Some(s"(CASE WHEN $n > 2 AND ($s2 - $s1 * $s1 * $t) <> 0 THEN " +
+        s"sqrt($n * ($n - 1.0)) / ($n - 2) * $t * " +
+        s"($s3 - 3 * $s1 * $s2 * $t + 2 * power($s1, 3) * $t * $t) / " +
+        s"sqrt(power($m2, 3)) ELSE NULL END)")
+    })
     // 1-arg age anchors at current_date (probed: NOT now())
-    if (out.toLowerCase.contains("age"))
-      out = fix(out, "age", 1, a =>
-        Some(s"age(CAST(current_date() AS TIMESTAMP), " +
-          s"CAST(${a(0)} AS TIMESTAMP))"))
+    call("age", 1, a =>
+      Some(s"age(CAST(current_date() AS TIMESTAMP), " +
+        s"CAST(${a(0)} AS TIMESTAMP))"))
     // sem: standard error of the mean = stddev_POP / sqrt(n) in DuckDB
     // (probed bit-exact; NULLs skipped by both factors)
-    if (out.toLowerCase.contains("sem"))
-      out = fix(out, "sem", 1, a => Some(
-        s"(stddev_pop(${a(0)}) / sqrt(count(${a(0)})))"))
+    call("sem", 1, a => Some(
+      s"(stddev_pop(${a(0)}) / sqrt(count(${a(0)})))"))
     // kurtosis_pop: population excess g2 = m4/m2^2 - 3 from the same raw
     // power sums (probed: NULL under n<2 / zero variance). Runs BEFORE the
     // sample-kurtosis fix; its output carries no kurtosis( token.
-    if (out.toLowerCase.contains("kurtosis_pop"))
-      out = fix(out, "kurtosis_pop", 1, a => {
-        val x = s"CAST(${a(0)} AS DOUBLE)"
-        val n = s"count($x)"; val t = s"(1.0 / count($x))"
-        val s1 = s"sum($x)"; val s2 = s"sum(($x)*($x))"
-        val s3 = s"sum(($x)*($x)*($x))"
-        val s4 = s"sum(($x)*($x)*($x)*($x))"
-        val m2 = s"($t * ($s2 - $s1 * $s1 * $t))"
-        val m4 = s"($t * ($s4 - 4 * $s3 * $s1 * $t + " +
-          s"6 * $s2 * $s1 * $s1 * $t * $t - 3 * power($s1, 4) * " +
-          s"power($t, 3)))"
-        Some(s"(CASE WHEN $n > 1 AND ($s2 - $s1 * $s1 * $t) <> 0 THEN " +
-          s"$m4 / ($m2 * $m2) - 3 ELSE NULL END)")
-      })
-    if (out.toLowerCase.contains("kurtosis"))
-      out = fix(out, "kurtosis", 1, a => {
-        val x = s"CAST(${a(0)} AS DOUBLE)" // duck sums doubles, not bigints
-        val n = s"count($x)"; val t = s"(1.0 / count($x))"
-        val s1 = s"sum($x)"; val s2 = s"sum(($x)*($x))"
-        val s3 = s"sum(($x)*($x)*($x))"
-        val s4 = s"sum(($x)*($x)*($x)*($x))"
-        val m2 = s"($t * ($s2 - $s1 * $s1 * $t))"
-        val m4 = s"($t * ($s4 - 4 * $s3 * $s1 * $t + " +
-          s"6 * $s2 * $s1 * $s1 * $t * $t - 3 * power($s1, 4) * " +
-          s"power($t, 3)))"
-        Some(s"(CASE WHEN $n > 3 AND ($s2 - $s1 * $s1 * $t) <> 0 THEN " +
-          s"($n - 1.0) * (($n + 1.0) * $m4 / ($m2 * $m2) - 3 * ($n - 1.0)) " +
-          s"/ (($n - 2.0) * ($n - 3.0)) ELSE NULL END)")
-      })
+    call("kurtosis_pop", 1, a => {
+      val x = s"CAST(${a(0)} AS DOUBLE)"
+      val n = s"count($x)"; val t = s"(1.0 / count($x))"
+      val s1 = s"sum($x)"; val s2 = s"sum(($x)*($x))"
+      val s3 = s"sum(($x)*($x)*($x))"
+      val s4 = s"sum(($x)*($x)*($x)*($x))"
+      val m2 = s"($t * ($s2 - $s1 * $s1 * $t))"
+      val m4 = s"($t * ($s4 - 4 * $s3 * $s1 * $t + " +
+        s"6 * $s2 * $s1 * $s1 * $t * $t - 3 * power($s1, 4) * " +
+        s"power($t, 3)))"
+      Some(s"(CASE WHEN $n > 1 AND ($s2 - $s1 * $s1 * $t) <> 0 THEN " +
+        s"$m4 / ($m2 * $m2) - 3 ELSE NULL END)")
+    })
+    call("kurtosis", 1, a => {
+      val x = s"CAST(${a(0)} AS DOUBLE)" // duck sums doubles, not bigints
+      val n = s"count($x)"; val t = s"(1.0 / count($x))"
+      val s1 = s"sum($x)"; val s2 = s"sum(($x)*($x))"
+      val s3 = s"sum(($x)*($x)*($x))"
+      val s4 = s"sum(($x)*($x)*($x)*($x))"
+      val m2 = s"($t * ($s2 - $s1 * $s1 * $t))"
+      val m4 = s"($t * ($s4 - 4 * $s3 * $s1 * $t + " +
+        s"6 * $s2 * $s1 * $s1 * $t * $t - 3 * power($s1, 4) * " +
+        s"power($t, 3)))"
+      Some(s"(CASE WHEN $n > 3 AND ($s2 - $s1 * $s1 * $t) <> 0 THEN " +
+        s"($n - 1.0) * (($n + 1.0) * $m4 / ($m2 * $m2) - 3 * ($n - 1.0)) " +
+        s"/ (($n - 2.0) * ($n - 3.0)) ELSE NULL END)")
+    })
     // DuckDB admits IGNORE/RESPECT NULLS INSIDE the window function's
     // parens (`lag(v, 1 IGNORE NULLS)`); standard SQL (and Spark) spell
     // it after the call — move it out
-    if (out.toLowerCase.contains("nulls")) {
-      val Ig = """(?i)\s+(IGNORE|RESPECT)\s+NULLS\s*\)""".r
-      out = SqlLex.replace(out, Ig)(m => ") " + m.group(1).toUpperCase + " NULLS ")
-    }
+    val Ig = """(?i)\s+(IGNORE|RESPECT)\s+NULLS\s*\)""".r
+    raw("nulls")(_.replace(Ig)(m => ") " + m.group(1).toUpperCase + " NULLS "))
     // aggregate FILTER over a WINDOW (Spark's FILTER clause is
     // aggregation-only): fold the predicate into the argument — shared
     // with the pre-EXCLUDE pipeline slot, see [[foldWindowFilter]]
-    out = foldWindowFilter(out)
+    raw("filter")(lx => foldWindowFilter(lx.sql))
     // duck's 2-arg map(keys, values) builds from two LISTS. The MAP
     // literal rewrite (clauses phase) also emits varargs map('k', v) —
     // so only LIST-literal operands take the from-arrays form; anything
     // else stays Spark's pair form, which is what the literal path means
-    if (out.toLowerCase.contains("map("))
-      out = fix(out, "map", 2, a =>
-        if (a.forall(_.trim.toLowerCase.startsWith("array(")))
-          Some(s"map_from_arrays(${a(0)}, ${a(1)})")
-        else None)
-    if (out.toLowerCase.contains("generate_subscripts"))
-      out = fix(out, "generate_subscripts", 2, a =>
-        if (a(1).trim == "1")
-          Some(s"explode(sequence(1, size(${a(0)})))") else None)
+    call("map", 2, a =>
+      if (a.forall(_.trim.toLowerCase.startsWith("array(")))
+        Some(s"map_from_arrays(${a(0)}, ${a(1)})")
+      else None)
+    call("generate_subscripts", 2, a =>
+      if (a(1).trim == "1")
+        Some(s"explode(sequence(1, size(${a(0)})))") else None)
     // regexp flags as a trailing options argument: only 'i' (and the
     // no-op 'c') translate — the (?i) inline flag is the exact twin
-    if (out.toLowerCase.contains("regexp_like")) // regexp_matches aliased
-      out = fix(out, "regexp_like", 3, a => a(2).trim match {
-        case "'i'" => Some(s"regexp_like(${a(0)}, '(?i)' || ${a(1)})")
-        case "'c'" => Some(s"regexp_like(${a(0)}, ${a(1)})")
-        case _ => None
-      })
-    if (out.toLowerCase.contains("regexp_extract"))
-      out = fix(out, "regexp_extract", 4, a => a(3).trim match {
-        case "'i'" =>
-          Some(s"regexp_extract(${a(0)}, '(?i)' || ${a(1)}, ${a(2)})")
-        case "'c'" => Some(s"regexp_extract(${a(0)}, ${a(1)}, ${a(2)})")
-        case _ => None
-      })
+    // regexp_matches aliased
+    call("regexp_like", 3, a => a(2).trim match {
+      case "'i'" => Some(s"regexp_like(${a(0)}, '(?i)' || ${a(1)})")
+      case "'c'" => Some(s"regexp_like(${a(0)}, ${a(1)})")
+      case _ => None
+    })
+    call("regexp_extract", 4, a => a(3).trim match {
+      case "'i'" =>
+        Some(s"regexp_extract(${a(0)}, '(?i)' || ${a(1)}, ${a(2)})")
+      case "'c'" => Some(s"regexp_extract(${a(0)}, ${a(1)}, ${a(2)})")
+      case _ => None
+    })
     // regexp_extract with a NAME LIST third argument → a struct of the
     // numbered groups (probed: struct field order follows the list)
-    if (out.toLowerCase.contains("regexp_extract"))
-      out = fix(out, "regexp_extract", 3, a => {
-        val lst = a(2).trim
-        val inner =
-          if (lst.toLowerCase.startsWith("array(") && lst.endsWith(")"))
-            Some(lst.substring(6, lst.length - 1))
-          else if (lst.startsWith("[") && lst.endsWith("]"))
-            Some(lst.substring(1, lst.length - 1))
-          else None
-        inner.flatMap { names0 =>
-          val names = splitTopLevel(names0).map(_.trim)
-          if (names.isEmpty || names.exists(n =>
-              !(n.startsWith("'") && n.endsWith("'")))) None
-          else Some("named_struct(" + names.zipWithIndex.map {
-            case (n, i) =>
-              s"$n, regexp_extract(${a(0)}, ${a(1)}, ${i + 1})"
-          }.mkString(", ") + ")")
-        }
-      })
+    call("regexp_extract", 3, a => {
+      val lst = a(2).trim
+      val inner =
+        if (lst.toLowerCase.startsWith("array(") && lst.endsWith(")"))
+          Some(lst.substring(6, lst.length - 1))
+        else if (lst.startsWith("[") && lst.endsWith("]"))
+          Some(lst.substring(1, lst.length - 1))
+        else None
+      inner.flatMap { names0 =>
+        val names = splitTopLevel(names0).map(_.trim)
+        if (names.isEmpty || names.exists(n =>
+            !(n.startsWith("'") && n.endsWith("'")))) None
+        else Some("named_struct(" + names.zipWithIndex.map {
+          case (n, i) =>
+            s"$n, regexp_extract(${a(0)}, ${a(1)}, ${i + 1})"
+        }.mkString(", ") + ")")
+      }
+    })
     // --- r8 breadth batch 4 (probed) -----------------------------------
     // embedding/list math: sequential left folds mirror DuckDB's loops
     // (probed: cosine [1,2]·[2,4] = 0.9999999999999998 — the dot over
@@ -4704,78 +4487,63 @@ class SqlGateway(val spark: SparkSession) {
     def normFold(a: String): String =
       s"aggregate($a, CAST(0 AS DOUBLE), " +
         s"(gs, gx) -> gs + CAST(gx AS DOUBLE) * gx)"
-    for (fn <- Seq("list_dot_product", "list_inner_product")
-         if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 2, a => Some(dotFold(a(0), a(1))))
-    if (out.toLowerCase.contains("list_cosine_similarity"))
-      out = fix(out, "list_cosine_similarity", 2, a => Some(
-        s"(${dotFold(a(0), a(1))} / " +
-          s"(sqrt(${normFold(a(0))}) * sqrt(${normFold(a(1))})))"))
-    if (out.toLowerCase.contains("list_distance"))
-      out = fix(out, "list_distance", 2, a => Some(
-        s"sqrt(aggregate(zip_with(${a(0)}, ${a(1)}, (gx, gy) -> " +
-          s"(CAST(gx AS DOUBLE) - gy) * (CAST(gx AS DOUBLE) - gy)), " +
-          s"CAST(0 AS DOUBLE), (gs, gv) -> gs + gv))"))
+    for (fn <- Seq("list_dot_product", "list_inner_product"))
+      call(fn, 2, a => Some(dotFold(a(0), a(1))))
+    call("list_cosine_similarity", 2, a => Some(
+      s"(${dotFold(a(0), a(1))} / " +
+        s"(sqrt(${normFold(a(0))}) * sqrt(${normFold(a(1))})))"))
+    call("list_distance", 2, a => Some(
+      s"sqrt(aggregate(zip_with(${a(0)}, ${a(1)}, (gx, gy) -> " +
+        s"(CAST(gx AS DOUBLE) - gy) * (CAST(gx AS DOUBLE) - gy)), " +
+        s"CAST(0 AS DOUBLE), (gs, gv) -> gs + gv))"))
     // 3-vector cross product (DuckDB: ARRAY(3) only; a wrong-sized list
     // errors there — the size guard reproduces that loudly)
-    if (out.toLowerCase.contains("array_cross_product"))
-      out = fix(out, "array_cross_product", 2, a => Some(
-        s"(CASE WHEN size(${a(0)}) != 3 OR size(${a(1)}) != 3 THEN " +
-          s"CAST(raise_error('array_cross_product: 3-element arrays " +
-          s"only') AS ARRAY<DOUBLE>) ELSE array(" +
-          // element_at (1-based), not brackets: a bracket here would be
-          // re-semanticized by duckSubscripts on the analyzed plan
-          s"CAST(element_at(${a(0)}, 2) AS DOUBLE) * element_at(${a(1)}, 3) - " +
-          s"CAST(element_at(${a(0)}, 3) AS DOUBLE) * element_at(${a(1)}, 2), " +
-          s"CAST(element_at(${a(0)}, 3) AS DOUBLE) * element_at(${a(1)}, 1) - " +
-          s"CAST(element_at(${a(0)}, 1) AS DOUBLE) * element_at(${a(1)}, 3), " +
-          s"CAST(element_at(${a(0)}, 1) AS DOUBLE) * element_at(${a(1)}, 2) - " +
-          s"CAST(element_at(${a(0)}, 2) AS DOUBLE) * element_at(${a(1)}, 1)) END)"))
+    call("array_cross_product", 2, a => Some(
+      s"(CASE WHEN size(${a(0)}) != 3 OR size(${a(1)}) != 3 THEN " +
+        s"CAST(raise_error('array_cross_product: 3-element arrays " +
+        s"only') AS ARRAY<DOUBLE>) ELSE array(" +
+        // element_at (1-based), not brackets: a bracket here would be
+        // re-semanticized by duckSubscripts on the analyzed plan
+        s"CAST(element_at(${a(0)}, 2) AS DOUBLE) * element_at(${a(1)}, 3) - " +
+        s"CAST(element_at(${a(0)}, 3) AS DOUBLE) * element_at(${a(1)}, 2), " +
+        s"CAST(element_at(${a(0)}, 3) AS DOUBLE) * element_at(${a(1)}, 1) - " +
+        s"CAST(element_at(${a(0)}, 1) AS DOUBLE) * element_at(${a(1)}, 3), " +
+        s"CAST(element_at(${a(0)}, 1) AS DOUBLE) * element_at(${a(1)}, 2) - " +
+        s"CAST(element_at(${a(0)}, 2) AS DOUBLE) * element_at(${a(1)}, 1)) END)"))
     // list_concat treats a NULL operand as empty (probed) — Spark's
     // concat is NULL-strict; runs AFTER the string-concat fix above so
     // the emitted concat() is never re-rewritten to concat_ws
-    for (fn <- Seq("list_concat", "list_cat", "array_concat", "array_cat")
-         if out.toLowerCase.contains(fn))
-      out = fix(out, fn, -1, a => if (a.isEmpty) None else Some(
+    for (fn <- Seq("list_concat", "list_cat", "array_concat", "array_cat"))
+      call(fn, -1, a => if (a.isEmpty) None else Some(
         s"concat(${a.map(x => s"ifnull($x, array())").mkString(", ")})"))
-    if (out.toLowerCase.contains("list_unique"))
-      out = fix(out, "list_unique", 1, a => Some(
-        s"size(array_distinct(filter(${a(0)}, gx -> gx IS NOT NULL)))"))
-    if (out.toLowerCase.contains("list_any_value"))
-      out = fix(out, "list_any_value", 1, a => Some(
-        s"try_element_at(filter(${a(0)}, gx -> gx IS NOT NULL), 1)"))
-    if (out.toLowerCase.contains("array_pop_front"))
-      out = fix(out, "array_pop_front", 1, a => Some(
-        s"slice(${a(0)}, 2, greatest(size(${a(0)}) - 1, 0))"))
-    if (out.toLowerCase.contains("array_pop_back"))
-      out = fix(out, "array_pop_back", 1, a => Some(
-        s"slice(${a(0)}, 1, greatest(size(${a(0)}) - 1, 0))"))
+    call("list_unique", 1, a => Some(
+      s"size(array_distinct(filter(${a(0)}, gx -> gx IS NOT NULL)))"))
+    call("list_any_value", 1, a => Some(
+      s"try_element_at(filter(${a(0)}, gx -> gx IS NOT NULL), 1)"))
+    call("array_pop_front", 1, a => Some(
+      s"slice(${a(0)}, 2, greatest(size(${a(0)}) - 1, 0))"))
+    call("array_pop_back", 1, a => Some(
+      s"slice(${a(0)}, 1, greatest(size(${a(0)}) - 1, 0))"))
     // LIKE-with-escape function spellings
-    if (out.toLowerCase.contains("like_escape")) {
-      out = fix(out, "like_escape", 3, a =>
-        Some(s"((${a(0)}) LIKE ${a(1)} ESCAPE ${a(2)})"))
-      out = fix(out, "not_like_escape", 3, a =>
-        Some(s"((${a(0)}) NOT LIKE ${a(1)} ESCAPE ${a(2)})"))
-      out = fix(out, "ilike_escape", 3, a =>
-        Some(s"(lower(${a(0)}) LIKE lower(${a(1)}) ESCAPE ${a(2)})"))
-      out = fix(out, "not_ilike_escape", 3, a =>
-        Some(s"(lower(${a(0)}) NOT LIKE lower(${a(1)}) ESCAPE ${a(2)})"))
-    }
-    if (out.toLowerCase.contains("ord"))
-      out = fix(out, "ord", 1, a => Some(s"ascii(${a(0)})"))
+    call("like_escape", 3, a =>
+      Some(s"((${a(0)}) LIKE ${a(1)} ESCAPE ${a(2)})"))
+    call("not_like_escape", 3, a =>
+      Some(s"((${a(0)}) NOT LIKE ${a(1)} ESCAPE ${a(2)})"))
+    call("ilike_escape", 3, a =>
+      Some(s"(lower(${a(0)}) LIKE lower(${a(1)}) ESCAPE ${a(2)})"))
+    call("not_ilike_escape", 3, a =>
+      Some(s"(lower(${a(0)}) NOT LIKE lower(${a(1)}) ESCAPE ${a(2)})"))
+    call("ord", 1, a => Some(s"ascii(${a(0)})"))
     // quantified subquery comparisons with exact IN twins: `= ANY (…)`
     // ≡ IN, `<> ALL (…)` ≡ NOT IN (same NULL semantics); all other
     // quantifier/operator combinations pass through and refuse
-    if (out.toLowerCase.contains("any") || out.toLowerCase.contains("all")) {
-      def rep(re: scala.util.matching.Regex, sub: String): Unit =
-        out = SqlLex.replace(out, re)(_ => sub)
-      rep("""(?is)=\s*ANY\s*\(""".r, " IN (")
-      rep("""(?is)(?:<>|!=)\s*ALL\s*\(""".r, " NOT IN (")
-    }
+    val EqAny = """(?is)=\s*ANY\s*\(""".r
+    raw("any")(_.replace(EqAny)(_ => " IN ("))
+    val NeAll = """(?is)(?:<>|!=)\s*ALL\s*\(""".r
+    raw("all")(_.replace(NeAll)(_ => " NOT IN ("))
     // frame `EXCLUDE NO OTHERS` is the default — strip it
-    if (out.toLowerCase.contains("exclude")) {
-      out = SqlLex.replace(out, """(?is)\s+EXCLUDE\s+NO\s+OTHERS""".r)(_ => " ")
-    }
+    val NoOthers = """(?is)\s+EXCLUDE\s+NO\s+OTHERS""".r
+    raw("exclude")(_.replace(NoOthers)(_ => " "))
     // two-parameter lambdas: DuckDB passes a 1-BASED element index as
     // the second parameter (probed: list_transform([1,2,3],(x,i)->x+i)
     // = [2,4,6]); Spark's transform/filter pass 0-based. Every
@@ -4783,9 +4551,8 @@ class SqlGateway(val spark: SparkSession) {
     // arrive via the list_transform/list_filter aliases), so each use of
     // the index variable in the body shifts by one. Masked-view
     // word substitution; internal rewrites only emit 1-param lambdas.
-    for (fn <- Seq("transform", "filter")
-         if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 2, a => {
+    for (fn <- Seq("transform", "filter"))
+      call(fn, 2, a => {
         val Lam2 = ("""(?is)^\(\s*([A-Za-z_]\w*)\s*,\s*([A-Za-z_]\w*)\s*""" +
           """\)\s*->\s*(.+)$""").r
         a(1).trim match {
@@ -4805,8 +4572,8 @@ class SqlGateway(val spark: SparkSession) {
     // end = begin+len; bounds swap when len < 0; clamp to [0, length].
     // Positive-literal starts with non-negative literal lengths pass
     // through — Spark's native substring is already exact there.
-    for (fn <- Seq("substr", "substring") if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 3, a => intArgs(a.tail) match {
+    for (fn <- Seq("substr", "substring"))
+      call(fn, 3, a => intArgs(a.tail) match {
         case Some(Seq(st, ln)) if st > 0 && ln >= 0 => None
         case _ =>
           val (s, st, ln) = (a(0), a(1), a(2))
@@ -4824,121 +4591,104 @@ class SqlGateway(val spark: SparkSession) {
       })
     // list element extraction spellings (1-based, NULL out of range —
     // probed); array_extract on a STRING operand refuses downstream
-    for (fn <- Seq("list_extract", "list_element", "array_extract")
-         if out.toLowerCase.contains(fn))
-      out = fix(out, fn, 2, a =>
+    for (fn <- Seq("list_extract", "list_element", "array_extract"))
+      call(fn, 2, a =>
         Some(s"try_element_at(${a(0)}, ${a(1)})"))
     // array_slice with a STEP: elements at positions b, b+step, … e
     // (1-based inclusive; negative steps walk backward — probed)
-    if (out.toLowerCase.contains("array_slice")) // 2/3-arg handled natively
-      out = fix(out, "array_slice", 4, a => Some(
-        s"transform(sequence(${a(1)}, ${a(2)}, ${a(3)}), " +
-          s"gi -> try_element_at(${a(0)}, gi))"))
-    if (out.toLowerCase.contains("version"))
-      out = fix(out, "version", -1, a =>
-        if (a.isEmpty || a == Seq("")) Some("'v1.0.0'") else None)
+    // 2/3-arg handled natively
+    call("array_slice", 4, a => Some(
+      s"transform(sequence(${a(1)}, ${a(2)}, ${a(3)}), " +
+        s"gi -> try_element_at(${a(0)}, gi))"))
+    call("version", -1, a =>
+      if (a.isEmpty || a == Seq("")) Some("'v1.0.0'") else None)
     // histogram AGGREGATE: sorted-key value→count map, NULLs dropped
     // (probed — the list_aggregate 'histogram' arm's aggregate twin)
-    if (out.toLowerCase.contains("histogram")) {
-      out = fix(out, "histogram", 1, a => {
-        val lst = s"sort_array(collect_list(${a(0)}))"
-        Some(s"map_from_entries(transform(array_distinct($lst), " +
-          s"gv -> struct(gv, size(filter($lst, ge -> ge = gv)))))")
-      })
-    }
+    call("histogram", 1, a => {
+      val lst = s"sort_array(collect_list(${a(0)}))"
+      Some(s"map_from_entries(transform(array_distinct($lst), " +
+        s"gv -> struct(gv, size(filter($lst, ge -> ge = gv)))))")
+    })
     // left/right with a NEGATIVE count trim from the opposite end in
     // DuckDB (probed: left('hello',-2)='hel'); Spark returns '' — spell
     // the general form out
-    if (out.toLowerCase.contains("left"))
-      out = fix(out, "left", 2, a => Some(
-        s"substr(${a(0)}, 1, CASE WHEN ${a(1)} < 0 " +
-          s"THEN greatest(length(${a(0)}) + ${a(1)}, 0) ELSE ${a(1)} END)"))
-    if (out.toLowerCase.contains("right"))
-      out = fix(out, "right", 2, a => Some(
-        s"substr(${a(0)}, CASE WHEN ${a(1)} < 0 THEN (0 - (${a(1)})) + 1 " +
-          s"ELSE greatest(length(${a(0)}) - ${a(1)} + 1, 1) END, " +
-          s"CASE WHEN ${a(1)} < 0 THEN length(${a(0)}) " +
-          s"ELSE least(${a(1)}, length(${a(0)})) END)"))
+    call("left", 2, a => Some(
+      s"substr(${a(0)}, 1, CASE WHEN ${a(1)} < 0 " +
+        s"THEN greatest(length(${a(0)}) + ${a(1)}, 0) ELSE ${a(1)} END)"))
+    call("right", 2, a => Some(
+      s"substr(${a(0)}, CASE WHEN ${a(1)} < 0 THEN (0 - (${a(1)})) + 1 " +
+        s"ELSE greatest(length(${a(0)}) - ${a(1)} + 1, 1) END, " +
+        s"CASE WHEN ${a(1)} < 0 THEN length(${a(0)}) " +
+        s"ELSE least(${a(1)}, length(${a(0)})) END)"))
     // list_has_any: TRUE only on a shared NON-NULL element; FALSE when
     // the only overlap is NULL (probed) — Spark arrays_overlap answers
     // NULL there, so pin the FALSE arm; NULL list in → NULL out
-    if (out.toLowerCase.contains("list_has_any"))
-      out = fix(out, "list_has_any", 2, a => Some(
-        s"(CASE WHEN ${a(0)} IS NULL OR ${a(1)} IS NULL THEN NULL " +
-          s"ELSE coalesce(arrays_overlap(${a(0)}, ${a(1)}), false) END)"))
+    call("list_has_any", 2, a => Some(
+      s"(CASE WHEN ${a(0)} IS NULL OR ${a(1)} IS NULL THEN NULL " +
+        s"ELSE coalesce(arrays_overlap(${a(0)}, ${a(1)}), false) END)"))
     // list_has_all: NULL elements of the needle list are ignored (probed:
     // [1,2] ⊇ [NULL] is TRUE); array_except is null-safe set difference
-    if (out.toLowerCase.contains("list_has_all"))
-      out = fix(out, "list_has_all", 2, a => Some(
-        s"(CASE WHEN ${a(0)} IS NULL OR ${a(1)} IS NULL THEN NULL " +
-          s"ELSE size(array_except(filter(${a(1)}, graft_e -> " +
-          s"graft_e IS NOT NULL), ${a(0)})) = 0 END)"))
+    call("list_has_all", 2, a => Some(
+      s"(CASE WHEN ${a(0)} IS NULL OR ${a(1)} IS NULL THEN NULL " +
+        s"ELSE size(array_except(filter(${a(1)}, graft_e -> " +
+        s"graft_e IS NOT NULL), ${a(0)})) = 0 END)"))
     // list_resize(l, n[, v]): truncate or pad with v (default NULL) to
     // exactly n elements. sequence(0, n) sidesteps Spark's descending
     // sequence(1, 0) corner; the CASE guards element_at in ANSI mode.
-    if (out.toLowerCase.contains("list_resize"))
-      out = fix(out, "list_resize", -1, a =>
-        if (a.length != 2 && a.length != 3) None
-        else {
-          val pad = if (a.length == 3) a(2) else "NULL"
-          Some(s"slice(transform(sequence(0, ${a(1)}), graft_i -> " +
-            s"CASE WHEN graft_i = 0 THEN NULL " +
-            s"WHEN graft_i <= size(${a(0)}) THEN element_at(${a(0)}, graft_i) " +
-            s"ELSE $pad END), 2, ${a(1)})")
-        })
+    call("list_resize", -1, a =>
+      if (a.length != 2 && a.length != 3) None
+      else {
+        val pad = if (a.length == 3) a(2) else "NULL"
+        Some(s"slice(transform(sequence(0, ${a(1)}), graft_i -> " +
+          s"CASE WHEN graft_i = 0 THEN NULL " +
+          s"WHEN graft_i <= size(${a(0)}) THEN element_at(${a(0)}, graft_i) " +
+          s"ELSE $pad END), 2, ${a(1)})")
+      })
     // struct_insert on a struct-literal operand: append the named fields
     // to the (already rewritten) named_struct constructor — the new field
     // lands LAST, matching DuckDB's field order (probed). A non-literal
     // struct operand has no textual field list and refuses.
-    if (out.toLowerCase.contains("struct_insert"))
-      out = fix(out, "struct_insert", -1, a => {
-        val NamedArg = """(?is)^([A-Za-z_]\w*)\s*:=\s*(.+)$""".r
-        val base = a.head.trim
-        if (a.length < 2 || !base.toLowerCase.startsWith("named_struct(") ||
-            !base.endsWith(")")) None
-        else {
-          val adds = a.tail.map(_.trim).map {
-            case NamedArg(n, v) => Some(s"'$n', $v")
-            case _ => None
-          }
-          if (adds.exists(_.isEmpty)) None
-          else {
-            val inner = base.substring("named_struct(".length, base.length - 1)
-            Some(s"named_struct($inner, ${adds.flatten.mkString(", ")})")
-          }
+    call("struct_insert", -1, a => {
+      val NamedArg = """(?is)^([A-Za-z_]\w*)\s*:=\s*(.+)$""".r
+      val base = a.head.trim
+      if (a.length < 2 || !base.toLowerCase.startsWith("named_struct(") ||
+          !base.endsWith(")")) None
+      else {
+        val adds = a.tail.map(_.trim).map {
+          case NamedArg(n, v) => Some(s"'$n', $v")
+          case _ => None
         }
-      })
+        if (adds.exists(_.isEmpty)) None
+        else {
+          val inner = base.substring("named_struct(".length, base.length - 1)
+          Some(s"named_struct($inner, ${adds.flatten.mkString(", ")})")
+        }
+      }
+    })
     // array_distinct is the same DuckDB function as list_distinct and
     // drops NULLs too (probed: [1,1,2,NULL] → [2,1]); runs BEFORE the
     // list_* fixes so their emitted array_distinct(filter(...)) text is
     // not re-wrapped
-    if (out.toLowerCase.contains("array_distinct"))
-      out = fix(out, "array_distinct", 1, a => Some(
-        s"array_distinct(filter(${a.head}, graft_e -> graft_e IS NOT NULL))"))
-    // list_unique = COUNT of distinct non-null elements (verified: NULL
-    // not counted); list_distinct drops NULLs (Spark array_distinct keeps)
-    if (out.toLowerCase.contains("list_unique"))
-      out = fix(out, "list_unique", 1, a => Some(
-        s"size(array_distinct(filter(${a.head}, graft_e -> graft_e IS NOT NULL)))"))
-    if (out.toLowerCase.contains("list_distinct"))
-      out = fix(out, "list_distinct", 1, a => Some(
-        s"array_distinct(filter(${a.head}, graft_e -> graft_e IS NOT NULL))"))
+    call("array_distinct", 1, a => Some(
+      s"array_distinct(filter(${a.head}, graft_e -> graft_e IS NOT NULL))"))
+    // list_distinct drops NULLs (Spark array_distinct keeps)
+    call("list_distinct", 1, a => Some(
+      s"array_distinct(filter(${a.head}, graft_e -> graft_e IS NOT NULL))"))
     // array_to_string: DuckDB yields NULL for an EMPTY list (verified),
     // array_join yields '' — and '' is a legitimate output for [''], so
     // the guard must test emptiness, not the result
-    if (out.toLowerCase.contains("array_to_string"))
-      out = fix(out, "array_to_string", 2, a => Some(
-        s"(CASE WHEN size(${a(0)}) = 0 THEN NULL " +
-        s"ELSE array_join(${a(0)}, ${a(1)}) END)"))
+    call("array_to_string", 2, a => Some(
+      s"(CASE WHEN size(${a(0)}) = 0 THEN NULL " +
+      s"ELSE array_join(${a(0)}, ${a(1)}) END)"))
     // list_slice/array_slice: 1-based INCLUSIVE [a,b] (clamped) → slice's
     // (start, length); only positive literal bounds are provably
     // equivalent (negative indexes count from the end differently)
-    for (fn <- Seq("list_slice", "array_slice")
-         if out.toLowerCase.contains(fn)) {
-      // 4-arg form: step slice (probed: identical to x[b:e:s])
-      out = fix(out, fn, 4, a => Some(
-        s"graft_duck_slice_step(${a(0)}, ${a(1)}, ${a(2)}, ${a(3)}, true)"))
-      out = fix(out, fn, 3, a => {
+    // 4-arg form: step slice (probed: identical to x[b:e:s]); the 4-arg
+    // array_slice rule above runs first
+    call("list_slice", 4, a => Some(
+      s"graft_duck_slice_step(${a(0)}, ${a(1)}, ${a(2)}, ${a(3)}, true)"))
+    for (fn <- Seq("list_slice", "array_slice"))
+      call(fn, 3, a => {
         // a string-literal operand slices HERE (duckdb's array_slice works
         // on strings; Spark's slice() does not) — any int bounds, probed
         val strLit = SqlLex.plainLiteral(a(0))
@@ -4952,7 +4702,6 @@ class SqlGateway(val spark: SparkSession) {
             Some(s"graft_duck_slice(${a(0)}, ${a(1)}, ${a(2)}, true, true)")
         }
       })
-    }
     // range/generate_series (scalar list form): range is half-open,
     // generate_series inclusive. Literal-int arguments compute the exact
     // list here (covers the empty corners Spark's sequence() errors on);
@@ -4971,47 +4720,98 @@ class SqlGateway(val spark: SparkSession) {
       val w = s.substring(j + 1, e + 1).toLowerCase
       w != "from" && w != "join"
     }
-    if (out.toLowerCase.contains("range("))
-      out = fix(out, "range", -1, a => intArgs(a).flatMap {
-        case Seq(n) => series(0, n, 1, inclusive = false)
-        case Seq(s, e) => series(s, e, 1, inclusive = false)
-        case Seq(s, e, st) => series(s, e, st, inclusive = false)
-        case _ => None
-      }, allowAt = scalarPos)
-    if (out.toLowerCase.contains("generate_series"))
-      out = fix(out, "generate_series", -1, a => (intArgs(a) match {
-        case Some(Seq(n)) => series(0, n, 1, inclusive = true)
-        case Some(Seq(s, e)) => series(s, e, 1, inclusive = true)
-        case Some(Seq(s, e, st)) => series(s, e, st, inclusive = true)
-        case None if a.length == 3 => Some(s"sequence(${a(0)}, ${a(1)}, ${a(2)})")
-        case _ => None
-      }), allowAt = scalarPos)
+    call("range", -1, a => intArgs(a).flatMap {
+      case Seq(n) => series(0, n, 1, inclusive = false)
+      case Seq(s, e) => series(s, e, 1, inclusive = false)
+      case Seq(s, e, st) => series(s, e, st, inclusive = false)
+      case _ => None
+    }, allowAt = scalarPos)
+    call("generate_series", -1, a => (intArgs(a) match {
+      case Some(Seq(n)) => series(0, n, 1, inclusive = true)
+      case Some(Seq(s, e)) => series(s, e, 1, inclusive = true)
+      case Some(Seq(s, e, st)) => series(s, e, st, inclusive = true)
+      case None if a.length == 3 => Some(s"sequence(${a(0)}, ${a(1)}, ${a(2)})")
+      case _ => None
+    }), allowAt = scalarPos)
     // strftime with a LITERAL format string whose every %-code has an
     // exactly-equivalent JVM pattern → codegen'd date_format; any other
     // format (exotic codes like %-y/%U/%f, or a PER-ROW format column)
     // falls back to the native full-code-table duck_strftime expression.
     // strptime keeps the translate-or-refuse posture (parsing has no
     // native fallback).
-    if (out.toLowerCase.contains("strftime"))
-      out = fix(out, "strftime", 2, a =>
-        SqlLex.plainLiteral(a(1)).flatMap(strftimeToJavaPattern).map(p =>
-          s"date_format(${a(0)}, '${p.replace("'", "''")}')")
-          .orElse(Some(s"duck_strftime(${a(0)}, ${a(1)})")))
-    if (out.toLowerCase.contains("strptime"))
-      out = fix(out, "strptime", 2, a =>
-        SqlLex.plainLiteral(a(1)).flatMap(strftimeToJavaPattern).map(p =>
-          s"to_timestamp(${a(0)}, '${p.replace("'", "''")}')"))
+    call("strftime", 2, a =>
+      SqlLex.plainLiteral(a(1)).flatMap(strftimeToJavaPattern).map(p =>
+        s"date_format(${a(0)}, '${p.replace("'", "''")}')")
+        .orElse(Some(s"duck_strftime(${a(0)}, ${a(1)})")))
+    call("strptime", 2, a =>
+      SqlLex.plainLiteral(a(1)).flatMap(strftimeToJavaPattern).map(p =>
+        s"to_timestamp(${a(0)}, '${p.replace("'", "''")}')"))
     // '01…'::BIT literal casts erase to the model string (BIT stores as a
     // '0'/'1' text — cornerType). LAST in this pass: the bit_* fixes above
     // key on the marker. Literal contents are read from the raw text, at
     // code positions only; non-literal ::BIT operands
     // stay and refuse downstream rather than skipping DuckDB's validation.
-    if (out.toUpperCase.contains("::BIT") ||
-        out.toUpperCase.matches("(?s).*::\\s*BIT.*")) {
-      val BitLit = """'([01]+)'\s*::\s*BIT(?:STRING)?\b""".r
-      out = SqlLex(out).replaceRaw(BitLit)(m => s"'${m.group(1)}'")
+    val BitLit = """'([01]+)'\s*::\s*BIT(?:STRING)?\b""".r
+    raw("::")(_.replaceRaw(BitLit)(m => s"'${m.group(1)}'"))
+    steps.result()
+  }
+
+  /** Pin DuckDB defaults: run [[duckDefaultSteps]] in order over one
+    * statement. A call rule runs when the lowercased text holds its name
+    * (a raw pass when it holds one of its triggers); the text is lowercased
+    * and lexed once per version, not once per step. */
+  private def rewriteDuckDefaults(sql: String): String = {
+    var out = sql
+    var lower = sql.toLowerCase
+    var lex: SqlLex = null
+    def lexed: SqlLex = { if (lex == null) lex = SqlLex(out); lex }
+    for (step <- duckDefaultSteps) {
+      val next = step match {
+        case c: DuckCall if lower.contains(c.name) => rewriteCalls(lexed, c)
+        case r: DuckRaw if r.when.exists(lower.contains) => r.pass(lexed)
+        case _ => out
+      }
+      if (next ne out) { out = next; lower = out.toLowerCase; lex = null }
     }
     out
+  }
+
+  /** The lexed text with every call of `c` rewritten. Calls are found, and
+    * their closing parens matched, on the [[SqlLex]] masked view. A call's
+    * arguments are rewritten before the call itself, so each nested
+    * same-name call is rewritten exactly once, and no rule ever sees its
+    * own output. */
+  private def rewriteCalls(lx: SqlLex, c: DuckCall): String = {
+    val s = lx.sql
+    val calls = lx.find(c.re).map(m => (m.start, m.end, lx.close(m.end - 1)))
+      .filter(_._3 >= 0).toVector
+    var k = 0
+    var rewrote = false
+    // s(from until to), every call that starts inside it rewritten
+    def span(from: Int, to: Int): String = {
+      val sb = new java.lang.StringBuilder
+      var last = from
+      while (k < calls.length && calls(k)._1 < to) {
+        val (start, open, close) = calls(k)
+        k += 1
+        val args = span(open, close)
+        val built =
+          if (!c.allowAt(s, start)) None
+          else {
+            val a = splitTopLevel(args).map(_.trim)
+            if (c.arity < 0 || a.length == c.arity) c.rebuild(a) else None
+          }
+        sb.append(s, last, start)
+        built match {
+          case Some(b) => rewrote = true; sb.append(b)
+          case None => sb.append(s, start, open).append(args).append(')')
+        }
+        last = close + 1
+      }
+      sb.append(s, last, to).toString
+    }
+    if (calls.isEmpty) s
+    else { val out = span(0, s.length); if (rewrote) out else s }
   }
 
   private def intArgs(a: Seq[String]): Option[Seq[Long]] = {
@@ -8525,4 +8325,26 @@ object SqlGateway {
     * reports the right error without extra state. */
   final case class SeqState(next: Long, inc: Long, min: Long, max: Long,
       cycle: Boolean)
+
+  /** One step of the gateway's DuckDB-default rewrite: a call rule or a
+    * raw pass. */
+  private[graft] sealed trait DuckStep
+
+  /** Rewrites every `name(…)` call with `arity` arguments (< 0 = any
+    * arity) to `rebuild(args)`; None leaves the call as written (it then
+    * refuses downstream rather than being guessed at). `allowAt(text, i)`
+    * can veto a call site by its position (e.g. table vs scalar). */
+  private[graft] final case class DuckCall(name: String, arity: Int,
+      rebuild: Seq[String] => Option[String],
+      allowAt: (String, Int) => Boolean) extends DuckStep {
+    val re: scala.util.matching.Regex =
+      ("""(?i)(?<![\w.$])""" + name + """\s*\(""").r
+  }
+
+  /** A whole-statement pass over the text's lex, for the clause and
+    * operator spellings that are not one function call. It runs when the
+    * lowercased text contains one of `when`; a trigger that is more than a
+    * substring stays inside the pass. */
+  private[graft] final case class DuckRaw(when: Seq[String],
+      pass: SqlLex => String) extends DuckStep
 }

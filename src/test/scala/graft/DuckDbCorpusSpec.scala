@@ -4543,10 +4543,33 @@ class DuckDbCorpusSpec extends SparkTestBase {
     q("SELECT 1 AS \"/*c\", 2 AS \"*/d\"", Seq(1, 2)),
     q("SELECT 1 AS \"strpos(x)\"", Seq(1)))
 
+  // DuckDB function rewrites touch only the calls they rewrite (`__xx_`
+  // text in a literal or a name stays), rewrite a nested same-name call
+  // once, arguments first, and read `name (…)` with a space as a call.
+  // Each value probed against DuckDB 1.0.0.
+  private def corpusR: Seq[C] = Seq(
+    q("SELECT 'x__ag_y' AS s", Seq("x__ag_y")),
+    q("SELECT 'x__lg_y' AS s", Seq("x__lg_y")),
+    q("SELECT sqrt(4) AS r, 'a__dg_b' AS s", Seq(2, "a__dg_b")),
+    q("SELECT abs(-3) AS r, 'q__ac_z' AS s", Seq(3, "q__ac_z")),
+    q("SELECT 1 AS \"__ag_col\"", Seq(1)),
+    q("SELECT regexp_replace(regexp_replace('aaa','a','b'),'b','c') AS r",
+      Seq("caa")),
+    q("SELECT struct_pack(a := struct_pack(b := 1)) AS r", Seq(Seq(Seq(1)))),
+    q("SELECT regexp_extract(regexp_extract('abc1def2','[a-z]+[0-9]')," +
+      "'[0-9]') AS r", Seq("1")),
+    err("SELECT sqrt(sqrt(-1)) AS r", "Out of Range"),
+    q("SELECT even (-0.1) AS a, even (3) AS b, xor (5, 3) AS c",
+      Seq(-2, 4, 6)),
+    q("SELECT cot (1.0) AS d", Seq(0.6420926159343306)),
+    q("SELECT epoch (TIMESTAMP '2020-01-01 00:01:30.5') AS e",
+      Seq(1577836890.5)),
+    q("SELECT format ('{}-{}', 1, 'a') AS f", Seq("1-a")))
+
   lazy val corpus: Seq[C] =
     corpusA ++ corpusB ++ corpusC ++ corpusD ++ corpusE ++ corpusF ++
       corpusG ++ corpusH ++ corpusI ++ corpusJ ++ corpusK ++ corpusL ++
-      corpusM ++ corpusN ++ corpusO ++ corpusP ++ corpusQ
+      corpusM ++ corpusN ++ corpusO ++ corpusP ++ corpusQ ++ corpusR
 
   test("quoted identifiers and literals are lexed once: every probed " +
        "case answers like DuckDB (no refusal), with DuckDB's column names") {
@@ -4554,6 +4577,40 @@ class DuckDbCorpusSpec extends SparkTestBase {
     assert(notMatched.isEmpty, notMatched.mkString("\n"))
     assert(gw.query("SELECT 1 AS \"/*c\", 2 AS \"*/d\"").columns == Seq("/*c", "*/d"))
     assert(gw.query("SELECT 1 AS \"strpos(x)\"").columns == Seq("strpos(x)"))
+  }
+
+  test("DuckDB function rewrites leave user text alone and rewrite nested " +
+       "same-name calls once: every probed case answers like DuckDB") {
+    val notMatched = corpusR.map(c => c -> runOne(c)).filterNot {
+      case (c, Refused(m)) => c.expectErr.exists(m.contains)
+      case (_, o) => o == Matched
+    }.map { case (c, o) => s"${c.sql}: $o" }
+    assert(notMatched.isEmpty, notMatched.mkString("\n"))
+    assert(gw.query("SELECT 1 AS \"__ag_col\"").columns == Seq("__ag_col"))
+    assert(gw.query("SELECT struct_pack(a := struct_pack(b := 1)) AS r")
+      .types == Seq("STRUCT(a STRUCT(b INTEGER))"))
+  }
+
+  test("each DuckDB function rule is registered once per (name, arity)") {
+    // same-name rules that overlap on purpose, as (name, first arity,
+    // later arity): the first takes only the shapes named in the reason
+    val ordered = Map(
+      ("date_part", 2, 2) -> "the part-LIST form runs before the literal part",
+      ("datepart", 2, 2) -> "the part-LIST form runs before the literal part",
+      ("timezone", 2, -1) -> "direction dispatch first; 'UTC' and 1-arg after",
+      ("list_concat", 2, -1) -> "NULL-side 2-arg form first; other arities after",
+      ("product", 1, 1) -> "ORDER BY strip (x ORDER BY y) before the aggregate",
+      ("entropy", 1, 1) -> "ORDER BY strip (x ORDER BY y) before the aggregate",
+      ("skewness", 1, 1) -> "ORDER BY strip (x ORDER BY y) before the aggregate",
+      ("kurtosis", 1, 1) -> "ORDER BY strip (x ORDER BY y) before the aggregate")
+    val calls = gw.duckDefaultSteps.collect { case c: SqlGateway.DuckCall => c }
+    val twins = for {
+      (a, i) <- calls.zipWithIndex
+      b <- calls.drop(i + 1)
+      if a.name == b.name && (a.arity == b.arity || a.arity < 0 || b.arity < 0)
+      if !ordered.contains((a.name, a.arity, b.arity))
+    } yield s"${a.name}/${a.arity} then ${b.name}/${b.arity}"
+    assert(twins.isEmpty, twins.mkString("rules registered twice:\n", "\n", ""))
   }
 
   test("every DuckDB-corpus statement is DuckDB-correct or refuses — " +

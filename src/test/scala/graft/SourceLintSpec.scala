@@ -11,6 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * shapes fail the build. The two CSV sniffers in SqlGateway track `"` in
   * CSV text, not SQL, and are exempt by name.
   *
+  * Whether a statement needs a DuckDB function rule is decided once, by
+  * `rewriteDuckDefaults`' dispatcher from the rule's name: hand-written
+  * per-rule presence checks drifted from the names they guarded (dead
+  * twin rules, skipped `xor (` spellings), and marker strings stripped
+  * after a rule rewrote user text that happened to contain them.
+  *
   * The session conf is known only to `SessionProfile.scala`: hand-copied
   * `SparkSession.builder` chains drifted from the benchmarked conf, and
   * the environment knobs that once overrode it are constants now. */
@@ -69,6 +75,33 @@ class SourceLintSpec extends AnyFunSuite {
         }
       }
     assert(hits.isEmpty, hits.mkString("quote-tracking scans:\n", "\n", ""))
+  }
+
+  test("the DuckDB-default rewrite has no hand-written presence check " +
+       "or per-rule fix call") {
+    val ls = lines(new java.io.File(engineDir, "SqlGateway.scala"))
+    val fn = ls.indexWhere(_.contains("def rewriteDuckDefaults("))
+    assert(fn >= 0, "rewriteDuckDefaults not found")
+    // from the rule table (or the function, when it holds the rules
+    // itself) to the end of rewriteDuckDefaults
+    val start = ls.indexWhere(l => l.contains("val duckDefaultSteps") ||
+      l.contains("def rewriteDuckDefaults("))
+    val end = ls.indexWhere(_ == "  }", fn)
+    val Guard = """out\.toLowerCase\.contains\(|\bfix\(out,""".r
+    val hits = (start to end).collect {
+      case i if Guard.findFirstIn(ls(i)).isDefined =>
+        s"SqlGateway.scala:${i + 1}: ${ls(i).trim}"
+    }
+    assert(hits.isEmpty, hits.mkString("hand-written rule guards:\n", "\n", ""))
+  }
+
+  test("no marker strip in engine/") {
+    assert(engineDir.isDirectory, s"run from the repository root: $engineDir")
+    val hits = scalaFiles(engineDir).flatMap(f => lines(f).zipWithIndex.collect {
+      case (l, i) if l.contains(".replace(\"__") =>
+        s"${f.getPath}:${i + 1}: ${l.trim}"
+    })
+    assert(hits.isEmpty, hits.mkString("marker strips:\n", "\n", ""))
   }
 
   test("SparkSession.builder appears in src/main only in SessionProfile") {
