@@ -4594,12 +4594,6 @@ class SqlGateway(val spark: SparkSession) {
     for (fn <- Seq("list_extract", "list_element", "array_extract"))
       call(fn, 2, a =>
         Some(s"try_element_at(${a(0)}, ${a(1)})"))
-    // array_slice with a STEP: elements at positions b, b+step, … e
-    // (1-based inclusive; negative steps walk backward — probed)
-    // 2/3-arg handled natively
-    call("array_slice", 4, a => Some(
-      s"transform(sequence(${a(1)}, ${a(2)}, ${a(3)}), " +
-        s"gi -> try_element_at(${a(0)}, gi))"))
     call("version", -1, a =>
       if (a.isEmpty || a == Seq("")) Some("'v1.0.0'") else None)
     // histogram AGGREGATE: sorted-key value→count map, NULLs dropped
@@ -4683,11 +4677,11 @@ class SqlGateway(val spark: SparkSession) {
     // list_slice/array_slice: 1-based INCLUSIVE [a,b] (clamped) → slice's
     // (start, length); only positive literal bounds are provably
     // equivalent (negative indexes count from the end differently)
-    // 4-arg form: step slice (probed: identical to x[b:e:s]); the 4-arg
-    // array_slice rule above runs first
-    call("list_slice", 4, a => Some(
-      s"graft_duck_slice_step(${a(0)}, ${a(1)}, ${a(2)}, ${a(3)}, true)"))
-    for (fn <- Seq("list_slice", "array_slice"))
+    // 4-arg form: step slice (probed: identical to x[b:e:s], bounds
+    // clamped to the list; negative steps walk backward)
+    for (fn <- Seq("list_slice", "array_slice")) {
+      call(fn, 4, a => Some(
+        s"graft_duck_slice_step(${a(0)}, ${a(1)}, ${a(2)}, ${a(3)}, true)"))
       call(fn, 3, a => {
         // a string-literal operand slices HERE (duckdb's array_slice works
         // on strings; Spark's slice() does not) — any int bounds, probed
@@ -4702,6 +4696,7 @@ class SqlGateway(val spark: SparkSession) {
             Some(s"graft_duck_slice(${a(0)}, ${a(1)}, ${a(2)}, true, true)")
         }
       })
+    }
     // range/generate_series (scalar list form): range is half-open,
     // generate_series inclusive. Literal-int arguments compute the exact
     // list here (covers the empty corners Spark's sequence() errors on);
@@ -4751,7 +4746,7 @@ class SqlGateway(val spark: SparkSession) {
     // key on the marker. Literal contents are read from the raw text, at
     // code positions only; non-literal ::BIT operands
     // stay and refuse downstream rather than skipping DuckDB's validation.
-    val BitLit = """'([01]+)'\s*::\s*BIT(?:STRING)?\b""".r
+    val BitLit = """(?i)'([01]+)'\s*::\s*BIT(?:STRING)?\b""".r
     raw("::")(_.replaceRaw(BitLit)(m => s"'${m.group(1)}'"))
     steps.result()
   }
@@ -6835,19 +6830,23 @@ class SqlGateway(val spark: SparkSession) {
     val dups = nonNull
       .agg((count(lit(1)) - countDistinct(col(cols.head), cols.tail.map(col): _*))
         .as("__d")).collect().head.getAs[Long]("__d")
-    if (dups > 0)
-      throw new IllegalArgumentException(
-        s"$what constraint failed: duplicate key on $table(${cols.mkString(",")})")
+    if (dups > 0) throw uniqueViolation(table, cols, what)
   }
+
+  private def uniqueViolation(table: String, cols: Seq[String], what: String) =
+    new IllegalArgumentException(
+      s"$what constraint failed: duplicate key on $table(${cols.mkString(",")})")
+
+  /** The key columns of each UNIQUE index of `table`. */
+  private def uniqueIndexCols(table: String): Seq[Seq[String]] =
+    indexes.values.collect {
+      case (t, cols, true) if t == tableKey(table) => cols
+    }.toSeq
 
   /** Enforce every UNIQUE index of `table` against its prospective full
     * contents (called by the update/merge paths before the swap). */
   private def enforceUniqueIndexes(table: String, full: DataFrame): Unit =
-    indexes.values.foreach {
-      case (t, cols, true) if t == tableKey(table) =>
-        enforceUniqueKey(table, full, cols, "UNIQUE INDEX")
-      case _ => ()
-    }
+    uniqueIndexCols(table).foreach(enforceUniqueKey(table, full, _, "UNIQUE INDEX"))
 
   /** `EXECUTE name(args)` → the prepared text with `$1`/`$2`… or `?`
     * placeholders bound to the argument literals. */
@@ -7435,10 +7434,11 @@ class SqlGateway(val spark: SparkSession) {
   /** Throw if any row of `df` violates a registered CHECK of `table`.
     * SQL semantics: a row fails only when the expression is FALSE — NULL
     * passes (`expr === false` is NULL for NULL, dropped by the filter).
-    * One distributed filter per check; no driver loop. */
+    * One filter per check, stopping at the first violating row; over a
+    * literal batch the optimizer folds it on the driver (no job). */
   private def enforceChecks(table: String, df: DataFrame): Unit =
     checks.getOrElse(tableKey(table), Nil).foreach { e =>
-      if (df.filter(expr(e) === lit(false)).limit(1).count() > 0)
+      if (!df.filter(expr(e) === lit(false)).isEmpty)
         throw new IllegalArgumentException(
           s"CHECK constraint failed: $table CHECK ($e)")
     }
@@ -7542,16 +7542,47 @@ class SqlGateway(val spark: SparkSession) {
     batch = target.columns.foldLeft(batch)((df, c) =>
       df.withColumn(c, col(c).cast(target.schema(c).dataType)))
 
-    // stage once: the batch feeds the constraint checks AND the write.
-    // __pos records each row's in-batch position (monotonic id: partition
-    // index ≪ 33 | row-in-partition, which preserves a VALUES list's
-    // literal order) so ON CONFLICT DO NOTHING can keep the FIRST
-    // occurrence of a duplicated key deterministically
+    val (pk, notNull) = constraints.getOrElse(table.toLowerCase, (Nil, Nil))
+    batch.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        insertLocal(table, target, l, pk, notNull, skipConflicts, upsertSet)
+      case _ =>
+        insertStaged(table, target, batch, pk, notNull, skipConflicts, upsertSet)
+    }
+  }
+
+  import SqlGateway.BatchStats
+
+  /** The checks every insert batch passes before it meets the table: NOT
+    * NULL, CHECK (on every ingest path, like DuckDB), then — for a plain
+    * INSERT into a keyed table — no duplicate key within the batch. */
+  private def checkBatch(table: String, staged: DataFrame, stats: BatchStats,
+      pk: Seq[String], plain: Boolean): Unit = {
+    stats.nullCols.headOption.foreach(c =>
+      throw new IllegalArgumentException(s"NOT NULL constraint failed: $table.$c"))
+    enforceChecks(table, staged)
+    if (plain && pk.nonEmpty && stats.pkDups > 0)
+      throw new IllegalArgumentException(
+        s"PRIMARY KEY constraint failed (duplicate in batch): $table(${pk.mkString(",")})")
+  }
+
+  private def pkExists(table: String, pk: Seq[String]) =
+    new IllegalArgumentException(
+      s"PRIMARY KEY constraint failed (key exists): $table(${pk.mkString(",")})")
+
+  /** INSERT of a batch whose rows are computed by Spark (INSERT … SELECT,
+    * COPY, `read_*`). Staged once: the batch feeds the constraint checks
+    * AND the write. __pos records each row's in-batch position (monotonic
+    * id: partition index ≪ 33 | row-in-partition) so ON CONFLICT DO
+    * NOTHING can keep the FIRST occurrence of a duplicated key
+    * deterministically. */
+  private def insertStaged(table: String, target: DataFrame, batch: DataFrame,
+      pk: Seq[String], notNull: Seq[String], skipConflicts: Boolean,
+      upsertSet: Option[String]): ExecuteResult = {
     val stagedPos = batch
       .withColumn("__pos", monotonically_increasing_id())
       .localCheckpoint(true)
     val staged = stagedPos.drop("__pos")
-    val (pk, notNull) = constraints.getOrElse(table.toLowerCase, (Nil, Nil))
     // one aggregate job: row count + per-column null counts + in-batch dups
     val aggs = count(lit(1)).as("__n") +:
       notNull.map(c => count(when(col(c).isNull, 1)).as(s"__null_$c")) :+
@@ -7559,21 +7590,15 @@ class SqlGateway(val spark: SparkSession) {
         (count(lit(1)) - countDistinct(col(pk.head), pk.tail.map(col): _*))
           .as("__pk_dups")
       else count(when(lit(false), 1)).as("__pk_dups"))
-    val stats = staged.agg(aggs.head, aggs.tail: _*).collect().head
-    notNull.foreach { c =>
-      if (stats.getAs[Long](s"__null_$c") > 0)
-        throw new IllegalArgumentException(s"NOT NULL constraint failed: $table.$c")
-    }
-    enforceChecks(table, staged) // CHECK holds on every ingest path, like DuckDB
+    val row = staged.agg(aggs.head, aggs.tail: _*).collect().head
+    val stats = BatchStats(row.getAs[Long]("__n"),
+      notNull.filter(c => row.getAs[Long](s"__null_$c") > 0),
+      row.getAs[Long]("__pk_dups"))
+    checkBatch(table, staged, stats, pk, upsertSet.isEmpty && !skipConflicts)
     if (upsertSet.isDefined) return upsertMerge(table, target, staged, pk, stats, upsertSet.get)
-    if (pk.nonEmpty && !skipConflicts) {
-      if (stats.getAs[Long]("__pk_dups") > 0)
-        throw new IllegalArgumentException(
-          s"PRIMARY KEY constraint failed (duplicate in batch): $table(${pk.mkString(",")})")
-      if (staged.join(target, pk.toSeq, "left_semi").limit(1).count() > 0)
-        throw new IllegalArgumentException(
-          s"PRIMARY KEY constraint failed (key exists): $table(${pk.mkString(",")})")
-    }
+    if (pk.nonEmpty && !skipConflicts &&
+        staged.join(target, pk.toSeq, "left_semi").limit(1).count() > 0)
+      throw pkExists(table, pk)
     if (pk.nonEmpty && skipConflicts) {
       // keep the FIRST in-batch occurrence per key (min __pos), matching
       // the documented DO NOTHING semantics — dropDuplicates keeps an
@@ -7596,8 +7621,109 @@ class SqlGateway(val spark: SparkSession) {
       if (captureReturning)
         captureRows(staged)
       appendRows(table, staged)
-      ExecuteResult(stats.getAs[Long]("__n"))
+      ExecuteResult(stats.n)
     }
+  }
+
+  /** INSERT of a literal batch: VALUES after alignment and casts, whose
+    * optimized plan is a LocalRelation. Its rows are already on the
+    * driver, so the row count, NOT NULL and in-batch duplicate checks read
+    * them, CHECKs fold over the local relation, the PK-exists and UNIQUE
+    * INDEX probes share one job over the table (only when it has such a
+    * key), and [[appendRows]] writes the file without a job. ON CONFLICT,
+    * upsert and RETURNING take their rows from the same local batch. */
+  private def insertLocal(table: String, target: DataFrame,
+      l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation,
+      pk: Seq[String], notNull: Seq[String], skipConflicts: Boolean,
+      upsertSet: Option[String]): ExecuteResult = {
+    val staged = ColumnShim.ofRows(spark, l)
+    val rows = staged.collect().toIndexedSeq // a local scan: no job
+    val at = columnIndex(table, staged.columns.toSeq) _
+    val pkAt = pk.map(at)
+    val stats = BatchStats(rows.length,
+      notNull.filter(c => rows.exists(_.isNullAt(at(c)))),
+      if (pk.isEmpty) 0L else rows.length - rows.flatMap(rowKey(_, pkAt)).distinct.length)
+    checkBatch(table, staged, stats, pk, upsertSet.isEmpty && !skipConflicts)
+    if (upsertSet.isDefined) return upsertMerge(table, target, staged, pk, stats, upsertSet.get)
+    val unique = uniqueIndexCols(table)
+    val existing =
+      existingKeys(table, target, l, rows, (if (pk.isEmpty) Nil else Seq(pk)) ++ unique)
+    if (pk.nonEmpty && !skipConflicts && existing(pk).nonEmpty) throw pkExists(table, pk)
+    // DO NOTHING on a keyed table: the first occurrence of each key that
+    // the table does not hold yet
+    val landing =
+      if (pk.isEmpty || !skipConflicts) rows.indices
+      else {
+        val seen = scala.collection.mutable.HashSet.empty[Option[Seq[Any]]]
+        rows.indices.filter { i =>
+          val k = rowKey(rows(i), pkAt)
+          seen.add(k) && !k.exists(existing(pk))
+        }
+      }
+    unique.foreach { cols =>
+      val keys = landing.flatMap(i => rowKey(rows(i), cols.map(at)))
+      if (keys.distinct.length < keys.length || keys.exists(existing(cols)))
+        throw uniqueViolation(table, cols, "UNIQUE INDEX")
+    }
+    val landed =
+      if (landing.length == rows.length) staged
+      else ColumnShim.ofRows(spark, l.copy(data = landing.map(l.data)))
+    if (captureReturning) // RETURNING: only the rows actually inserted
+      captureRows(landed)
+    appendRows(table, landed)
+    ExecuteResult(landing.length)
+  }
+
+  private def columnIndex(table: String, names: Seq[String])(c: String): Int = {
+    val i = names.indexWhere(_.equalsIgnoreCase(c))
+    if (i < 0) throw new IllegalArgumentException(s"$table has no column $c")
+    i
+  }
+
+  /** A row's key on the columns at `idx`, equal exactly when a SQL
+    * equi-join matches it (NaN = NaN, -0.0 = 0.0, BLOBs by content); None
+    * when a key column is NULL. */
+  private def rowKey(r: org.apache.spark.sql.Row, idx: Seq[Int]): Option[Seq[Any]] =
+    if (idx.exists(r.isNullAt)) None
+    else Some(idx.map(i => r.get(i) match {
+      case d: Double => if (d.isNaN) "NaN" else d + 0.0
+      case f: Float => if (f.isNaN) "NaN" else f + 0.0f
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }))
+
+  /** The keys of the local batch `l` that `target` already holds, per key
+    * column list: one job for all the lists (a filter on an IN list of the
+    * batch's literal keys, collected — no join, no shuffle), and none when
+    * there is no list. */
+  private def existingKeys(table: String, target: DataFrame,
+      l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation,
+      rows: Seq[org.apache.spark.sql.Row],
+      keySets: Seq[Seq[String]]): Map[Seq[String], Set[Seq[Any]]] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val none = keySets.map(_ -> Set.empty[Seq[Any]]).toMap
+    if (keySets.isEmpty || l.data.isEmpty) return none
+    val at = columnIndex(table, l.schema.fieldNames.toSeq) _
+    val hit = keySets.map { ks =>
+      val idx = ks.map(at)
+      val keys = l.data.filterNot(r => idx.exists(r.isNullAt)).map { r =>
+        val lits = idx.map(i => ColumnShim.column(
+          Literal(r.get(i, l.schema(i).dataType), l.schema(i).dataType)))
+        if (lits.length == 1) lits.head
+        else struct(lits.zipWithIndex.map { case (c, j) => c.as(s"_$j") }: _*)
+      }
+      val probe =
+        if (ks.length == 1) col(ks.head)
+        else struct(ks.zipWithIndex.map { case (c, j) => col(c).as(s"_$j") }: _*)
+      if (keys.isEmpty) lit(false) else probe.isin(keys: _*)
+    }.reduce(_ || _)
+    val cols = keySets.flatten.distinctBy(_.toLowerCase)
+    val found = target.filter(hit).select(cols.map(col): _*).collect()
+    val foundAt = columnIndex(table, cols) _
+    keySets.map { ks =>
+      val inBatch = rows.flatMap(rowKey(_, ks.map(at))).toSet
+      ks -> found.flatMap(rowKey(_, ks.map(foundAt))).filter(inBatch).toSet
+    }.toMap
   }
 
   /** `ON CONFLICT DO UPDATE SET ...`: a distributed full-outer merge on
@@ -7607,11 +7733,11 @@ class SqlGateway(val spark: SparkSession) {
     * atomic swap, so readers never see a half-merged table.
     * rows_affected = batch size (inserted + updated), as in DuckDB. */
   private def upsertMerge(table: String, target: DataFrame, staged: DataFrame,
-      pk: Seq[String], stats: org.apache.spark.sql.Row, sets: String): ExecuteResult = {
+      pk: Seq[String], stats: BatchStats, sets: String): ExecuteResult = {
     if (pk.isEmpty)
       throw new IllegalArgumentException(
         s"ON CONFLICT DO UPDATE requires a PRIMARY KEY on $table")
-    if (stats.getAs[Long]("__pk_dups") > 0)
+    if (stats.pkDups > 0)
       throw new IllegalArgumentException(
         s"ON CONFLICT DO UPDATE: duplicate key within the batch is ambiguous: $table")
     val known = target.columns.map(_.toLowerCase).toSet
@@ -7637,7 +7763,7 @@ class SqlGateway(val spark: SparkSession) {
     enforceChecks(table, merged) // upserted + merged rows must satisfy CHECK
     enforceUniqueIndexes(table, merged)
     overwriteTable(table, merged)
-    ExecuteResult(stats.getAs[Long]("__n"))
+    ExecuteResult(stats.n)
   }
 
   /** Rewrite `excluded.<col>` → `__ex_<col>` — but ONLY outside
@@ -8052,26 +8178,24 @@ class SqlGateway(val spark: SparkSession) {
     ExecuteResult(affected)
   }
 
-  // --- DELETE: read-filter-rewrite.
+  // --- DELETE: read-filter-rewrite. A gateway table's rows affected come
+  //     from its parquet footers (the old version's row count minus the
+  //     new one's), so the rewrite is the statement's only job.
   private def delete(table: String, where: Option[String]): ExecuteResult = {
     val target = spark.table(table)
-    where match {
-      case None =>
-        val n = target.count()
-        if (captureReturning) // RETURNING on DELETE: the deleted rows
-          captureRows(target)
-        overwriteTable(table, target.limit(0))
-        ExecuteResult(n)
-      case Some(w) =>
-        // SQL deletes rows where the predicate is TRUE; rows where it is
-        // NULL are KEPT — `!pred` alone would drop them (NULL stays NULL)
-        val pred = coalesce(expr(w), lit(false))
-        val n = target.filter(pred).count()
-        if (captureReturning)
-          captureRows(target.filter(pred))
-        overwriteTable(table, target.filter(!pred))
-        ExecuteResult(n)
+    // SQL deletes rows where the predicate is TRUE; rows where it is
+    // NULL are KEPT — `!pred` alone would drop them (NULL stays NULL)
+    val pred = where.map(w => coalesce(expr(w), lit(false))).getOrElse(lit(true))
+    if (captureReturning) // RETURNING on DELETE: the deleted rows
+      captureRows(target.filter(pred))
+    if (!versions.contains(tableKey(table))) {
+      val n = target.filter(pred).count()
+      overwriteTable(table, target.filter(!pred))
+      return ExecuteResult(n)
     }
+    val before = footerRows(target.inputFiles.toSeq)
+    overwriteTable(table, target.filter(!pred))
+    ExecuteResult(before - footerRows(spark.table(table).inputFiles.toSeq))
   }
 
   // --- transactions (`BEGIN` / `COMMIT` / `ROLLBACK`, reachable like any
@@ -8230,7 +8354,10 @@ class SqlGateway(val spark: SparkSession) {
         val k = t.deltas.getOrElse(key, Vector.empty).size
         val dir = s"${tableRoot(table)}/v${base}_txd$k"
         deleteDir(dir)
-        rows.write.parquet(dir)
+        driverBatch(table, rows) match {
+          case Some((data, schema)) => writeOnDriver(data, schema, dir)
+          case None => rows.write.parquet(dir)
+        }
         t.deltas(key) = t.deltas.getOrElse(key, Vector.empty) :+ dir
         // a statement that ERRORS must leave no effect: unregister the
         // delta if the own-writes view refresh fails, or COMMIT would
@@ -8240,7 +8367,87 @@ class SqlGateway(val spark: SparkSession) {
           t.deltas(key) = t.deltas(key).init; deleteDir(dir); throw e
         }
       }
-    case None => rows.write.mode("append").insertInto(table)
+    case None => (versions.get(tableKey(table)), driverBatch(table, rows)) match {
+      case (Some(v), Some((data, schema))) =>
+        writeOnDriver(data, schema, s"${tableRoot(table)}/v$v")
+        spark.catalog.refreshTable(table)
+      case _ => rows.write.mode("append").insertInto(table)
+    }
+  }
+
+  /** The rows of a batch that is already on the driver (its optimized plan
+    * is a LocalRelation), with the schema its file gets: the batch's
+    * columns with the table's field metadata, as Spark's insert writes
+    * them. None when Spark must run the write: rows it computes, or a
+    * table with CHAR/VARCHAR(n) columns, whose length checks are part of
+    * Spark's insert. */
+  private def driverBatch(table: String, rows: DataFrame): Option[(
+      Seq[org.apache.spark.sql.catalyst.InternalRow],
+      org.apache.spark.sql.types.StructType)] = {
+    val tableSchema = spark.table(table).schema
+    rows.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if l.schema.map(_.dataType) == tableSchema.map(_.dataType) &&
+            !tableSchema.exists(f => org.apache.spark.sql.catalyst.util
+              .CharVarcharUtils.getRawType(f.metadata).isDefined) =>
+        Some((l.data, org.apache.spark.sql.types.StructType(
+          l.schema.zip(tableSchema).map { case (b, t) => b.copy(metadata = t.metadata) })))
+      case _ => None
+    }
+  }
+
+  /** Write `rows` as one parquet file in `dir` with no Spark job: Spark's
+    * own parquet writer (the factory a write job's tasks use), under the
+    * session's Hadoop conf. The file is written hidden (`.`-prefixed, so a
+    * listing never reads it half-written) and renamed into place under a
+    * part-file name; a failure removes it. */
+  private def writeOnDriver(rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType, dir: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+    val job = Job.getInstance(ColumnShim.hadoopConf(spark))
+    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000" +
+      factory.getFileExtension(ctx)
+    val d = new Path(dir)
+    val fs = d.getFileSystem(job.getConfiguration)
+    fs.mkdirs(d)
+    val hidden = new Path(d, "." + name)
+    try {
+      val w = factory.newInstance(hidden.toString, schema, ctx)
+      try rows.foreach(w.write) finally w.close()
+      if (!fs.rename(hidden, new Path(d, name)))
+        throw new java.io.IOException(s"could not move $hidden into $dir")
+    } catch { case e: Throwable => fs.delete(hidden, false); throw e }
+  }
+
+  /** Rows in parquet files, from their footers (no data page read). */
+  private def footerRows(files: Seq[String]): Long = {
+    import scala.jdk.CollectionConverters._
+    val conf = ColumnShim.hadoopConf(spark)
+    files.map { f =>
+      org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+        .getBlocks.asScala.map(_.getRowCount).sum
+    }.sum
+  }
+
+  /** `df` in as many partitions as its input fills scan splits
+    * (`spark.sql.files.maxPartitionBytes`), at least one: a rewrite of a
+    * small table writes one file, not one per input split. The input is
+    * the size of the plan's leaves (file bytes for a table; a checkpoint
+    * keeps the estimate of the plan it stands for). */
+  private def rightSized(df: DataFrame): DataFrame = {
+    val bytes = df.queryExecution.optimizedPlan.collectLeaves()
+      .map(_.stats.sizeInBytes).sum
+    val split = ColumnShim.maxPartitionBytes(spark)
+    df.coalesce(((bytes + split - 1) / split).max(1).min(Int.MaxValue).toInt)
   }
 
   /** (Re)register the session temp view giving this txn its own-writes
@@ -8285,7 +8492,7 @@ class SqlGateway(val spark: SparkSession) {
       val next = cur + 1
       val loc = s"${tableRoot(table)}/v$next"
       deleteDir(loc)
-      df.write.parquet(loc)
+      rightSized(df).write.parquet(loc)
       // own-writes visibility: shadow the catalog name with the pending
       // files. Temp views are session-scoped, so every reader of THIS
       // session sees the txn's writes — single-connection semantics,
@@ -8305,7 +8512,7 @@ class SqlGateway(val spark: SparkSession) {
         val next = cur + 1
         val loc = s"${tableRoot(table)}/v$next"
         deleteDir(loc) // leftovers of a previously failed rewrite attempt
-        df.write.parquet(loc)
+        rightSized(df).write.parquet(loc)
         spark.sql(s"ALTER TABLE $table SET LOCATION '$loc'")
         spark.catalog.refreshTable(table)
         versions(tableKey(table)) = next
@@ -8325,6 +8532,10 @@ object SqlGateway {
     * reports the right error without extra state. */
   final case class SeqState(next: Long, inc: Long, min: Long, max: Long,
       cycle: Boolean)
+
+  /** What an insert batch's first checks read: its row count, the NOT
+    * NULL columns it has a NULL in, and its in-batch PK duplicates. */
+  private final case class BatchStats(n: Long, nullCols: Seq[String], pkDups: Long)
 
   /** One step of the gateway's DuckDB-default rewrite: a call rule or a
     * raw pass. */

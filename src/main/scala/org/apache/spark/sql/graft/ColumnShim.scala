@@ -38,6 +38,18 @@ object ColumnShim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.sqlParser.parsePlan(sql)
 
+  /** The session's Hadoop conf (the SparkContext's plus the session's SQL
+    * settings) — what a write job's tasks see. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConf()
+
+  /** `spark.sql.files.maxPartitionBytes`, parsed: the bytes one scan
+    * split holds. */
+  def maxPartitionBytes(spark: SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.filesMaxPartitionBytes
+
   /** Register a NATIVE Catalyst expression builder under a SQL-callable
     * name (`FunctionRegistry` is behind private[sql] session state). Not a
     * UDF: the built expression keeps codegen and Catalyst optimization. */

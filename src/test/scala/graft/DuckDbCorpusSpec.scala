@@ -4566,10 +4566,24 @@ class DuckDbCorpusSpec extends SparkTestBase {
       Seq(1577836890.5)),
     q("SELECT format ('{}-{}', 1, 'a') AS f", Seq("1-a")))
 
+  // The 4-arg array_slice clamps its bounds to the list (the step slice
+  // list_slice uses), and a lower-case `::bit` literal is a BIT. Each value
+  // probed against DuckDB 1.0.0; the first refused here before and the
+  // second answered [2, 4, NULL, NULL, NULL].
+  private def corpusS: Seq[C] = Seq(
+    q("SELECT array_slice([1,2,3,4,5], 2, 10, 2) AS s", Seq(Seq(2, 4))),
+    q("SELECT array_slice([1,2,3,4,5], 0, 3, 1) AS s", Seq(Seq(1, 2, 3))),
+    q("SELECT '01'::bit AS b", Seq("01")))
+
   lazy val corpus: Seq[C] =
     corpusA ++ corpusB ++ corpusC ++ corpusD ++ corpusE ++ corpusF ++
       corpusG ++ corpusH ++ corpusI ++ corpusJ ++ corpusK ++ corpusL ++
-      corpusM ++ corpusN ++ corpusO ++ corpusP ++ corpusQ ++ corpusR
+      corpusM ++ corpusN ++ corpusO ++ corpusP ++ corpusQ ++ corpusR ++ corpusS
+
+  test("4-arg array_slice and a lower-case ::bit literal answer like DuckDB") {
+    val notMatched = corpusS.map(c => c.sql -> runOne(c)).filter(_._2 != Matched)
+    assert(notMatched.isEmpty, notMatched.mkString("\n"))
+  }
 
   test("quoted identifiers and literals are lexed once: every probed " +
        "case answers like DuckDB (no refusal), with DuckDB's column names") {
