@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types._
 
 /** DuckDB's catalog-introspection table functions (`duckdb_tables()`,
@@ -59,12 +60,8 @@ private[engine] final class CatalogInfo(gw: SqlGateway) {
   /** User tables in the Spark catalog (excludes temp views and the
     * gateway's registered views). */
   private def userTables(): Seq[String] =
-    spark.catalog.listTables().collect()
-      .filter(t => t.tableType == "MANAGED" || t.tableType == "EXTERNAL")
-      .map(_.name)
+    ColumnShim.userTables(spark)
       .filterNot(n => gw.viewEntries.exists(_._1.equalsIgnoreCase(n)))
-      .sortBy(identity)
-      .toSeq
 
   /** Dispatch by function name (lowercased, no parens; the caller has
     * already rejected arguments — none of these take one). Unknown names

@@ -1,7 +1,9 @@
 package graft.engine
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.graft.ColumnShim
+import org.apache.spark.sql.types.StructType
 
 /** Parquet export/import of the whole database — the reference's snapshot/
   * restore path (`store/store.go:263` `EXPORT DATABASE ... (FORMAT PARQUET)`,
@@ -24,35 +26,36 @@ object Snapshot {
     * `gw.releasePins` when done (exported or failed). */
   final case class Cut private[engine] (
       tables: Seq[String],
-      frames: Seq[(String, org.apache.spark.sql.DataFrame)],
+      parts: Seq[(String, Part)],
       manifestLines: Seq[String],
       pins: Seq[String])
+
+  /** One table of a cut: the pinned data files of a versioned table with
+    * its catalog schema, read at export; or, for a managed passthrough
+    * table, which has no version dir to pin, an eager copy. */
+  sealed trait Part
+  final case class Pinned private[engine] (schema: StructType,
+      files: Seq[org.apache.hadoop.fs.FileStatus]) extends Part
+  final case class Copied private[engine] (df: DataFrame) extends Part
 
   def captureCut(gw: SqlGateway): Cut = {
     val spark = gw.spark
     // gateway tables are LOCATION-backed (EXTERNAL, versioned dirs);
-    // passthrough-created ones are MANAGED — snapshot both, skip temp views
-    val tables = spark.catalog.listTables().collect()
-      .filter(t => t.tableType == "MANAGED" || t.tableType == "EXTERNAL")
-      .map(_.name).toSeq.sorted
+    // passthrough-created ones are MANAGED — snapshot both, skip views
+    val tables = ColumnShim.userTables(spark)
     val pins = Seq.newBuilder[String]
-    val frames = tables.map { t =>
+    val parts = tables.map { t =>
       gw.pinTableCut(t) match {
         case Some((dir, files)) =>
           pins += dir
-          val schema = spark.table(t).schema
-          val df =
-            if (files.isEmpty) spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-            else spark.read.schema(schema).parquet(files: _*)
-          t -> df
+          t -> Pinned(spark.table(t).schema, files)
         case None =>
-          // managed passthrough tables have no version dir to pin — their
-          // in-place overwrite path forces an eager copy at capture time
-          t -> spark.table(t).localCheckpoint(eager = true)
+          // the in-place overwrite path of a managed table forces an
+          // eager copy at capture time
+          t -> Copied(spark.table(t).localCheckpoint(eager = true))
       }
     }
-    Cut(tables, frames, manifestLines(gw, tables), pins.result())
+    Cut(tables, parts, manifestLines(gw, tables), pins.result())
   }
 
   private def manifestLines(gw: SqlGateway, tables: Seq[String]): Seq[String] = {
@@ -102,12 +105,15 @@ object Snapshot {
     manifest ++ meta
   }
 
-  /** Write an already-captured [[Cut]] to `dir`. Safe to run with writers
-    * active — the cut's frames read only pinned, immutable file lists. */
-  def exportCut(cut: Cut, dir: String): Seq[String] = {
+  /** Write `gw`'s already-captured [[Cut]] to `dir`, one parquet dir per
+    * table. Safe to run with writers active — a pinned table's file list
+    * is immutable while its pin holds. A small pinned table is copied on
+    * the driver, with no Spark job (`SqlGateway.copyFiles`). */
+  def exportCut(gw: SqlGateway, cut: Cut, dir: String): Seq[String] = {
     Files.createDirectories(Paths.get(dir))
-    cut.frames.foreach { case (t, df) =>
-      df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$t")
+    cut.parts.foreach {
+      case (t, Pinned(schema, files)) => gw.copyFiles(schema, files, s"$dir/$t")
+      case (t, Copied(df)) => df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$t")
     }
     Files.write(Paths.get(dir, ManifestName),
       cut.manifestLines.mkString("\n").getBytes("UTF-8"))
@@ -118,7 +124,7 @@ object Snapshot {
     * already serialized under the gateway write lock). */
   def exportDatabase(gw: SqlGateway, dir: String): Seq[String] = {
     val cut = captureCut(gw)
-    try exportCut(cut, dir) finally gw.releasePins(cut.pins)
+    try exportCut(gw, cut, dir) finally gw.releasePins(cut.pins)
   }
 
   def importDatabase(gw: SqlGateway, dir: String): Seq[String] = {
@@ -219,7 +225,7 @@ object Snapshot {
       "master" -> spark.sparkContext.master,
       "appId" -> spark.sparkContext.applicationId,
       "defaultParallelism" -> spark.sparkContext.defaultParallelism.toString,
-      "tables" -> spark.catalog.listTables().collect().map(_.name).sorted.mkString(","),
+      "tables" -> ColumnShim.tableNames(spark).mkString(","),
       "uptimeMs" -> (System.currentTimeMillis() - spark.sparkContext.startTime).toString)
   }
 }

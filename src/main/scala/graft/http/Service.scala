@@ -1338,7 +1338,7 @@ class Service(gateway: SqlGateway, port: Int = 0,
       val tmp = root.resolve(s".tmp_snap_$idx")
       try {
         deleteRecursively(tmp)
-        Snapshot.exportCut(cut, tmp.toString)
+        Snapshot.exportCut(gateway, cut, tmp.toString)
         java.nio.file.Files.move(tmp, root.resolve(s"snap_$idx"),
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       } catch { case e: Throwable => deleteRecursively(tmp); throw e }

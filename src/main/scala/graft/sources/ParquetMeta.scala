@@ -2,10 +2,12 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{GroupType, MessageType, PrimitiveType, Type}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.types._
 
 /** DuckDB's parquet-introspection table functions — `parquet_schema`,
@@ -81,10 +83,10 @@ object ParquetMeta {
       case other => other
     }
 
-  private def openFooter(file: String, conf: Configuration) = {
-    val in = HadoopInputFile.fromPath(new Path(file), conf)
-    ParquetFileReader.open(in)
-  }
+  /** The file's footer alone (no row-group or page reads). */
+  private def openFooter(file: String, conf: Configuration): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromPath(new Path(file), conf),
+      ParquetMetadataConverter.NO_FILTER)
 
   // --- parquet_schema ------------------------------------------------------
 
@@ -102,31 +104,29 @@ object ParquetMeta {
     * its own spelling of the same annotation — engine-specific). */
   def schemaDf(spark: SparkSession, paths: Seq[String]): DataFrame =
     distribute(spark, expand(spark, paths), schemaSchema) { (file, conf) =>
-      val reader = openFooter(file, conf)
-      try {
-        val root: MessageType = reader.getFooter.getFileMetaData.getSchema
-        val out = Seq.newBuilder[Row]
-        def id(t: Type): Any =
-          Option(t.getId).map(i => i.intValue().toLong).orNull
-        def walk(t: Type, isRoot: Boolean): Unit = t match {
-          case g: GroupType =>
-            out += Row(bare(file), g.getName, null, null,
-              if (isRoot) "REQUIRED" else g.getRepetition.name,
-              g.getFieldCount.toLong, null, null, null, id(g), null)
-            g.getFields.forEach(f => walk(f, isRoot = false))
-          case p: PrimitiveType =>
-            val tlen = if (p.getTypeLength > 0) p.getTypeLength.toString else null
-            val conv = Option(p.getOriginalType).map(_.name).orNull
-            val (scale, prec) = Option(p.getDecimalMetadata)
-              .map(d => (d.getScale.toLong, d.getPrecision.toLong))
-              .getOrElse((null, null))
-            val logical = Option(p.getLogicalTypeAnnotation).map(_.toString).orNull
-            out += Row(bare(file), p.getName, physName(p), tlen,
-              p.getRepetition.name, null, conv, scale, prec, id(p), logical)
-        }
-        walk(root, isRoot = true)
-        out.result()
-      } finally reader.close()
+      val footer = openFooter(file, conf)
+      val root: MessageType = footer.getFileMetaData.getSchema
+      val out = Seq.newBuilder[Row]
+      def id(t: Type): Any =
+        Option(t.getId).map(i => i.intValue().toLong).orNull
+      def walk(t: Type, isRoot: Boolean): Unit = t match {
+        case g: GroupType =>
+          out += Row(bare(file), g.getName, null, null,
+            if (isRoot) "REQUIRED" else g.getRepetition.name,
+            g.getFieldCount.toLong, null, null, null, id(g), null)
+          g.getFields.forEach(f => walk(f, isRoot = false))
+        case p: PrimitiveType =>
+          val tlen = if (p.getTypeLength > 0) p.getTypeLength.toString else null
+          val conv = Option(p.getOriginalType).map(_.name).orNull
+          val (scale, prec) = Option(p.getDecimalMetadata)
+            .map(d => (d.getScale.toLong, d.getPrecision.toLong))
+            .getOrElse((null, null))
+          val logical = Option(p.getLogicalTypeAnnotation).map(_.toString).orNull
+          out += Row(bare(file), p.getName, physName(p), tlen,
+            p.getRepetition.name, null, conv, scale, prec, id(p), logical)
+      }
+      walk(root, isRoot = true)
+      out.result()
     }
 
   // --- parquet_metadata ----------------------------------------------------
@@ -154,52 +154,50 @@ object ParquetMeta {
     * chunk's encoding set sorted by name. */
   def metadataDf(spark: SparkSession, paths: Seq[String]): DataFrame =
     distribute(spark, expand(spark, paths), metadataSchema) { (file, conf) =>
-      val reader = openFooter(file, conf)
-      try {
-        val out = Seq.newBuilder[Row]
-        val groups = reader.getFooter.getBlocks
-        var rg = 0
-        groups.forEach { block =>
-          var ci = 0
-          block.getColumns.forEach { c =>
-            val stats = c.getStatistics
-            val signedPhysical = physName(c.getPrimitiveType) match {
-              case "BYTE_ARRAY" | "FIXED_LEN_BYTE_ARRAY" | "INT96" => false
-              case _ => true
-            }
-            def render(v: => Any): String =
-              try {
-                val x = v
-                if (x == null) null
-                else x match {
-                  case b: org.apache.parquet.io.api.Binary => b.toStringUsingUTF8
-                  case other => other.toString
-                }
-              } catch { case _: Throwable => null }
-            val minV = if (stats != null && !stats.isEmpty) render(stats.genericGetMin) else null
-            val maxV = if (stats != null && !stats.isEmpty) render(stats.genericGetMax) else null
-            val nulls: Any =
-              if (stats != null && stats.isNumNullsSet) stats.getNumNulls else null
-            val dictOff: Any =
-              if (c.getDictionaryPageOffset > 0) c.getDictionaryPageOffset else null
-            val encodings = c.getEncodings.toArray.map(_.toString).sorted.mkString(", ")
-            out += Row(bare(file), rg.toLong, block.getRowCount,
-              block.getColumns.size.toLong, block.getTotalByteSize, ci.toLong,
-              c.getStartingPos + c.getTotalSize, c.getValueCount,
-              String.join(".", c.getPath.toArray: _*),
-              physName(c.getPrimitiveType),
-              if (signedPhysical) minV else null,
-              if (signedPhysical) maxV else null,
-              nulls, null, minV, maxV,
-              c.getCodec.name, encodings, null, dictOff,
-              c.getFirstDataPageOffset, c.getTotalSize, c.getTotalUncompressedSize,
-              Map.empty[Array[Byte], Array[Byte]])
-            ci += 1
+      val footer = openFooter(file, conf)
+      val out = Seq.newBuilder[Row]
+      val groups = footer.getBlocks
+      var rg = 0
+      groups.forEach { block =>
+        var ci = 0
+        block.getColumns.forEach { c =>
+          val stats = c.getStatistics
+          val signedPhysical = physName(c.getPrimitiveType) match {
+            case "BYTE_ARRAY" | "FIXED_LEN_BYTE_ARRAY" | "INT96" => false
+            case _ => true
           }
-          rg += 1
+          def render(v: => Any): String =
+            try {
+              val x = v
+              if (x == null) null
+              else x match {
+                case b: org.apache.parquet.io.api.Binary => b.toStringUsingUTF8
+                case other => other.toString
+              }
+            } catch { case _: Throwable => null }
+          val minV = if (stats != null && !stats.isEmpty) render(stats.genericGetMin) else null
+          val maxV = if (stats != null && !stats.isEmpty) render(stats.genericGetMax) else null
+          val nulls: Any =
+            if (stats != null && stats.isNumNullsSet) stats.getNumNulls else null
+          val dictOff: Any =
+            if (c.getDictionaryPageOffset > 0) c.getDictionaryPageOffset else null
+          val encodings = c.getEncodings.toArray.map(_.toString).sorted.mkString(", ")
+          out += Row(bare(file), rg.toLong, block.getRowCount,
+            block.getColumns.size.toLong, block.getTotalByteSize, ci.toLong,
+            c.getStartingPos + c.getTotalSize, c.getValueCount,
+            String.join(".", c.getPath.toArray: _*),
+            physName(c.getPrimitiveType),
+            if (signedPhysical) minV else null,
+            if (signedPhysical) maxV else null,
+            nulls, null, minV, maxV,
+            c.getCodec.name, encodings, null, dictOff,
+            c.getFirstDataPageOffset, c.getTotalSize, c.getTotalUncompressedSize,
+            Map.empty[Array[Byte], Array[Byte]])
+          ci += 1
         }
-        out.result()
-      } finally reader.close()
+        rg += 1
+      }
+      out.result()
     }
 
   // --- parquet_file_metadata -----------------------------------------------
@@ -212,13 +210,12 @@ object ParquetMeta {
 
   def fileMetadataDf(spark: SparkSession, paths: Seq[String]): DataFrame =
     distribute(spark, expand(spark, paths), fileMetaSchema) { (file, conf) =>
-      val reader = openFooter(file, conf)
-      try {
-        val fm = reader.getFooter.getFileMetaData
-        val rows: Long = reader.getFooter.getBlocks.size.toLong
-        Seq(Row(bare(file), fm.getCreatedBy, reader.getRecordCount, rows,
-          footerVersion(file, conf), null, null))
-      } finally reader.close()
+      val footer = openFooter(file, conf)
+      val fm = footer.getFileMetaData
+      val rows: Long = footer.getBlocks.size.toLong
+      Seq(Row(bare(file), fm.getCreatedBy,
+        footer.getBlocks.stream.mapToLong(_.getRowCount).sum, rows,
+        footerVersion(file, conf), null, null))
     }
 
   /** The thrift FileMetaData's `version` field (i32, field id 1) —
@@ -268,14 +265,12 @@ object ParquetMeta {
 
   def kvMetadataDf(spark: SparkSession, paths: Seq[String]): DataFrame =
     distribute(spark, expand(spark, paths), kvSchema) { (file, conf) =>
-      val reader = openFooter(file, conf)
-      try {
-        val out = Seq.newBuilder[Row]
-        reader.getFooter.getFileMetaData.getKeyValueMetaData.forEach { (k, v) =>
-          out += Row(bare(file), k.getBytes("UTF-8"),
-            if (v == null) null else v.getBytes("UTF-8"))
-        }
-        out.result()
-      } finally reader.close()
+      val footer = openFooter(file, conf)
+      val out = Seq.newBuilder[Row]
+      footer.getFileMetaData.getKeyValueMetaData.forEach { (k, v) =>
+        out += Row(bare(file), k.getBytes("UTF-8"),
+          if (v == null) null else v.getBytes("UTF-8"))
+      }
+      out.result()
     }
 }

@@ -50,6 +50,30 @@ object ColumnShim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.filesMaxPartitionBytes
 
+  /** The names the public catalog's `listTables()` lists: the current
+    * database's tables and views plus the session's temp views,
+    * name-ordered, from the session catalog (`listTables` answers the
+    * same through a Spark job). */
+  def tableNames(spark: SparkSession): Seq[String] = {
+    val cat = sessionCatalog(spark)
+    cat.listTables(cat.getCurrentDatabase, "*", includeLocalTempViews = true)
+      .map(_.table).sorted
+  }
+
+  /** The current database's tables (MANAGED or EXTERNAL; no views),
+    * name-ordered, from the session catalog. */
+  def userTables(spark: SparkSession): Seq[String] = {
+    import org.apache.spark.sql.catalyst.catalog.CatalogTableType.{EXTERNAL, MANAGED}
+    val cat = sessionCatalog(spark)
+    val ids = cat.listTables(cat.getCurrentDatabase, "*", includeLocalTempViews = false)
+    cat.getTablesByName(ids)
+      .filter(t => t.tableType == MANAGED || t.tableType == EXTERNAL)
+      .map(_.identifier.table).sorted
+  }
+
+  private def sessionCatalog(spark: SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.catalog
+
   /** Register a NATIVE Catalyst expression builder under a SQL-callable
     * name (`FunctionRegistry` is behind private[sql] session state). Not a
     * UDF: the built expression keeps codegen and Catalyst optimization. */

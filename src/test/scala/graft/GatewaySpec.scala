@@ -1417,4 +1417,80 @@ class GatewaySpec extends SparkTestBase {
     intercept[IllegalArgumentException](gw.execute("INSERT INTO lvh VALUES (3, 'dup')"))
     assert(gw.execute("DELETE FROM lvh WHERE id <= 2").rowsAffected == 2)
   }
+
+  // A small table's DELETE/UPDATE read its files on the driver and fold
+  // the statement there (the job counts are pinned in WriteJobsSpec);
+  // these pin the semantics of that path.
+
+  test("driver-image UPDATE/DELETE: RETURNING, and a CHECK or UNIQUE INDEX " +
+       "failure keeps its text and leaves no effect") {
+    gw.execute("DROP TABLE IF EXISTS dit")
+    gw.execute("CREATE TABLE dit (id integer CHECK (id > 0), v text)")
+    gw.execute("INSERT INTO dit VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    gw.execute("CREATE UNIQUE INDEX dit_v ON dit (v)")
+    assert(gw.query("UPDATE dit SET v = 'z' WHERE id = 2 RETURNING id, v").values ==
+      Seq(Seq(2, "z")))
+    assert(gw.query("DELETE FROM dit WHERE id = 3 RETURNING *").values == Seq(Seq(3, "c")))
+    val live = spark.table("dit").inputFiles.toSet
+    assert(intercept[IllegalArgumentException](
+      gw.execute("UPDATE dit SET id = 0 WHERE id = 1")).getMessage ==
+      "CHECK constraint failed: dit CHECK (id > 0)")
+    assert(intercept[IllegalArgumentException](
+      gw.execute("UPDATE dit SET v = 'a' WHERE id = 2")).getMessage ==
+      "UNIQUE INDEX constraint failed: duplicate key on dit(v)")
+    assert(spark.table("dit").inputFiles.toSet == live)
+    assert(gw.query("SELECT id, v FROM dit ORDER BY id").values ==
+      Seq(Seq(1, "a"), Seq(2, "z")))
+  }
+
+  test("driver-image rewrites keep ADD COLUMN defaults and declared DuckDB types") {
+    gw.execute("DROP TABLE IF EXISTS dia")
+    gw.execute("CREATE TABLE dia (id integer, t TIMESTAMPTZ, u UUID)")
+    gw.execute("INSERT INTO dia VALUES (1, TIMESTAMPTZ '2020-01-01 10:00:00+02', " +
+      "'550e8400-e29b-41d4-a716-446655440000'), (2, NULL, NULL)")
+    gw.execute("ALTER TABLE dia ADD COLUMN k integer DEFAULT 7")
+    assert(gw.execute("DELETE FROM dia WHERE id = 2").rowsAffected == 1)
+    assert(gw.execute("UPDATE dia SET k = k + 1 WHERE id = 1").rowsAffected == 1)
+    val r = gw.query("SELECT * FROM dia")
+    assert(r.types == Seq("INTEGER", "TIMESTAMP WITH TIME ZONE", "UUID", "INTEGER"))
+    assert(r.values.map(_.toList) == Seq(List(1, "2020-01-01 08:00:00+00",
+      "550e8400-e29b-41d4-a716-446655440000", 8)))
+  }
+
+  test("DELETE … WHERE id IN (SELECT …) does not fold on the driver and " +
+       "takes the job path") {
+    gw.execute("DROP TABLE IF EXISTS dis")
+    gw.execute("DROP TABLE IF EXISTS dis_k")
+    gw.execute("CREATE TABLE dis (id integer, v text)")
+    gw.execute("CREATE TABLE dis_k (id integer)")
+    gw.execute("INSERT INTO dis VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    gw.execute("INSERT INTO dis_k VALUES (2), (3), (9)")
+    assert(gw.execute("DELETE FROM dis WHERE id IN (SELECT id FROM dis_k)")
+      .rowsAffected == 2)
+    assert(gw.query("SELECT id, v FROM dis").values == Seq(Seq(1, "a")))
+  }
+
+  test("driver-image DELETE/UPDATE in a transaction read its own writes; " +
+       "ROLLBACK discards and COMMIT applies them") {
+    gw.execute("DROP TABLE IF EXISTS dix")
+    gw.execute("CREATE TABLE dix (id integer, v text)")
+    gw.execute("INSERT INTO dix VALUES (1, 'a'), (2, 'b')")
+    def txn(end: String): Unit = {
+      gw.execute("BEGIN")
+      gw.execute("INSERT INTO dix VALUES (3, 'c')") // an append delta
+      assert(gw.execute("DELETE FROM dix WHERE id = 1").rowsAffected == 1)
+      assert(gw.execute("UPDATE dix SET v = 'x' WHERE id = 3").rowsAffected == 1)
+      assert(gw.query("SELECT id, v FROM dix ORDER BY id").values ==
+        Seq(Seq(2, "b"), Seq(3, "x")))
+      assert(spark.newSession().table("dix").count() == 2L)
+      gw.execute(end)
+    }
+    txn("ROLLBACK")
+    assert(gw.query("SELECT id, v FROM dix ORDER BY id").values ==
+      Seq(Seq(1, "a"), Seq(2, "b")))
+    txn("COMMIT")
+    assert(gw.query("SELECT id, v FROM dix ORDER BY id").values ==
+      Seq(Seq(2, "b"), Seq(3, "x")))
+    assert(spark.newSession().table("dix").count() == 2L)
+  }
 }

@@ -405,7 +405,7 @@ class ReplicaSpec extends SparkTestBase {
       exec("UPDATE async_t SET v = 'x' WHERE id = 1")
       exec("UPDATE async_t SET v = 'y' WHERE id = 2")
       val dir = java.nio.file.Files.createTempDirectory("graft-async-cut").toString
-      graft.engine.Snapshot.exportCut(cut, dir)
+      graft.engine.Snapshot.exportCut(gw, cut, dir)
       gw.releasePins(cut.pins)
       // live state saw every post-cut write
       assert(gw.query("SELECT count(*) FROM async_t").values.head.head == 4L)
@@ -497,6 +497,40 @@ class ReplicaSpec extends SparkTestBase {
       // the restored table keeps its key
       intercept[IllegalArgumentException](rgw.execute("INSERT INTO drv_t VALUES (4, NULL, 'x')"))
     } finally leader.stop()
+  }
+
+  test("a lagging follower installs a snapshot exported on the driver " +
+       "after driver-path DELETE and UPDATE") {
+    val logDir = java.nio.file.Files.createTempDirectory("graft-drvsnap").toString
+    val (lgw, _) = newStack("drvsnap_leader")
+    val leader = new Service(lgw, logDir = Some(logDir))
+    val lPort = leader.start()
+    val (fgw, _) = newStack("drvsnap_follow")
+    val follower = new Service(fgw, leaderUrl = Some(s"http://localhost:$lPort"),
+      nodeId = "drvfollower", followLog = true)
+    val fPort = follower.start()
+    try {
+      def exec(sql: String): Unit = {
+        val (code, body, _) = newHttp(lPort, "POST", "/db/execute",
+          Some(s"""{"sql": "$sql"}"""))
+        assert(code == 200 && !body.contains("\"error\""), s"$sql -> $body")
+      }
+      exec("CREATE TABLE ds_t (id integer, v text)")
+      exec("INSERT INTO ds_t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+      exec("DELETE FROM ds_t WHERE id = 2")
+      exec("UPDATE ds_t SET v = 'x' WHERE id = 3")
+      val (sc, sb, _) = newHttp(lPort, "POST", "/snapshot")
+      assert(sc == 200, sb)
+      val idx = "\"index\": \"(\\d+)\"".r.findFirstMatchIn(sb).get.group(1)
+      // the driver writes one part file per table, with no _SUCCESS marker
+      assert(new java.io.File(s"$logDir/snapshots/snap_$idx/ds_t").list().toSeq
+        .filterNot(_.startsWith(".")).map(_.take(5)) == Seq("part-"))
+      exec("INSERT INTO ds_t VALUES (4, 'd')")
+      // the follower's first read installs the snapshot, then the suffix
+      val (rc, rb, _) = newHttp(fPort, "GET",
+        "/db/query?q=SELECT%20id,%20v%20FROM%20ds_t%20ORDER%20BY%20id")
+      assert(rc == 200 && rb.contains("""[[1, "a"], [3, "x"], [4, "d"]]"""), rb)
+    } finally { follower.stop(); leader.stop() }
   }
 
   test("no snapshot cut mid-transaction: truncation across a BEGIN would " +
@@ -602,7 +636,7 @@ class ReplicaSpec extends SparkTestBase {
     assert(!renamed, "rename proceeded under an in-flight snapshot pin")
     // export from the pinned cut while the rename waits — paths still valid
     val dir = java.nio.file.Files.createTempDirectory("graft-renpin-cut").toString
-    Snapshot.exportCut(cut, dir)
+    Snapshot.exportCut(gw, cut, dir)
     gw.releasePins(cut.pins)
     renamer.join(30000)
     assert(renamed, "rename did not complete after pin release")
@@ -1403,6 +1437,19 @@ class ReplicaSpec extends SparkTestBase {
         """{"sql": "CREATE TABLE om_t (id integer)"}"""))._1 == 200)
       assert(newHttp(lPort, "POST", "/db/execute", Some(
         """{"sql": "INSERT INTO om_t VALUES (1)"}"""))._1 == 200)
+      // pushes are async: the election below picks the most-applied node,
+      // so every follower must hold both statements before the split
+      Seq(aPort, bPort, xPort, yPort).foreach { p =>
+        val deadline = System.currentTimeMillis + 20000
+        var applied = -1L
+        while (applied != 2L && System.currentTimeMillis < deadline) {
+          val (_, st, _) = newHttp(p, "GET", "/status")
+          applied = "\"applied_index\": \"(\\d+)\"".r.findFirstMatchIn(st)
+            .map(_.group(1).toLong).getOrElse(-1L)
+          if (applied != 2L) Thread.sleep(200)
+        }
+        assert(applied == 2L, s"follower on $p missed pushes: applied=$applied")
+      }
       Seq(fA, fB, fX, fY).foreach(_.checkLeader()) // cache roster + term
       // the asymmetric split: A and B can't see each other, both see X,Y
       fA.blocked = Set(s"http://localhost:$bPort")

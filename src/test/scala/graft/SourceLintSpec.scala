@@ -19,7 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The session conf is known only to `SessionProfile.scala`: hand-copied
   * `SparkSession.builder` chains drifted from the benchmarked conf, and
-  * the environment knobs that once overrode it are constants now. */
+  * the environment knobs that once overrode it are constants now.
+  *
+  * The catalog's table list comes from `ColumnShim.userTables`: Spark's
+  * `catalog.listTables` runs a job for every call. */
 class SourceLintSpec extends AnyFunSuite {
   private val mainDir = new java.io.File("src/main/scala")
   private val engineDir = new java.io.File(mainDir, "graft/engine")
@@ -128,5 +131,14 @@ class SourceLintSpec extends AnyFunSuite {
       }
     }
     assert(hits.isEmpty, hits.mkString("retired knobs:\n", "\n", ""))
+  }
+
+  test("no catalog.listTables in src/main (ColumnShim.userTables lists without a job)") {
+    assert(mainDir.isDirectory, s"run from the repository root: $mainDir")
+    val hits = scalaFiles(mainDir).flatMap(f => lines(f).zipWithIndex.collect {
+      case (l, i) if l.contains("catalog.listTables") =>
+        s"${f.getPath}:${i + 1}: ${l.trim}"
+    })
+    assert(hits.isEmpty, hits.mkString("catalog.listTables calls:\n", "\n", ""))
   }
 }

@@ -7,7 +7,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Spark jobs per small write statement: the cost floor every replica
   * pays once per replicated statement. A literal batch is checked and
-  * written on the driver; a DELETE's rewrite is its only job. */
+  * written on the driver; a table whose rows fit
+  * `SqlGateway.DriverImageBytes` is read, filtered, rewritten and exported
+  * on the driver too. */
 class WriteJobsSpec extends SparkTestBase {
   lazy val gw = new SqlGateway(spark)
 
@@ -22,16 +24,19 @@ class WriteJobsSpec extends SparkTestBase {
 
   override def afterAll(): Unit = spark.sparkContext.removeSparkListener(listener)
 
-  /** (jobs, rows affected) of one statement; the listener bus is drained
-    * before and after, so no other statement's jobs are counted. */
-  private def jobsOf(sql: String): (Int, Long) = {
+  /** (jobs, result) of `body`; the listener bus is drained before and
+    * after, so no other statement's jobs are counted. */
+  private def jobsDuring[T](body: => T): (Int, T) = {
     listener
     ListenerShim.waitUntilEmpty(spark.sparkContext)
     jobs.set(0)
-    val n = gw.execute(sql).rowsAffected
+    val r = body
     ListenerShim.waitUntilEmpty(spark.sparkContext)
-    (jobs.get, n)
+    (jobs.get, r)
   }
+
+  /** (jobs, rows affected) of one statement. */
+  private def jobsOf(sql: String): (Int, Long) = jobsDuring(gw.execute(sql).rowsAffected)
 
   private def files(table: String): Set[String] = spark.table(table).inputFiles.toSet
 
@@ -61,16 +66,78 @@ class WriteJobsSpec extends SparkTestBase {
     assert(gw.query("SELECT count(*) AS n FROM wj_pk").values.head.head == 3L)
   }
 
-  test("DELETE … WHERE runs one job: the rewrite, with rows affected from the footers") {
+  test("DELETE … WHERE on a small table runs no job, with rows affected from the image") {
     gw.execute("DROP TABLE IF EXISTS wj_del")
     gw.execute("CREATE TABLE wj_del (id integer, v text)")
     (1 to 6).foreach(i => gw.execute(s"INSERT INTO wj_del VALUES ($i, 'r$i')"))
-    assert(jobsOf("DELETE FROM wj_del WHERE id = 2") == ((1, 1L)))
-    assert(jobsOf("DELETE FROM wj_del WHERE id > 4") == ((1, 2L)))
-    assert(jobsOf("DELETE FROM wj_del WHERE id = 99") == ((1, 0L)))
+    assert(jobsOf("DELETE FROM wj_del WHERE id = 2") == ((0, 1L)))
+    assert(jobsOf("DELETE FROM wj_del WHERE id > 4") == ((0, 2L)))
+    assert(jobsOf("DELETE FROM wj_del WHERE id = 99") == ((0, 0L)))
     // the rewrite of a small table is one file, not one per input split
     assert(files("wj_del").size == 1)
     assert(gw.query("SELECT id FROM wj_del ORDER BY id").values.map(_.head) ==
       Seq(1, 3, 4))
+  }
+
+  test("UPDATE … WHERE on a small table runs no job and counts the rows it set") {
+    gw.execute("DROP TABLE IF EXISTS wj_upd")
+    gw.execute("CREATE TABLE wj_upd (id integer, v text)")
+    gw.execute("INSERT INTO wj_upd VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    assert(jobsOf("UPDATE wj_upd SET v = 'x' WHERE id >= 2") == ((0, 2L)))
+    assert(jobsOf("UPDATE wj_upd SET v = v || '!' WHERE id = 9") == ((0, 0L)))
+    assert(files("wj_upd").size == 1)
+    assert(gw.query("SELECT id, v FROM wj_upd ORDER BY id").values ==
+      Seq(Seq(1, "a"), Seq(2, "x"), Seq(3, "x")))
+    // a subquery in WHERE does not fold on the driver: the job path
+    val (n, del) = jobsOf("DELETE FROM wj_upd WHERE id IN (SELECT id FROM wj_upd WHERE v = 'x')")
+    assert(n > 0 && del == 2L, (n, del))
+    assert(gw.query("SELECT id FROM wj_upd").values == Seq(Seq(1)))
+  }
+
+  /** A gateway on a fresh session of the shared context (its own database
+    * and data dir, so a test sees only its own tables), with `conf` set. */
+  private def isolatedGateway(ns: String, conf: (String, String)*): SqlGateway = {
+    val sess = spark.newSession()
+    sess.conf.set("graft.data.dir",
+      java.nio.file.Files.createTempDirectory(s"graft-$ns-wh").toString)
+    conf.foreach { case (k, v) => sess.conf.set(k, v) }
+    sess.sql(s"CREATE DATABASE IF NOT EXISTS $ns")
+    sess.catalog.setCurrentDatabase(ns)
+    new SqlGateway(sess)
+  }
+
+  test("Snapshot.exportDatabase of small tables runs no job") {
+    val g = isolatedGateway("wj_snap_ns")
+    g.execute("CREATE TABLE s1 (id integer, v text)")
+    g.execute("INSERT INTO s1 VALUES (1, 'a'), (2, NULL)")
+    g.execute("CREATE TABLE s2 (id integer)") // empty: an empty file
+    g.spark.range(1).createOrReplaceTempView("s3") // views are not exported
+    val dir = java.nio.file.Files.createTempDirectory("graft-wj-snap").toString
+    assert(jobsDuring(graft.engine.Snapshot.exportDatabase(g, dir)) == ((0, Seq("s1", "s2"))))
+    // /status lists what the catalog lists, temp views too
+    assert(jobsDuring(graft.engine.Snapshot.status(g)("tables")) == ((0, "s1,s2,s3")))
+    assert(spark.read.parquet(s"$dir/s1").count() == 2L)
+    assert(spark.read.parquet(s"$dir/s2").count() == 0L)
+  }
+
+  test("a table whose image passes the driver bound is rewritten and exported by jobs") {
+    val g = isolatedGateway("wj_big_ns")
+    // a (int, text) row decodes to at least 24 bytes: this image passes
+    // the bound part-way through, and the statement falls back to a job
+    val n = SqlGateway.DriverImageBytes / 16
+    g.spark.range(n).selectExpr("CAST(id AS int) AS id", "CAST(id % 7 AS string) AS v")
+      .createOrReplaceTempView("wj_src")
+    g.execute("CREATE TABLE t (id integer, v text)")
+    g.execute("INSERT INTO t SELECT * FROM wj_src")
+    val dir = java.nio.file.Files.createTempDirectory("graft-wj-big").toString
+    val (jobs, counts) = jobsDuring((
+      g.execute("DELETE FROM t WHERE id % 1000 = 0").rowsAffected,
+      g.execute("UPDATE t SET v = 'x' WHERE id % 1000 = 1").rowsAffected,
+      graft.engine.Snapshot.exportDatabase(g, dir)))
+    val (deleted, updated) = ((n + 999) / 1000, (n + 998) / 1000)
+    assert(jobs >= 3 && counts == ((deleted, updated, Seq("t"))), (jobs, counts))
+    assert(g.query("SELECT count(*) FROM t").values == Seq(Seq(n - deleted)))
+    assert(g.query("SELECT count(*) FROM t WHERE v = 'x'").values == Seq(Seq(updated)))
+    assert(spark.read.parquet(s"$dir/t").count() == n - deleted)
   }
 }
