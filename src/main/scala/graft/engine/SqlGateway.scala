@@ -7044,6 +7044,9 @@ class SqlGateway(val spark: SparkSession) {
     s"$wh/${tableKey(table).replace('.', '_')}__graft"
   }
 
+  private def versionDir(table: String, version: Int): String =
+    s"${tableRoot(table)}/v$version"
+
   private def deleteDir(path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -7091,7 +7094,7 @@ class SqlGateway(val spark: SparkSession) {
   private[engine] def pinTableCut(table: String)
       : Option[(String, Seq[org.apache.hadoop.fs.FileStatus])] =
     versions.get(tableKey(table)).map { v =>
-      val dir = s"${tableRoot(table)}/v$v"
+      val dir = versionDir(table, v)
       pinnedDirs.synchronized {
         pinnedDirs(dir) = pinnedDirs.getOrElse(dir, 0) + 1
       }
@@ -7152,10 +7155,14 @@ class SqlGateway(val spark: SparkSession) {
         s"Existing object $table is of type View, trying to replace with type Table")
     if (spark.catalog.tableExists(table))
       throw new IllegalArgumentException(s"table $table already exists")
-    val loc = s"${tableRoot(table)}/v0"
+    val loc = versionDir(table, 0)
     gcDir(tableRoot(table))
     df.write.parquet(loc)
-    createCatalogEntry(table, df.schema, loc)
+    // a CHAR/VARCHAR(n) column (an older snapshot's, a passthrough
+    // table's) stores as STRING like every gateway string column
+    createCatalogEntry(table, org.apache.spark.sql.types.StructType(df.schema.map(f =>
+      f.copy(metadata = org.apache.spark.sql.catalyst.util.CharVarcharUtils
+        .cleanMetadata(f.metadata)))), loc)
     versions(tableKey(table)) = 0
     txn.foreach(_.created += tableKey(table)) // rollback will drop it
   }
@@ -7194,7 +7201,7 @@ class SqlGateway(val spark: SparkSession) {
         spark.sql(s"DROP TABLE $from")
         if (fs.exists(dst)) fs.delete(dst, true)
         fs.rename(src, dst)
-        createCatalogEntry(to, schema, s"${tableRoot(to)}/v$v")
+        createCatalogEntry(to, schema, versionDir(to, v))
         versions.remove(kf); versions(kt) = v
       case None => // managed passthrough table: Spark's own rename
         spark.sql(s"ALTER TABLE $from RENAME TO $to")
@@ -7360,20 +7367,19 @@ class SqlGateway(val spark: SparkSession) {
             new org.apache.spark.sql.types.MetadataBuilder()
               .putString(Results.DuckTypeKey, duckName).build())
         case None =>
-          // DuckDB's bare VARCHAR has no length parameter and its binary
+          // DuckDB's VARCHAR spellings store as STRING and its binary
           // type is spelled BLOB; normalize for Spark's fromDDL — but only
           // HERE, after cornerType: a VARCHAR inside a declared corner
           // spec (UNION member list) must keep its DuckDB spelling in the
           // surfaced DatabaseTypeName. Composite spellings (`INT[]`,
           // `MAP(K,V)`, `STRUCT(...)`) translate recursively first.
-          val norm = duckTypeToSpark(spec)
-            .replaceAll("(?i)\\bVARCHAR\\b(?!\\s*\\()", "STRING")
+          val norm = SqlGateway.DuckVarcharRe.replaceAllIn(duckTypeToSpark(spec), "STRING")
             .replaceAll("(?i)\\bBLOB\\b", "BINARY")
           org.apache.spark.sql.types.StructField(name,
             org.apache.spark.sql.types.DataType.fromDDL(norm), nullable = true)
       }
     }
-    val loc = s"${tableRoot(table)}/v0"
+    val loc = versionDir(table, 0)
     gcDir(tableRoot(table)) // stale files from a prior incarnation must not resurface
     createCatalogEntry(table, org.apache.spark.sql.types.StructType(fields), loc)
     versions(tableKey(table)) = 0
@@ -7416,20 +7422,31 @@ class SqlGateway(val spark: SparkSession) {
 
   /** Split a column-spec / SET list on top-level commas, on the
     * [[SqlLex]] masked view: a comma inside 'x, y' or "a,b" does not
-    * split, and a paren inside a literal or identifier is not nesting. */
+    * split, nor one inside (…), a list [1, 2] or a struct {'a': 1, …}; a
+    * bracket inside a literal or identifier is not nesting. */
   private def splitTopLevel(s: String): Seq[String] = {
     val mk = SqlLex.mask(s)
     val out = Vector.newBuilder[String]
     var depth = 0; var from = 0
     for (i <- 0 until mk.length) mk.charAt(i) match {
-      case '(' => depth += 1
-      case ')' => depth -= 1
+      case '(' | '[' | '{' => depth += 1
+      case ')' | ']' | '}' => depth -= 1
       case ',' if depth == 0 => out += s.substring(from, i); from = i + 1
       case _ => ()
     }
     if (from < s.length) out += s.substring(from)
     out.result()
   }
+
+  /** The `col = expr` pieces of a SET list, split at each piece's first
+    * `=`, with the expression in Spark's dialect (a list or struct literal
+    * is DuckDB's spelling). A piece with no `=` is DuckDB's parser error. */
+  private def setPairs(sets: String): Seq[(String, String)] =
+    splitTopLevel(sets).map(_.split("=", 2) match {
+      case Array(c, e) => (c.trim, duckCompat(e.trim))
+      case _ => throw new IllegalArgumentException(
+        "Parser Error: syntax error at end of input")
+    })
 
   /** Throw if any row of `df` violates a registered CHECK of `table`.
     * SQL semantics: a row fails only when the expression is FALSE — NULL
@@ -7741,13 +7758,12 @@ class SqlGateway(val spark: SparkSession) {
       throw new IllegalArgumentException(
         s"ON CONFLICT DO UPDATE: duplicate key within the batch is ambiguous: $table")
     val known = target.columns.map(_.toLowerCase).toSet
-    val assignments = splitTopLevel(sets).map { a =>
-      val Array(c, e) = a.split("=", 2)
-      val colName = c.trim.toLowerCase
+    val assignments = setPairs(sets).map { case (c, e) =>
+      val colName = c.toLowerCase
       if (!known.contains(colName))
-        throw new IllegalArgumentException(s"upsert $table: unknown column ${c.trim}")
+        throw new IllegalArgumentException(s"upsert $table: unknown column $c")
       // bind DuckDB's `excluded.<col>` to the staged batch's aliased cols
-      (colName, rewriteExcluded(e.trim))
+      (colName, rewriteExcluded(e))
     }.toMap
     val ex = staged.select(staged.columns.map(c => col(c).as(s"__ex_$c")).toIndexedSeq: _*)
     val cond = pk.map(k => col(k) === col(s"__ex_$k")).reduce(_ && _)
@@ -7885,8 +7901,8 @@ class SqlGateway(val spark: SparkSession) {
       throw new IllegalArgumentException(
         s"ALTER $table: column $colName already exists")
     }
-    val spec = spec0.trim.replaceAll("(?i)\\bTEXT\\b", "STRING")
-      .replaceAll("(?i)\\bVARCHAR\\b(?!\\s*\\()", "STRING")
+    val spec = SqlLex.replace(spec0.trim.replaceAll("(?i)\\bTEXT\\b", "STRING"),
+      SqlGateway.DuckVarcharRe)(_ => "STRING")
     val ColDefault = ("""(?is)(.*?)\bDEFAULT\s+""" +
       """('(?:[^']|'')*'|\([^()]*\)|[\w.+\-]+(?:\([^()]*\))?)\s*(.*)""").r
     spec match {
@@ -7913,8 +7929,8 @@ class SqlGateway(val spark: SparkSession) {
     if (checkReferences(table, colName))
       throw new IllegalArgumentException(
         s"ALTER $table: column $colName is referenced by a CHECK constraint")
-    val sparkType = typeSpec.trim
-      .replaceAll("(?i)^VARCHAR$|^TEXT$", "STRING")
+    val sparkType = SqlGateway.DuckVarcharRe.replaceAllIn(typeSpec.trim, "STRING")
+      .replaceAll("(?i)^TEXT$", "STRING")
       .replaceAll("(?i)^INT4$|^INTEGER$", "INT")
       .replaceAll("(?i)^INT8$", "BIGINT")
     val value = using.map(u => expr(duckCompat(u))).getOrElse(col(actual))
@@ -8020,13 +8036,13 @@ class SqlGateway(val spark: SparkSession) {
     versions.get(tableKey(table)) match {
       case Some(cur) =>
         val next = cur + 1
-        val loc = s"${tableRoot(table)}/v$next"
+        val loc = versionDir(table, next)
         deleteDir(loc)
         df.write.parquet(loc)
         spark.sql(s"DROP TABLE $table")
         createCatalogEntry(table, df.schema, loc)
         versions(tableKey(table)) = next
-        if (next >= 2) gcDir(s"${tableRoot(table)}/v${next - 2}")
+        if (next >= 2) gcDir(versionDir(table, next - 2))
       case None =>
         val staged = df.localCheckpoint(eager = true)
         spark.sql(s"DROP TABLE $table")
@@ -8038,18 +8054,17 @@ class SqlGateway(val spark: SparkSession) {
   private def update(table: String, setClause: String, where: Option[String]): ExecuteResult = {
     val pred = where.map(expr).getOrElse(lit(true))
     val tableDefaults = columnDefaults.getOrElse(tableKey(table), Map.empty)
-    val assignments = splitTopLevel(setClause).map { a =>
-      val Array(c, e) = a.split("=", 2)
+    val assignments = setPairs(setClause).map { case (c, e) =>
       // SET col = DEFAULT takes the declared default, NULL when none
       // (DuckDB probed) — the stored DuckDB spelling compiles through
       // the same dialect pass the insert-time DEFAULT uses
       val ex =
-        if (e.trim.equalsIgnoreCase("DEFAULT"))
+        if (e.equalsIgnoreCase("DEFAULT"))
           expr(duckCompat(tableDefaults.collectFirst {
-            case (k, d) if k.equalsIgnoreCase(c.trim) => d
+            case (k, d) if k.equalsIgnoreCase(c) => d
           }.getOrElse("NULL")))
-        else expr(e.trim)
-      (c.trim, ex)
+        else expr(e)
+      (c, ex)
     }
     val target = rewriteSource(table, pred +: assignments.map(_._2): _*)
     // a SET target that names no table column is an error (SQL engines
@@ -8122,12 +8137,11 @@ class SqlGateway(val spark: SparkSession) {
     val (src, srcAlias) = sourceClause(fromClause)
     val tAlias = table.split("\\.").last
     val actualByLower = target.columns.map(c => c.toLowerCase -> c).toMap
-    val assignments = splitTopLevel(setClause).map { a =>
-      val Array(c, e) = a.split("=", 2)
-      val cn = c.trim.toLowerCase
+    val assignments = setPairs(setClause).map { case (c, e) =>
+      val cn = c.toLowerCase
       if (!actualByLower.contains(cn))
-        throw new IllegalArgumentException(s"UPDATE $table: unknown column ${c.trim}")
-      cn -> e.trim
+        throw new IllegalArgumentException(s"UPDATE $table: unknown column $c")
+      cn -> e
     }
     // pin row ids: the id column feeds two plans (hit count + merge-back)
     // and must not be re-derived differently on re-execution
@@ -8208,16 +8222,21 @@ class SqlGateway(val spark: SparkSession) {
   //     Single-connection semantics, exactly the shape the reference has:
   //     it holds ONE shared DB handle, so every statement between BEGIN
   //     and COMMIT joins the transaction. The versioned-dir storage makes
-  //     this natural on Spark: in-txn writes land in NEW version dirs that
-  //     the catalog does not reference yet — a temp view shadowing the
-  //     table name gives the transaction its own-writes visibility, while
-  //     every reader outside keeps resolving the catalog location (the
-  //     pre-txn snapshot). COMMIT is metadata-only: repoint each table's
+  //     this natural on Spark: a table's data is one value, its file set
+  //     (version dir + append-delta dirs). In-txn writes land in dirs the
+  //     catalog does not reference yet — a new version for a rewrite, a
+  //     new delta for an append — and a temp view over the txn's file set,
+  //     shadowing the table name, gives the transaction its own-writes
+  //     visibility, while every reader outside keeps resolving the catalog
+  //     location (the pre-txn snapshot). COMMIT is metadata-only: rename
+  //     the delta part files into the version dir and repoint the table's
   //     location (the cheap `ALTER ... SET LOCATION` swap, no data move —
   //     the same O(1) commit at 100 TB); ROLLBACK deletes the orphan dirs.
   //     Honest subset, documented: DROP TABLE and ALTER inside a
   //     transaction are refused (not silently non-transactional), and
   //     sequences do not refund ids on rollback (PostgreSQL semantics).
+
+  import SqlGateway.FileSet
 
   private final class TxnState {
     val baseVersions: Map[String, Int] = versions.toMap
@@ -8238,12 +8257,8 @@ class SqlGateway(val spark: SparkSession) {
     // them back with the transaction (r11 review finding)
     val baseComments: Map[String, String] = comments.toMap
     val baseTempTables: Set[String] = tempTables.keySet.toSet
-    /** tableKey → latest uncommitted version dir written in this txn. */
-    val pending = scala.collection.mutable.Map.empty[String, Int]
-    /** tableKey → uncommitted append-delta dirs (txn INSERTs stay O(batch):
-      * each lands in its own dir beside the live version; COMMIT renames
-      * the part files into the live dir — metadata ops, no data copy). */
-    val deltas = scala.collection.mutable.Map.empty[String, Vector[String]]
+    /** tableKey → the file set of each table this txn wrote. */
+    val files = scala.collection.mutable.Map.empty[String, FileSet]
     /** tables created inside the txn (rollback drops them). */
     val created = scala.collection.mutable.Set.empty[String]
   }
@@ -8262,62 +8277,39 @@ class SqlGateway(val spark: SparkSession) {
 
   private def commitTxn(): ExecuteResult = {
     val t = txn.getOrElse(throw new IllegalStateException("no transaction is active"))
-    // repoint each rewritten table to its pending version — metadata ops
-    // only; the data files were already written by the statements
-    t.pending.foreach { case (key, ver) =>
+    txn = None // clear first: each table below takes the live-table path
+    t.files.foreach { case (key, set) =>
       spark.catalog.dropTempView(key)
-      val loc = s"${tableRoot(key)}/v$ver"
-      spark.sql(s"ALTER TABLE $key SET LOCATION '$loc'")
-      versions(key) = ver
-    }
-    // append-only tables: rename the delta part files into the live dir —
-    // O(files) metadata ops, no data copy (the same visibility caveat as
-    // the non-txn append path, which also adds files to a live dir)
-    t.deltas.foreach { case (key, dirs) =>
-      if (!t.pending.contains(key)) {
-        spark.catalog.dropTempView(key)
-        val live = new org.apache.hadoop.fs.Path(
-          s"${tableRoot(key)}/v${versions(key)}")
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(live)) fs.mkdirs(live)
-        dirs.foreach { d =>
-          val dp = new org.apache.hadoop.fs.Path(d)
-          fs.listStatus(dp).filter(_.getPath.getName.startsWith("part-"))
-            .foreach(f => fs.rename(f.getPath,
-              new org.apache.hadoop.fs.Path(live, f.getPath.getName)))
-          deleteDir(d)
-        }
-        spark.catalog.refreshTable(key)
+      // rename the delta part files into the version dir — O(files)
+      // metadata ops, no data copy (the same visibility caveat as the
+      // non-txn append path, which also adds files to a live dir)
+      val dir = new org.apache.hadoop.fs.Path(versionDir(key, set.version))
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(dir)) fs.mkdirs(dir)
+      set.deltas.foreach { d =>
+        fs.listStatus(new org.apache.hadoop.fs.Path(d))
+          .filter(_.getPath.getName.startsWith("part-"))
+          .foreach(f => fs.rename(f.getPath,
+            new org.apache.hadoop.fs.Path(dir, f.getPath.getName)))
+        deleteDir(d)
       }
+      publish(key, FileSet(versions(key)), FileSet(set.version))
     }
-    txn = None
-    // GC to the usual retain-current+previous AFTER the swap
-    t.pending.foreach { case (key, ver) =>
-      val base = t.baseVersions.getOrElse(key, 0)
-      (math.max(0, base - 1) to ver - 2).foreach(v =>
-        gcDir(s"${tableRoot(key)}/v$v"))
-    }
-    ExecuteResult((t.pending.keySet ++ t.deltas.keySet).size.toLong)
+    ExecuteResult(t.files.size.toLong)
   }
 
   private def rollbackTxn(): ExecuteResult = {
     val t = txn.getOrElse(throw new IllegalStateException("no transaction is active"))
     txn = None // clear first: dropTable below must run its non-txn path
-    (t.pending.keySet ++ t.deltas.keySet).foreach { key =>
+    // discard the txn's deltas and versions past the live one — the
+    // catalog never referenced them, so no reader outside saw these rows
+    t.files.foreach { case (key, set) =>
       spark.catalog.dropTempView(key)
+      set.deltas.foreach(deleteDir)
+      (versions(key) + 1 to set.version).foreach(v => deleteDir(versionDir(key, v)))
     }
-    // discard uncommitted append deltas — the live dir never saw them
-    t.deltas.values.foreach(_.foreach(deleteDir))
     t.created.foreach { tbl =>
       try dropTable(tbl) catch { case _: Throwable => () }
-    }
-    // discard uncommitted version dirs — the catalog never referenced
-    // them, so no reader ever saw these rows
-    t.pending.foreach { case (key, ver) =>
-      if (!t.created.contains(key)) {
-        val base = t.baseVersions.getOrElse(key, 0)
-        (base + 1 to ver).foreach(v => deleteDir(s"${tableRoot(key)}/v$v"))
-      }
     }
     constraints.clear(); constraints ++= t.baseConstraints
     checks.clear(); checks ++= t.baseChecks
@@ -8335,73 +8327,41 @@ class SqlGateway(val spark: SparkSession) {
     ExecuteResult(0L)
   }
 
-  /** Append path: outside a transaction, a plain file append into the live
-    * version dir. Inside one, the batch lands in its own DELTA dir — the
-    * live dir stays untouched for ROLLBACK, the txn's reads see base ∪
-    * deltas through the shadowing view, and COMMIT renames the part files
-    * into the live dir (metadata ops — a transactional ingest stays
-    * O(batch) however big the table, not a copy-on-write of 100 TB).
-    * Once the txn has REWRITTEN the table (UPDATE/DELETE), later appends
-    * fold into rewrites — the rewrite path already owns the full image. */
-  private def appendRows(table: String, rows: DataFrame): Unit = txn match {
-    case Some(t) =>
-      val key = tableKey(table)
-      if (key.contains("."))
-        throw new IllegalArgumentException(
-          s"DML on qualified table name $table inside a transaction is not supported")
-      if (t.pending.contains(key))
-        overwriteTable(table, spark.table(table).union(rows))
-      else {
-        val base = versions.getOrElse(key,
-          throw new IllegalArgumentException(
-            s"$table is not a gateway-managed table — transactional DML requires one"))
-        val k = t.deltas.getOrElse(key, Vector.empty).size
-        val dir = s"${tableRoot(table)}/v${base}_txd$k"
-        deleteDir(dir)
-        driverBatch(table, rows) match {
-          case Some((data, schema)) => writeOnDriver(data, schema, dir)
-          case None => rows.write.parquet(dir)
-        }
-        t.deltas(key) = t.deltas.getOrElse(key, Vector.empty) :+ dir
-        // a statement that ERRORS must leave no effect: unregister the
-        // delta if the own-writes view refresh fails, or COMMIT would
-        // apply rows the client was told were rejected
-        try refreshTxnView(key, t)
-        catch { case e: Throwable =>
-          t.deltas(key) = t.deltas(key).init; deleteDir(dir); throw e
-        }
-      }
-    case None => (versions.get(tableKey(table)), driverBatch(table, rows)) match {
-      case (Some(v), Some((data, schema))) =>
-        writeOnDriver(data, schema, s"${tableRoot(table)}/v$v")
-        spark.catalog.refreshTable(table)
-      case _ => rows.write.mode("append").insertInto(table)
-    }
+  /** Append `rows` to `table`'s file set. Outside a transaction the batch
+    * joins the live version dir. Inside one it lands in a new delta dir
+    * added to the txn's file set: the live dir stays untouched for
+    * ROLLBACK, and the statement stays O(batch) however big the table,
+    * also after the txn rewrote it. A statement that errors leaves no
+    * delta behind, or COMMIT would apply rows the client was told were
+    * rejected. A table the gateway does not version takes Spark's insert. */
+  private def appendRows(table: String, rows: DataFrame): Unit = writeSet(table) match {
+    case Some(set) =>
+      val dir =
+        if (inTxn) s"${versionDir(table, set.version)}_txd${set.deltas.size}"
+        else versionDir(table, set.version)
+      try {
+        writeRows(table, rows, dir)
+        publish(table, set, if (inTxn) set.copy(deltas = set.deltas :+ dir) else set)
+      } catch { case e: Throwable if inTxn => deleteDir(dir); throw e }
+    case None => rows.write.mode("append").insertInto(table)
   }
 
   /** The rows of a batch that is already on the driver (its optimized plan
     * is a LocalRelation), with the schema its file gets: the batch's
     * columns with the table's field metadata, as Spark's insert writes
-    * them. None when Spark must run the write: rows it computes, or a
-    * table with CHAR/VARCHAR(n) columns, whose length checks are part of
-    * Spark's insert. */
+    * them. None when Spark must run the write: rows it computes. */
   private def driverBatch(table: String, rows: DataFrame): Option[(
       Seq[org.apache.spark.sql.catalyst.InternalRow],
       org.apache.spark.sql.types.StructType)] = {
     val tableSchema = spark.table(table).schema
     rows.queryExecution.optimizedPlan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if l.schema.map(_.dataType) == tableSchema.map(_.dataType) &&
-            !hasLengthLimits(tableSchema) =>
+          if l.schema.map(_.dataType) == tableSchema.map(_.dataType) =>
         Some((l.data, org.apache.spark.sql.types.StructType(
           l.schema.zip(tableSchema).map { case (b, t) => b.copy(metadata = t.metadata) })))
       case _ => None
     }
   }
-
-  private def hasLengthLimits(schema: org.apache.spark.sql.types.StructType): Boolean =
-    schema.exists(f => org.apache.spark.sql.catalyst.util
-      .CharVarcharUtils.getRawType(f.metadata).isDefined)
 
   /** The rows of `df` when the optimizer folded it to a LocalRelation: they
     * were computed on the driver, and reading them runs no job. */
@@ -8411,16 +8371,35 @@ class SqlGateway(val spark: SparkSession) {
       case _ => None
     }
 
-  /** The data files `table`'s readers see when it is versioned: its live
-    * version dir; inside a transaction, its pending rewrite, or the live
-    * dir plus its append deltas (a rewrite folds the deltas, so a table
-    * never has both). */
-  private def liveFiles(table: String): Option[Seq[org.apache.hadoop.fs.FileStatus]] = {
+  /** `table`'s file set in the current context: inside a transaction the
+    * one the txn holds for it, else its live version dir. None for a
+    * table the gateway does not version. */
+  private def fileSet(table: String): Option[FileSet] = {
     val key = tableKey(table)
-    val deltas = txn.flatMap(_.deltas.get(key)).getOrElse(Vector.empty)
-    txn.flatMap(_.pending.get(key)).orElse(versions.get(key)).map(v =>
-      (s"${tableRoot(table)}/v$v" +: deltas).flatMap(dataFiles))
+    txn.flatMap(_.files.get(key)).orElse(versions.get(key).map(FileSet(_)))
   }
+
+  /** [[fileSet]] of a table a statement writes. Inside a transaction the
+    * table must be versioned and named without a qualifier: the view that
+    * shows the txn its own writes carries the bare name. */
+  private def writeSet(table: String): Option[FileSet] = {
+    if (inTxn && tableKey(table).contains("."))
+      throw new IllegalArgumentException(
+        s"DML on qualified table name $table inside a transaction is not supported")
+    val set = fileSet(table)
+    if (inTxn && set.isEmpty)
+      throw new IllegalArgumentException(
+        s"$table is not a gateway-managed table — transactional DML requires one")
+    set
+  }
+
+  private def dirsOf(table: String, set: FileSet): Seq[String] =
+    versionDir(table, set.version) +: set.deltas
+
+  /** The data files `table`'s readers see when it is versioned: those of
+    * its [[fileSet]]. */
+  private def liveFiles(table: String): Option[Seq[org.apache.hadoop.fs.FileStatus]] =
+    fileSet(table).map(dirsOf(table, _).flatMap(dataFiles))
 
   /** The frame a DELETE/UPDATE of `table` reads. When [[imageRows]] takes
     * the table's files, it is a LocalRelation of them under the table's
@@ -8445,16 +8424,16 @@ class SqlGateway(val spark: SparkSession) {
 
   /** The rows of parquet `files` under `schema`, read on the driver with
     * Spark's own parquet reader and the session's Hadoop conf. None when
-    * `schema` has a CHAR/VARCHAR(n) column, or when the files, or the rows
-    * decoded from them so far, pass [[SqlGateway.DriverImageBytes]]: the
-    * reading then stops and the caller runs a job. */
+    * the files, or the rows decoded from them so far, pass
+    * [[SqlGateway.DriverImageBytes]]: the reading then stops and the
+    * caller runs a job. */
   private def imageRows(schema: org.apache.spark.sql.types.StructType,
       files: Seq[org.apache.hadoop.fs.FileStatus])
       : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
     val bound = SqlGateway.DriverImageBytes
-    if (files.map(_.getLen).sum > bound || hasLengthLimits(schema)) return None
+    if (files.map(_.getLen).sum > bound) return None
     val read = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
       .buildReaderWithPartitionValues(spark, schema,
         org.apache.spark.sql.types.StructType(Nil), schema, Nil,
@@ -8491,15 +8470,19 @@ class SqlGateway(val spark: SparkSession) {
     }
   }
 
-  /** Write `df` as the table version in `loc`: on the driver when it is
-    * already there ([[driverBatch]]), else as one right-sized job. */
+  /** Write `df` as the table version in `loc`. */
   private def writeVersion(table: String, df: DataFrame, loc: String): Unit = {
     deleteDir(loc) // leftovers of a previously failed rewrite attempt
-    driverBatch(table, df) match {
-      case Some((rows, schema)) => writeOnDriver(rows, schema, loc)
-      case None => rightSized(df).write.parquet(loc)
-    }
+    writeRows(table, df, loc)
   }
+
+  /** Add `df`'s rows to `dir`: on the driver when they are already there
+    * ([[driverBatch]]), else as one right-sized job. */
+  private def writeRows(table: String, df: DataFrame, dir: String): Unit =
+    driverBatch(table, df) match {
+      case Some((rows, schema)) => writeOnDriver(rows, schema, dir)
+      case None => rightSized(df).write.mode("append").parquet(dir)
+    }
 
   /** Write `rows` as one parquet file in `dir` with no Spark job: Spark's
     * own parquet writer (the factory a write job's tasks use), under the
@@ -8555,74 +8538,62 @@ class SqlGateway(val spark: SparkSession) {
     df.coalesce(((bytes + split - 1) / split).max(1).min(Int.MaxValue).toInt)
   }
 
-  /** (Re)register the session temp view giving this txn its own-writes
-    * visibility for `key`: the pending rewrite if one exists, else the
-    * live catalog table (resolved QUALIFIED, which bypasses the temp view
-    * itself) unioned with any append deltas. */
-  private def refreshTxnView(key: String, t: TxnState): Unit = {
-    val base = t.pending.get(key) match {
-      case Some(v) => spark.read.parquet(s"${tableRoot(key)}/v$v")
-      // qualify with the session's CURRENT database (not a hardcoded
-      // `default.`) — qualification is only there to bypass the same-named
-      // temp view this method itself registers
-      case None => spark.table(s"${spark.catalog.currentDatabase}.$key")
+  /** Make `now` `table`'s file set in place of `from`.
+    *
+    * Inside a transaction `now` is what the txn reads: a session temp view
+    * shadowing the table name, one scan of its dirs under the catalog
+    * schema (no schema inference). Temp views are session-scoped, so
+    * every reader of THIS session sees the txn's writes — single-connection
+    * semantics, exactly what the reference's one shared DB handle gives all
+    * its HTTP clients. A reader on a separate SparkSession (the
+    * multi-connection shape) resolves the catalog location = the pre-txn
+    * snapshot (spec-asserted). Deltas that `now` no longer holds were
+    * folded into a rewrite and are deleted; a superseded version is not
+    * (reads take no lock): COMMIT's GC or ROLLBACK removes it.
+    *
+    * Outside one `now` is the live table: a new version is swapped in with
+    * one `SET LOCATION` and the versions before `from`'s predecessor are
+    * GC'd (retain current + previous, mirroring the reference's
+    * `retainSnapshotCount = 2`); files added to the same version dir are
+    * picked up with a refresh. */
+  private def publish(table: String, from: FileSet, now: FileSet): Unit = {
+    val key = tableKey(table)
+    txn match {
+      case Some(t) =>
+        spark.read.schema(spark.table(key).schema).parquet(dirsOf(key, now): _*)
+          .createOrReplaceTempView(key)
+        t.files(key) = now
+        from.deltas.filterNot(now.deltas.contains).foreach(deleteDir)
+      case None if now.version == from.version => spark.catalog.refreshTable(table)
+      case None =>
+        // the command refreshes the table itself (one listing)
+        spark.sql(s"ALTER TABLE $table SET LOCATION '${versionDir(key, now.version)}'")
+        versions(key) = now.version
+        (math.max(0, from.version - 1) to now.version - 2)
+          .foreach(v => gcDir(versionDir(key, v)))
     }
-    val df = t.deltas.getOrElse(key, Vector.empty)
-      .foldLeft(base)((d, dir) => d.union(spark.read.parquet(dir)))
-    df.createOrReplaceTempView(key)
   }
 
   /** Atomic table rewrite. For versioned tables (anything created through
     * the gateway): write the new contents COMPLETELY to `v<N+1>` — the
-    * rewrite plan reads the live `v<N>` files, so no self-read staging is
-    * needed — then repoint the catalog in one metadata operation. A reader
-    * resolved against `v<N>` keeps its intact snapshot (the reference gets
-    * the same isolation from DuckDB MVCC); a failure mid-write leaves the
-    * live table untouched. `v<N-1>` is GC'd (retain current + previous,
-    * mirroring the reference's `retainSnapshotCount = 2`).
+    * rewrite plan reads the current file set, so no self-read staging is
+    * needed — then [[publish]] it. A reader resolved against `v<N>` keeps
+    * its intact snapshot (the reference gets the same isolation from
+    * DuckDB MVCC); a failure mid-write leaves the table untouched.
     *
     * Tables that bypassed the gateway DDL path (raw passthrough) have no
     * version dir; they fall back to checkpoint + in-place overwrite, which
     * is atomic only against failure after the checkpoint, not against
     * concurrent reads — the versioned path is the supported one. */
-  private def overwriteTable(table: String, df: DataFrame): Unit = txn match {
-    case Some(t) =>
-      val key = tableKey(table)
-      if (key.contains("."))
-        throw new IllegalArgumentException(
-          s"DML on qualified table name $table inside a transaction is not supported")
-      val cur = t.pending.get(key).orElse(versions.get(key)).getOrElse(
-        throw new IllegalArgumentException(
-          s"$table is not a gateway-managed table — transactional DML requires one"))
-      val next = cur + 1
-      writeVersion(table, df, s"${tableRoot(table)}/v$next")
-      // own-writes visibility: shadow the catalog name with the pending
-      // files. Temp views are session-scoped, so every reader of THIS
-      // session sees the txn's writes — single-connection semantics,
-      // exactly what the reference's one shared DB handle gives all its
-      // HTTP clients. A reader on a separate SparkSession (the
-      // multi-connection shape) resolves the catalog location = the
-      // pre-txn snapshot (spec-asserted). No GC here — the live pre-txn
-      // dir must survive until COMMIT decides its fate.
-      t.pending(key) = next
-      // the rewrite read base ∪ deltas through the view, so any append
-      // deltas are now folded into the pending image — their dirs are
-      // no longer referenced by anything
-      t.deltas.remove(key).foreach(_.foreach(deleteDir))
-      refreshTxnView(key, t)
-    case None => versions.get(tableKey(table)) match {
-      case Some(cur) =>
-        val next = cur + 1
-        val loc = s"${tableRoot(table)}/v$next"
-        writeVersion(table, df, loc)
-        // the command refreshes the table itself (one listing)
-        spark.sql(s"ALTER TABLE $table SET LOCATION '$loc'")
-        versions(tableKey(table)) = next
-        if (next >= 2) gcDir(s"${tableRoot(table)}/v${next - 2}")
-      case None =>
-        val staged = df.localCheckpoint(eager = true)
-        staged.write.mode("overwrite").insertInto(table)
-    }
+  private def overwriteTable(table: String, df: DataFrame): Unit = writeSet(table) match {
+    case Some(set) =>
+      val loc = versionDir(table, set.version + 1)
+      writeVersion(table, df, loc)
+      try publish(table, set, FileSet(set.version + 1))
+      catch { case e: Throwable if inTxn => deleteDir(loc); throw e }
+    case None =>
+      val staged = df.localCheckpoint(eager = true)
+      staged.write.mode("overwrite").insertInto(table)
   }
 }
 
@@ -8639,12 +8610,25 @@ object SqlGateway {
     * NULL columns it has a NULL in, and its in-batch PK duplicates. */
   private final case class BatchStats(n: Long, nullCols: Seq[String], pkDups: Long)
 
+  /** A versioned table's data in one context: its version dir
+    * `v<version>` and the append-delta dirs a transaction added in front
+    * of it (none outside a transaction). Readers scan all of them. */
+  private final case class FileSet(version: Int, deltas: Vector[String] = Vector.empty)
+
   /** The most bytes of decoded rows (UnsafeRow size) a DELETE, UPDATE or
     * snapshot export reads into a driver image before it takes the job
     * path instead. A probe of both paths on a 4-core box (CHANGES.md)
     * found the driver path cheaper in CPU up to a 2.3 MB image, level
     * with the job at 4.7 MB and up to twice its cost at 9.5 MB. */
   private[graft] val DriverImageBytes: Long = 2L << 20
+
+  /** DuckDB's VARCHAR spellings, with the length DuckDB ignores (probed
+    * 1.0.0: a VARCHAR(3) column stores 'abcdef', a CHAR(2) column reads
+    * 'x' back unpadded). Each stores as STRING: Spark's CHAR/VARCHAR(n)
+    * would check the length on write and pad CHAR on read. */
+  private[graft] val DuckVarcharRe: scala.util.matching.Regex =
+    ("""(?i)\b(?:CHARACTER\s+VARYING|CHARACTER|CHAR|BPCHAR|NVARCHAR|VARCHAR)\b""" +
+      """(?:\s*\(\s*\d+\s*\))?""").r
 
   /** One step of the gateway's DuckDB-default rewrite: a call rule or a
     * raw pass. */

@@ -721,6 +721,35 @@ class GatewaySpec extends SparkTestBase {
       Seq("mut", "d1", "d2", "d3"))
   }
 
+  test("an INSERT after an UPDATE in a transaction adds a delta dir; " +
+       "ROLLBACK drops both, COMMIT applies both") {
+    gw.execute("DROP TABLE IF EXISTS txu")
+    gw.execute("CREATE TABLE txu (id integer, v text)")
+    gw.execute("INSERT INTO txu VALUES (1, 'a'), (2, 'b')")
+    def rows(s: org.apache.spark.sql.SparkSession) = s.table("txu").orderBy("id")
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    def dirs = spark.table("txu").inputFiles
+      .map(f => new org.apache.hadoop.fs.Path(f).getParent.getName).toSet
+    val before = Seq((1, "a"), (2, "b"))
+    val after = Seq((1, "x"), (2, "b"), (3, "c"))
+    for (end <- Seq("ROLLBACK", "COMMIT")) {
+      gw.execute("BEGIN")
+      gw.execute("UPDATE txu SET v = 'x' WHERE id = 1")
+      val rewritten = dirs
+      gw.execute("INSERT INTO txu VALUES (3, 'c')")
+      // the batch lands beside the rewrite, not in a new version of it
+      assert(rewritten.size == 1 && dirs == rewritten + s"${rewritten.head}_txd0",
+        (rewritten, dirs))
+      assert(rows(spark) == after)
+      // another connection reads the pre-transaction rows until COMMIT
+      assert(rows(spark.newSession()) == before)
+      gw.execute(end)
+      val kept = if (end == "COMMIT") after else before
+      assert(rows(spark) == kept && rows(spark.newSession()) == kept, end)
+    }
+    assert(dirs.size == 1) // COMMIT moved the delta's part files into the version
+  }
+
   test("CREATE TYPE names an ENUM usable in DDL; EXPLAIN ANALYZE runs with timers") {
     gw.execute("DROP TABLE IF EXISTS ty")
     gw.execute("CREATE TYPE mood AS ENUM ('sad', 'ok', 'happy')")

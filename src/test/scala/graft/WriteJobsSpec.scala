@@ -94,6 +94,20 @@ class WriteJobsSpec extends SparkTestBase {
     assert(gw.query("SELECT id FROM wj_upd").values == Seq(Seq(1)))
   }
 
+  test("INSERT … VALUES inside a transaction runs no job, also after an UPDATE of the table") {
+    gw.execute("DROP TABLE IF EXISTS wj_txn")
+    gw.execute("CREATE TABLE wj_txn (id integer, v text)")
+    gw.execute("INSERT INTO wj_txn VALUES (1, 'a')")
+    gw.execute("BEGIN")
+    try {
+      assert(jobsOf("INSERT INTO wj_txn VALUES (2, 'b')") == ((0, 1L)))
+      gw.execute("UPDATE wj_txn SET v = 'x' WHERE id = 1")
+      assert(jobsOf("INSERT INTO wj_txn VALUES (3, 'c')") == ((0, 1L)))
+    } finally gw.execute("COMMIT")
+    assert(gw.query("SELECT id, v FROM wj_txn ORDER BY id").values ==
+      Seq(Seq(1, "x"), Seq(2, "b"), Seq(3, "c")))
+  }
+
   /** A gateway on a fresh session of the shared context (its own database
     * and data dir, so a test sees only its own tables), with `conf` set. */
   private def isolatedGateway(ns: String, conf: (String, String)*): SqlGateway = {
