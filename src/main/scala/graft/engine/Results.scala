@@ -39,7 +39,7 @@ object Results {
     * `DuckTstzCast` at rewrite time), naive→instant tz conversions,
     * Max/Min/First/Last aggregates, interval arithmetic, and
     * coalesce/CASE/IF/greatest/least over any instant branch
-    * (`SqlGateway.complexVarcharCasts`). Remaining corner, documented:
+    * (`DuckSemantics.PlanRule`). Remaining corner, documented:
     * an instant that reaches the boundary through a wrapper OUTSIDE
     * that list (e.g. a lead/lag window over a tstz column) renders
     * naive UTC text — same instant, no suffix. */

@@ -35,8 +35,19 @@ import scala.collection.concurrent.TrieMap
   * mid-write failure leaves the live table untouched. The previous version
   * is retained (like the reference's `retainSnapshotCount = 2`,
   * `store/store.go:22`) and GC'd one rewrite later.
+  *
+  * Session: the gateway owns one, cloned from `caller` at construction
+  * (conf, current database, temp views, functions, listeners) with
+  * [[DuckSemantics]] installed, so every statement and expression it
+  * parses or analyzes — SELECT and DML alike — has DuckDB's semantics,
+  * like the reference's one DuckDB connection (`db/db.go:52`, `:70`).
+  * The conf and functions below land on it; `caller` is left alone.
+  * A caller that read a gateway table before keeps its own cached
+  * relation, so a gateway's tables are read through [[spark]].
   */
-class SqlGateway(val spark: SparkSession) {
+class SqlGateway(caller: SparkSession) {
+  val spark: SparkSession = ColumnShim.gatewaySession(caller, DuckSemantics.extensions())
+  import SqlLex.splitTopLevel
   private val writeLock = new Object
 
   // DuckDB map semantics: a duplicate key keeps the LAST value (probed:
@@ -88,8 +99,8 @@ class SqlGateway(val spark: SparkSession) {
         s"strftime takes 2 arguments, got ${args.length}")
     })
   // DuckDB bracket slices `x[lo:hi]` have no Spark spelling at all — the
-  // text pass emits this placeholder call and duckSubscripts swaps the
-  // analyzed node for the type-dispatched LIST/VARCHAR tree (DuckSlice
+  // text pass emits this placeholder call and DuckSemantics.PlanRule swaps
+  // the analyzed node for the type-dispatched LIST/VARCHAR tree (DuckSlice
   // scaladoc). The two trailing booleans mark which bounds were spelled.
   org.apache.spark.sql.graft.ColumnShim.registerFunction(spark,
     "graft_duck_slice", {
@@ -928,7 +939,7 @@ class SqlGateway(val spark: SparkSession) {
       else {
         val v = s"graft_returning_${viewSeq.incrementAndGet()}"
         df.createOrReplaceTempView(v)
-        try duckDialectSql(s"SELECT $items FROM $v")
+        try spark.sql(s"SELECT $items FROM $v")
           .localCheckpoint(true)
         finally spark.catalog.dropTempView(v)
       }
@@ -1266,10 +1277,8 @@ class SqlGateway(val spark: SparkSession) {
       else {
         val v = s"graft_asof_${viewSeq.incrementAndGet()}"
         shaped.createOrReplaceTempView(v)
-        // duckDialectSql keeps the DuckDB default null ordering etc. on
-        // the projected/ordered shell around the join
         try {
-          var res = duckDialectSql(
+          var res = spark.sql(
             s"SELECT ${strip(sel)} FROM $v ${tail.map(strip).getOrElse("")}")
           // a bare `q.col` projection (no AS) would leak the hidden name
           rename.foreach { case (c, n) =>
@@ -1319,8 +1328,8 @@ class SqlGateway(val spark: SparkSession) {
     if (a.length != 3) return None
     val base = s"SELECT explode(sequence(CAST(${a(0)} AS TIMESTAMP), " +
       s"CAST(${a(1)} AS TIMESTAMP), ${a(2)})) AS $name"
-    Some(if (!exclusiveStop) duckSql(base)
-      else duckSql(s"SELECT * FROM ($base) " +
+    Some(if (!exclusiveStop) spark.sql(base)
+      else spark.sql(s"SELECT * FROM ($base) " +
         s"WHERE $name <> CAST(${a(1)} AS TIMESTAMP)"))
   }
 
@@ -1386,7 +1395,7 @@ class SqlGateway(val spark: SparkSession) {
               case Lam(v, body) =>
                 val values = cols.map(c =>
                   s"('${c.replace("'", "''")}')").mkString(", ")
-                duckSql(s"SELECT $v FROM (VALUES $values) " +
+                spark.sql(s"SELECT $v FROM (VALUES $values) " +
                     s"AS graft_cols($v) WHERE $body")
                   .collect().map(_.getString(0)).toSeq
               case _ => return None
@@ -1637,7 +1646,7 @@ class SqlGateway(val spark: SparkSession) {
         // form (1/2/3 args, negative steps, empty ranges) — only the
         // column name differs (id vs range). spark.sql directly: the
         // scalar range() rewrite must not see this call.
-        Some(duckSql(s"SELECT id AS " +
+        Some(spark.sql(s"SELECT id AS " +
           s"${Option(colAlias).getOrElse("range")} FROM range($args)"))
       case SeriesTvfRe(args, colAlias) if """(?i)\b(?:DATE|TIMESTAMP)\s*'"""
           .r.findFirstIn(args).isDefined =>
@@ -1656,7 +1665,7 @@ class SqlGateway(val spark: SparkSession) {
             Some(s"sequence(${a(0)}, ${a(1)}, ${a(2)})")
           case _ => None
         }
-        listSql.map(l => duckSql(s"SELECT explode($l) AS " +
+        listSql.map(l => spark.sql(s"SELECT explode($l) AS " +
           Option(colAlias).getOrElse("generate_series")))
       case _ => None
     }
@@ -1783,18 +1792,10 @@ class SqlGateway(val spark: SparkSession) {
     * (which would otherwise leak into SHOW TABLES output forever). */
   private def sqlWithReadViews(text: String): DataFrame = {
     val (rewritten, views) = rewriteReadFunctionsTracked(text)
-    try duckDialectSql(rewritten)
+    try spark.sql(rewritten)
     finally views.foreach(v =>
       spark.catalog.dropTempView(v))
   }
-
-  private val DivWordRe = """(?i)(?<![\w.$])div(?![\w.$])""".r
-  private val IntCastTargetRe =
-    """(?i)(?:\bas\s+|::\s*)(?:tinyint|smallint|int1|int2|int4|integer|int|bigint|int8|signed)\b""".r
-  private val BoolCastTargetRe =
-    """(?i)(?:\bas\s+|::\s*)bool(?:ean)?\b""".r
-  private val OrderByRe = """(?i)\border\s+by\b""".r
-  private val NullsRe = """(?i)\bnulls\b""".r
 
   /** DuckDB string/list slice on a KNOWN string (probed, v1.0): 1-based
     * INCLUSIVE bounds, index 0 behaves as 1, negative counts from the end
@@ -1805,424 +1806,6 @@ class SqlGateway(val spark: SparkSession) {
     val start = math.max(if (i0 < 0) n + i0 + 1 else i0, 1L)
     val end = math.min(if (j0 < 0) n + j0 + 1 else j0, n)
     if (end < start) "" else s.substring((start - 1).toInt, end.toInt)
-  }
-
-  /** Append DuckDB 1.0's default `NULLS LAST` (probed: the default for
-    * BOTH sort directions) to every ORDER BY key that spells no explicit
-    * NULLS FIRST/LAST — in the TEXT, before parsing, so explicit and
-    * default placements coexist exactly as DuckDB reads them. Scans
-    * quote- and paren-aware; a key list ends at a top-level
-    * LIMIT/OFFSET/FETCH, a window frame spelling (ROWS/RANGE/GROUPS), a
-    * set operator, a closing paren, `;`, or end of text. A bare `ALL`
-    * key has no per-key text to tag → returned flag tells the caller to
-    * fall back to the plan-level default transform. */
-  private def explicitNulls(sql0: String): (String, Boolean) = {
-    val NullsTail = """(?is).*\bnulls\s+(?:first|last)\s*$""".r
-    val AllKey = """(?is)^all(?:\s+(?:asc|desc))?$""".r
-    val Stop = """(?is)^(?:limit|offset|fetch|rows|range|groups|union|intersect|except|window)\b""".r
-    var text = sql0
-    var bareAll = false
-    var from = 0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val lx = SqlLex(text)
-      val mk = lx.masked
-      lx.find(OrderByRe).find(_.start >= from) match {
-        case None => return (text, bareAll)
-        case Some(mm) =>
-          val listStart = mm.end
-          var i = listStart; var depth = 0
-          var end = text.length
-          var done = false
-          while (i < mk.length && !done) {
-            val c = mk.charAt(i)
-            if (c == '(') { depth += 1; i += 1 }
-            else if (c == ')') {
-              if (depth == 0) { end = i; done = true } else { depth -= 1; i += 1 }
-            } else if (c == ';' && depth == 0) { end = i; done = true }
-            else if (depth == 0 && (i == listStart ||
-                !(Character.isLetterOrDigit(mk.charAt(i - 1)) ||
-                  mk.charAt(i - 1) == '_')) &&
-                Stop.findPrefixMatchOf(mk.substring(i)).isDefined) {
-              end = i; done = true
-            } else i += 1
-          }
-          val items = splitTopLevel(text.substring(listStart, end))
-            .map(_.trim).filter(_.nonEmpty)
-          if (items.isEmpty) { from = listStart }
-          else {
-            val tagged = items.map {
-              case it if NullsTail.matches(it) => it
-              case it if AllKey.matches(it) => bareAll = true; it
-              case it => s"$it NULLS LAST"
-            }
-            val repl = " " + tagged.mkString(", ") + " "
-            text = text.substring(0, listStart) + repl + text.substring(end)
-            from = listStart + repl.length
-          }
-      }
-    }
-    (text, bareAll)
-  }
-
-  /** Execute rewritten SQL with DuckDB's expression-level semantics pinned
-    * on the PARSED (pre-analysis) plan — the three places where Spark's
-    * parser produces a node whose behavior differs from DuckDB's for the
-    * same accepted spelling, each swapped only when the statement text can
-    * contain it (cheap gates; statements outside all three skip the extra
-    * parse entirely):
-    *
-    *  - `div` (emitted by the `//` token rewrite): Spark's IntegralDivide
-    *    truncates DECIMAL/DOUBLE operands to BIGINT — DuckDB 1.0
-    *    plain-divides them → [[graft.functions.DuckFloorDiv]]. On
-    *    all-integral operands the two agree, so the gateway's own
-    *    div-emitting rewrites (date_diff's truncate-divide) are unchanged.
-    *  - explicit `CAST(x AS <int>)` / `x::<int>`: Spark truncates
-    *    fractional values; DuckDB rounds (mode depends on source type) →
-    *    [[graft.functions.DuckIntCast]]. Only USER casts exist in the
-    *    parsed plan — the analyzer's implicit coercion casts are inserted
-    *    later and keep Spark semantics, exactly as DuckDB's own implicit
-    *    coercions are not user-visible rounding sites.
-    *  - default null ordering: DuckDB sorts NULLS LAST for ASC (DESC
-    *    agrees with Spark already). Applied only when the statement spells
-    *    NO explicit NULLS FIRST/LAST anywhere — the parsed tree cannot
-    *    distinguish an explicit `NULLS FIRST` from the parser default, so
-    *    a statement that mixes explicit and default orderings keeps Spark
-    *    defaults for the unspelled keys (documented corpus divergence). */
-  private def duckDialectSql(sql0: String): DataFrame = {
-    // make each ORDER BY key's null placement explicit in the text first:
-    // the parsed tree cannot distinguish an explicit NULLS FIRST from the
-    // parser's own ASC default, so a statement MIXING explicit and default
-    // orderings is only reproducible by tagging the unspelled keys here
-    val (sql, bareAllKey) =
-      if (SqlLex(sql0).find(OrderByRe).hasNext) explicitNulls(sql0)
-      else (sql0, false)
-    val lx = SqlLex(sql)
-    def has(re: scala.util.matching.Regex) = lx.find(re).hasNext
-    val needDiv = has(DivWordRe)
-    val needCast = has(IntCastTargetRe)
-    val needBool = has(BoolCastTargetRe)
-    // plan-level default-null-order fallback: only for keys the text pass
-    // could not tag (ORDER BY ALL, or an early-stopped key list) — and
-    // only when the statement spells no explicit NULLS anywhere, exactly
-    // the old whole-statement condition
-    val needNulls = (bareAllKey || has(OrderByRe)) && !has(NullsRe)
-    // DuckDB: division/modulo by zero is NULL, never an error (probed for
-    // INT/DOUBLE/DECIMAL `/` and `%`) — Spark's TRY eval mode is exactly
-    // that semantics, applied to the user's spelled / and %
-    val needTry = lx.masked.exists(c => c == '/' || c == '%')
-    val needSub = needsParsedSwap(sql)
-    if (!needDiv && !needCast && !needBool && !needNulls && !needTry) {
-      if (!needSub) return subtractDatesAsDays(spark.sql(sql))
-      return subtractDatesAsDays(ColumnShim.ofRows(spark,
-        markUserSubscripts(ColumnShim.parsePlan(spark, sql))))
-    }
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, Cast, Divide, EvalMode, IntegralDivide, NullsFirst, NullsLast, Remainder, SortOrder}
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val intTargets: Set[org.apache.spark.sql.types.DataType] =
-      Set(ByteType, ShortType, IntegerType, LongType)
-    val parsed0 = ColumnShim.parsePlan(spark, sql)
-    val parsed = if (needSub) markUserSubscripts(parsed0) else parsed0
-    val swapped = parsed.transformAllExpressionsWithSubqueries {
-      case d: IntegralDivide if needDiv =>
-        graft.functions.DuckFloorDiv(d.left, d.right)
-      case c: Cast if needCast && intTargets.contains(c.dataType) &&
-          // a source type outside DuckIntCast's domain (interval,
-          // date/time) keeps Spark's own cast — e.g. EXTRACT(EPOCH FROM
-          // INTERVAL ...) lowers to CAST(interval-second AS BIGINT)
-          (!c.child.resolved || (c.child.dataType match {
-            case _: org.apache.spark.sql.types.NumericType |
-                 org.apache.spark.sql.types.StringType |
-                 org.apache.spark.sql.types.BooleanType |
-                 org.apache.spark.sql.types.NullType => true
-            case _ => false
-          })) =>
-        graft.functions.DuckIntCast(c.child, c.dataType,
-          tryMode = c.evalMode == EvalMode.TRY)
-      // explicit BOOLEAN casts: Spark's lenient string→bool (trims,
-      // accepts yes/no/y/n) silently diverges from DuckDB's strict set —
-      // swap for the probed semantics; non-string sources already agree
-      case c: Cast if needBool &&
-          c.dataType == org.apache.spark.sql.types.BooleanType &&
-          (!c.child.resolved || (c.child.dataType match {
-            case _: org.apache.spark.sql.types.NumericType |
-                 org.apache.spark.sql.types.StringType |
-                 org.apache.spark.sql.types.BooleanType |
-                 org.apache.spark.sql.types.NullType => true
-            case _ => false
-          })) =>
-        graft.functions.DuckBoolCast(c.child,
-          tryMode = c.evalMode == EvalMode.TRY)
-      case so @ SortOrder(_, Ascending, NullsFirst, _) if needNulls =>
-        so.copy(nullOrdering = NullsLast)
-      case d: Divide if needTry && d.evalContext.evalMode != EvalMode.TRY =>
-        d.copy(evalContext = d.evalContext.copy(evalMode = EvalMode.TRY))
-      case r: Remainder if needTry && r.evalContext.evalMode != EvalMode.TRY =>
-        r.copy(evalContext = r.evalContext.copy(evalMode = EvalMode.TRY))
-    }
-    subtractDatesAsDays(ColumnShim.ofRows(spark, swapped))
-  }
-
-  /** DuckDB's `DATE - DATE` is a BIGINT day count; Spark's is INTERVAL
-    * DAY. The analyzer inserts `SubtractDates` ONLY for a user-written
-    * subtraction of two date operands — it never synthesizes one — so
-    * swapping the node on the ANALYZED plan for `datediff` is exactly
-    * scoped to the user's spelling, with no textual type guessing. Cheap:
-    * the plan scan short-circuits for the overwhelming majority of
-    * statements that subtract no dates. */
-  private def subtractDatesAsDays(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, DateDiff, SubtractDates}
-    import org.apache.spark.sql.types.LongType
-    val analyzed = df.queryExecution.analyzed
-    val hasIt = analyzed.exists(
-      _.expressions.exists(_.exists(_.isInstanceOf[SubtractDates])))
-    val stage1 = if (!hasIt) df
-    else ColumnShim.ofRows(spark, analyzed.transformAllExpressionsWithSubqueries {
-      case sd: SubtractDates => Cast(DateDiff(sd.left, sd.right), LongType)
-    })
-    duckSubscripts(complexVarcharCasts(stage1))
-  }
-
-  /** Swap every USER bracket subscript on the PARSED plan for the
-    * self-resolving [[graft.functions.DuckSubscript]]. `x[i]` is the only
-    * syntax the parser turns into `UnresolvedExtractValue`, so the swap is
-    * exactly scoped to the user's spelling — the analyzer's own synthesized
-    * `GetArrayItem`s (`ResolvePivot`'s 0-based value-array extraction) keep
-    * Spark semantics. Because DuckSubscript resolves to DuckDB's TYPE for
-    * each form (map[k] is a LIST), chained subscripts like `m['k'][1]`
-    * analyze the way DuckDB binds them. */
-  private def markUserSubscripts(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue
-    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    plan.transformAllExpressionsWithSubqueries {
-      case UnresolvedExtractValue(child, key) =>
-        graft.functions.DuckSubscript(child, key)
-      // user casts to composite types: when the operand analyzes to a
-      // STRING, DuckDB parses its own text grammar (DuckCompositeCast
-      // scaladoc) where Spark has no string→composite cast at all; a
-      // non-string operand swaps back to the plain Cast in duckSubscripts
-      case c: Cast if (c.dataType match {
-            case _: ArrayType | _: MapType | _: StructType => true
-            case _ => false
-          }) =>
-        graft.functions.DuckCompositeCast(c.child, c.dataType,
-          tryMode = c.evalMode == EvalMode.TRY)
-    }
-  }
-
-  /** statements whose parsed plan can hold user subscripts / composite
-    * casts — the only ones worth the extra parsePlan + transform */
-  private def needsParsedSwap(sql: String): Boolean =
-    sql.contains('[') || sql.contains("graft_duck_slice") ||
-      sql.contains("ARRAY<") || sql.contains("MAP<") || sql.contains("STRUCT<")
-
-  /** `spark.sql` with DuckDB bracket-subscript semantics: parse, mark user
-    * subscripts, analyze, swap. The entry for dialect helpers that embed
-    * user expression text in synthesized statements. */
-  private def duckSql(sql: String): DataFrame =
-    if (!needsParsedSwap(sql)) spark.sql(sql)
-    else duckSubscripts(
-      ColumnShim.ofRows(spark, markUserSubscripts(ColumnShim.parsePlan(spark, sql))))
-
-  /** Replace analyzed [[graft.functions.DuckSubscript]]/[[graft.functions
-    * .DuckSlice]] placeholders (planted by `markUserSubscripts` and the
-    * `graft_duck_slice` text emission) with their concrete Spark trees —
-    * the operand TYPE is known here, which the raw text never has. The
-    * semantics live on the expressions' own scaladoc; an unresolvable
-    * placeholder (boolean index, slice of an INT column, missing struct
-    * field) never reaches this point — analysis already refused it. */
-  private def duckSubscripts(df: DataFrame): DataFrame = {
-    import graft.functions.{DuckCompositeCast, DuckSlice, DuckSubscript}
-    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
-    import org.apache.spark.sql.types.StringType
-    val analyzed = df.queryExecution.analyzed
-    val hasIt = analyzed.exists(_.expressions.exists(_.exists {
-      case _: DuckSubscript | _: DuckSlice | _: DuckCompositeCast => true
-      case _ => false
-    }))
-    if (!hasIt) df
-    else ColumnShim.ofRows(spark, analyzed.transformAllExpressionsWithSubqueries {
-      case s: DuckSubscript => s.duckTree
-      case s: DuckSlice => s.duckTree
-      // composite cast of a NON-string operand: the ordinary Spark cast
-      // (list→list etc.); string operands keep DuckDB's text grammar
-      case c: DuckCompositeCast if c.child.dataType != StringType =>
-        if (c.tryMode) Cast(c.child, c.target, None, EvalMode.TRY)
-        else Cast(c.child, c.target, None)
-    })
-  }
-
-  /** USER casts of Array/Struct/Map operands to VARCHAR render in
-    * DuckDB's own spelling (graft.functions.DuckComplexToVarchar
-    * scaladoc) — Spark's cast renders structs `{1, x}`-style, a silent
-    * divergence otherwise. Analyzed-plan swap with a cheap existence
-    * short-circuit, exactly the SubtractDates pattern above. */
-  private def complexVarcharCasts(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, FromUTCTimestamp, ToUTCTimestamp}
-    import org.apache.spark.sql.types.{ArrayType, CalendarIntervalType, DayTimeIntervalType, MapType, StringType, StructType, YearMonthIntervalType}
-    def isComplex(dt: org.apache.spark.sql.types.DataType): Boolean =
-      dt.isInstanceOf[ArrayType] || dt.isInstanceOf[MapType] ||
-        dt.isInstanceOf[StructType]
-    // interval → VARCHAR casts carry duck's canonical interval text
-    // (r14: Spark's cast renders the ANSI spelling — silently divergent)
-    def isInterval(dt: org.apache.spark.sql.types.DataType): Boolean =
-      dt.isInstanceOf[DayTimeIntervalType] ||
-        dt.isInstanceOf[YearMonthIntervalType] || dt == CalendarIntervalType
-    // declared-TIMESTAMPTZ table column: the text rewrites cannot see a
-    // COLUMN's declared type, so the analyzed plan is where duck's two
-    // timezone()/AT TIME ZONE overloads dispatch for columns — the text
-    // pass emits to_utc (the naive overload), and a tstz-declared operand
-    // flips it to from_utc (instant→local, duck's tstz overload).
-    // Instant-typedness reaches through Max/Min/First/Last aggregates
-    // and interval arithmetic over a declared column (duck: max(tstz)
-    // and tstz + INTERVAL stay TIMESTAMPTZ — probed; r14 review).
-    // The same declared-type knowledge drives the '+00' VARCHAR suffix.
-    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference => AttrRef, CaseWhen, Coalesce, Expression, Greatest, If, Least, TimestampAddInterval, TimestampAddYMInterval, WindowExpression}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, First, Last, Max, Min}
-    def isTsType(dt: org.apache.spark.sql.types.DataType): Boolean =
-      dt.isInstanceOf[org.apache.spark.sql.types.TimestampType] ||
-        dt == org.apache.spark.sql.types.TimestampNTZType
-    // post-fix instant-ness of a (possibly chained) tz expression; None =
-    // unknown (a folded literal — the TEXT dispatch already chose from
-    // its spelling and is trusted). The reach-through cases (aggregates,
-    // interval arithmetic, the analyzer's ts→ts re-cast wrapper) recurse
-    // through fixTzChain so a FIXED chain under them keeps its
-    // instant-ness (second review pass: declaredTstz-only recursion lost
-    // the '+00' on `max(t AT ... AT ...)::VARCHAR` shapes).
-    def instantNess(e: Expression): Option[Boolean] = e match {
-      case _: ToUTCTimestamp => Some(true)
-      case _: FromUTCTimestamp => Some(false)
-      case _: graft.functions.DuckTstzCast => Some(true)
-      case a: AttributeReference =>
-        if (a.metadata.contains(Results.DuckTypeKey) &&
-            a.metadata.getString(Results.DuckTypeKey) == "TIMESTAMP WITH TIME ZONE")
-          Some(true)
-        else None
-      case al: Alias => instantNess(fixTzChain(al.child))
-      case agg: AggregateExpression => agg.aggregateFunction match {
-        case m: Max => instantNess(fixTzChain(m.child))
-        case m: Min => instantNess(fixTzChain(m.child))
-        case f: First => instantNess(fixTzChain(f.child))
-        case l: Last => instantNess(fixTzChain(l.child))
-        case _ => None
-      }
-      case ta: TimestampAddInterval => instantNess(fixTzChain(ta.start))
-      case ta: TimestampAddYMInterval => instantNess(fixTzChain(ta.timestamp))
-      // instant-PRESERVING wrappers (r14 advice + verdict item 1): duck
-      // coerces coalesce/CASE/IF/greatest/least to TIMESTAMPTZ when ANY
-      // branch is one (probed: coalesce(tstz, naive) and CASE-mixed both
-      // report TIMESTAMP WITH TIME ZONE; the naive branch re-interprets
-      // in the UTC session zone — identity on the stored micros, so
-      // any-instant-child ⇒ instant is value- AND type-exact here)
-      case c: Coalesce => anyInstant(c.children)
-      case cw: CaseWhen => anyInstant(cw.branches.map(_._2) ++ cw.elseValue)
-      case i: If => anyInstant(Seq(i.trueValue, i.falseValue))
-      case g: Greatest => anyInstant(g.children)
-      case l: Least => anyInstant(l.children)
-      case w: WindowExpression => instantNess(fixTzChain(w.windowFunction))
-      // never through string/date casts, whose semantics the text pass
-      // already owns — only the analyzer's ts→ts wrapper
-      case c: Cast if isTsType(c.dataType) && isTsType(c.child.dataType) =>
-        instantNess(fixTzChain(c.child))
-      case _ => None
-    }
-    def anyInstant(es: Seq[Expression]): Option[Boolean] =
-      if (es.exists(e => instantNess(fixTzChain(e)).contains(true))) Some(true)
-      else None
-    // re-derive a whole AT TIME ZONE / timezone() CHAIN bottom-up: duck
-    // alternates instant↔naive per application, and a single flip at the
-    // chain's bottom (a declared-tstz column) must cascade — the r14
-    // review's `t AT NY AT Tokyo` case, where flipping only the inner
-    // node left the outer one running the wrong way
-    def fixTzChain(e: Expression): Expression = e match {
-      case t: ToUTCTimestamp =>
-        val l = fixTzChain(t.left)
-        instantNess(l) match {
-          case Some(true) => FromUTCTimestamp(l, t.right)
-          case _ => if (l eq t.left) t else ToUTCTimestamp(l, t.right)
-        }
-      case f: FromUTCTimestamp =>
-        val l = fixTzChain(f.left)
-        instantNess(l) match {
-          case Some(false) => ToUTCTimestamp(l, f.right)
-          case _ => if (l eq f.left) f else FromUTCTimestamp(l, f.right)
-        }
-      case other => other
-    }
-    val analyzed = df.queryExecution.analyzed
-    val hasIt = analyzed.exists(_.expressions.exists(_.exists {
-      case c: Cast => c.dataType.isInstanceOf[StringType] &&
-        (isComplex(c.child.dataType) || isInterval(c.child.dataType) ||
-          instantNess(fixTzChain(c.child)).contains(true))
-      case t: ToUTCTimestamp => fixTzChain(t) ne t
-      case f: FromUTCTimestamp => fixTzChain(f) ne f
-      case _ => false
-    }))
-    val swapped = if (!hasIt) analyzed
-    else analyzed.transformAllExpressionsWithSubqueries {
-      case c: Cast if c.dataType.isInstanceOf[StringType] &&
-          isComplex(c.child.dataType) =>
-        graft.functions.DuckComplexToVarchar(c.child)
-      case c: Cast if c.dataType.isInstanceOf[StringType] &&
-          isInterval(c.child.dataType) =>
-        graft.functions.DuckIntervalToVarchar(c.child)
-      case c: Cast if c.dataType.isInstanceOf[StringType] => {
-        // single fixTzChain computation per node (second review pass);
-        // returning `c` unchanged is a transform no-op for ordinary
-        // string casts
-        val f = fixTzChain(c.child)
-        if (instantNess(f).contains(true))
-          graft.functions.DuckInstantToVarchar(f)
-        else if (f ne c.child)
-          c.copy(child = f) // chain fixed, result naive: Spark's cast
-        else c
-      }
-      case t: ToUTCTimestamp => fixTzChain(t)
-      case f: FromUTCTimestamp => fixTzChain(f)
-    }
-    // r15 (verdict item 1): TAG every instant-typed derived alias with
-    // the declared-type metadata, so `Results` reports duck's TIMESTAMP
-    // WITH TIME ZONE type name and '+00' value text at the boundary
-    // without per-expression special cases — raw-selected tz
-    // conversions, tstz casts/literals, aggregates, coalesce/CASE over
-    // instants. Metadata is render-only: execution and parquet values
-    // are unchanged.
-    val TstzName = "TIMESTAMP WITH TIME ZONE"
-    def needsTag(al: Alias): Boolean =
-      isTsType(al.dataType) && !al.metadata.contains(Results.DuckTypeKey) &&
-        instantNess(fixTzChain(al.child)).contains(true)
-    val needTag = swapped.exists(_.expressions.exists(_.exists {
-      case al: Alias => needsTag(al)
-      case _ => false
-    }))
-    if (!needTag) {
-      if (!hasIt) df else ColumnShim.ofRows(spark, swapped)
-    } else {
-      def withKey(md: org.apache.spark.sql.types.Metadata) =
-        new org.apache.spark.sql.types.MetadataBuilder().withMetadata(md)
-          .putString(Results.DuckTypeKey, TstzName).build()
-      var tagged = Set.empty[org.apache.spark.sql.catalyst.expressions.ExprId]
-      val p1 = swapped.transformAllExpressionsWithSubqueries {
-        case al: Alias if needsTag(al) =>
-          tagged += al.exprId
-          Alias(al.child, al.name)(al.exprId, al.qualifier,
-            Some(withKey(al.metadata)), al.nonInheritableMetadataKeys)
-      }
-      // re-references of a tagged alias downstream (an outer Project's
-      // bare attribute) carry the pre-tag metadata — rewire them so the
-      // tag reaches the OUTPUT schema through any operator stack
-      val p2 = if (tagged.isEmpty) p1
-      else p1.transformAllExpressionsWithSubqueries {
-        case a: AttrRef if tagged.contains(a.exprId) &&
-            !a.metadata.contains(Results.DuckTypeKey) =>
-          a.withMetadata(withKey(a.metadata))
-      }
-      ColumnShim.ofRows(spark, p2)
-    }
   }
 
   /** One file-function call → DataFrame. CSV/JSON accept DuckDB's common
@@ -3381,7 +2964,7 @@ class SqlGateway(val spark: SparkSession) {
     // (instant-typed CALL results cast to VARCHAR — per-row tstz casts,
     // naive→instant timezone conversions, declared-TIMESTAMPTZ columns —
     // get duck's '+00' suffix on the ANALYZED plan in
-    // [[complexVarcharCasts]], where the declared column type is known;
+    // [[DuckSemantics.PlanRule]], where the declared column type is known;
     // a text-level append here would run the wrong way for a
     // declared-tstz column whose to_utc emission the plan pass flips.)
     // xor is the function spelling of ^; cot(x) is 1/tan(x) bit-exactly
@@ -4498,7 +4081,7 @@ class SqlGateway(val spark: SparkSession) {
         s"CAST(raise_error('array_cross_product: 3-element arrays " +
         s"only') AS ARRAY<DOUBLE>) ELSE array(" +
         // element_at (1-based), not brackets: a bracket here would be
-        // re-semanticized by duckSubscripts on the analyzed plan
+        // re-semanticized by DuckSemantics on the analyzed plan
         s"CAST(element_at(${a(0)}, 2) AS DOUBLE) * element_at(${a(1)}, 3) - " +
         s"CAST(element_at(${a(0)}, 3) AS DOUBLE) * element_at(${a(1)}, 2), " +
         s"CAST(element_at(${a(0)}, 3) AS DOUBLE) * element_at(${a(1)}, 1) - " +
@@ -5754,7 +5337,7 @@ class SqlGateway(val spark: SparkSession) {
               case Some((ix, after)) if !isSlice(ix) =>
                 // (...)[e] stays a BRACKET subscript (index recursively
                 // rewritten): Spark parses it to GetArrayItem/GetMapValue/
-                // GetStructField and duckSubscripts swaps the analyzed
+                // GetStructField and DuckSemantics swaps the analyzed
                 // nodes for DuckDB's semantics (1-based lists, list-
                 // wrapped map values) with the operand TYPE known.
                 sb.append('[').append(rewriteDuckLiterals(ix.trim)).append(']')
@@ -5766,7 +5349,7 @@ class SqlGateway(val spark: SparkSession) {
             // bare-column slice `col[i:j]` → graft_duck_slice over the
             // ident chain already in sb (a DDL type suffix `INT[]`/`INT[3]`
             // never contains ':', so this cannot fire on one); plain
-            // `col[e]` subscripts stay verbatim for duckSubscripts
+            // `col[e]` subscripts stay verbatim for DuckSemantics
             indexSpan(i) match {
               case Some((ix, after)) if isSlice(ix) &&
                   sliceParts(ix).isDefined && p != '"' && p != ']' =>
@@ -6991,7 +6574,7 @@ class SqlGateway(val spark: SparkSession) {
   }
 
   /** PIVOT's ORDER BY keys with DuckDB's NULLS LAST default for both
-    * directions (the statement-level explicitNulls pass only sees SELECT
+    * directions (the parser's explicitNulls pass only sees ORDER BY
     * text, so the pivot path applies it here). */
   private def pivotSortExpr(item: String): Column = {
     val NullsRe2 = """(?is)^(.*?)\s+NULLS\s+(FIRST|LAST)\s*$""".r
@@ -7420,33 +7003,22 @@ class SqlGateway(val spark: SparkSession) {
   private def splitAtTopLevelWhere(s: String): (String, Option[String]) =
     splitAtTopLevelKw(s, "where")
 
-  /** Split a column-spec / SET list on top-level commas, on the
-    * [[SqlLex]] masked view: a comma inside 'x, y' or "a,b" does not
-    * split, nor one inside (…), a list [1, 2] or a struct {'a': 1, …}; a
-    * bracket inside a literal or identifier is not nesting. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val mk = SqlLex.mask(s)
-    val out = Vector.newBuilder[String]
-    var depth = 0; var from = 0
-    for (i <- 0 until mk.length) mk.charAt(i) match {
-      case '(' | '[' | '{' => depth += 1
-      case ')' | ']' | '}' => depth -= 1
-      case ',' if depth == 0 => out += s.substring(from, i); from = i + 1
-      case _ => ()
-    }
-    if (from < s.length) out += s.substring(from)
-    out.result()
-  }
 
   /** The `col = expr` pieces of a SET list, split at each piece's first
-    * `=`, with the expression in Spark's dialect (a list or struct literal
-    * is DuckDB's spelling). A piece with no `=` is DuckDB's parser error. */
+    * `=`, in the user's spelling ([[duckExpr]] compiles them). A piece
+    * with no `=` is DuckDB's parser error. */
   private def setPairs(sets: String): Seq[(String, String)] =
     splitTopLevel(sets).map(_.split("=", 2) match {
-      case Array(c, e) => (c.trim, duckCompat(e.trim))
+      case Array(c, e) => (c.trim, e.trim)
       case _ => throw new IllegalArgumentException(
         "Parser Error: syntax error at end of input")
     })
+
+  /** A user expression in DuckDB's spelling — a DML WHERE or SET, a
+    * CHECK, a DEFAULT, an ALTER … USING — as a Column: the dialect text
+    * pass once, then the gateway session's parser and analyzer, as for
+    * every SELECT. */
+  private def duckExpr(text: String): Column = expr(duckCompat(text))
 
   /** Throw if any row of `df` violates a registered CHECK of `table`.
     * SQL semantics: a row fails only when the expression is FALSE — NULL
@@ -7455,7 +7027,7 @@ class SqlGateway(val spark: SparkSession) {
     * literal batch the optimizer folds it on the driver (no job). */
   private def enforceChecks(table: String, df: DataFrame): Unit =
     checks.getOrElse(tableKey(table), Nil).foreach { e =>
-      if (!df.filter(expr(e) === lit(false)).isEmpty)
+      if (!df.filter(duckExpr(e) === lit(false)).isEmpty)
         throw new IllegalArgumentException(
           s"CHECK constraint failed: $table CHECK ($e)")
     }
@@ -7551,7 +7123,7 @@ class SqlGateway(val spark: SparkSession) {
         // when none — DuckDB semantics, probed incl. ALTER SET DEFAULT)
         missing.foldLeft(renamed)((df, m) =>
           df.withColumn(m, tableDefaults.get(m.toLowerCase)
-            .map(d => expr(duckCompat(d)))
+            .map(duckExpr)
             .getOrElse(lit(null)).cast(target.schema(m).dataType)))
           .select(target.columns.map(col).toIndexedSeq: _*)
       case None => batch.toDF(target.columns.toIndexedSeq: _*)
@@ -7769,7 +7341,7 @@ class SqlGateway(val spark: SparkSession) {
     val cond = pk.map(k => col(k) === col(s"__ex_$k")).reduce(_ && _)
     val merged = target.join(ex, cond, "full").select(target.columns.map { c =>
       val updated = assignments.get(c.toLowerCase)
-        .map(e => expr(e).cast(target.schema(c).dataType))
+        .map(e => duckExpr(e).cast(target.schema(c).dataType))
         .getOrElse(col(c))
       when(col(s"__ex_${pk.head}").isNull, col(c)) // target-only row
         .when(col(pk.head).isNull, col(s"__ex_$c")) // brand-new row
@@ -7877,7 +7449,8 @@ class SqlGateway(val spark: SparkSession) {
     val target = spark.table(table)
     if (!target.columns.exists(_.equalsIgnoreCase(colName)))
       throw new IllegalArgumentException(s"ALTER $table: unknown column $colName")
-    dflt.foreach(d => expr(duckCompat(d))) // unparseable defaults fail NOW
+    // unparseable defaults fail NOW (a Column parses its text lazily)
+    dflt.foreach(d => ColumnShim.expression(spark, duckExpr(d)))
     columnDefaults.updateWith(tableKey(table)) { cur =>
       val m = cur.getOrElse(Map.empty)
       val next = dflt match {
@@ -7933,7 +7506,7 @@ class SqlGateway(val spark: SparkSession) {
       .replaceAll("(?i)^TEXT$", "STRING")
       .replaceAll("(?i)^INT4$|^INTEGER$", "INT")
       .replaceAll("(?i)^INT8$", "BIGINT")
-    val value = using.map(u => expr(duckCompat(u))).getOrElse(col(actual))
+    val value = using.map(duckExpr).getOrElse(col(actual))
     val casted = value.cast(sparkType)
     val bad = target.filter(value.isNotNull && casted.isNull).count()
     if (bad > 0) throw new IllegalArgumentException(
@@ -8052,18 +7625,16 @@ class SqlGateway(val spark: SparkSession) {
 
   // --- UPDATE: read-filter-rewrite (write temp, swap via overwrite).
   private def update(table: String, setClause: String, where: Option[String]): ExecuteResult = {
-    val pred = where.map(expr).getOrElse(lit(true))
+    val pred = where.map(duckExpr).getOrElse(lit(true))
     val tableDefaults = columnDefaults.getOrElse(tableKey(table), Map.empty)
     val assignments = setPairs(setClause).map { case (c, e) =>
       // SET col = DEFAULT takes the declared default, NULL when none
-      // (DuckDB probed) — the stored DuckDB spelling compiles through
-      // the same dialect pass the insert-time DEFAULT uses
-      val ex =
-        if (e.equalsIgnoreCase("DEFAULT"))
-          expr(duckCompat(tableDefaults.collectFirst {
-            case (k, d) if k.equalsIgnoreCase(c) => d
-          }.getOrElse("NULL")))
-        else expr(e)
+      // (DuckDB probed)
+      val ex = duckExpr(
+        if (!e.equalsIgnoreCase("DEFAULT")) e
+        else tableDefaults.collectFirst {
+          case (k, d) if k.equalsIgnoreCase(c) => d
+        }.getOrElse("NULL"))
       (c, ex)
     }
     val target = rewriteSource(table, pred +: assignments.map(_._2): _*)
@@ -8147,7 +7718,7 @@ class SqlGateway(val spark: SparkSession) {
     // and must not be re-derived differently on re-execution
     val t = target.withColumn("__rid", monotonically_increasing_id())
       .localCheckpoint(eager = true)
-    val cond = where.map(expr).getOrElse(lit(true))
+    val cond = where.map(duckExpr).getOrElse(lit(true))
     val pickW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__rid"))
       .orderBy(src.columns.map(c => col(s"$srcAlias.$c")).toIndexedSeq: _*)
@@ -8157,7 +7728,7 @@ class SqlGateway(val spark: SparkSession) {
     val hits = t.alias(tAlias).join(src.alias(srcAlias), cond, "inner")
       .withColumn("__rn", row_number().over(pickW)).filter(col("__rn") === 1)
       .select(col("__rid").as("__hit_rid") +: assignments.map { case (cn, e) =>
-        expr(e).cast(target.schema(actualByLower(cn)).dataType).as(s"__set_$cn")
+        duckExpr(e).cast(target.schema(actualByLower(cn)).dataType).as(s"__set_$cn")
       }.toIndexedSeq: _*)
       .localCheckpoint(eager = true)
     val affected = hits.count()
@@ -8185,7 +7756,7 @@ class SqlGateway(val spark: SparkSession) {
     val target = spark.table(table)
     val (src, srcAlias) = sourceClause(usingClause)
     val tAlias = tAliasOpt.getOrElse(table.split("\\.").last)
-    val pred = expr(w)
+    val pred = duckExpr(w)
     val affected = target.alias(tAlias)
       .join(src.alias(srcAlias), pred, "left_semi").count()
     val remaining = target.alias(tAlias).join(src.alias(srcAlias), pred, "left_anti")
@@ -8200,7 +7771,7 @@ class SqlGateway(val spark: SparkSession) {
   private def delete(table: String, where: Option[String]): ExecuteResult = {
     // SQL deletes rows where the predicate is TRUE; rows where it is
     // NULL are KEPT — `!pred` alone would drop them (NULL stays NULL)
-    val pred = where.map(w => coalesce(expr(w), lit(false))).getOrElse(lit(true))
+    val pred = where.map(w => coalesce(duckExpr(w), lit(false))).getOrElse(lit(true))
     val target = rewriteSource(table, pred)
     if (captureReturning) // RETURNING on DELETE: the deleted rows
       captureRows(target.filter(pred))
@@ -8410,7 +7981,7 @@ class SqlGateway(val spark: SparkSession) {
   private def rewriteSource(table: String, exprs: Column*): DataFrame = {
     val t = spark.table(table)
     if (exprs.exists(e => org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-        .hasSubquery(ColumnShim.expression(e)))) return t
+        .hasSubquery(ColumnShim.expression(spark, e)))) return t
     liveFiles(table).flatMap(imageRows(t.schema, _)).map { rows =>
       val local = org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
         org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(t.schema), rows)

@@ -115,6 +115,24 @@ private[engine] object SqlLex {
   def replace(sql: String, re: Regex)(f: Regex.Match => String): String =
     new SqlLex(sql).replace(re)(f)
 
+  /** Split a column-spec / SET list on top-level commas, on the masked
+    * view: a comma inside 'x, y' or "a,b" does not split, nor one inside
+    * (…), a list [1, 2] or a struct {'a': 1, …}; a bracket inside a
+    * literal or identifier is not nesting. */
+  def splitTopLevel(s: String): Seq[String] = {
+    val mk = mask(s)
+    val out = Vector.newBuilder[String]
+    var depth = 0; var from = 0
+    for (i <- 0 until mk.length) mk.charAt(i) match {
+      case '(' | '[' | '{' => depth += 1
+      case ')' | ']' | '}' => depth -= 1
+      case ',' if depth == 0 => out += s.substring(from, i); from = i + 1
+      case _ => ()
+    }
+    if (from < s.length) out += s.substring(from)
+    out.result()
+  }
+
   /** Index of the `)`/`]` closing the bracket at `open` in an already
     * masked text; -1 when unbalanced. */
   def close(masked: String, open: Int): Int = {

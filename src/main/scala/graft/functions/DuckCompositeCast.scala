@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     `[1, NULL]`, `TRY_CAST('oops' AS INT[])` → NULL.
   *
   * Swapped onto user casts by the gateway's parsed-plan pass; when the
-  * operand turns out NOT to be a string, `SqlGateway.duckSubscripts`
+  * operand turns out NOT to be a string, `DuckSemantics.PlanRule`
   * replaces this node with the plain Spark Cast (list→list etc.).
   * The parse stays one boxed call per row ([[evalBoxed]]); `doGenCode`
   * emits a reference-object call so the whole-stage-codegen span around

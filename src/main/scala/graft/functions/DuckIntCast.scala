@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `tryMode` (TRY_CAST). The gateway swaps every EXPLICIT user cast to an
   * integer type in the parsed plan for this node (implicit analyzer casts
   * are inserted later and keep Spark semantics) — see
-  * `SqlGateway.duckDialectSql`. */
+  * `graft.engine.DuckSemantics.Parser`. */
 case class DuckIntCast(child: Expression, override val dataType: DataType,
     tryMode: Boolean) extends UnaryExpression {
 

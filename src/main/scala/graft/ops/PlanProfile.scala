@@ -66,68 +66,6 @@ object PlanProfile {
     "x30", "x34", "x38"
   )
 
-  /** The pre-r9 pin set, kept for A/B reference only. */
-  private val staticPlanR8: Set[String] = Set(
-    // single fixed-key hash-agg over the pinned layout; AQE's only move
-    // (post-shuffle coalescing) is already static via shuffle.partitions.
-    // r7 probe adds the rest of the fixed-key agg family (q11 rollup,
-    // q12 cube, q13 having, q25 histogram quantiles, q27 fixed-value
-    // pivot, q38 grouping sets): Expand + hash-agg with keys known at
-    // analysis time, both sessions negative
-    // r8 probe UNpins q25 (+0.073/+0.072 — AQE-on faster in BOTH
-    // sessions; the histogram-quantile shuffle benefits from runtime
-    // coalescing)
-    "q01", "q06", "q14", "q26", "q28", "q39", "q48",
-    "q11", "q12", "q13", "q27", "q38",
-    // join trees with every strategy pinned: bounded dims broadcast-hinted,
-    // growing sides pre-partitioned (q05 star, q03 top-k fusion,
-    // q54/q55/q56 funnel/retention/sessionize on the events layout).
-    // r7 probe adds q04/q08 (orders ⋈ lineitem-agg, both sides on the
-    // SAME pinned orderkey partitioning — zero strategy left to choose),
-    // q09 (bounded-aggregate cross demo), q10 (one-shuffle set-op bag
-    // algebra over staged inputs), q15 (1-row scalar-subquery broadcast).
-    // q44 was pinned through r6 but its r7 probes disagreed (−0.20 vs
-    // +0.05) — mixed evidence restores the AQE default.
-    "q03", "q05", "q22", "q54", "q55", "q56",
-    "q04", "q08", "q09", "q10", "q15",
-    // window/dialect queries over one fixed partitioning (q45 QUALIFY,
-    // q46 DISTINCT ON, q47 star modifiers, q58 frame EXCLUDE, q20 dates,
-    // q23 asof rewrite, q50's unrolled month spine, q59 read_* scan).
-    // r7 adds q16/q17 (ranking/analytic windows on the pinned user_id
-    // layout), q58b bounded EXCLUDE, and the map-only scans q19/q21 —
-    // all double-confirmed negative
-    "q20", "q23", "q45", "q46", "q47", "q50", "q58", "q59",
-    "q16", "q17", "q19", "q21", "q58b",
-    // extension family: shingle/fingerprint pipelines keyed once (x02/
-    // x04 dedup, x10 brute top-k, x11 IVF probe over the persisted index,
-    // x18 binned range join, x19 cell-pair pruning, x27 postings).
-    // r7 UNpins on mixed probe evidence — the protocol's sign-flip rule:
-    // x03 (−0.28/+0.05), x30 (+0.98/−0.01), x32 (+0.25/−0.35); their
-    // band-bucket / LM / decontamination join widths are genuinely
-    // runtime-shaped, so AQE keeps them (same reasoning as x34 in r6).
-    "x02", "x04", "x10", "x11", "x18", "x19", "x27",
-    // consistent wins across BOTH FloorProbe sessions (same sign both
-    // times): fully-static scans and single-agg shapes —
-    // q35 VALUES inline, q41/q42/q43 map-only string/regex scans, q07
-    // broadcast semi/anti, q36 keyed time-window agg, q49 broadcast
-    // lateral top-k, q57 type corners, x07 map-only lang-id, x17 fixed
-    // salting demo, x44 map-only CDC chunking, x45 keyed gap-fill
-    // windows on the pinned layout. x15 (one sketch aggregation) was
-    // pinned r6 but its r7 probes split (+0.03/−0.02, pure floor noise
-    // on a 0.1 s query) — the sign-flip rule unpins it.
-    "q07", "q35", "q36", "q41", "q42", "q43", "q49", "q57",
-    "x07", "x17", "x44", "x45",
-    // r8 two-session probe (floorprobe_r8_{a,b}): consistent AQE-off wins
-    // in BOTH sessions — q34 (−0.032/−0.039), q51 (−0.040/−0.043),
-    // x03 (−0.054/−0.091), x30 (−0.043/−0.052), x32 (−0.235/−0.211),
-    // x34 (−0.056/−0.051). x03/x30/x32 were unpinned in r7 on that
-    // round's SPLIT probes; this round both sessions agree, and the r8
-    // plan changes make their shuffles statically shaped enough that
-    // AQE's stage re-planning is pure materialization overhead. The
-    // sign-flip rule still applies next round: any split → unpin again.
-    "q34", "q51", "x03", "x30", "x32", "x34"
-  )
-
   def isStatic(name: String): Boolean =
     staticPlan.contains(name.takeWhile(_ != '_'))
 

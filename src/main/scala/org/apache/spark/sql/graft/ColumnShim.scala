@@ -11,6 +11,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** `c` as an expression, its SQL text parsed by `spark`'s own parser
+    * (the one-argument form parses with the active session's). */
+  def expression(spark: SparkSession, c: Column): Expression =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
 
   /** DataFrame from a logical plan (`Dataset.ofRows` is private[sql]). */
   def ofRows(spark: SparkSession,
@@ -29,14 +33,26 @@ object ColumnShim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
 
-  /** Parse SQL text to the UNRESOLVED logical plan (pre-analysis, so
-    * operator nodes like `IntegralDivide` appear with their original
-    * children, before coercion casts) — `sessionState` lives on the
-    * classic session. */
-  def parsePlan(spark: SparkSession,
-      sql: String): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.sqlParser.parsePlan(sql)
+  /** A session of its own on `caller`'s SparkContext and shared state
+    * (warehouse, external catalog, cache), whose session state is a clone
+    * of `caller`'s as it is now — conf, current database, temp views,
+    * functions, listeners, experimental strategies — built with
+    * `extensions` (parser, analyzer rules). A later change on either
+    * side stays on that side. Spark's 6-argument constructor (the one
+    * `cloneSession` uses) is private in Scala and public in bytecode. */
+  def gatewaySession(caller: SparkSession,
+      extensions: org.apache.spark.sql.SparkSessionExtensions): SparkSession = {
+    import org.apache.spark.sql.classic.{SparkSession => Classic}
+    val c = caller.asInstanceOf[Classic]
+    val s = classOf[Classic].getConstructor(classOf[org.apache.spark.SparkContext],
+        classOf[Option[_]], classOf[Option[_]],
+        classOf[org.apache.spark.sql.SparkSessionExtensions],
+        classOf[Map[_, _]], classOf[Map[_, _]])
+      .newInstance(c.sparkContext, Some(c.sharedState), Some(c.sessionState), extensions,
+        Map.empty[String, String], Map.empty[String, String])
+    s.sessionState // clone now: the state is lazy, and the caller moves on
+    s
+  }
 
   /** The session's Hadoop conf (the SparkContext's plus the session's SQL
     * settings) — what a write job's tasks see. */

@@ -4607,11 +4607,58 @@ class DuckDbCorpusSpec extends SparkTestBase {
     err("UPDATE ty_t SET l", "syntax error at end of input"),
     err("UPDATE ty_t SET d = 'x', l", "syntax error at end of input"))
 
+  // A DML expression means what the same spelling means in a SELECT: a
+  // WHERE or SET has DuckDB's casts, subscripts, date arithmetic,
+  // division and function names. Each value probed against DuckDB 1.0.0;
+  // the gateway stored 2, 20 and no NULL, deleted and updated no row for
+  // the subscript and log() predicates, and refused the date subtraction,
+  // the divisions by zero, list_contains and strpos. The double-quoted
+  // `"id"` is an identifier, as in every gateway statement.
+  private def corpusU: Seq[C] = Seq(
+    s("DROP TABLE IF EXISTS dv"), // the focused test below runs these too
+    s("DROP TABLE IF EXISTS dw"),
+    s("CREATE TABLE dv (id INTEGER, d DOUBLE, l INTEGER[], a DATE, b DATE)"),
+    s("INSERT INTO dv VALUES (1, 2.7, [10, 20], '2024-01-01', '2024-01-11'), " +
+      "(2, 3.5, [30, 40], '2024-02-01', '2024-02-03')"),
+    s("DELETE FROM dv WHERE \"id\" = 1"),
+    q("SELECT id FROM dv", Seq(2)),
+    s("INSERT INTO dv VALUES (1, 2.7, [10, 20], '2024-01-01', '2024-01-11')"),
+    s("UPDATE dv SET id = l[1] WHERE id = 1"),
+    q("SELECT id FROM dv", Seq(2), Seq(10)),
+    s("UPDATE dv SET id = 1 WHERE id = 10"),
+    s("UPDATE dv SET id = CAST(d AS INTEGER) WHERE id = 1"),
+    q("SELECT id, d FROM dv", Seq(2, 3.5), Seq(3, 2.7)),
+    s("UPDATE dv SET d = b - a WHERE id = 2"),
+    q("SELECT id, d FROM dv", Seq(2, 2), Seq(3, 2.7)),
+    s("UPDATE dv SET d = id / 0 WHERE id = 2"),
+    q("SELECT id, d FROM dv", Seq(2, null), Seq(3, 2.7)),
+    s("DELETE FROM dv WHERE l[1] = 30"),
+    q("SELECT id FROM dv", Seq(3)),
+    s("DELETE FROM dv WHERE d / 0 IS NULL"),
+    q("SELECT count(*) AS n FROM dv", Seq(0)),
+    s("CREATE TABLE dw (id INTEGER, x DOUBLE, l INTEGER[], s VARCHAR)"),
+    s("INSERT INTO dw VALUES (1, 100.0, [10, 20], 'abc'), (2, 1000.0, [30, 40], 'xyz'), " +
+      "(3, 10.0, [50, 60], 'qrs')"),
+    s("UPDATE dw SET s = 'hit' WHERE log(x) = 2"),
+    q("SELECT id, s FROM dw", Seq(1, "hit"), Seq(2, "xyz"), Seq(3, "qrs")),
+    s("DELETE FROM dw WHERE list_contains(l, 30)"),
+    q("SELECT id FROM dw", Seq(1), Seq(3)),
+    s("DELETE FROM dw WHERE strpos(s, 'q') > 0"),
+    q("SELECT id FROM dw", Seq(1)))
+
   lazy val corpus: Seq[C] =
     corpusA ++ corpusB ++ corpusC ++ corpusD ++ corpusE ++ corpusF ++
       corpusG ++ corpusH ++ corpusI ++ corpusJ ++ corpusK ++ corpusL ++
       corpusM ++ corpusN ++ corpusO ++ corpusP ++ corpusQ ++ corpusR ++ corpusS ++
-      corpusT
+      corpusT ++ corpusU
+
+  test("DML WHERE and SET expressions answer like DuckDB: casts, subscripts, " +
+       "date subtraction, division by zero, DuckDB function names") {
+    val notMatched = corpusU.map(c => c -> runOne(c)).filterNot {
+      case (_, o) => o == Matched || o == Accepted
+    }.map { case (c, o) => s"${c.sql}: $o" }
+    assert(notMatched.isEmpty, notMatched.mkString("\n"))
+  }
 
   test("CHAR/VARCHAR(n) and list/struct values in SET and VALUES answer like DuckDB") {
     val notMatched = corpusT.map(c => c -> runOne(c)).filterNot {

@@ -17,7 +17,7 @@ class DuckDialectFunctionsSpec extends SparkTestBase {
   private def one(sql: String): Seq[Any] = gw.query(sql).values.head
 
   test("// over columns: truncation toward zero, null divisor, two sites in one projection") {
-    import spark.implicits._
+    import gw.spark.implicits._
     Seq((7L, 2L), (-7L, 2L), (5L, 0L), (-5L, 2L), (100L, 7L))
       .toDF("a", "b").createOrReplaceTempView("fldiv_t")
     val rows = gw.query(
@@ -30,29 +30,29 @@ class DuckDialectFunctionsSpec extends SparkTestBase {
       List(null, 6L), // 5//0 = NULL, 6//1 = 6
       List(3L, 2L),   // 7//2, 8//3
       List(14L, 12L)), s"got $rows")
-    spark.catalog.dropTempView("fldiv_t")
+    gw.spark.catalog.dropTempView("fldiv_t")
   }
 
   test("// fractional operands take DuckDB 1.0's plain-division path") {
-    import spark.implicits._
+    import gw.spark.implicits._
     Seq((5.5, 2.0), (1.0, 0.0)).toDF("x", "y").createOrReplaceTempView("fldiv_d")
     val rows = gw.query("SELECT x // y AS q FROM fldiv_d ORDER BY x").values
     assert(rows.map(_.head) == Seq(null, 2.75))
-    spark.catalog.dropTempView("fldiv_d")
+    gw.spark.catalog.dropTempView("fldiv_d")
   }
 
   test("// overflow on Long.MinValue / -1 raises loudly like DuckDB") {
-    import spark.implicits._
+    import gw.spark.implicits._
     Seq((Long.MinValue, -1L)).toDF("a", "b").createOrReplaceTempView("fldiv_o")
     val e = intercept[Exception] {
       gw.query("SELECT a // b AS q FROM fldiv_o").values
     }
     assert(e.getMessage != null)
-    spark.catalog.dropTempView("fldiv_o")
+    gw.spark.catalog.dropTempView("fldiv_o")
   }
 
   test("duck regexp_replace over columns: per-row patterns, flags, backrefs") {
-    import spark.implicits._
+    import gw.spark.implicits._
     Seq(("abcb", "(b)", "[\\1]", "g"),   // RE2 backref, global
         ("abcb", "(b)", "[\\1]", ""),    // first-only default
         ("aAa", "a", "x", "gi"),         // case-insensitive global
@@ -62,7 +62,7 @@ class DuckDialectFunctionsSpec extends SparkTestBase {
     val rows = gw.query(
       "SELECT regexp_replace(s, p, r, f) AS out FROM rr_t").values.map(_.head)
     assert(rows == Seq("a[b]c[b]", "a[b]cb", "xxx", "aXb", "cost: $55"))
-    spark.catalog.dropTempView("rr_t")
+    gw.spark.catalog.dropTempView("rr_t")
   }
 
   test("duck regexp_replace: dollar in replacement is literal (RE2), not a Java group ref") {
@@ -84,7 +84,7 @@ class DuckDialectFunctionsSpec extends SparkTestBase {
   }
 
   test("similarity kernels over columns (codegen path, not constant-folded)") {
-    import spark.implicits._
+    import gw.spark.implicits._
     Seq(("duck", "luck"), ("martha", "marhta"), ("ca", "abc"))
       .toDF("a", "b").createOrReplaceTempView("sim_t")
     val rows = gw.query(
@@ -94,41 +94,41 @@ class DuckDialectFunctionsSpec extends SparkTestBase {
       List(0.6666666666666666, 2L, 0.0),                 // ca/abc
       List(0.6, 1L, 0.8333333333333334),                 // duck/luck
       List(1.0, 1L, 0.9444444444444445)), s"got $rows")  // martha/marhta
-    spark.catalog.dropTempView("sim_t")
+    gw.spark.catalog.dropTempView("sim_t")
   }
 
   test("gcd/lcm over columns with implicit int->long cast") {
-    import spark.implicits._
+    import gw.spark.implicits._
     Seq((-4, 6), (0, 5), (12, 18)).toDF("a", "b").createOrReplaceTempView("gcd_t")
     val rows = gw.query(
       "SELECT gcd(a, b) AS g, lcm(a, b) AS l FROM gcd_t ORDER BY a").values
     assert(rows.map(_.toList) == Seq(List(2L, 12L), List(5L, 0L), List(6L, 36L)))
-    spark.catalog.dropTempView("gcd_t")
+    gw.spark.catalog.dropTempView("gcd_t")
   }
 
   test("duck_strftime over columns with a PER-ROW format string") {
-    import spark.implicits._
+    import gw.spark.implicits._
     Seq(("2007-03-04", "%-d/%-m/%y"), ("2007-03-04", "%U"), ("2007-03-04", "%A"))
       .toDF("d", "f").createOrReplaceTempView("sft_t")
     val rows = gw.query(
       "SELECT strftime(CAST(d AS DATE), f) AS s FROM sft_t").values.map(_.head)
     assert(rows == Seq("4/3/07", "09", "Sunday"))
-    spark.catalog.dropTempView("sft_t")
+    gw.spark.catalog.dropTempView("sft_t")
   }
 
   test("DuckIntCast over columns: per-source-type rounding in one projection") {
-    import spark.implicits._
+    import gw.spark.implicits._
     Seq((2.5, "2.5"), (3.5, "3.49")).toDF("d", "s").createOrReplaceTempView("ic_t")
     val rows = gw.query(
       "SELECT CAST(d AS INTEGER) AS di, CAST(s AS INTEGER) AS si " +
         "FROM ic_t ORDER BY d").values
     // DOUBLE column: half-to-even (2.5→2, 3.5→4); VARCHAR: half away (2.5→3)
     assert(rows.map(_.toList) == Seq(List(2, 3), List(4, 3)), s"got $rows")
-    spark.catalog.dropTempView("ic_t")
+    gw.spark.catalog.dropTempView("ic_t")
   }
 
   test("column-API entry: DuckRegexpReplace composes as a Column expression") {
-    import spark.implicits._
+    import gw.spark.implicits._
     val df = Seq("mississippi").toDF("s")
     val out = df.select(ColumnShim.column(graft.functions.DuckRegexpReplace(
       ColumnShim.expression(col("s")),

@@ -728,7 +728,7 @@ class GatewaySpec extends SparkTestBase {
     gw.execute("INSERT INTO txu VALUES (1, 'a'), (2, 'b')")
     def rows(s: org.apache.spark.sql.SparkSession) = s.table("txu").orderBy("id")
       .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
-    def dirs = spark.table("txu").inputFiles
+    def dirs = gw.spark.table("txu").inputFiles
       .map(f => new org.apache.hadoop.fs.Path(f).getParent.getName).toSet
     val before = Seq((1, "a"), (2, "b"))
     val after = Seq((1, "x"), (2, "b"), (3, "c"))
@@ -740,12 +740,12 @@ class GatewaySpec extends SparkTestBase {
       // the batch lands beside the rewrite, not in a new version of it
       assert(rewritten.size == 1 && dirs == rewritten + s"${rewritten.head}_txd0",
         (rewritten, dirs))
-      assert(rows(spark) == after)
+      assert(rows(gw.spark) == after)
       // another connection reads the pre-transaction rows until COMMIT
       assert(rows(spark.newSession()) == before)
       gw.execute(end)
       val kept = if (end == "COMMIT") after else before
-      assert(rows(spark) == kept && rows(spark.newSession()) == kept, end)
+      assert(rows(gw.spark) == kept && rows(spark.newSession()) == kept, end)
     }
     assert(dirs.size == 1) // COMMIT moved the delta's part files into the version
   }
@@ -1197,22 +1197,22 @@ class GatewaySpec extends SparkTestBase {
        "collect on DML): cap rows + truncated flag") {
     gw.execute("DROP TABLE IF EXISTS retcap")
     gw.execute("CREATE TABLE retcap (id integer)")
-    spark.conf.set("graft.query.maxResultRows", "5")
+    gw.spark.conf.set("graft.query.maxResultRows", "5")
     try {
       val r = gw.query(
         "INSERT INTO retcap SELECT * FROM range(1, 21) RETURNING id")
       assert(r.values.size == 5, s"expected capped 5 rows, got ${r.values.size}")
       assert(r.truncated, "truncated flag must be set when the cap hits")
       // the write itself was NOT capped — all 20 rows landed
-      spark.conf.unset("graft.query.maxResultRows")
+      gw.spark.conf.unset("graft.query.maxResultRows")
       assert(gw.query("SELECT count(*) AS n FROM retcap").values.head.head == 20L)
-      spark.conf.set("graft.query.maxResultRows", "5")
+      gw.spark.conf.set("graft.query.maxResultRows", "5")
       // UPDATE and DELETE RETURNING take the same cap
       val u = gw.query("UPDATE retcap SET id = id + 100 RETURNING id")
       assert(u.values.size == 5 && u.truncated, s"${u.values.size} ${u.truncated}")
       val d = gw.query("DELETE FROM retcap RETURNING id")
       assert(d.values.size == 5 && d.truncated, s"${d.values.size} ${d.truncated}")
-    } finally spark.conf.unset("graft.query.maxResultRows")
+    } finally gw.spark.conf.unset("graft.query.maxResultRows")
     assert(gw.query("SELECT count(*) AS n FROM retcap").values.head.head == 0L)
   }
 
@@ -1323,7 +1323,7 @@ class GatewaySpec extends SparkTestBase {
   // --- literal batches (INSERT … VALUES) are checked and written on the
   //     driver; the statement still leaves no effect when it fails
 
-  private def liveFiles(table: String): Set[String] = spark.table(table).inputFiles.toSet
+  private def liveFiles(table: String): Set[String] = gw.spark.table(table).inputFiles.toSet
 
   test("a VALUES batch keeps each constraint error's text and leaves no effect") {
     gw.execute("DROP TABLE IF EXISTS lvc")
@@ -1460,14 +1460,14 @@ class GatewaySpec extends SparkTestBase {
     assert(gw.query("UPDATE dit SET v = 'z' WHERE id = 2 RETURNING id, v").values ==
       Seq(Seq(2, "z")))
     assert(gw.query("DELETE FROM dit WHERE id = 3 RETURNING *").values == Seq(Seq(3, "c")))
-    val live = spark.table("dit").inputFiles.toSet
+    val live = gw.spark.table("dit").inputFiles.toSet
     assert(intercept[IllegalArgumentException](
       gw.execute("UPDATE dit SET id = 0 WHERE id = 1")).getMessage ==
       "CHECK constraint failed: dit CHECK (id > 0)")
     assert(intercept[IllegalArgumentException](
       gw.execute("UPDATE dit SET v = 'a' WHERE id = 2")).getMessage ==
       "UNIQUE INDEX constraint failed: duplicate key on dit(v)")
-    assert(spark.table("dit").inputFiles.toSet == live)
+    assert(gw.spark.table("dit").inputFiles.toSet == live)
     assert(gw.query("SELECT id, v FROM dit ORDER BY id").values ==
       Seq(Seq(1, "a"), Seq(2, "z")))
   }
@@ -1521,5 +1521,24 @@ class GatewaySpec extends SparkTestBase {
     assert(gw.query("SELECT id, v FROM dix ORDER BY id").values ==
       Seq(Seq(2, "b"), Seq(3, "x")))
     assert(spark.newSession().table("dix").count() == 2L)
+  }
+
+  test("a gateway clones its caller's session and leaves the caller's " +
+       "conf and semantics alone") {
+    val caller = spark.newSession()
+    caller.range(3).createOrReplaceTempView("iso_v")
+    caller.conf.set("graft.iso.probe", "on")
+    val keys = Seq("spark.sql.ansi.doubleQuotedIdentifiers",
+      "spark.sql.mapKeyDedupPolicy", "spark.sql.timeType.enabled")
+    val before = keys.map(caller.conf.get)
+    val g = new SqlGateway(caller)
+    assert(g.query("SELECT count(*) AS n FROM iso_v").values == Seq(Seq(3L)))
+    assert(g.spark.conf.get("graft.iso.probe") == "on")
+    assert(keys.map(caller.conf.get) == before)
+    assert(caller.sql("SELECT array(10, 20)[1] AS x").head().getInt(0) == 20)
+    intercept[org.apache.spark.sql.AnalysisException](
+      caller.sql("SELECT length(array(1, 2)) AS n").collect())
+    assert(g.spark.sql("SELECT array(10, 20)[1] AS x").head().getInt(0) == 10)
+    assert(g.spark.sql("SELECT length(array(1, 2)) AS n").head().getLong(0) == 2L)
   }
 }

@@ -844,6 +844,17 @@ class ReplicaSpec extends SparkTestBase {
       // B joins late: roster knows it, but it holds NO statements
       assert(newHttp(lPort, "POST", "/join", Some(
         s"""{"id": "nodeB", "addr": "http://localhost:$bPort"}"""))._1 == 200)
+      // pushes to A are asynchronous: A must hold both statements before
+      // the leader dies, or B can only catch up to what A holds
+      val deadline = System.currentTimeMillis + 20000
+      var applied = -1L
+      while (applied != 2L && System.currentTimeMillis < deadline) {
+        val (_, st, _) = newHttp(aPort, "GET", "/status")
+        applied = "\"applied_index\": \"(\\d+)\"".r.findFirstMatchIn(st)
+          .map(_.group(1).toLong).getOrElse(-1L)
+        if (applied != 2L) Thread.sleep(200)
+      }
+      assert(applied == 2L, s"follower A missed pushes: applied=$applied")
       fA.checkLeader(); fB.checkLeader() // cache the roster
       leader.stop()
       fA.checkLeader(); fB.checkLeader()

@@ -8,7 +8,8 @@ import java.nio.charset.StandardCharsets
 /** Drives the HTTP façade over a real socket — the reference's own smoke
   * flow (`cmd/cli/client.go:94-129`) reformulated as assertions. */
 class ServiceSpec extends SparkTestBase {
-  lazy val service = new Service(new SqlGateway(spark))
+  lazy val gw = new SqlGateway(spark)
+  lazy val service = new Service(gw)
   lazy val port: Int = service.start()
 
   private def http(method: String, path: String, body: Option[String] = None): (Int, String) = {
@@ -96,14 +97,14 @@ class ServiceSpec extends SparkTestBase {
   }
 
   test("result sets beyond the row cap are truncated with metadata") {
-    spark.conf.set("graft.query.maxResultRows", "3")
+    gw.spark.conf.set("graft.query.maxResultRows", "3")
     try {
       val (c, b) = http("POST", "/db/query",
         Some("""{"sql": "SELECT id FROM range(10) ORDER BY id"}"""))
       assert(c == 200 && b.contains("\"truncated\": true"))
       // exactly cap rows survive
       assert(b.contains("[[0], [1], [2]]"))
-    } finally spark.conf.unset("graft.query.maxResultRows")
+    } finally gw.spark.conf.unset("graft.query.maxResultRows")
   }
 
   test("wrong method is rejected") {

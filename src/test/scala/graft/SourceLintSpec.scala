@@ -22,7 +22,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * the environment knobs that once overrode it are constants now.
   *
   * The catalog's table list comes from `ColumnShim.userTables`: Spark's
-  * `catalog.listTables` runs a job for every call. */
+  * `catalog.listTables` runs a job for every call.
+  *
+  * DuckDB's expression semantics are installed once, on the gateway's
+  * own session (`DuckSemantics`, through `ColumnShim.gatewaySession`):
+  * per-call plan surgery (analyze, transform, analyze again) reached
+  * SELECT but skipped DML expressions, and changed the caller's
+  * session. */
 class SourceLintSpec extends AnyFunSuite {
   private val mainDir = new java.io.File("src/main/scala")
   private val engineDir = new java.io.File(mainDir, "graft/engine")
@@ -140,5 +146,22 @@ class SourceLintSpec extends AnyFunSuite {
         s"${f.getPath}:${i + 1}: ${l.trim}"
     })
     assert(hits.isEmpty, hits.mkString("catalog.listTables calls:\n", "\n", ""))
+  }
+
+  test("plan swaps live in the gateway session's parser and rule; " +
+       "classic.SparkSession is built only in ColumnShim") {
+    assert(engineDir.isDirectory, s"run from the repository root: $engineDir")
+    val swaps = scalaFiles(engineDir).filterNot(_.getName == "DuckSemantics.scala")
+      .flatMap(f => lines(f).zipWithIndex.collect {
+        case (l, i) if l.contains("transformAllExpressions") =>
+          s"${f.getPath}:${i + 1}: ${l.trim}"
+      })
+    assert(swaps.isEmpty, swaps.mkString("plan swaps outside DuckSemantics:\n", "\n", ""))
+    val Build = """new\s+(?:[\w.]*\.)?(?:classic\.)?SparkSession\s*\(|getConstructor|getDeclaredConstructor""".r
+    val builds = scalaFiles(mainDir).filterNot(_.getName == "ColumnShim.scala")
+      .flatMap(f => lines(f).zipWithIndex.collect {
+        case (l, i) if Build.findFirstIn(l).isDefined => s"${f.getPath}:${i + 1}: ${l.trim}"
+      })
+    assert(builds.isEmpty, builds.mkString("sessions built outside ColumnShim:\n", "\n", ""))
   }
 }

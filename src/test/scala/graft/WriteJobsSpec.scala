@@ -38,7 +38,7 @@ class WriteJobsSpec extends SparkTestBase {
   /** (jobs, rows affected) of one statement. */
   private def jobsOf(sql: String): (Int, Long) = jobsDuring(gw.execute(sql).rowsAffected)
 
-  private def files(table: String): Set[String] = spark.table(table).inputFiles.toSet
+  private def files(table: String): Set[String] = gw.spark.table(table).inputFiles.toSet
 
   test("INSERT … VALUES into a keyless table runs no job and adds one parquet file") {
     gw.execute("DROP TABLE IF EXISTS wj_plain")
