@@ -31,13 +31,18 @@ import org.apache.spark.sql.types._
   *    user-visible rounding sites.
   *  - [[PlanRule]] swaps the nodes whose DuckDB meaning depends on an
   *    operand TYPE, inside the analyzer's resolution batch, so type
-  *    coercion sees the swapped nodes. */
+  *    coercion sees the swapped nodes.
+  *
+  * The session's optimizer also reads small parquet scans from the
+  * gateway's driver images (`images.rule`), as DuckDB serves a small
+  * table from memory. */
 object DuckSemantics {
 
-  def extensions(): SparkSessionExtensions = {
+  def extensions(images: DriverImages): SparkSessionExtensions = {
     val e = new SparkSessionExtensions
     e.injectParser((_, delegate) => new Parser(delegate))
     e.injectResolutionRule(_ => PlanRule)
+    e.injectOptimizerRule(_ => images.rule)
     e
   }
 

@@ -216,10 +216,12 @@ object Snapshot {
   }
 
   /** `/status`-equivalent surface (reference `http/service.go:144-193`):
-    * engine + catalog facts instead of raft stats. */
+    * engine + catalog facts instead of raft stats, and the gateway's
+    * driver-image cache (`image_bytes`, `image_entries`, `image_hits`,
+    * `image_misses`). */
   def status(gw: SqlGateway): Map[String, String] = {
     val spark = gw.spark
-    Map(
+    gw.images.stats.map { case (k, v) => k -> v.toString } ++ Map(
       "engine" -> "spark",
       "version" -> spark.version,
       "master" -> spark.sparkContext.master,

@@ -46,7 +46,10 @@ import scala.collection.concurrent.TrieMap
   * relation, so a gateway's tables are read through [[spark]].
   */
 class SqlGateway(caller: SparkSession) {
-  val spark: SparkSession = ColumnShim.gatewaySession(caller, DuckSemantics.extensions())
+  /** Decoded images of this gateway's small tables (and any small parquet
+    * view it reads), which its session's reads and DML fold over. */
+  private[graft] val images = new DriverImages
+  val spark: SparkSession = ColumnShim.gatewaySession(caller, DuckSemantics.extensions(images))
   import SqlLex.splitTopLevel
   private val writeLock = new Object
 
@@ -7637,7 +7640,7 @@ class SqlGateway(caller: SparkSession) {
         }.getOrElse("NULL"))
       (c, ex)
     }
-    val target = rewriteSource(table, pred +: assignments.map(_._2): _*)
+    val target = spark.table(table)
     // a SET target that names no table column is an error (SQL engines
     // raise unknown-column; silently dropping it would "succeed" a typo)
     val known = target.columns.map(_.toLowerCase).toSet
@@ -7766,26 +7769,27 @@ class SqlGateway(caller: SparkSession) {
 
   // --- DELETE: read-filter-rewrite. Over a small table's driver image the
   //     filter folds on the driver and the statement runs no job; else the
-  //     rewrite is its only job. Rows affected are the old version's rows
-  //     minus the new one's, counted from the local rows or the footers.
+  //     rewrite is its only job. Rows affected are the folded hit rows, or
+  //     the old version's rows minus the new one's, from the footers.
   private def delete(table: String, where: Option[String]): ExecuteResult = {
     // SQL deletes rows where the predicate is TRUE; rows where it is
     // NULL are KEPT — `!pred` alone would drop them (NULL stays NULL)
     val pred = where.map(w => coalesce(duckExpr(w), lit(false))).getOrElse(lit(true))
-    val target = rewriteSource(table, pred)
+    val target = spark.table(table)
+    val hit = target.filter(pred)
     if (captureReturning) // RETURNING on DELETE: the deleted rows
-      captureRows(target.filter(pred))
+      captureRows(hit)
     val kept = target.filter(!pred)
-    if (!versions.contains(tableKey(table))) {
-      val n = target.filter(pred).count()
-      overwriteTable(table, kept)
-      return ExecuteResult(n)
+    localRows(hit).map(_.size.toLong) match {
+      case None if versions.contains(tableKey(table)) =>
+        val before = footerRows(target.inputFiles.toSeq)
+        overwriteTable(table, kept)
+        ExecuteResult(before - footerRows(spark.table(table).inputFiles.toSeq))
+      case n =>
+        val affected = n.getOrElse(hit.count())
+        overwriteTable(table, kept)
+        ExecuteResult(affected)
     }
-    def rows(df: DataFrame, files: => Seq[String]): Long =
-      localRows(df).map(_.size.toLong).getOrElse(footerRows(files))
-    val before = rows(target, target.inputFiles.toSeq)
-    overwriteTable(table, kept)
-    ExecuteResult(before - rows(kept, spark.table(table).inputFiles.toSeq))
   }
 
   // --- transactions (`BEGIN` / `COMMIT` / `ROLLBACK`, reachable like any
@@ -7911,25 +7915,32 @@ class SqlGateway(caller: SparkSession) {
         if (inTxn) s"${versionDir(table, set.version)}_txd${set.deltas.size}"
         else versionDir(table, set.version)
       try {
-        writeRows(table, rows, dir)
+        writeRows(table, rows, dir, append = true)
         publish(table, set, if (inTxn) set.copy(deltas = set.deltas :+ dir) else set)
       } catch { case e: Throwable if inTxn => deleteDir(dir); throw e }
     case None => rows.write.mode("append").insertInto(table)
   }
 
-  /** The rows of a batch that is already on the driver (its optimized plan
-    * is a LocalRelation), with the schema its file gets: the batch's
+  /** A batch that is already on the driver (its optimized plan is a
+    * LocalRelation): its rows, the schema its file gets (the batch's
     * columns with the table's field metadata, as Spark's insert writes
-    * them. None when Spark must run the write: rows it computes. */
+    * them), and the table's parquet relation as the statement resolved it,
+    * whose images the write extends. None when Spark must run the write:
+    * rows it computes. */
   private def driverBatch(table: String, rows: DataFrame): Option[(
       Seq[org.apache.spark.sql.catalyst.InternalRow],
-      org.apache.spark.sql.types.StructType)] = {
-    val tableSchema = spark.table(table).schema
+      org.apache.spark.sql.types.StructType,
+      Option[org.apache.spark.sql.execution.datasources.HadoopFsRelation])] = {
+    val t = spark.table(table)
     rows.queryExecution.optimizedPlan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if l.schema.map(_.dataType) == tableSchema.map(_.dataType) =>
+          if l.schema.map(_.dataType) == t.schema.map(_.dataType) =>
         Some((l.data, org.apache.spark.sql.types.StructType(
-          l.schema.zip(tableSchema).map { case (b, t) => b.copy(metadata = t.metadata) })))
+          l.schema.zip(t.schema).map { case (b, f) => b.copy(metadata = f.metadata) }),
+          t.queryExecution.analyzed.collectFirst {
+            case org.apache.spark.sql.execution.datasources.LogicalRelation(
+                r: org.apache.spark.sql.execution.datasources.HadoopFsRelation, _, _, _, _) => r
+          }))
       case _ => None
     }
   }
@@ -7967,75 +7978,14 @@ class SqlGateway(caller: SparkSession) {
   private def dirsOf(table: String, set: FileSet): Seq[String] =
     versionDir(table, set.version) +: set.deltas
 
-  /** The data files `table`'s readers see when it is versioned: those of
-    * its [[fileSet]]. */
-  private def liveFiles(table: String): Option[Seq[org.apache.hadoop.fs.FileStatus]] =
-    fileSet(table).map(dirsOf(table, _).flatMap(dataFiles))
-
-  /** The frame a DELETE/UPDATE of `table` reads. When [[imageRows]] takes
-    * the table's files, it is a LocalRelation of them under the table's
-    * own name, so the statement's filter and projection (`exprs`) fold on
-    * the driver; else the table itself. A subquery in `exprs` keeps the
-    * table: the statement cannot fold, so an image would only be read and
-    * shipped into the same job. */
-  private def rewriteSource(table: String, exprs: Column*): DataFrame = {
-    val t = spark.table(table)
-    if (exprs.exists(e => org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-        .hasSubquery(ColumnShim.expression(spark, e)))) return t
-    liveFiles(table).flatMap(imageRows(t.schema, _)).map { rows =>
-      val local = org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(t.schema), rows)
-      ColumnShim.ofRows(spark, t.queryExecution.analyzed match {
-        case a: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-          a.copy(child = local)
-        case _ => local
-      })
-    }.getOrElse(t)
-  }
-
-  /** The rows of parquet `files` under `schema`, read on the driver with
-    * Spark's own parquet reader and the session's Hadoop conf. None when
-    * the files, or the rows decoded from them so far, pass
-    * [[SqlGateway.DriverImageBytes]]: the reading then stops and the
-    * caller runs a job. */
-  private def imageRows(schema: org.apache.spark.sql.types.StructType,
-      files: Seq[org.apache.hadoop.fs.FileStatus])
-      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-    val bound = SqlGateway.DriverImageBytes
-    if (files.map(_.getLen).sum > bound) return None
-    val read = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-      .buildReaderWithPartitionValues(spark, schema,
-        org.apache.spark.sql.types.StructType(Nil), schema, Nil,
-        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), ColumnShim.hadoopConf(spark))
-    val copy = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
-    val image = Vector.newBuilder[InternalRow]
-    var bytes = 0L
-    files.iterator.takeWhile(_ => bytes <= bound).foreach { f =>
-      val rows = read(PartitionedFile(InternalRow.empty,
-        org.apache.spark.paths.SparkPath.fromPath(f.getPath), 0, f.getLen,
-        Array.empty, f.getModificationTime, f.getLen))
-      try rows.takeWhile(_ => bytes <= bound).foreach { r =>
-        val row = copy(r).copy()
-        bytes += row.getSizeInBytes
-        image += row
-      }
-      finally rows match { case c: java.io.Closeable => c.close(); case _ => () }
-    }
-    if (bytes > bound) None else Some(image.result())
-  }
-
   /** Copy the parquet `files` (a pinned table version) into `dir` under
-    * `schema`: as one file written on the driver when [[imageRows]] takes
-    * them, else as a job. */
+    * `schema`: as one file written on the driver when they have a driver
+    * image, else as a job. */
   private[engine] def copyFiles(schema: org.apache.spark.sql.types.StructType,
       files: Seq[org.apache.hadoop.fs.FileStatus], dir: String): Unit = {
     deleteDir(dir)
-    imageRows(schema, files) match {
+    images.rows(spark, schema, files) match {
       case Some(rows) => writeOnDriver(rows, schema, dir)
-      case None if files.isEmpty => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema).write.parquet(dir)
       case None => spark.read.schema(schema)
         .parquet(files.map(_.getPath.toString): _*).write.parquet(dir)
     }
@@ -8044,14 +7994,19 @@ class SqlGateway(caller: SparkSession) {
   /** Write `df` as the table version in `loc`. */
   private def writeVersion(table: String, df: DataFrame, loc: String): Unit = {
     deleteDir(loc) // leftovers of a previously failed rewrite attempt
-    writeRows(table, df, loc)
+    writeRows(table, df, loc, append = false)
   }
 
   /** Add `df`'s rows to `dir`: on the driver when they are already there
-    * ([[driverBatch]]), else as one right-sized job. */
-  private def writeRows(table: String, df: DataFrame, dir: String): Unit =
+    * ([[driverBatch]]), else as one right-sized job. A driver write keeps
+    * the next read warm: the new file set's image is the old one's
+    * (`append`) or none's, plus the rows written. */
+  private def writeRows(table: String, df: DataFrame, dir: String, append: Boolean): Unit =
     driverBatch(table, df) match {
-      case Some((rows, schema)) => writeOnDriver(rows, schema, dir)
+      case Some((rows, schema, source)) =>
+        val file = writeOnDriver(rows, schema, dir)
+        source.foreach(r => images.written(r.dataSchema,
+          if (append) DriverImages.filesOf(r) else Nil, file, rows))
       case None => rightSized(df).write.mode("append").parquet(dir)
     }
 
@@ -8059,9 +8014,10 @@ class SqlGateway(caller: SparkSession) {
     * own parquet writer (the factory a write job's tasks use), under the
     * session's Hadoop conf. The file is written hidden (`.`-prefixed, so a
     * listing never reads it half-written) and renamed into place under a
-    * part-file name; a failure removes it. */
+    * part-file name, whose status it returns; a failure removes it. */
   private def writeOnDriver(rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType, dir: String): Unit = {
+      schema: org.apache.spark.sql.types.StructType, dir: String)
+      : org.apache.hadoop.fs.FileStatus = {
     import org.apache.hadoop.fs.Path
     import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
     val job = Job.getInstance(ColumnShim.hadoopConf(spark))
@@ -8082,6 +8038,7 @@ class SqlGateway(caller: SparkSession) {
       if (!fs.rename(hidden, new Path(d, name)))
         throw new java.io.IOException(s"could not move $hidden into $dir")
     } catch { case e: Throwable => fs.delete(hidden, false); throw e }
+    fs.getFileStatus(new Path(d, name))
   }
 
   /** Rows in parquet files, from their footers (no data page read). */

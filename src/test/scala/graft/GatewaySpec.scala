@@ -7,8 +7,13 @@ import graft.engine.{Snapshot, SqlGateway}
   * SELECT round trip asserting the `{columns,types,values}` result shape
   * of `db/db.go:43-47`, plus the constraint/DML/snapshot semantics the
   * reference gets from DuckDB. */
-class GatewaySpec extends SparkTestBase {
+class GatewaySpec extends SparkTestBase with org.scalatest.BeforeAndAfterEach {
   lazy val gw = new SqlGateway(spark)
+
+  // one gateway serves every test: a test that fails between BEGIN and
+  // COMMIT must not leave its transaction open for the tests after it
+  override def afterEach(): Unit =
+    try if (gw.inTransaction) gw.execute("ROLLBACK") finally super.afterEach()
 
   test("demo-client round trip: CREATE, INSERT, SELECT shape") {
     for (t <- Seq("abc", "def", "ghi")) {

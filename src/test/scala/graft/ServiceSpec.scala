@@ -117,6 +117,26 @@ class ServiceSpec extends SparkTestBase {
     assert(c == 200 && b.contains("\"engine\": \"spark\"") && b.contains("uptimeMs"))
   }
 
+  test("status reports the driver-image cache, and two reads of one table hit it") {
+    def stat(key: String): Long = {
+      val (c, b) = http("GET", "/status")
+      assert(c == 200, b)
+      ("\"" + key + "\": \"(\\d+)\"").r.findFirstMatchIn(b).map(_.group(1).toLong)
+        .getOrElse(fail(s"no $key in $b"))
+    }
+    Seq("image_bytes", "image_entries", "image_misses").foreach(stat)
+    val exec = (sql: String) => http("POST", "/db/execute", Some(s"""{"sql": "$sql"}"""))
+    assert(exec("CREATE TABLE hti (id integer, v text)")._1 == 200)
+    assert(exec("INSERT INTO hti VALUES (1, 'a')")._1 == 200)
+    val read = () => http("POST", "/db/query", Some("""{"sql": "SELECT id, v FROM hti"}"""))
+    val h0 = stat("image_hits")
+    assert(read()._2.contains("""[1, "a"]"""))
+    val h1 = stat("image_hits")
+    assert(read()._2.contains("""[1, "a"]"""))
+    val h2 = stat("image_hits")
+    assert(h0 < h1 && h1 < h2, (h0, h1, h2))
+  }
+
   test("join registers the member and surfaces it in /status") {
     val (c, b) = http("POST", "/join", Some("""{"addr": "http://h:9", "id": "y"}"""))
     assert(c == 200 && b.contains("\"y\""), b)

@@ -28,7 +28,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * own session (`DuckSemantics`, through `ColumnShim.gatewaySession`):
   * per-call plan surgery (analyze, transform, analyze again) reached
   * SELECT but skipped DML expressions, and changed the caller's
-  * session. */
+  * session.
+  *
+  * Parquet files are decoded on the driver in one place, the gateway's
+  * image cache (`DriverImages`): DML once built its own LocalRelation
+  * over a second decode path, which read the same files again. */
 class SourceLintSpec extends AnyFunSuite {
   private val mainDir = new java.io.File("src/main/scala")
   private val engineDir = new java.io.File(mainDir, "graft/engine")
@@ -163,5 +167,17 @@ class SourceLintSpec extends AnyFunSuite {
         case (l, i) if Build.findFirstIn(l).isDefined => s"${f.getPath}:${i + 1}: ${l.trim}"
       })
     assert(builds.isEmpty, builds.mkString("sessions built outside ColumnShim:\n", "\n", ""))
+  }
+
+  test("parquet files are decoded on the driver only in the image cache") {
+    assert(mainDir.isDirectory, s"run from the repository root: $mainDir")
+    def sites(word: String) = scalaFiles(mainDir).flatMap(f => lines(f).zipWithIndex.collect {
+      case (l, i) if l.contains(word) => s"${f.getPath}:${i + 1}: ${l.trim}"
+    })
+    val readers = sites("buildReaderWithPartitionValues")
+    assert(readers.size == 1 && readers.head.contains("engine/DriverImages.scala:"),
+      readers.mkString("driver-side parquet readers:\n", "\n", ""))
+    val swaps = sites("rewriteSource")
+    assert(swaps.isEmpty, swaps.mkString("per-statement image swaps:\n", "\n", ""))
   }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * pays once per replicated statement. A literal batch is checked and
   * written on the driver; a table whose rows fit
   * `SqlGateway.DriverImageBytes` is read, filtered, rewritten and exported
-  * on the driver too. */
+  * on the driver too, from the gateway's cached driver image, and a
+  * small read of it runs no job either. */
 class WriteJobsSpec extends SparkTestBase {
   lazy val gw = new SqlGateway(spark)
 
@@ -58,11 +59,13 @@ class WriteJobsSpec extends SparkTestBase {
     assert(jobsOf("INSERT INTO wj_check VALUES (1, 'a'), (2, NULL)") == ((0, 2L)))
   }
 
-  test("INSERT … VALUES into a PRIMARY KEY table runs one job: the key probe") {
+  test("INSERT … VALUES into a small PRIMARY KEY table runs no job: the key probe folds") {
     gw.execute("DROP TABLE IF EXISTS wj_pk")
     gw.execute("CREATE TABLE wj_pk (id integer primary key, v text)")
     for (i <- 1 to 3)
-      assert(jobsOf(s"INSERT INTO wj_pk VALUES ($i, 'r$i')") == ((1, 1L)))
+      assert(jobsOf(s"INSERT INTO wj_pk VALUES ($i, 'r$i')") == ((0, 1L)))
+    assert(intercept[IllegalArgumentException](gw.execute("INSERT INTO wj_pk VALUES (2, 'x')"))
+      .getMessage == "PRIMARY KEY constraint failed (key exists): wj_pk(id)")
     assert(gw.query("SELECT count(*) AS n FROM wj_pk").values.head.head == 3L)
   }
 
@@ -106,6 +109,57 @@ class WriteJobsSpec extends SparkTestBase {
     } finally gw.execute("COMMIT")
     assert(gw.query("SELECT id, v FROM wj_txn ORDER BY id").values ==
       Seq(Seq(1, "x"), Seq(2, "b"), Seq(3, "c")))
+  }
+
+  test("an own-table read with WHERE, a projection, ORDER BY and LIMIT runs no job, " +
+       "also inside BEGIN…ROLLBACK") {
+    gw.execute("DROP TABLE IF EXISTS wj_read")
+    gw.execute("CREATE TABLE wj_read (id integer, v text)")
+    (1 to 8).foreach(i => gw.execute(s"INSERT INTO wj_read VALUES ($i, 'r$i')"))
+    val q = "SELECT id, upper(v) AS u FROM wj_read WHERE id % 2 = 0 ORDER BY id DESC LIMIT 3"
+    val want = Seq(Seq(8, "R8"), Seq(6, "R6"), Seq(4, "R4"))
+    assert(jobsDuring(gw.query(q).values) == ((0, want)))
+    gw.execute("BEGIN")
+    try {
+      gw.execute("INSERT INTO wj_read VALUES (10, 'r10')")
+      gw.execute("DELETE FROM wj_read WHERE id = 6")
+      assert(jobsDuring(gw.query(q).values) ==
+        ((0, Seq(Seq(10, "R10"), Seq(8, "R8"), Seq(4, "R4")))))
+    } finally gw.execute("ROLLBACK")
+    assert(jobsDuring(gw.query(q).values) == ((0, want)))
+  }
+
+  test("DELETE and UPDATE with a fresh literal on a warmed small table run no job " +
+       "and compile no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    gw.execute("DROP TABLE IF EXISTS wj_lit")
+    gw.execute("CREATE TABLE wj_lit (id integer, v text)")
+    gw.execute("INSERT INTO wj_lit VALUES (1, 'a'), (2, 'b'), (3, 'c'), (4, 'd')")
+    gw.execute("DELETE FROM wj_lit WHERE id = 100")
+    gw.execute("UPDATE wj_lit SET v = 'w' WHERE id = 101")
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(jobsOf("DELETE FROM wj_lit WHERE id = 3") == ((0, 1L)))
+    assert(jobsOf("UPDATE wj_lit SET v = 'x' WHERE id = 2") == ((0, 1L)))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles)
+    assert(gw.query("SELECT id, v FROM wj_lit ORDER BY id").values ==
+      Seq(Seq(1, "a"), Seq(2, "x"), Seq(4, "d")))
+  }
+
+  test("a temp view over a small parquet dir reads with no job and sees a file " +
+       "appended before it is registered again") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-wj-view").toString
+    def write(ids: Range, mode: String): Unit =
+      spark.range(ids.start, ids.end).selectExpr("CAST(id AS int) AS id")
+        .coalesce(1).write.mode(mode).parquet(dir)
+    val q = "SELECT id FROM wj_view WHERE id > 0 ORDER BY id"
+    write(0 until 3, "overwrite")
+    gw.spark.read.parquet(dir).createOrReplaceTempView("wj_view")
+    try {
+      assert(jobsDuring(gw.query(q).values) == ((0, Seq(Seq(1), Seq(2)))))
+      write(5 until 6, "append")
+      gw.spark.read.parquet(dir).createOrReplaceTempView("wj_view")
+      assert(jobsDuring(gw.query(q).values) == ((0, Seq(Seq(1), Seq(2), Seq(5)))))
+    } finally gw.spark.catalog.dropTempView("wj_view")
   }
 
   /** A gateway on a fresh session of the shared context (its own database
@@ -153,5 +207,32 @@ class WriteJobsSpec extends SparkTestBase {
     assert(g.query("SELECT count(*) FROM t").values == Seq(Seq(n - deleted)))
     assert(g.query("SELECT count(*) FROM t WHERE v = 'x'").values == Seq(Seq(updated)))
     assert(spark.read.parquet(s"$dir/t").count() == n - deleted)
+    // a new file set, written by a job: the first read decodes it, finds it
+    // too big, and the cache remembers that, so the next read runs its job
+    // without decoding it again
+    g.execute("INSERT INTO t SELECT * FROM wj_src WHERE id < 10")
+    val misses = g.images.stats("image_misses")
+    val (reads, maxes) = jobsDuring(Seq("min", "max").map(f =>
+      g.query(s"SELECT $f(id) FROM t").values))
+    assert(reads >= 2 && maxes == Seq(Seq(Seq(0)), Seq(Seq(n - 1))), (reads, maxes))
+    assert(g.images.stats("image_misses") == misses + 1)
+  }
+
+  test("the image cache holds at most four images' worth of bytes") {
+    val g = isolatedGateway("wj_cap_ns")
+    // a (int, text) row of this shape decodes to 40 bytes: each view's
+    // image is about 0.6 of the bound, and eight of them pass the cap
+    val n = SqlGateway.DriverImageBytes / 64
+    (1 to 8).foreach { i =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-wj-cap$i").toString
+      g.spark.range(n).selectExpr("CAST(id AS int) AS id", s"concat('row-', id, '-$i') AS s")
+        .write.mode("overwrite").parquet(dir)
+      g.spark.read.parquet(dir).createOrReplaceTempView(s"cap$i")
+      assert(g.query(s"SELECT count(*) FROM cap$i WHERE id >= 0").values == Seq(Seq(n)))
+      val st = g.images.stats
+      assert(st("image_bytes") <= 4 * SqlGateway.DriverImageBytes, st)
+    }
+    val st = g.images.stats
+    assert(st("image_misses") == 8 && st("image_entries") < 8, st)
   }
 }
