@@ -4,13 +4,17 @@ import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation.hasUnevaluableExpr
+import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.execution.datasources._
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Decoded driver images of small parquet file sets, one cache per
   * gateway, and its session's optimizer rule that reads through them.
@@ -104,12 +108,13 @@ final class DriverImages {
 
   /** A scan of a non-partitioned parquet relation whose image fits becomes
     * a LocalRelation of it, with the relation's own output; a Filter, a
-    * Project and a global Sort over any LocalRelation are then evaluated
-    * with Spark's interpreted evaluators, so a small read runs no job and a
-    * fresh literal compiles no class (Spark's ConvertToLocalRelation
-    * filters with `Predicate.create`, which generates one). A plan that is
-    * only a scan stays one (`Dataset.inputFiles` lists its files), and no
-    * scan is swapped in a plan that asks for a row's input file. */
+    * Project, a global Sort and an Aggregate over any LocalRelation are
+    * then evaluated with Spark's interpreted evaluators, so a small read
+    * runs no job and a fresh literal compiles no class (Spark's
+    * ConvertToLocalRelation filters with `Predicate.create`, which
+    * generates one). A plan that is only a scan stays one
+    * (`Dataset.inputFiles` lists its files), and no scan is swapped in a
+    * plan that asks for a row's input file. */
   val rule: Rule[LogicalPlan] = new Rule[LogicalPlan] {
     def apply(plan: LogicalPlan): LogicalPlan = plan match {
       case _: LogicalRelation => plan
@@ -132,6 +137,8 @@ final class DriverImages {
           case Sort(order, true, LocalRelation(out, data, false, _), _)
               if !order.exists(o => hasUnevaluableExpr(o.child)) =>
             LocalRelation(out, data.sorted(new InterpretedOrdering(order, out)))
+          case a @ Aggregate(_, _, LocalRelation(out, data, false, _), _) =>
+            aggregate(a, out, data).getOrElse(a)
         }
     }
   }
@@ -163,4 +170,94 @@ object DriverImages {
   /** The files a scan of `r` reads: its index's listing, not a new one. */
   def filesOf(r: HadoopFsRelation): Seq[FileStatus] =
     r.location.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
+
+  /** `a` over `rows` (attributes `in`) as a LocalRelation of its output,
+    * aggregated on the driver as Spark's aggregation does in Complete
+    * mode: one group per key, keyed on its bytes with float keys
+    * normalized (-0.0 is 0.0, all NaNs one), as Spark's planner and hash
+    * aggregate do; a global aggregate answers one row, also over no rows.
+    * None, and the job runs, for a distinct, non-deterministic or
+    * floating-point aggregate, an unevaluable expression, or a function
+    * that is not a Catalyst aggregate function. */
+  private def aggregate(a: Aggregate, in: Seq[Attribute], rows: Seq[InternalRow])
+      : Option[LocalRelation] = a match {
+    case PhysicalAggregation(groups, aggs, results, _) if foldable(a, groups, aggs, results) =>
+      val key = InterpretedUnsafeProjection.createProjection(
+        BindReferences.bindReferences(groups.map(ColumnShim.normalizeFloats), in))
+      val folds = aggs.map(new Fold(_, in)).toArray
+      val buffers = new java.util.LinkedHashMap[UnsafeRow, Array[InternalRow]]
+      def group(k: UnsafeRow): Array[InternalRow] = Option(buffers.get(k)).getOrElse {
+        val b = folds.map(_.start())
+        buffers.put(k.copy(), b)
+        b
+      }
+      if (groups.isEmpty) group(key(InternalRow.empty))
+      rows.foreach { r =>
+        val b = group(key(r))
+        folds.indices.foreach(i => folds(i).step(b(i), r))
+      }
+      val out = new InterpretedMutableProjection(results,
+        groups.map(_.toAttribute) ++ aggs.map(_.resultAttribute))
+      val joined = new JoinedRow
+      val data = buffers.entrySet.iterator.asScala.map { e =>
+        val values = InternalRow.fromSeq(folds.indices.map(i => folds(i).value(e.getValue()(i))))
+        out(joined(e.getKey, values)).copy()
+      }
+      Some(LocalRelation(a.output, data.toSeq))
+    case _ => None
+  }
+
+  private def foldable(a: Aggregate, groups: Seq[NamedExpression],
+      aggs: Seq[AggregateExpression], results: Seq[NamedExpression]): Boolean =
+    a.expressions.forall(e => e.deterministic && !e.exists(_.isInstanceOf[PythonUDF])) &&
+      groups.forall(g => UnsafeRowUtils.isBinaryStable(g.dataType)) &&
+      !(groups ++ results).exists(hasUnevaluableExpr) &&
+      aggs.forall { e =>
+        !e.isDistinct && !floating(e.aggregateFunction) &&
+          !e.filter.exists(hasUnevaluableExpr) && (e.aggregateFunction match {
+          case f: DeclarativeAggregate =>
+            !(f.initialValues ++ f.updateExpressions :+ f.evaluateExpression).exists(hasUnevaluableExpr)
+          case f: ImperativeAggregate => !hasUnevaluableExpr(f)
+          case _ => false
+        })
+      }
+
+  /** Floating-point arithmetic (a double sum, `avg`, `stddev`, `corr`):
+    * its last digits follow the order rows are added and partial buffers
+    * merged in, so it keeps the job path's order. `min`, `max` and
+    * `count` are exact in any order. */
+  private def floating(f: AggregateFunction): Boolean = f match {
+    case _: Min | _: Max | _: Count => false
+    case _ => (f.dataType +: (f.children ++ f.aggBufferAttributes).map(_.dataType))
+      .exists(ColumnShim.hasFloats)
+  }
+
+  /** One aggregate of a driver fold: a buffer per group, started, stepped
+    * with each input row its FILTER keeps, and evaluated, all with
+    * interpreted expressions. */
+  private final class Fold(e: AggregateExpression, in: Seq[Attribute]) {
+    private val buffer = e.aggregateFunction.aggBufferAttributes
+    private val filter = e.filter.map(c => Predicate.createInterpreted(BindReferences.bindReference(c, in)))
+    private val joined = new JoinedRow
+    private val (init, update, result): (InternalRow => Any, (InternalRow, InternalRow) => Any,
+        InternalRow => Any) = e.aggregateFunction match {
+      case f: DeclarativeAggregate =>
+        val init = new InterpretedMutableProjection(f.initialValues, Nil)
+        val update = new InterpretedMutableProjection(f.updateExpressions, buffer ++ in)
+        val result = BindReferences.bindReference(f.evaluateExpression, buffer)
+        (b => init.target(b)(InternalRow.empty), (b, r) => update.target(b)(joined(b, r)),
+          result.eval)
+      case f: ImperativeAggregate =>
+        val bound = BindReferences.bindReference[Expression](f, in).asInstanceOf[ImperativeAggregate]
+        (bound.initialize, bound.update, bound.eval)
+    }
+
+    def start(): InternalRow = {
+      val b = new SpecificInternalRow(buffer.map(_.dataType))
+      init(b)
+      b
+    }
+    def step(b: InternalRow, r: InternalRow): Unit = if (filter.forall(_.eval(r))) update(b, r)
+    def value(b: InternalRow): Any = result(b)
+  }
 }

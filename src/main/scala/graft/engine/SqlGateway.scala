@@ -847,7 +847,9 @@ class SqlGateway(caller: SparkSession) {
               p.getFileSystem(spark.sparkContext.hadoopConfiguration)
                 .getContentSummary(p).getLength
             }.getOrElse(0L)
-        } catch { case _: Throwable => 0L }
+        } catch { // dropped, or its files removed, since it was listed
+          case _: org.apache.spark.sql.AnalysisException | _: java.io.IOException => 0L
+        }
       }.sum
     spark.createDataFrame(Seq(("graft", s"$bytes bytes",
       settings.getOrElse("memory_limit", "unset"))))
@@ -7884,7 +7886,9 @@ class SqlGateway(caller: SparkSession) {
       (versions(key) + 1 to set.version).foreach(v => deleteDir(versionDir(key, v)))
     }
     t.created.foreach { tbl =>
-      try dropTable(tbl) catch { case _: Throwable => () }
+      // already gone, or its files are: nothing is left to discard
+      try dropTable(tbl)
+      catch { case _: org.apache.spark.sql.AnalysisException | _: java.io.IOException => () }
     }
     constraints.clear(); constraints ++= t.baseConstraints
     checks.clear(); checks ++= t.baseChecks

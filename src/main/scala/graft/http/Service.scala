@@ -196,10 +196,15 @@ class Service(gateway: SqlGateway, port: Int = 0,
   // 101-111`), SNAPSHOT truncates it with retention 2 (`store/store.go:
   // 22,257-269`), and a leader restart recovers state as snapshot-restore
   // + suffix replay — Raft's exact boot sequence. `stmtLog` holds only
-  // the suffix past `baseIndex` (= entries folded into the newest
-  // snapshot); absolute index of list slot j is baseIndex + j + 1.
+  // the suffix past `baseIndex`; absolute index of list slot j is
+  // baseIndex + j + 1. A threshold snapshot at `snapIndex` keeps the
+  // `snapshotEvery` entries before it as a tail (hashicorp/raft's
+  // TrailingLogs), so a follower a few entries behind replays them
+  // instead of installing the snapshot.
   private val stmtLog = new java.util.concurrent.CopyOnWriteArrayList[String]()
   private val baseIndex = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** The log index of the newest snapshot this node took or restored. */
+  private val snapIndex = new java.util.concurrent.atomic.AtomicLong(0L)
   private val lastApplied = new java.util.concurrent.atomic.AtomicLong(0L)
   private val syncLock = new Object
   private val logLock = new Object
@@ -1223,7 +1228,8 @@ class Service(gateway: SqlGateway, port: Int = 0,
       // snapshot problem (a BEGIN racing in between the inTransaction
       // checks, an export failure) must never turn this response into an
       // error — a client retrying on error would double-apply the write.
-      if (snapshotEvery > 0 && stmtLog.size >= snapshotEvery &&
+      if (snapshotEvery > 0 &&
+          logIndex - math.max(baseIndex.get, snapIndex.get) >= snapshotEvery &&
           !gateway.inTransaction)
         try takeSnapshot(skipIfOpenTxn = true)
         catch { case _: Exception => () } // next threshold crossing retries
@@ -1345,10 +1351,12 @@ class Service(gateway: SqlGateway, port: Int = 0,
       finally gateway.releasePins(cut.pins)
     }
     listSnapshots.dropRight(2).foreach { case (_, p) => deleteRecursively(p) }
-    // compact: exactly the entries ≤ idx now live in the snapshot —
-    // statements executed during the export keep their log suffix
+    // compact: the entries ≤ idx now live in the snapshot, and all but
+    // the last `snapshotEvery` of them go — statements executed during
+    // the export keep their log suffix
     logLock.synchronized {
-      while (stmtLog.size > 0 && baseIndex.get < idx) {
+      snapIndex.set(idx)
+      while (stmtLog.size > 0 && baseIndex.get < idx - snapshotEvery) {
         stmtLog.remove(0); baseIndex.incrementAndGet()
       }
       rewriteLogFile()
@@ -1378,7 +1386,7 @@ class Service(gateway: SqlGateway, port: Int = 0,
     val snapIdx = snaps.lastOption.map { case (idx, p) =>
       Snapshot.importDatabase(gateway, p.toString); idx
     }.getOrElse(0L)
-    baseIndex.set(snapIdx)
+    baseIndex.set(snapIdx); snapIndex.set(snapIdx)
     stmtLog.clear()
     logFile.filter(java.nio.file.Files.exists(_)).foreach { p =>
       val entries = new String(java.nio.file.Files.readAllBytes(p),

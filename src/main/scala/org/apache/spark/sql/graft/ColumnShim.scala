@@ -60,6 +60,16 @@ object ColumnShim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.newHadoopConf()
 
+  /** `e` with its floats normalized (-0.0 to 0.0, every NaN to one), as
+    * Spark's planner normalizes an aggregate's grouping keys. */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
+  /** Whether `t` is, or nests, a DOUBLE or FLOAT. */
+  def hasFloats(t: org.apache.spark.sql.types.DataType): Boolean =
+    t.existsRecursively(f => f == org.apache.spark.sql.types.DoubleType ||
+      f == org.apache.spark.sql.types.FloatType)
+
   /** `spark.sql.files.maxPartitionBytes`, parsed: the bytes one scan
     * split holds. */
   def maxPartitionBytes(spark: SparkSession): Long =

@@ -533,6 +533,61 @@ class ReplicaSpec extends SparkTestBase {
     } finally { follower.stop(); leader.stop() }
   }
 
+  /** A gateway that records every statement it executes. */
+  private class RecordingGateway(s: org.apache.spark.sql.SparkSession) extends SqlGateway(s) {
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    override def execute(sql: String): graft.engine.ExecuteResult = {
+      executed.add(sql)
+      super.execute(sql)
+    }
+  }
+
+  test("a threshold snapshot keeps a log tail: a follower a few entries behind replays " +
+       "it with no IMPORT DATABASE, and a restart over that log recovers the same rows") {
+    val logDir = java.nio.file.Files.createTempDirectory("graft-tail").toString
+    val (lgw, _) = newStack("tail_leader")
+    val leader = new Service(lgw, logDir = Some(logDir), snapshotEvery = 4)
+    val lPort = leader.start()
+    val fgw = new RecordingGateway(stackSession("tail_follow"))
+    val follower = new Service(fgw, leaderUrl = Some(s"http://localhost:$lPort"),
+      nodeId = "tailfollower", followLog = true)
+    val fPort = follower.start()
+    val q = "SELECT id, v FROM tl_t ORDER BY id"
+    def read(port: Int): String = newHttp(port, "GET",
+      "/db/query?q=" + java.net.URLEncoder.encode(q, "UTF-8"))._2
+    try {
+      def exec(sql: String): Unit = {
+        val (code, body, _) = newHttp(lPort, "POST", "/db/execute",
+          Some(s"""{"sql": "$sql"}"""))
+        assert(code == 200 && !body.contains("\"error\""), s"$sql -> $body")
+      }
+      exec("CREATE TABLE tl_t (id integer, v text)")
+      // log index i + 1 holds id i; the threshold snapshots land at 4 and 8
+      (1 to 4).foreach(i => exec(s"INSERT INTO tl_t VALUES ($i, 'r$i')"))
+      assert(read(fPort).contains("[4, \"r4\"]"))
+      (5 to 8).foreach(i => exec(s"INSERT INTO tl_t VALUES ($i, 'r$i')"))
+      val snaps = new java.io.File(s"$logDir/snapshots").list().sorted.toSeq
+      assert(snaps == Seq("snap_4", "snap_8"), snaps)
+      // the follower is at 5; the snapshot at 8 kept entries 5 to 8
+      assert(read(fPort).contains("[8, \"r8\"]"))
+      assert(!fgw.executed.toArray.exists(_.toString.startsWith("IMPORT DATABASE")),
+        fgw.executed)
+      assert(fgw.query(q).values == lgw.query(q).values)
+    } finally { follower.stop(); leader.stop() }
+
+    // the log file still holds entries at or below the snapshot index
+    val logged = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(logDir, "stmtlog.jsonl")), StandardCharsets.UTF_8)
+    assert(logged.contains("\"i\": \"6\""), logged)
+    val (rgw, _) = newStack("tail_restart")
+    val restarted = new Service(rgw, logDir = Some(logDir), snapshotEvery = 4)
+    val rPort = restarted.start()
+    try {
+      assert(rgw.query(q).values == (1 to 8).map(i => Seq(i, s"r$i")))
+      assert(newHttp(rPort, "GET", "/status")._2.contains("\"log_index\": \"9\""))
+    } finally restarted.stop()
+  }
+
   test("no snapshot cut mid-transaction: truncation across a BEGIN would " +
        "orphan the suffix's COMMIT on replay") {
     val logDir = java.nio.file.Files.createTempDirectory("graft-txsnap").toString
@@ -653,12 +708,18 @@ class ReplicaSpec extends SparkTestBase {
   }
 
   private def newStack(ns: String): (SqlGateway, org.apache.spark.sql.SparkSession) = {
+    val sess = stackSession(ns)
+    (new SqlGateway(sess), sess)
+  }
+
+  /** A session of its own, with its own data dir and database. */
+  private def stackSession(ns: String): org.apache.spark.sql.SparkSession = {
     val sess = spark.newSession()
     sess.conf.set("graft.data.dir",
       java.nio.file.Files.createTempDirectory(s"graft-$ns-wh").toString)
     sess.sql(s"CREATE DATABASE IF NOT EXISTS ${ns}_ns")
     sess.catalog.setCurrentDatabase(s"${ns}_ns")
-    (new SqlGateway(sess), sess)
+    sess
   }
 
   /** A Service whose outbound network path can be severed while its

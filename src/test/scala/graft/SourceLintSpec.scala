@@ -32,7 +32,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Parquet files are decoded on the driver in one place, the gateway's
   * image cache (`DriverImages`): DML once built its own LocalRelation
-  * over a second decode path, which read the same files again. */
+  * over a second decode path, which read the same files again.
+  *
+  * The gateway catches only the exceptions a site expects: a catch-all
+  * `case _: Throwable` there once hid every failure of the code it
+  * guarded. */
 class SourceLintSpec extends AnyFunSuite {
   private val mainDir = new java.io.File("src/main/scala")
   private val engineDir = new java.io.File(mainDir, "graft/engine")
@@ -179,5 +183,14 @@ class SourceLintSpec extends AnyFunSuite {
       readers.mkString("driver-side parquet readers:\n", "\n", ""))
     val swaps = sites("rewriteSource")
     assert(swaps.isEmpty, swaps.mkString("per-statement image swaps:\n", "\n", ""))
+  }
+
+  test("the gateway swallows no Throwable: a catch names what it expects") {
+    val gateway = new java.io.File(engineDir, "SqlGateway.scala")
+    assert(gateway.isFile, s"run from the repository root: $gateway")
+    val hits = lines(gateway).zipWithIndex.collect {
+      case (l, i) if l.contains("case _: Throwable") => s"${gateway.getPath}:${i + 1}: ${l.trim}"
+    }
+    assert(hits.isEmpty, hits.mkString("catch-all handlers:\n", "\n", ""))
   }
 }

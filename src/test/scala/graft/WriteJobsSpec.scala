@@ -162,6 +162,82 @@ class WriteJobsSpec extends SparkTestBase {
     } finally gw.spark.catalog.dropTempView("wj_view")
   }
 
+  /** The aggregate reads of the `service` benchmark's corpus templates,
+    * over `t`, with the fresh literal `x`. */
+  private def aggregateReads(t: String, x: Int): Seq[String] = Seq(
+    s"SELECT count(*) AS n FROM $t WHERE k = ${x % 7}",
+    s"SELECT p, count(*) AS n, max(id) AS m FROM $t WHERE id BETWEEN $x AND ${x + 10} " +
+      "GROUP BY p ORDER BY p",
+    s"SELECT k, count(*) AS n FROM $t GROUP BY k HAVING min(id) > ${x % 5} ORDER BY k",
+    s"SELECT DISTINCT p FROM $t WHERE id > ${x % 30} ORDER BY p")
+
+  test("a warmed COUNT, GROUP BY, HAVING and SELECT DISTINCT with a fresh literal over a " +
+       "small view and an own table run no job and compile no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = java.nio.file.Files.createTempDirectory("graft-wj-agg").toString
+    spark.range(1, 41).selectExpr("CAST(id AS int) AS id", "CAST(id % 7 AS int) AS k",
+      "concat('P', id % 3) AS p").coalesce(1).write.mode("overwrite").parquet(dir)
+    // the same view in the caller's session, which plans every aggregate
+    // as Spark does: the answers to compare with
+    Seq(spark, gw.spark).foreach(_.read.parquet(dir).createOrReplaceTempView("wj_aggv"))
+    gw.execute("DROP TABLE IF EXISTS wj_agg")
+    gw.execute("CREATE TABLE wj_agg (id integer, k integer, p text)")
+    gw.execute("INSERT INTO wj_agg VALUES " +
+      (1 to 40).map(i => s"($i, ${i % 7}, 'P${i % 3}')").mkString(", "))
+    def sparkRows(q: String) = spark.sql(q).collect().map(_.toSeq).toSeq
+    try {
+      Seq("wj_aggv", "wj_agg").foreach(t => aggregateReads(t, 1).foreach(gw.query))
+      val reads = for (x <- 2 to 4; t <- Seq("wj_aggv", "wj_agg"); q <- aggregateReads(t, x))
+        yield q -> sparkRows(q.replace("wj_agg ", "wj_aggv "))
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      reads.foreach { case (q, want) =>
+        assert(want.nonEmpty, q)
+        assert(jobsDuring(gw.query(q).values) == ((0, want)), q)
+      }
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles)
+    } finally Seq(spark, gw.spark).foreach(_.catalog.dropTempView("wj_aggv"))
+  }
+
+  test("a global aggregate over no rows answers one row; count(DISTINCT) keeps its job") {
+    gw.execute("DROP TABLE IF EXISTS wj_agg0")
+    gw.execute("CREATE TABLE wj_agg0 (id integer, v text)")
+    gw.execute("INSERT INTO wj_agg0 VALUES (1, 'a'), (2, 'b'), (3, 'a'), (4, NULL)")
+    assert(jobsDuring(gw.query("SELECT count(*) AS n, max(id) AS m FROM wj_agg0 WHERE id < 0")
+      .values) == ((0, Seq(Seq(0L, null)))))
+    assert(jobsDuring(gw.query("SELECT v, count(*) AS n FROM wj_agg0 WHERE id < 0 GROUP BY v")
+      .values) == ((0, Nil)))
+    val (n, distinct) = jobsDuring(gw.query(
+      "SELECT count(DISTINCT v) AS d, count(*) AS n FROM wj_agg0").values)
+    assert(n > 0 && distinct == Seq(Seq(2L, 4L)), (n, distinct))
+  }
+
+  test("an aggregate read inside BEGIN…ROLLBACK sees the pending rows, with no job") {
+    gw.execute("DROP TABLE IF EXISTS wj_aggtx")
+    gw.execute("CREATE TABLE wj_aggtx (id integer, v text)")
+    gw.execute("INSERT INTO wj_aggtx VALUES (1, 'a'), (2, 'b'), (3, 'a')")
+    val q = "SELECT v, count(*) AS n FROM wj_aggtx GROUP BY v ORDER BY v"
+    assert(jobsDuring(gw.query(q).values) == ((0, Seq(Seq("a", 2L), Seq("b", 1L)))))
+    gw.execute("BEGIN")
+    try {
+      gw.execute("INSERT INTO wj_aggtx VALUES (4, 'c'), (5, 'a')")
+      gw.execute("DELETE FROM wj_aggtx WHERE id = 2")
+      assert(jobsDuring(gw.query(q).values) == ((0, Seq(Seq("a", 3L), Seq("c", 1L)))))
+    } finally gw.execute("ROLLBACK")
+    assert(jobsDuring(gw.query(q).values) == ((0, Seq(Seq("a", 2L), Seq("b", 1L)))))
+  }
+
+  test("a correlated COUNT subquery over a small table answers 0 for an outer row " +
+       "with no match") {
+    gw.execute("DROP TABLE IF EXISTS wj_aggo")
+    gw.execute("DROP TABLE IF EXISTS wj_aggi")
+    gw.execute("CREATE TABLE wj_aggo (id integer)")
+    gw.execute("CREATE TABLE wj_aggi (k integer)")
+    gw.execute("INSERT INTO wj_aggo VALUES (1), (2), (3)")
+    gw.execute("INSERT INTO wj_aggi VALUES (1), (1), (3)")
+    assert(gw.query("SELECT id, (SELECT count(*) FROM wj_aggi WHERE k = id) AS n " +
+      "FROM wj_aggo ORDER BY id").values == Seq(Seq(1, 2L), Seq(2, 0L), Seq(3, 1L)))
+  }
+
   /** A gateway on a fresh session of the shared context (its own database
     * and data dir, so a test sees only its own tables), with `conf` set. */
   private def isolatedGateway(ns: String, conf: (String, String)*): SqlGateway = {
@@ -206,6 +282,12 @@ class WriteJobsSpec extends SparkTestBase {
     assert(jobs >= 3 && counts == ((deleted, updated, Seq("t"))), (jobs, counts))
     assert(g.query("SELECT count(*) FROM t").values == Seq(Seq(n - deleted)))
     assert(g.query("SELECT count(*) FROM t WHERE v = 'x'").values == Seq(Seq(updated)))
+    // an aggregate over it keeps its job, and answers as one that folds
+    val (aggJobs, byV) = jobsDuring(g.query(
+      "SELECT v, count(*) AS n FROM t WHERE v <> 'x' GROUP BY v ORDER BY v").values)
+    val want = (0L until n).filter(i => i % 1000 != 0 && i % 1000 != 1)
+      .groupBy(i => (i % 7).toString).toSeq.sortBy(_._1).map { case (v, is) => Seq(v, is.size.toLong) }
+    assert(aggJobs > 0 && byV == want, (aggJobs, byV.take(3)))
     assert(spark.read.parquet(s"$dir/t").count() == n - deleted)
     // a new file set, written by a job: the first read decodes it, finds it
     // too big, and the cache remembers that, so the next read runs its job
